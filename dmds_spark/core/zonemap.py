@@ -83,7 +83,7 @@ def _lit_back(kind: str, v):
 
 
 def _part_key(pcols, row) -> str:
-    # values-only key ("3/7"), the same convention as World._part_key
+    # values-only key ("3/7"), the same convention as World._part_key_col
     # and the versioned manifest's owner map
     return "/".join(str(int(row[c])) for c in pcols)
 

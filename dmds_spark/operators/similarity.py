@@ -435,6 +435,18 @@ def kmeans_assign(
     )
     if not seeds:
         raise ValueError("kmeans_assign: empty input (no seed vectors)")
+    # the M-step reads vec[0..dim-1]: a short or null vector would give
+    # NULL means and fail mid-loop, so check every length once up front
+    lo, hi = (
+        df.select(F.coalesce(F.size(vec_col), F.lit(-1)).alias("n"))
+        .agg(F.min("n"), F.max("n"))
+        .first()
+    )
+    if lo != dim or hi != dim:
+        raise ValueError(
+            f"kmeans_assign: column {vec_col!r} must hold {dim}-dim "
+            f"vectors, found lengths {lo}..{hi} (-1 = null)"
+        )
     # fewer rows than k: every row is its own seed and the extra
     # clusters simply never exist — valid, documented degeneracy
     centers = [

@@ -12,6 +12,25 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> str:
+    """``SPARK_GRAFT_CPUS``, else every core this host has."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
+
+
+def default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half of physical RAM (at least
+    1 GiB): in local mode the driver heap holds every executor too, and
+    the rest is left to the OS, Python workers and off-heap buffers."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "4g"
+    return f"{max(1, ram // 2**31)}g"
+
+
 def get_spark(
     app_name: str = "dmds_spark",
     master: str | None = None,
@@ -20,13 +39,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    Defaults are sized for the local[$SPARK_GRAFT_CPUS] test box but the
-    conf set is cluster-ready: AQE handles runtime re-planning (skew
-    join splitting, partition coalescing) at any scale, and shuffle
+    Defaults fit the host (``default_cpus``, ``default_driver_memory``;
+    explicit arguments and ``extra_conf`` win) but the conf set is
+    cluster-ready: AQE handles runtime re-planning (skew join
+    splitting, partition coalescing) at any scale, and shuffle
     partition count should track total cores (set explicitly per
     deployment).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -44,7 +64,7 @@ def get_spark(
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         # plan introspection (plans/inspect.py) needs untruncated
         # FileScan metadata (PushedFilters/ReadSchema lines)

@@ -18,7 +18,7 @@ Mapping (SURVEY.md §1.5):
   partition columns are recomputed from the new dim values at flush;
 - flush (``Chunk::write_buf`` + ``FsHandle::write_chunk``,
   src/world.rs:96-122, tokio-fs/src/lib.rs:85-107) is a
-  dynamic-partition-overwrite rewrite of exactly the dirty chunks —
+  staged rewrite of exactly the dirty chunks —
   the same whole-chunk-rewrite granularity as the reference.
 
 Scale design (100 TB): a huge logical grid must not produce millions of
@@ -51,7 +51,7 @@ from dmds_spark.core.errors import (
     WorldFencedError,
     WorldLockedError,
 )
-from dmds_spark.core.engine import materialize
+from dmds_spark.core.engine import materialize, release
 
 
 class WriterLock:
@@ -456,6 +456,7 @@ class World:
         # (src/world.rs:254) with explicit op ordering instead of locks
         self._ops: list[tuple[int, str, DataFrame]] = []
         self._seq = 0
+        self._pending_cache = None  # see _resolved_pending
         # cross-process single-writer token + per-path flush mutex,
         # interned so every World on this path shares BOTH (see
         # WriterLock for the protocol and its failure modes); the token
@@ -524,17 +525,20 @@ class World:
         mantissa (a value just below a chunk boundary rounds up across
         it), and u64 dims don't fit a double at all. ``div`` is exact
         on both long and decimal operands and returns a long."""
-        for i, (d, f) in enumerate(zip(self.spec.dims, self.factors)):
-            start = (
-                f"CAST('{d.start}' AS DECIMAL(20,0))" if d.u64 else f"{d.start}L"
-            )
-            df = df.withColumn(
-                f"c{i}",
-                F.expr(
-                    f"((`{d.name}` - {start}) div {d.spacing}) div {int(f)}"
-                ).cast("long"),
-            )
+        for i in range(self.spec.ndims):
+            df = df.withColumn(f"c{i}", self._partition_col(i))
         return df
+
+    def _partition_col(self, i: int):
+        d, f = self.spec.dims[i], self.factors[i]
+        start = f"CAST('{d.start}' AS DECIMAL(20,0))" if d.u64 else f"{d.start}L"
+        expr = f"((`{d.name}` - {start}) div {d.spacing}) div {int(f)}"
+        return F.expr(expr).cast("long")
+
+    def _part_key_col(self):
+        """The manifest key "c0/c1/…" as a column of the partition
+        columns alone, so filters on it prune at file listing."""
+        return F.concat_ws("/", *[F.col(c).cast("string") for c in self.partition_cols()])
 
     def _physical_partition_predicate(self, shape: Shape):
         """Chunk-index Shape -> predicate over physical partition cols.
@@ -792,9 +796,6 @@ class World:
             )
         return best
 
-    def _part_key(self, row) -> str:
-        return "/".join(str(int(row[c])) for c in self.partition_cols())
-
     def _commit_version_write(
         self, out: DataFrame, dirty_keys: set[str] = frozenset()
     ) -> int:
@@ -846,8 +847,6 @@ class World:
         delete every version directory no retained manifest references.
         Returns directories deleted. Readers pinned to a vacuumed
         snapshot fail loudly on their next manifest resolve."""
-        import shutil
-
         if retain_last < 1:
             raise ValueError("retain_last must be >= 1")
         cur = self.current_version()
@@ -885,8 +884,7 @@ class World:
         by_ver: dict[int, list[str]] = {}
         for key, ver in owner.items():
             by_ver.setdefault(ver, []).append(key)
-        pcols = self.partition_cols()
-        tag = F.concat_ws("/", *[F.col(c).cast("string") for c in pcols])
+        tag = self._part_key_col()
         out = None
         for ver in sorted(by_ver):
             part = self.spark.read.parquet(self._version_dir(ver)).filter(
@@ -1010,14 +1008,22 @@ class World:
     def _resolved_pending(self) -> tuple[DataFrame | None, DataFrame | None]:
         """Collapse the op log to (latest upsert rows, all touched ids).
         Latest op per id wins — a window over __seq, the deterministic
-        replacement for the reference's chunk/item write locks."""
-        if not self._ops:
+        replacement for the reference's chunk/item write locks.
+
+        Materialized once per op-log state, cached under the last op's
+        sequence number: pending reads and the flush that commits them
+        share it. A successful flush drops and releases it."""
+        ops = list(self._ops)  # appends may race an unlocked read
+        if not ops:
             return None, None
+        cached = self._pending_cache
+        if cached is not None and cached[0] == ops[-1][0]:
+            return cached[2], cached[3]
         from pyspark.sql import Window as W
 
         id_col = self.spec.id_dim.name
         parts = []
-        for seq, kind, df in self._ops:
+        for seq, kind, df in ops:
             if kind == "upsert":
                 parts.append(
                     df.withColumn("__seq", F.lit(seq)).withColumn("__del", F.lit(False))
@@ -1044,13 +1050,13 @@ class World:
         for p in aligned[1:]:
             log = log.unionByName(p)
         w = W.partitionBy(id_col).orderBy(F.col("__seq").desc())
-        # materialize the collapsed log ONCE: its consumers (live for
-        # the merge/new-partition sides, touched for the dirty/anti
-        # joins) would otherwise each re-run every pending op's source
-        # plan — a CDC merge buffers the whole net-changes pipeline
-        # here, and flush consumed it four times (guide §2.4). The
-        # barrier is micro-batch-sized (the pending buffer), never
-        # table-sized.
+        # materialize the collapsed log: its consumers (live for the
+        # merge and new-location sides, touched for the old-location
+        # and anti joins, across every read of this op-log state) would
+        # otherwise each re-run every pending op's source plan — a CDC
+        # merge buffers the whole net-changes pipeline here (guide
+        # §2.4). The barrier is micro-batch-sized (the pending buffer),
+        # never table-sized.
         latest = (
             log.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
@@ -1065,6 +1071,7 @@ class World:
         for d in self.spec.dims:
             if d.name not in live.columns:
                 live = live.withColumn(d.name, F.lit(None).cast(d.spark_type))
+        self._pending_cache = (ops[-1][0], latest, live, touched)
         return live, touched
 
     @staticmethod
@@ -1300,31 +1307,36 @@ class World:
 
     def flush(self) -> int:
         """Persist the pending buffer: rewrite exactly the dirty chunks
-        via dynamic partition overwrite (the reference's whole-chunk
-        rewrite, src/world.rs:96-122 + tokio-fs/src/lib.rs:85-107).
-        With ``validate="flush"`` the domain check rides along as
-        raise_error guards in the same pass. Returns ops flushed."""
+        (the reference's whole-chunk rewrite, src/world.rs:96-122 +
+        tokio-fs/src/lib.rs:85-107). With ``validate="flush"`` the
+        domain check rides along as raise_error guards in the same
+        pass. Returns ops flushed. A flush that raises publishes
+        nothing and keeps its ops for a retry. Consume DataFrames read
+        while ops were pending before the flush that commits them."""
         with self._lock:
             if not self._ops:
                 return 0
             try:
-                n = self._flush_locked()
+                self._flush_locked()
             except ValueOutOfRangeError:
                 raise
             except Exception as e:  # noqa: BLE001 — guard translation
                 self._reraise_domain(e)
+            n, self._ops = len(self._ops), []
+            cached, self._pending_cache = self._pending_cache, None
+            if cached is not None:
+                release(cached[1])  # the resolved log's checkpoint
             # new on-disk state: invalidate every same-process World's
             # cached base relation (the interned version is the key)
             self._writer_lock.data_version += 1
             return n
 
-    def _flush_locked(self) -> int:
-        n_ops = len(self._ops)
+    def _flush_locked(self) -> None:
         live, touched = self._resolved_pending()
-        if self.validate == "flush" and live is not None:
+        if self.validate == "flush":
             live = self._domain_guard(live)
-        id_col = self.spec.id_dim.name
         base = self._base()
+        pcols = self.partition_cols()
 
         if base is None:
             out = self._with_partition_cols(live)
@@ -1332,51 +1344,53 @@ class World:
                 self._commit_version_write(out)
             else:
                 self._writer_lock.verify_token()  # fence the overwrite
-                # per-write dynamic mode, like the dirty-partition path
-                # below and compact(): a session left at Spark's STATIC
-                # default would otherwise delete-and-recreate the whole
-                # directory (correctness must not depend on session
-                # conf — the round-14 driver session proved it doesn't
-                # set this)
+                # per-write dynamic mode, like compact(): a session left
+                # at Spark's STATIC default would otherwise
+                # delete-and-recreate the whole directory (correctness
+                # must not depend on session conf — the round-14 driver
+                # session proved it doesn't set this)
                 (
-                    out.write.partitionBy(*self.partition_cols())
+                    out.write.partitionBy(*pcols)
                     .mode("overwrite")
                     .option("partitionOverwriteMode", "dynamic")
                     .parquet(self.path)
                 )
-            self._ops = []
-            return n_ops
+            return
 
-        # dirty physical partitions = those holding any touched id
-        # (old location: deletes/relocations) or any new row (new
-        # location) — both sides, so a relocated row vanishes from
-        # its old chunk and appears in the new one atomically.
-        # Materialized once (it is small: partition keys only) and used
-        # BOTH as the semi-join filter — never a driver-built OR chain,
-        # which blows up planning past a few thousand dirty partitions —
-        # and as the driver-side list for empty-directory cleanup.
-        base_touched = base.join(touched, on=id_col, how="left_semi")
-        old_parts = base_touched.select(*self.partition_cols()).distinct()
-        new_parts = (
+        # dirty = new location of every live row + old location of
+        # every touched id (a relocation dirties both). Dim 0 is the
+        # immutable id, so an id's stored row sits in the c0 group its
+        # value routes to: the old-location lookup reads only those.
+        key = self._part_key_col()
+        id_col = self.spec.id_dim.name
+        routed = (
             self._with_partition_cols(live)
-            .select(*self.partition_cols())
+            .select("c0", key.alias("key"))
+            .unionByName(
+                touched.select(
+                    self._partition_col(0).alias("c0"),
+                    F.lit(None).cast("string").alias("key"),
+                )
+            )
             .distinct()
+            .collect()
         )
-        # ONE action: collect the dirty set and rebuild the filter
-        # relation locally — the former materialize-then-collect pair
-        # paid a checkpoint job just to read back rows the driver needs
-        # anyway (the set is partition keys only, bounded by chunk
-        # count, and both consumers see the identical collected rows)
-        dirty_rows = old_parts.unionByName(new_parts).distinct().collect()
-        dirty = [tuple(r) for r in dirty_rows]
+        groups = sorted({r["c0"] for r in routed})
+        dirty = {r["key"] for r in routed if r["key"] is not None}
+        if groups:
+            dirty.update(
+                r[0]
+                for r in base.filter(F.col("c0").isin(groups))
+                .join(touched, on=id_col, how="left_semi")
+                .select(key)
+                .distinct()
+                .collect()
+            )
         if not dirty:
-            self._ops = []
-            return n_ops
-        dirty_df = self.spark.createDataFrame(dirty_rows, old_parts.schema)
-
-        base_part = base.join(
-            F.broadcast(dirty_df), on=self.partition_cols(), how="left_semi"
-        ).drop(*self.partition_cols())
+            return
+        dirty = sorted(dirty)
+        # a literal IN on the key: the merge reads the dirty dirs only
+        base_part = base.filter(key.isin(dirty)).drop(*pcols)
         kept = base_part.join(touched, on=id_col, how="left_anti")
         live_cast = self._align_to(live, base_part)
         merged = kept.unionByName(live_cast, allowMissingColumns=True)
@@ -1385,29 +1399,24 @@ class World:
             # fresh immutable version dir: no self-overwrite, so no
             # materialization barrier; vanished partitions drop out of
             # the manifest instead of needing directory cleanup
-            self._commit_version_write(
-                out, {"/".join(str(int(x)) for x in pos) for pos in dirty}
-            )
-            self._ops = []
-            return n_ops
-        # STAGE-AND-SWAP instead of materialize-then-self-overwrite:
-        # ``out`` reads the very files a dynamic overwrite of
-        # ``self.path`` would delete, which forced an eager
-        # materialization barrier (a full extra pass over the flushed
-        # rows) before every non-versioned flush. Writing to a sibling
-        # staging directory needs no barrier — the ONE write job both
-        # computes and commits the merged dirty partitions — and
-        # publish is a per-partition directory swap (local-FS renames,
-        # bounded by the dirty-partition count, the same move-based
-        # commit Spark's own dynamic overwrite performs internally).
-        # ``out`` contains ONLY dirty-partition rows by construction
-        # (base_part is semi-join-filtered to the dirty set, and every
-        # live row's partition is dirty), so: a staged dir exists ->
-        # the partition's new contents; no staged dir -> every row the
-        # dirty partition held relocated away, clear it (the reference
-        # rewrites every dirty chunk, even to empty:
-        # src/world.rs:96-122 skips moved items but still writes).
-        staging = f"{self.path}.staging-{uuid.uuid4().hex[:12]}"
+            self._commit_version_write(out, set(dirty))
+        else:
+            self._stage_and_swap(out, dirty)
+
+    def _stage_and_swap(self, out: DataFrame, dirty: list[str]) -> None:
+        """Publish ``out`` (the new rows of exactly the ``dirty``
+        partitions) into a non-versioned world. ``out`` reads the files
+        an in-place overwrite would delete, so it is written to a
+        sibling staging dir (no materialization barrier) and each dirty
+        directory is swapped in by local-FS renames. No staged dir
+        means the partition emptied: it is cleared (the reference
+        rewrites dirty chunks even to empty, src/world.rs:96-122).
+        Each live dir is renamed aside first; any failure renames them
+        back, so the world keeps its pre-flush contents."""
+        tag = uuid.uuid4().hex[:12]
+        staging = f"{self.path}.staging-{tag}"
+        aside = f"{self.path}.aside-{tag}"
+        swapped = []  # (live dir, its set-aside copy or None)
         try:
             (
                 out.write.partitionBy(*self.partition_cols())
@@ -1415,28 +1424,33 @@ class World:
                 .parquet(staging)
             )
             self._writer_lock.verify_token()  # fence the swap
-            for pos in dirty:
-                dst = self._part_dir(pos)
-                src = "/".join(
-                    [staging]
-                    + [
-                        f"{c}={int(v)}"
-                        for c, v in zip(self.partition_cols(), pos)
-                    ]
-                )
-                shutil.rmtree(dst, ignore_errors=True)
+            for key in dirty:
+                dst, src = self._part_dir(key), self._part_dir(key, staging)
+                parked = None
+                if os.path.isdir(dst):
+                    parked = self._part_dir(key, aside)
+                    os.makedirs(os.path.dirname(parked), exist_ok=True)
+                    os.rename(dst, parked)
+                swapped.append((dst, parked))
                 if os.path.isdir(src):
                     os.makedirs(os.path.dirname(dst), exist_ok=True)
                     shutil.move(src, dst)
+        except BaseException:
+            for dst, parked in reversed(swapped):
+                shutil.rmtree(dst, ignore_errors=True)
+                if parked is not None:
+                    os.rename(parked, dst)
+            # reached only when every set-aside dir is back in place
+            shutil.rmtree(aside, ignore_errors=True)
+            raise
         finally:
             shutil.rmtree(staging, ignore_errors=True)
-        self._ops = []
-        return n_ops
+        shutil.rmtree(aside, ignore_errors=True)
 
-    def _part_dir(self, pos) -> str:
+    def _part_dir(self, key: str, root: str | None = None) -> str:
         return "/".join(
-            [self.path]
-            + [f"{c}={int(v)}" for c, v in zip(self.partition_cols(), pos)]
+            [root or self.path]
+            + [f"{c}={v}" for c, v in zip(self.partition_cols(), key.split("/"))]
         )
 
     def zvalue(self) -> F.Column:
@@ -1537,7 +1551,7 @@ class World:
                 .sortWithinPartitions(*pcols, sort_key)
             )
             if self.versioned:
-                keys = {self._part_key(r) for r in frag_df.collect()}
+                keys = {r[0] for r in frag_df.select(self._part_key_col()).collect()}
                 self._commit_version_write(out, keys)
             else:
                 # materialize before self-overwrite (fresh version dirs

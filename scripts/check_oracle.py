@@ -19,7 +19,7 @@ import sys
 sys.path.insert(0, ".")
 
 from dmds_spark.oracle import run_all  # noqa: E402
-from dmds_spark.session import get_spark  # noqa: E402
+from dmds_spark.session import default_cpus, get_spark  # noqa: E402
 
 
 def main() -> int:
@@ -33,9 +33,8 @@ def main() -> int:
     if vanilla:
         from pyspark.sql import SparkSession
 
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         spark = (
-            SparkSession.builder.master(f"local[{cpus}]")
+            SparkSession.builder.master(f"local[{default_cpus()}]")
             .appName("oracle_check_vanilla")
             .getOrCreate()
         )

@@ -158,3 +158,18 @@ def test_write_path_queries_green_under_default_confs(spark, name):
     with spark_default_confs(spark):
         rows = fn(spark, SF_DIR_SMALL).collect()
     assert len(rows) > 0
+
+
+def test_session_defaults_fit_the_host(monkeypatch):
+    from dmds_spark.session import default_cpus, default_driver_memory
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert default_cpus() == str(os.cpu_count())
+    ram_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    heap = int(default_driver_memory().rstrip("g"))
+    assert 1 <= heap <= max(1, ram_gib / 2)
+    # explicit settings still win
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    assert (default_cpus(), default_driver_memory()) == ("3", "2g")

@@ -348,3 +348,18 @@ def test_kmeans_degenerate_inputs(spark):
     out = kmeans_assign(few, "vec_id", "embedding", k=8, iters=1)
     assert out.count() == 3
     assert out.select("cluster").distinct().count() <= 3
+
+
+def test_kmeans_rejects_short_vectors(spark):
+    import pytest as _pytest
+
+    from dmds_spark.operators.similarity import kmeans_assign
+
+    df = spark.createDataFrame(
+        [(1, [0.0, 1.0, 2.0]), (2, [1.0, 1.0, 1.0]), (3, [5.0, 5.0])],
+        "id long, v array<double>",
+    )
+    with _pytest.raises(ValueError, match=r"'v' must hold 3-dim .* 2\.\.3"):
+        kmeans_assign(df, "id", "v", k=2, iters=2, dim=3)
+    ok = kmeans_assign(df.filter("id < 3"), "id", "v", k=2, iters=2, dim=3)
+    assert ok.count() == 2

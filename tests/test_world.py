@@ -16,6 +16,7 @@ value 810 (src/tests.rs:25,151-152,235).
 """
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -446,3 +447,266 @@ def test_base_relation_cache_and_cross_instance_invalidation(spark, tmp_path):
     assert a._base() is not b2 or a._base() is a._base()
     a.close()
     b.close()
+
+
+# -- resolved op-log cache and flush job counts -----------------------------
+
+
+def _jobs(spark, fn):
+    """Run ``fn`` under a fresh job group; return (result, jobs it
+    launched before returning)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"t-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pending_read_sees_each_new_op(world):
+    # the resolved log is cached per op sequence: an op appended after
+    # a read must show up in the next read
+    world.insert_rows([{"dim0": 1, "dim1": 10}])
+    assert rows(world.get(1)) == [(1, 10)]
+    world.insert_rows([{"dim0": 1, "dim1": 20}])
+    assert rows(world.get(1)) == [(1, 20)]
+    world.delete_ids([1])
+    assert rows(world.snapshot()) == []
+
+
+def test_pending_reads_share_one_resolved_log(spark, monkeypatch, world):
+    import dmds_spark.world as world_mod
+
+    world.insert_rows([{"dim0": 1, "dim1": 10}])
+    world.flush()
+    world.insert_rows([{"dim0": 2, "dim1": 20}])
+    world.get(1)  # resolves and caches the pending log
+    df, jobs = _jobs(spark, lambda: world.get(2))
+    assert jobs == 0  # second pending get: no job before it returns
+    assert rows(df) == [(2, 20)]
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs()
+    ckpt = world._pending_cache[1]._jdf.queryExecution().logical().rdd().id()
+    assert persisted.containsKey(ckpt)
+    barriers = []
+    real = world_mod.materialize
+    monkeypatch.setattr(
+        world_mod, "materialize", lambda d: barriers.append(1) or real(d)
+    )
+    assert world.flush() == 1
+    assert barriers == []  # the flush reused the read's checkpoint
+    assert world._pending_cache is None  # released with its ops
+    assert not spark.sparkContext._jsc.getPersistentRDDs().containsKey(ckpt)
+    assert rows(world.snapshot()) == [(1, 10), (2, 20)]
+
+
+def test_failed_flush_keeps_ops_and_retry_succeeds(world):
+    world.insert_rows([{"dim0": 1, "dim1": 10}])
+    world.flush()
+    world.insert_rows([{"dim0": 2, "dim1": 20}, {"dim0": 3, "dim1": 5000}])
+    assert rows(world.get(2)) == [(2, 20)]
+    cached = world._pending_cache
+    with pytest.raises(ValueOutOfRangeError):
+        world.flush()
+    assert world.writes == 1
+    assert world._pending_cache is cached  # kept with the ops
+    world.delete_ids([3])  # correct the batch: the later op wins
+    assert world.flush() == 2
+    w2 = World(world.spark, spec_1024(), world.path, physical_factors=(1, 1))
+    assert rows(w2.snapshot()) == [(1, 10), (2, 20)]
+
+
+# -- flush pruning keeps the rewrite set exact -------------------------------
+
+# ids route to 8 id groups of 128; a and b to 4 and 2 groups. Base rows
+# keep a below 768, so the a-group 3 partitions hold only LONELY.
+PRUNE_SPEC = WorldSpec(
+    dims=(
+        DimSpec("id", 0, 1023, 8),
+        DimSpec("a", 0, 1023, 16),
+        DimSpec("b", 0, 1023, 16),
+    )
+)
+PRUNE_FACTORS = (16, 16, 32)
+LONELY = 1021
+
+
+def _prune_key(i, a, b):
+    return f"{i // 128}/{a // 256}/{b // 512}"
+
+
+def _prune_base():
+    model = {i: ((i * 37) % 768, (i * 11) % 1024, f"p{i}") for i in range(0, 1024, 4)}
+    model[LONELY] = (1000, 1000, "lonely")
+    return model
+
+
+def _prune_batch(model):
+    """Touch 3 id groups: in-place and cross-group relocating updates,
+    new ids, deletes, and relocate LONELY out of its partition."""
+    ups = {
+        4: (model[4][0], model[4][1], "inplace"),  # group 0, same place
+        8: (700, 1000, "reloc-a-b"),  # group 0, crosses a and b groups
+        644: (10, 10, "reloc"),  # group 5
+        642: (300, 600, "new"),  # group 5, new id
+        LONELY: (10, 20, "moved"),  # group 7: empties its partition
+    }
+    return ups, [12, 648]
+
+
+def _parquet_files(path):
+    out = set()
+    for root, _dirs, files in os.walk(path):
+        out.update(
+            os.path.relpath(os.path.join(root, f), path)
+            for f in files if f.endswith(".parquet")
+        )
+    return out
+
+
+@pytest.mark.parametrize("versioned", [False, True])
+def test_flush_pruning_rewrites_exactly_the_dirty_set(
+    spark, tmp_path, monkeypatch, versioned
+):
+    from pyspark.sql import DataFrameWriter
+
+    path = str(tmp_path / "w")
+    w = World(spark, PRUNE_SPEC, path, physical_factors=PRUNE_FACTORS,
+              versioned=versioned)
+    model = _prune_base()
+    w.upsert(spark.createDataFrame(
+        [(i, a, b, p) for i, (a, b, p) in model.items()],
+        "id long, a long, b long, p string",
+    ))
+    w.flush()
+    ups, dels = _prune_batch(model)
+    w.upsert(spark.createDataFrame(
+        [(i, a, b, p) for i, (a, b, p) in ups.items()],
+        "id long, a long, b long, p string",
+    ))
+    w.delete_ids(dels)
+    expect_dirty = {_prune_key(i, *model[i][:2]) for i in [*ups, *dels] if i in model}
+    expect_dirty |= {_prune_key(i, a, b) for i, (a, b, _) in ups.items()}
+    assert _prune_key(LONELY, *model[LONELY][:2]) not in {
+        _prune_key(i, a, b) for i, (a, b, _) in model.items() if i != LONELY
+    }
+    model.update(ups)
+    for i in dels:
+        del model[i]
+
+    # record every plan the flush runs: collects and the data write
+    plans = []
+    df_cls = type(w._base())
+    collect, parquet = df_cls.collect, DataFrameWriter.parquet
+
+    def spy_collect(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return collect(self)
+
+    def spy_parquet(self, *a, **kw):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return parquet(self, *a, **kw)
+
+    before = _parquet_files(path)
+    owner_before = w._read_owner(w.current_version()) if versioned else None
+    monkeypatch.setattr(df_cls, "collect", spy_collect)
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy_parquet)
+    assert w.flush() == 2
+    monkeypatch.undo()
+
+    filters = [
+        line.split("PartitionFilters: [", 1)[1].split("], PushedFilters", 1)[0]
+        for p in plans for line in p.split("\n") if "PartitionFilters: [" in line
+    ]
+    # old-location lookup reads only the touched id groups ...
+    assert any(re.search(r"\bc0#\d+ IN \(0,5,7\)", f) for f in filters)
+    # ... and the merge reads only the dirty partitions, by key (Spark
+    # prints a long IN list as a sorted INSET)
+    keys = sorted(expect_dirty)
+    dirty_in = (f"IN ({','.join(keys)})", f"INSET {', '.join(keys)}")
+    assert any(
+        "concat_ws(/, cast(c0#" in f and any(d in f for d in dirty_in)
+        for f in filters
+    )
+
+    if versioned:
+        owner = w._read_owner(w.current_version())
+        changed = {k for k in owner_before if owner.get(k) != owner_before[k]}
+        changed |= set(owner) - set(owner_before)
+    else:
+        changed = {
+            "/".join(seg.split("=")[1] for seg in os.path.dirname(f).split("/"))
+            for f in before ^ _parquet_files(path)
+        }
+    assert changed == expect_dirty
+
+    want = sorted((i, a, b, p) for i, (a, b, p) in model.items())
+    for reader in (w, World(spark, PRUNE_SPEC, path,
+                            physical_factors=PRUNE_FACTORS, versioned=versioned)):
+        got = sorted(tuple(r) for r in reader.snapshot().select("id", "a", "b", "p").collect())
+        assert got == want
+    w.close()
+
+
+def test_failed_swap_restores_partitions_and_retry_publishes(
+    spark, tmp_path, monkeypatch
+):
+    """Fault injection in the non-versioned publish: a move that
+    raises part-way through the dirty partitions must leave the world
+    exactly as it was before the flush, with the ops still pending, and
+    a retried flush must publish the whole batch."""
+    import shutil
+
+    path = str(tmp_path / "w")
+    w = World(spark, PRUNE_SPEC, path, physical_factors=PRUNE_FACTORS)
+    model = _prune_base()
+    w.upsert(spark.createDataFrame(
+        [(i, a, b, p) for i, (a, b, p) in model.items()],
+        "id long, a long, b long, p string",
+    ))
+    w.flush()
+    pre = sorted((i, a, b, p) for i, (a, b, p) in model.items())
+    pre_files = _parquet_files(path)
+    ups, dels = _prune_batch(model)
+    w.upsert(spark.createDataFrame(
+        [(i, a, b, p) for i, (a, b, p) in ups.items()],
+        "id long, a long, b long, p string",
+    ))
+    w.delete_ids(dels)
+    model.update(ups)
+    for i in dels:
+        del model[i]
+    post = sorted((i, a, b, p) for i, (a, b, p) in model.items())
+
+    moves, real_move = [], shutil.move
+
+    def failing_move(src, dst, *a, **kw):
+        moves.append(dst)
+        if len(moves) == 3:
+            raise OSError("injected move failure")
+        return real_move(src, dst, *a, **kw)
+
+    monkeypatch.setattr(shutil, "move", failing_move)
+    with pytest.raises(OSError, match="injected"):
+        w.flush()
+    monkeypatch.undo()
+
+    assert len(moves) == 3  # failed on the 3rd of more partitions
+    assert w.writes == 2
+    assert _parquet_files(path) == pre_files
+    assert not [n for n in os.listdir(tmp_path) if ".aside-" in n or ".staging-" in n]
+    on_disk = World(spark, PRUNE_SPEC, path, physical_factors=PRUNE_FACTORS)
+
+    def state(world):
+        return sorted(tuple(r) for r in world.snapshot().select("id", "a", "b", "p").collect())
+
+    assert state(on_disk) == pre
+    assert state(w) == post  # pending view still merges the ops
+
+    assert w.flush() == 2
+    assert state(World(spark, PRUNE_SPEC, path, physical_factors=PRUNE_FACTORS)) == post
+    w.close()
