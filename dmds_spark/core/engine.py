@@ -179,17 +179,3 @@ def materialize(df: DataFrame, *, mode: str | None = None) -> DataFrame:
         df.write.mode("overwrite").parquet(path)
         return spark.read.parquet(path)
     raise ValueError(f"unknown materialize mode {mode!r}")
-
-
-def release(df: DataFrame) -> None:
-    """Free the blocks behind a ``materialize``d DataFrame once nothing
-    will read it again; ``df`` (and anything built on it) is unusable
-    afterwards. Executor-local checkpoints otherwise stay in the block
-    manager until the JVM ContextCleaner notices the reference died.
-    A no-op for the reliable and parquet modes, whose files follow the
-    checkpoint dir's and the session's lifetime."""
-    plan = df._jdf.queryExecution().logical()
-    if plan.getClass().getSimpleName() == "LogicalRDD":
-        # the ContextCleaner's own call: RDD.unpersist would log a
-        # lineage-truncated warning on every release
-        df.sparkSession.sparkContext._jsc.sc().unpersistRDD(plan.rdd().id(), False)

@@ -435,18 +435,6 @@ def kmeans_assign(
     )
     if not seeds:
         raise ValueError("kmeans_assign: empty input (no seed vectors)")
-    # the M-step reads vec[0..dim-1]: a short or null vector would give
-    # NULL means and fail mid-loop, so check every length once up front
-    lo, hi = (
-        df.select(F.coalesce(F.size(vec_col), F.lit(-1)).alias("n"))
-        .agg(F.min("n"), F.max("n"))
-        .first()
-    )
-    if lo != dim or hi != dim:
-        raise ValueError(
-            f"kmeans_assign: column {vec_col!r} must hold {dim}-dim "
-            f"vectors, found lengths {lo}..{hi} (-1 = null)"
-        )
     # fewer rows than k: every row is its own seed and the extra
     # clusters simply never exist — valid, documented degeneracy
     centers = [
@@ -494,19 +482,28 @@ def kmeans_assign(
         # mean is the same expression as centroids_long —
         # round(cast(exact-decimal-sum as double) / n, 6) — and decimal
         # addition is order-independent, so the doubles (and therefore
-        # every later assignment) are bit-identical. Assumes dense
+        # every later assignment) are bit-identical. Needs dense
         # ``dim``-length vectors, which kmeans distances require anyway.
         sums = [
             F.sum(
-                F.col(vec_col)[i].cast("double").cast("decimal(28,12)")
+                F.get(F.col(vec_col), i).cast("double").cast("decimal(28,12)")
             ).alias(f"__s{i}")
             for i in range(dim)
         ]
+        # the vector lengths ride along and are checked before any mean
+        # is used (``get`` reads a missing element as NULL instead of
+        # failing the job mid-loop)
+        size = F.coalesce(F.size(vec_col), F.lit(-1))
         agg = assigned.groupBy("cluster").agg(
-            *sums, F.count(F.lit(1)).alias("__n")
+            *sums,
+            F.count(F.lit(1)).alias("__n"),
+            F.min(size).alias("__lo"),
+            F.max(size).alias("__hi"),
         )
         mrows = agg.select(
             "cluster",
+            "__lo",
+            "__hi",
             *[
                 F.round(
                     F.col(f"__s{i}").cast("double") / F.col("__n"), 6
@@ -514,6 +511,13 @@ def kmeans_assign(
                 for i in range(dim)
             ],
         ).collect()
+        lo = min(r["__lo"] for r in mrows)
+        hi = max(r["__hi"] for r in mrows)
+        if lo != dim or hi != dim:
+            raise ValueError(
+                f"kmeans_assign: column {vec_col!r} must hold {dim}-dim "
+                f"vectors, found lengths {lo}..{hi} (-1 = null)"
+            )
         new_centers = {
             int(r["cluster"]): [float(r[f"__m{i}"]) for i in range(dim)]
             for r in mrows

@@ -51,7 +51,7 @@ from dmds_spark.core.errors import (
     WorldFencedError,
     WorldLockedError,
 )
-from dmds_spark.core.engine import materialize, release
+from dmds_spark.core.engine import materialize
 
 
 class WriterLock:
@@ -1012,13 +1012,14 @@ class World:
 
         Materialized once per op-log state, cached under the last op's
         sequence number: pending reads and the flush that commits them
-        share it. A successful flush drops and releases it."""
+        share it. A successful flush drops the cache; the checkpoint
+        lives on while any DataFrame built from it does."""
         ops = list(self._ops)  # appends may race an unlocked read
         if not ops:
             return None, None
         cached = self._pending_cache
         if cached is not None and cached[0] == ops[-1][0]:
-            return cached[2], cached[3]
+            return cached[1], cached[2]
         from pyspark.sql import Window as W
 
         id_col = self.spec.id_dim.name
@@ -1071,7 +1072,7 @@ class World:
         for d in self.spec.dims:
             if d.name not in live.columns:
                 live = live.withColumn(d.name, F.lit(None).cast(d.spark_type))
-        self._pending_cache = (ops[-1][0], latest, live, touched)
+        self._pending_cache = (ops[-1][0], live, touched)
         return live, touched
 
     @staticmethod
@@ -1311,8 +1312,7 @@ class World:
         tokio-fs/src/lib.rs:85-107). With ``validate="flush"`` the
         domain check rides along as raise_error guards in the same
         pass. Returns ops flushed. A flush that raises publishes
-        nothing and keeps its ops for a retry. Consume DataFrames read
-        while ops were pending before the flush that commits them."""
+        nothing and keeps its ops for a retry."""
         with self._lock:
             if not self._ops:
                 return 0
@@ -1323,9 +1323,7 @@ class World:
             except Exception as e:  # noqa: BLE001 — guard translation
                 self._reraise_domain(e)
             n, self._ops = len(self._ops), []
-            cached, self._pending_cache = self._pending_cache, None
-            if cached is not None:
-                release(cached[1])  # the resolved log's checkpoint
+            self._pending_cache = None
             # new on-disk state: invalidate every same-process World's
             # cached base relation (the interned version is the key)
             self._writer_lock.data_version += 1

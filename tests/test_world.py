@@ -489,9 +489,6 @@ def test_pending_reads_share_one_resolved_log(spark, monkeypatch, world):
     assert jobs == 0  # second pending get: no job before it returns
     assert rows(df) == [(2, 20)]
 
-    persisted = spark.sparkContext._jsc.getPersistentRDDs()
-    ckpt = world._pending_cache[1]._jdf.queryExecution().logical().rdd().id()
-    assert persisted.containsKey(ckpt)
     barriers = []
     real = world_mod.materialize
     monkeypatch.setattr(
@@ -499,9 +496,24 @@ def test_pending_reads_share_one_resolved_log(spark, monkeypatch, world):
     )
     assert world.flush() == 1
     assert barriers == []  # the flush reused the read's checkpoint
-    assert world._pending_cache is None  # released with its ops
-    assert not spark.sparkContext._jsc.getPersistentRDDs().containsKey(ckpt)
+    assert world._pending_cache is None  # dropped with its ops
     assert rows(world.snapshot()) == [(1, 10), (2, 20)]
+
+
+def test_pending_dataframes_survive_the_flush(spark, tmp_path):
+    # a lazy DataFrame read while ops were pending keeps working after
+    # the flush that commits them (e.g. a daemon flush between a get
+    # and its collect): the flush must not free the shared checkpoint
+    w = World(spark, spec_1024(), str(tmp_path / "w"),
+              physical_factors=(1, 1), versioned=True)
+    w.insert_rows([{"dim0": 1, "dim1": 10}])
+    w.flush()
+    w.insert_rows([{"dim0": 1, "dim1": 11}, {"dim0": 2, "dim1": 20}])
+    got, snap = w.get(2), w.snapshot()
+    assert w.flush() == 1
+    assert rows(got) == [(2, 20)]
+    assert rows(snap) == [(1, 11), (2, 20)]
+    w.close()
 
 
 def test_failed_flush_keeps_ops_and_retry_succeeds(world):
