@@ -13,26 +13,31 @@ only by wall clock. This module makes that failure mode testable:
 
 The counter hooks ``GatewayClient.send_command`` — the single socket
 boundary every py4j proxy call funnels through — so it counts real
-JVM round trips, not Python-side sugar. Thread-local-free and
-re-entrant-safe for the single-threaded builder paths it lints.
+JVM round trips, not Python-side sugar. Only the calling thread's
+calls count: a concurrent thread (a flush daemon, a lease heartbeat)
+shares the hook but not the builder's cost.
 """
 
 from __future__ import annotations
 
+import threading
 from typing import Callable
 
 from py4j.java_gateway import GatewayClient
 
 
 def py4j_call_count(fn: Callable[[], object]) -> int:
-    """Run ``fn`` and return the number of py4j JVM round trips it
-    made. The hook is installed for the duration of the call only."""
+    """Run ``fn`` and return the number of py4j JVM round trips the
+    calling thread made while it ran. The hook is installed for the
+    duration of the call only."""
     n = 0
+    me = threading.get_ident()
     orig = GatewayClient.send_command
 
     def counted(self, *args, **kwargs):  # noqa: ANN001
         nonlocal n
-        n += 1
+        if threading.get_ident() == me:
+            n += 1
         return orig(self, *args, **kwargs)
 
     GatewayClient.send_command = counted

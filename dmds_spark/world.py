@@ -39,6 +39,7 @@ import threading
 import time
 import uuid
 from typing import Iterable, Sequence
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,16 +63,16 @@ class WriterLock:
     directory (``<path>.lockd/``), never inside the Spark-owned data
     directory: a static-mode ``INSERT OVERWRITE`` deletes the whole
     target directory before writing, and round 14 proved a lock stored
-    inside it gets wiped by the engine's own first flush under a
-    default-config session (``partitionOverwriteMode=STATIC``), fencing
-    the writer against its own write. Mutual-exclusion state must not
+    inside it gets wiped by an in-place first flush under a
+    default-config session, fencing the writer against its own write.
+    Mutual-exclusion state must not
     share a directory with data any engine rewrite can clobber. The in-process ``threading.Lock``
     serializes flush-vs-writer within one session (the reference's
     ``lock_w``, src/world.rs:58, guards a single process the same
     way); THIS lock extends the single-writer discipline across
-    processes sharing the filesystem, which chunk-granularity dynamic
-    partition overwrite requires (two writers flushing from different
-    base snapshots would silently drop each other's rows).
+    processes sharing the filesystem, which chunk-granularity rewrites
+    require (two writers flushing from different base snapshots would
+    silently drop each other's rows).
 
     Process-wide interning (``WriterLock.for_dir``): every ``World``
     on the same realpath shares ONE instance — one flush ``mutex``
@@ -106,16 +107,17 @@ class WriterLock:
       have no server to enforce leases; same trust model as the
       reference's in-process lock).
     - Fencing token at commit points: ``verify_token()`` re-reads the
-      lock file immediately before every manifest/pointer commit
-      (``World.flush``/``compact``, IVF pointer flips) and raises
-      ``WorldFencedError`` if the token changed — a live writer whose
+      lock file immediately before every publish — the manifest flip
+      of a versioned world, the directory swap of a plain one (both
+      ``World.flush`` and ``compact``), IVF pointer flips — and raises
+      ``WorldFencedError`` if the token changed: a live writer whose
       lock was broken (manually or by lease reclaim) aborts BEFORE
-      clobbering the new holder's state. The residual window is the
-      non-versioned dynamic partition overwrite itself, which is not
-      atomic: the check runs before the write starts, so prefer
-      ``versioned=True`` worlds where concurrent breakers are a real
-      possibility (their data writes land in fresh ``_v{N}`` dirs and
-      only the verified manifest flip publishes them)."""
+      clobbering the new holder's state. Data is always written to a
+      fresh directory first (``_v{N}`` or a staging sibling), so the
+      residual window is the plain world's rename loop alone, which
+      runs after the check; prefer ``versioned=True`` worlds where
+      concurrent breakers are a real possibility (one verified manifest
+      flip publishes a whole commit)."""
 
     FILENAME = "_writer.lock"
     LOCK_DIR_SUFFIX = ".lockd"
@@ -366,10 +368,11 @@ class WriterLock:
     def verify_token(self) -> None:
         """Fencing check for commit points: re-read the lock file and
         raise ``WorldFencedError`` unless it still carries OUR token.
-        Called immediately before every manifest/pointer flip and
-        before a non-versioned partition overwrite starts, so a writer
-        whose lock was broken or lease-reclaimed mid-write aborts
-        instead of clobbering the new holder's state."""
+        Called immediately before every manifest/pointer flip and,
+        in a non-versioned world, after staging and before the first
+        directory rename, so a writer whose lock was broken or
+        lease-reclaimed mid-write aborts instead of clobbering the new
+        holder's state."""
         holder = self._holder()
         if self._refs == 0 or not holder or holder.get("token") != self.token:
             raise WorldFencedError(self.dir_path, holder or {})
@@ -444,6 +447,14 @@ class World:
         # per-directory reads are unaffected.
         self.versioned = bool(versioned)
         self._dim_index = {d.name: i for i, d in enumerate(spec.dims)}
+        if urlsplit(path).scheme:
+            # Spark would write through Hadoop FS while the driver's
+            # renames, manifests and lock files landed on local disk
+            raise ValueError(
+                f"World path {path!r} has a URI scheme; the writer lock, "
+                "manifests and publish renames use local file operations, "
+                "so a World needs a plain local path"
+            )
         self.path = path
         if physical_factors is None:
             # default: bound physical partition count to ~4096 dirs total
@@ -628,9 +639,9 @@ class World:
     # -- lifecycle -----------------------------------------------------------
 
     def exists(self) -> bool:
-        """True iff the world has any persisted data files. Uses the
-        Hadoop FileSystem API so any supported scheme (file/hdfs/s3a)
-        works; empty partition-directory skeletons don't count."""
+        """True iff the world has any persisted data files; the listing
+        stops at the first one. Empty partition-directory skeletons
+        don't count."""
         if self.versioned:
             v = self.current_version()
             return v > 0 and bool(self._read_owner(v))
@@ -796,9 +807,7 @@ class World:
             )
         return best
 
-    def _commit_version_write(
-        self, out: DataFrame, dirty_keys: set[str] = frozenset()
-    ) -> int:
+    def _commit_version_write(self, out: DataFrame, dirty_keys: set[str]) -> int:
         """Write ``out`` (rows + partition cols) as the next immutable
         version directory, then commit a manifest that carries forward
         every non-dirty partition from the previous snapshot and points
@@ -1334,25 +1343,10 @@ class World:
         if self.validate == "flush":
             live = self._domain_guard(live)
         base = self._base()
-        pcols = self.partition_cols()
-
         if base is None:
-            out = self._with_partition_cols(live)
-            if self.versioned:
-                self._commit_version_write(out)
-            else:
-                self._writer_lock.verify_token()  # fence the overwrite
-                # per-write dynamic mode, like compact(): a session left
-                # at Spark's STATIC default would otherwise
-                # delete-and-recreate the whole directory (correctness
-                # must not depend on session conf — the round-14 driver
-                # session proved it doesn't set this)
-                (
-                    out.write.partitionBy(*pcols)
-                    .mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .parquet(self.path)
-                )
+            # a fresh world has no old locations: publish every live
+            # row; the partitions it lands in are listed from the write
+            self._publish(self._with_partition_cols(live), [])
             return
 
         # dirty = new location of every live row + old location of
@@ -1388,29 +1382,33 @@ class World:
             return
         dirty = sorted(dirty)
         # a literal IN on the key: the merge reads the dirty dirs only
-        base_part = base.filter(key.isin(dirty)).drop(*pcols)
+        base_part = base.filter(key.isin(dirty)).drop(*self.partition_cols())
         kept = base_part.join(touched, on=id_col, how="left_anti")
         live_cast = self._align_to(live, base_part)
         merged = kept.unionByName(live_cast, allowMissingColumns=True)
-        out = self._with_partition_cols(merged)
+        self._publish(self._with_partition_cols(merged), dirty)
+
+    def _publish(self, out: DataFrame, dirty: list[str]) -> None:
+        """The one publish path of every World write (flush and
+        compact): ``out`` holds the new rows of the ``dirty``
+        partitions plus any partitions it creates. Versioned worlds
+        commit it as the next snapshot; plain worlds stage and swap.
+        Either way the data lands in a fresh directory first, so the
+        write never reads what it replaces and needs no barrier."""
         if self.versioned:
-            # fresh immutable version dir: no self-overwrite, so no
-            # materialization barrier; vanished partitions drop out of
-            # the manifest instead of needing directory cleanup
             self._commit_version_write(out, set(dirty))
         else:
             self._stage_and_swap(out, dirty)
 
     def _stage_and_swap(self, out: DataFrame, dirty: list[str]) -> None:
-        """Publish ``out`` (the new rows of exactly the ``dirty``
-        partitions) into a non-versioned world. ``out`` reads the files
-        an in-place overwrite would delete, so it is written to a
-        sibling staging dir (no materialization barrier) and each dirty
-        directory is swapped in by local-FS renames. No staged dir
-        means the partition emptied: it is cleared (the reference
-        rewrites dirty chunks even to empty, src/world.rs:96-122).
-        Each live dir is renamed aside first; any failure renames them
-        back, so the world keeps its pre-flush contents."""
+        """Publish ``out`` into a non-versioned world: write it to a
+        sibling staging dir, then swap in, by local-FS renames, every
+        ``dirty`` directory and every directory the staging holds. A
+        dirty key with no staged dir means the partition emptied: it is
+        cleared (the reference rewrites dirty chunks even to empty,
+        src/world.rs:96-122). Each live dir is renamed aside first; any
+        failure renames them back, so the world keeps its prior
+        contents."""
         tag = uuid.uuid4().hex[:12]
         staging = f"{self.path}.staging-{tag}"
         aside = f"{self.path}.aside-{tag}"
@@ -1422,7 +1420,7 @@ class World:
                 .parquet(staging)
             )
             self._writer_lock.verify_token()  # fence the swap
-            for key in dirty:
+            for key in sorted({*dirty, *self._written_partitions(staging)}):
                 dst, src = self._part_dir(key), self._part_dir(key, staging)
                 parked = None
                 if os.path.isdir(dst):
@@ -1489,9 +1487,9 @@ class World:
         """Rewrite fragmented physical partitions down to one file each,
         rows sorted by id within the file.
 
-        Every flush appends-by-overwrite at whole-partition granularity,
-        but a long upsert history still fragments partitions written by
-        different Spark jobs (and at 100 TB the small-file problem is
+        Every flush rewrites whole partitions, but a large flush still
+        writes one file per task that holds a partition's rows (and at
+        100 TB the small-file problem is
         the #1 scan-throughput killer: each file costs a task + a
         footer read). Compaction = the reference's whole-chunk rewrite
         (src/world.rs:96-122) applied for layout instead of
@@ -1524,46 +1522,34 @@ class World:
             if base is None:
                 return 0
             pcols = self.partition_cols()
-            # small (partition keys only): materialize once, use as a
-            # broadcast semi-join filter — thousands of fragmented
-            # partitions are the NORMAL state at scale, and a
-            # driver-built OR chain over them blows up planning
-            frag_df = (
-                base.select(*pcols, F.input_file_name().alias("__f"))
-                .groupBy(*pcols)
+            key = self._part_key_col()
+            # one collect of the fragmented keys (at most the ~4096
+            # physical partitions; the file name is projected first
+            # because an aggregate cannot take input_file_name directly)
+            frag = sorted(
+                r[0]
+                for r in base.select(key.alias("__k"), F.input_file_name().alias("__f"))
+                .groupBy("__k")
                 .agg(F.count_distinct("__f").alias("__nf"))
                 .filter(F.col("__nf") > max_files_per_partition)
-                .select(*pcols)
-                .transform(materialize)
+                .select("__k")
+                .collect()
             )
-            n_frag = frag_df.count()
-            if not n_frag:
+            if not frag:
                 return 0
             id_col = self.spec.id_dim.name
             sort_key = self.zvalue() if order == "zorder" else F.col(id_col)
             out = (
-                base.join(F.broadcast(frag_df), on=pcols, how="left_semi")
+                # the same literal key IN as flush: reads those dirs only
+                base.filter(key.isin(frag))
                 # one task (=> one file) per physical partition, rows
                 # sorted within it for row-group stats pruning
                 .repartition(*[F.col(c) for c in pcols])
                 .sortWithinPartitions(*pcols, sort_key)
             )
-            if self.versioned:
-                keys = {r[0] for r in frag_df.select(self._part_key_col()).collect()}
-                self._commit_version_write(out, keys)
-            else:
-                # materialize before self-overwrite (fresh version dirs
-                # don't need the barrier)
-                out = out.transform(materialize)
-                self._writer_lock.verify_token()  # fence the overwrite
-                (
-                    out.write.partitionBy(*pcols)
-                    .mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .parquet(self.path)
-                )
+            self._publish(out, frag)
             self._writer_lock.data_version += 1  # invalidate base caches
-            return n_frag
+            return len(frag)
 
     def stats(self) -> DataFrame:
         """ANALYZE-style storage profile: one row per physical

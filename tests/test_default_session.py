@@ -9,9 +9,10 @@ overwrite deleted the whole world directory — including the writer
 lock file that used to live inside it — and the writer fenced itself
 mid-write (`dmds_world_maintenance` ERR in CORRECTNESS_r14.json).
 Fixed two ways (either suffices, both are in): the lock file moved to
-a sibling ``<path>.lockd/`` dir no engine rewrite can touch, and every
-in-place partitioned overwrite now sets per-write
-``partitionOverwriteMode=dynamic``.
+a sibling ``<path>.lockd/`` dir no engine rewrite can touch, and no
+World write overwrites in place any more: every flush and compact
+writes a fresh staging or version directory and publishes by rename
+or manifest flip, so the overwrite mode never matters.
 
 These tests pin the CLASS of bug: run the write-path query families
 under Spark-DEFAULT values of every correctness-relevant session conf
@@ -23,7 +24,8 @@ four affected queries were additionally certified green via
 zero-conf session in a fresh JVM).
 
 Conf audit (session.py:38-53), correctness-relevant vs perf-only:
-- partitionOverwriteMode=dynamic  -> CORRECTNESS (this file pins it)
+- partitionOverwriteMode=dynamic  -> no World write depends on it;
+  flipped to STATIC here to pin that
 - session.timeZone=UTC            -> matches the Spark default on a
   UTC host (driver and testdata are UTC; docstrings state UTC)
 - arrow.pyspark.enabled           -> perf-only (mapInPandas does not

@@ -6,6 +6,8 @@ test suite could have caught it. These tests (a) prove the counter
 sees a seeded regression and (b) pin a build budget on the query
 families that construct the largest expression trees."""
 
+import threading
+
 from pyspark.sql import functions as F
 
 from dmds_spark.core.plan_lint import py4j_call_count
@@ -34,6 +36,28 @@ def test_counter_catches_seeded_loop_built_tree(spark):
     n_sql = py4j_call_count(sql_text)
     assert n_loop > 300, f"counter missed the loop tree ({n_loop})"
     assert n_sql < n_loop / 5, (n_sql, n_loop)
+
+
+def test_counter_ignores_other_threads(spark):
+    """Round trips a concurrent thread makes while ``fn`` runs are not
+    ``fn``'s cost: a thread building a 300-node tree during ``fn``
+    leaves the caller's count near zero."""
+    inner = []
+
+    def loop_built():
+        col = F.lit(0)
+        for i in range(300):
+            col = col + F.lit(i)
+
+    def fn():
+        t = threading.Thread(target=lambda: inner.append(py4j_call_count(loop_built)))
+        t.start()
+        t.join(timeout=60)
+        assert not t.is_alive()
+
+    n = py4j_call_count(fn)
+    assert inner[0] > 300, f"the thread's own count missed its tree ({inner})"
+    assert n < 30, f"counted {n} calls made by another thread"
 
 
 def test_heavy_builders_stay_under_budget(spark):

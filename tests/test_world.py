@@ -312,6 +312,13 @@ def test_delete_only_oplog_paths(spark, tmp_path, world):
     w.delete_ids([5])
     assert rows(w.snapshot()) == []
     assert rows(w.read(w.select_all())) == []
+    assert w.flush() == 1 and not w.exists()  # publishes nothing
+    wv = World(spark, spec_1024(), str(tmp_path / "wvdel"),
+               physical_factors=(1, 1), versioned=True)
+    wv.delete_ids([5])
+    wv.flush()
+    assert wv.current_version() == 1  # even a delete-only flush commits
+    assert rows(wv.snapshot(version=1)) == []
     world.insert_rows([{"dim0": 1, "dim1": 2}, {"dim0": 3, "dim1": 4}])
     world.flush()
     world.delete_ids([1])
@@ -664,35 +671,57 @@ def test_flush_pruning_rewrites_exactly_the_dirty_set(
     w.close()
 
 
+def _prune_df(spark, model):
+    return spark.createDataFrame(
+        [(i, a, b, p) for i, (a, b, p) in model.items()],
+        "id long, a long, b long, p string",
+    )
+
+
+def _fragmented_prune_world(spark, path):
+    """A PRUNE_SPEC world whose partitions each hold several files: with
+    AQE off the collapsed op log keeps one task per shuffle partition,
+    and every task writes its own file into each partition it holds."""
+    w = World(spark, PRUNE_SPEC, path, physical_factors=PRUNE_FACTORS)
+    w.upsert(_prune_df(spark, _prune_base()))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        w.flush()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    return w
+
+
+@pytest.mark.parametrize("publish", ["later_flush", "first_flush", "compact"])
 def test_failed_swap_restores_partitions_and_retry_publishes(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, publish
 ):
-    """Fault injection in the non-versioned publish: a move that
-    raises part-way through the dirty partitions must leave the world
-    exactly as it was before the flush, with the ops still pending, and
-    a retried flush must publish the whole batch."""
+    """Fault injection in every non-versioned publish: a move that
+    raises part-way through the swapped partitions must leave the world
+    exactly as it was before the call, with any flush ops still pending,
+    and a retry must publish the whole state."""
     import shutil
 
     path = str(tmp_path / "w")
-    w = World(spark, PRUNE_SPEC, path, physical_factors=PRUNE_FACTORS)
     model = _prune_base()
-    w.upsert(spark.createDataFrame(
-        [(i, a, b, p) for i, (a, b, p) in model.items()],
-        "id long, a long, b long, p string",
-    ))
-    w.flush()
-    pre = sorted((i, a, b, p) for i, (a, b, p) in model.items())
-    pre_files = _parquet_files(path)
-    ups, dels = _prune_batch(model)
-    w.upsert(spark.createDataFrame(
-        [(i, a, b, p) for i, (a, b, p) in ups.items()],
-        "id long, a long, b long, p string",
-    ))
-    w.delete_ids(dels)
-    model.update(ups)
-    for i in dels:
-        del model[i]
+    if publish == "first_flush":
+        w = World(spark, PRUNE_SPEC, path, physical_factors=PRUNE_FACTORS)
+        w.upsert(_prune_df(spark, model))
+        pre, ops = [], 1
+    else:
+        w = _fragmented_prune_world(spark, path)
+        pre, ops = sorted((i, a, b, p) for i, (a, b, p) in model.items()), 0
+    if publish == "later_flush":
+        ups, dels = _prune_batch(model)
+        w.upsert(_prune_df(spark, ups))
+        w.delete_ids(dels)
+        model.update(ups)
+        for i in dels:
+            del model[i]
+        ops = 2
     post = sorted((i, a, b, p) for i, (a, b, p) in model.items())
+    call = w.compact if publish == "compact" else w.flush
+    pre_files = _parquet_files(path)
 
     moves, real_move = [], shutil.move
 
@@ -704,21 +733,60 @@ def test_failed_swap_restores_partitions_and_retry_publishes(
 
     monkeypatch.setattr(shutil, "move", failing_move)
     with pytest.raises(OSError, match="injected"):
-        w.flush()
+        call()
     monkeypatch.undo()
 
     assert len(moves) == 3  # failed on the 3rd of more partitions
-    assert w.writes == 2
+    assert w.writes == ops
     assert _parquet_files(path) == pre_files
     assert not [n for n in os.listdir(tmp_path) if ".aside-" in n or ".staging-" in n]
-    on_disk = World(spark, PRUNE_SPEC, path, physical_factors=PRUNE_FACTORS)
 
     def state(world):
-        return sorted(tuple(r) for r in world.snapshot().select("id", "a", "b", "p").collect())
+        snap = world.snapshot()  # an empty world has the dims alone
+        cols = [c for c in ("id", "a", "b", "p") if c in snap.columns]
+        return sorted(tuple(r) for r in snap.select(*cols).collect())
 
-    assert state(on_disk) == pre
+    def on_disk():
+        return World(spark, PRUNE_SPEC, path, physical_factors=PRUNE_FACTORS)
+
+    assert state(on_disk()) == pre
     assert state(w) == post  # pending view still merges the ops
 
-    assert w.flush() == 2
-    assert state(World(spark, PRUNE_SPEC, path, physical_factors=PRUNE_FACTORS)) == post
+    done = call()
+    assert state(on_disk()) == post
+    if publish == "compact":
+        assert done > 2
+        assert all(
+            len([f for f in fs if f.endswith(".parquet")]) <= 1
+            for _root, _dirs, fs in os.walk(path)
+        )
+    else:
+        assert done == ops
     w.close()
+
+
+def test_compact_collects_fragments_in_one_pass(spark, tmp_path, monkeypatch):
+    # compact finds the fragmented keys with one collect and publishes
+    # through the staging dir: no barrier, no second pass over the keys
+    import dmds_spark.world as world_mod
+
+    w = _fragmented_prune_world(spark, str(tmp_path / "w"))
+    w._base()  # list the directory outside the measured call
+    barriers = []
+    real = world_mod.materialize
+    monkeypatch.setattr(
+        world_mod, "materialize", lambda d: barriers.append(1) or real(d)
+    )
+    n, jobs = _jobs(spark, w.compact)
+    assert n > 2
+    assert barriers == []  # no localCheckpoint job
+    # measured with AQE on: three jobs for the fragmented keys (the
+    # distinct file count shuffles twice), two for the sorted write
+    assert jobs <= 5, jobs
+    w.close()
+
+
+def test_world_rejects_uri_paths(spark):
+    for path in ("hdfs://nn/worlds/w", "s3a://bucket/w", "file:///tmp/w"):
+        with pytest.raises(ValueError, match="local"):
+            World(spark, spec_1024(), path)
