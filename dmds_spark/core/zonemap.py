@@ -275,9 +275,9 @@ def read_where(world, bounds: dict[str, tuple], sel=None) -> DataFrame:
         survivors.append(k)
 
     pcols = world.partition_cols()
-    id_col = world.spec.id_dim.name
     base = world._base()
-    live, touched = world._resolved_pending()
+    pending = world._resolved_pending()
+    live = pending.live if pending is not None else None
 
     # column kinds come from the LIVE SCHEMA at read time, never the
     # sidecar: a read before any refresh (or on never-mapped columns)
@@ -328,8 +328,8 @@ def read_where(world, bounds: dict[str, tuple], sel=None) -> DataFrame:
                     F.broadcast(surv_df), on=pcols, how="left_semi"
                 )
         pruned = pruned.filter(value_pred).drop(*pcols)
-        if touched is not None:
-            pruned = pruned.join(touched, on=id_col, how="left_anti")
+        if pending is not None:
+            pruned = world._drop_touched(pruned, pending)
         out = pruned
     if live is not None:
         live_sel = live.filter(

@@ -486,8 +486,9 @@ def multimodal_byte_histogram(spark, sf_dir):
 @register("dmds_world_maintenance", None)
 def dmds_world_maintenance(spark, sf_dir):
     """The World maintenance surface exercised end to end as a driver
-    row: build a world from an orders slice, flush, fragment it with a
-    second upsert wave, COMPACT to one file per partition (id order),
+    row: build a world from an orders slice, flush, flush a second
+    upsert wave, COMPACT to one file per partition (id order; the
+    flushes already write that layout, so it finds nothing to do),
     and return stats() — per-partition row/file/byte accounting. The
     row count equals the live physical partitions and every partition
     must report n_files=1 after compaction (asserted in the plan via

@@ -65,6 +65,10 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", default_driver_memory())
+        # Column trees built from Python are converted to expressions
+        # recursively on the py4j thread: a 300-deep tree overflowed the
+        # default 1 MiB stack while that code still ran interpreted
+        .config("spark.driver.extraJavaOptions", "-Xss4m")
         .config("spark.ui.enabled", "false")
         # plan introspection (plans/inspect.py) needs untruncated
         # FileScan metadata (PushedFilters/ReadSchema lines)

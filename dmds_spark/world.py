@@ -38,10 +38,10 @@ import socket
 import threading
 import time
 import uuid
-from typing import Iterable, Sequence
+from typing import Iterable, NamedTuple, Sequence
 from urllib.parse import urlsplit
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -53,6 +53,30 @@ from dmds_spark.core.errors import (
     WorldLockedError,
 )
 from dmds_spark.core.engine import materialize
+
+# Most touched ids a batch routes through literal IN lists: the ~4096
+# physical partitions ``World._default_factors`` targets, which also
+# bound the dirty-key IN. A larger batch is routed by joins instead.
+ID_LIST_CAP = 4096
+
+
+class _Pending(NamedTuple):
+    """The op log collapsed to its latest op per id, as of op ``seq``.
+
+    ``live`` holds the latest upsert rows, ``touched`` every id an op
+    names. When at most ``ID_LIST_CAP`` ids were touched, the batch is
+    also routed in literals (``keep`` is set): ``keep`` is NOT id IN
+    (touched ids), ``hit`` is c0 IN ``groups`` AND id IN (touched ids),
+    and ``new_keys`` are the partitions the live rows land in. Above
+    the cap those three are None and ``touched`` is joined instead."""
+
+    seq: int
+    live: DataFrame
+    touched: DataFrame
+    groups: list | None
+    new_keys: set | None
+    keep: Column | None
+    hit: Column | None
 
 
 class WriterLock:
@@ -815,9 +839,7 @@ class World:
         volume — untouched partitions are never rewritten or copied."""
         cur = self.current_version()
         v = cur + 1
-        out.write.partitionBy(*self.partition_cols()).mode(
-            "overwrite"
-        ).parquet(self._version_dir(v))
+        self._write_fresh(out, self._version_dir(v))
         # partition keys from the written directory tree (no Spark job;
         # bounded by the ~4096 physical-partition cap) — also correct
         # when the write is EMPTY (all dirty rows deleted): zero keys,
@@ -831,6 +853,19 @@ class World:
         owner.update({k: v for k in written})
         self._commit_snapshot(v, owner)
         return v
+
+    def _write_fresh(self, out: DataFrame, path: str) -> None:
+        """Write ``out`` under ``path``, partitioned by chunk. Static
+        overwrite clears ``path`` first: no partition a dead earlier
+        attempt left there (an uncommitted ``_v{N}``) can be committed
+        with this write, and the rename pass of dynamic mode is
+        skipped."""
+        (
+            out.write.partitionBy(*self.partition_cols())
+            .mode("overwrite")
+            .option("partitionOverwriteMode", "static")
+            .parquet(path)
+        )
 
     def _written_partitions(self, vdir: str) -> list[str]:
         """Partition keys ("3/7") present in a just-written version
@@ -1014,21 +1049,25 @@ class World:
 
     # -- pending-buffer resolution --------------------------------------------
 
-    def _resolved_pending(self) -> tuple[DataFrame | None, DataFrame | None]:
-        """Collapse the op log to (latest upsert rows, all touched ids).
-        Latest op per id wins — a window over __seq, the deterministic
-        replacement for the reference's chunk/item write locks.
+    def _resolved_pending(self) -> _Pending | None:
+        """Collapse the op log (None when it is empty). Latest op per
+        id wins — a window over __seq, the deterministic replacement
+        for the reference's chunk/item write locks.
 
-        Materialized once per op-log state, cached under the last op's
-        sequence number: pending reads and the flush that commits them
-        share it. A successful flush drops the cache; the checkpoint
-        lives on while any DataFrame built from it does."""
+        Materialized once per op-log state, then one small collect
+        routes it: each touched id with its ``c0`` group and its live
+        row's partition key, computed by the same expressions the write
+        uses (``validate="off"`` admits out-of-range values, and Spark's
+        ``div`` truncates where Python's ``//`` floors). Cached under
+        the last op's sequence number: pending reads and the flush that
+        commits them share it. A successful flush drops the cache; the
+        checkpoint lives on while any DataFrame built from it does."""
         ops = list(self._ops)  # appends may race an unlocked read
         if not ops:
-            return None, None
+            return None
         cached = self._pending_cache
-        if cached is not None and cached[0] == ops[-1][0]:
-            return cached[1], cached[2]
+        if cached is not None and cached.seq == ops[-1][0]:
+            return cached
         from pyspark.sql import Window as W
 
         id_col = self.spec.id_dim.name
@@ -1072,17 +1111,44 @@ class World:
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         ).transform(materialize)
+        # delete-only op logs leave live empty AND missing dim columns —
+        # give it the full dim schema so downstream plans resolve
+        for d in self.spec.dims:
+            if d.name not in latest.columns:
+                latest = latest.withColumn(d.name, F.lit(None).cast(d.spark_type))
         # every touched id has exactly one rn=1 row, so the touched set
         # reads off the collapsed log — no second pass over the raw ops
         touched = latest.select(id_col)
         live = latest.filter(~F.col("__del")).drop("__seq", "__del")
-        # delete-only op logs leave live empty AND missing dim columns —
-        # give it the full dim schema so downstream plans resolve
-        for d in self.spec.dims:
-            if d.name not in live.columns:
-                live = live.withColumn(d.name, F.lit(None).cast(d.spark_type))
-        self._pending_cache = (ops[-1][0], live, touched)
-        return live, touched
+        routed = (
+            self._with_partition_cols(latest)
+            .select(
+                id_col, "c0",
+                F.when(~F.col("__del"), self._part_key_col()).alias("key"),
+            )
+            .limit(ID_LIST_CAP + 1)
+            .collect()
+        )
+        pending = _Pending(ops[-1][0], live, touched, None, None, None, None)
+        if len(routed) <= ID_LIST_CAP:
+            # a null id matches no stored row (as in the joins)
+            ids = [r[0] for r in routed if r[0] is not None]
+            groups = sorted({r[1] for r in routed if r[1] is not None})
+            id_in = F.col(id_col).isin(ids)
+            pending = pending._replace(
+                groups=groups,
+                new_keys={r[2] for r in routed if r[2] is not None},
+                keep=~F.coalesce(id_in, F.lit(False)),
+                hit=F.col("c0").isin(groups) & id_in,
+            )
+        self._pending_cache = pending
+        return pending
+
+    def _drop_touched(self, df: DataFrame, p: _Pending) -> DataFrame:
+        """``df`` (stored rows) without the ids the op log touched."""
+        if p.keep is not None:
+            return df.filter(p.keep)
+        return df.join(p.touched, on=self.spec.id_dim.name, how="left_anti")
 
     @staticmethod
     def _align_to(df: DataFrame, ref: DataFrame) -> DataFrame:
@@ -1151,8 +1217,8 @@ class World:
                 return self.spark.createDataFrame([], schema)
             return pinned.drop(*self.partition_cols())
         base = self._base()
-        live, touched = self._resolved_pending()
-        id_col = self.spec.id_dim.name
+        p = self._resolved_pending()
+        live = p.live if p is not None else None
         if base is not None:
             base = base.drop(*self.partition_cols())
         if base is None and live is None:
@@ -1165,9 +1231,8 @@ class World:
             return base
         if base is None:
             return live
-        base_kept = base.join(touched, on=id_col, how="left_anti")
         live = self._align_to(live, base)
-        return base_kept.unionByName(live, allowMissingColumns=True)
+        return self._drop_touched(base, p).unionByName(live, allowMissingColumns=True)
 
     def read(self, sel: Select) -> DataFrame:
         """Execute a selection: partition pruning on the on-disk side
@@ -1176,14 +1241,14 @@ class World:
         ``Select::iter`` (src/world.rs:638-643) as one DataFrame."""
         value_pred = sel.to_predicate()
         base = self._base()
-        live, touched = self._resolved_pending()
-        id_col = self.spec.id_dim.name
+        p = self._resolved_pending()
+        live = p.live if p is not None else None
         out = None
         if base is not None:
             pruned = base.filter(self._physical_partition_predicate(sel.shape()))
             pruned = pruned.filter(value_pred).drop(*self.partition_cols())
-            if touched is not None:
-                pruned = pruned.join(touched, on=id_col, how="left_anti")
+            if p is not None:
+                pruned = self._drop_touched(pruned, p)
             out = pruned
         if live is not None:
             live_sel = live.filter(value_pred)
@@ -1282,28 +1347,30 @@ class World:
         the pending buffer would touch, with pending upsert/delete row
         counts. Distributed — partition keys only ever reach the
         caller, never rows."""
-        live, touched = self._resolved_pending()
+        p = self._resolved_pending()
         pcols = self.partition_cols()
-        if live is None:
+        if p is None:
             schema = T.StructType(
                 [T.StructField(c, T.LongType()) for c in pcols]
                 + [T.StructField("pending_upserts", T.LongType()),
                    T.StructField("pending_deletes", T.LongType())]
             )
             return self.spark.createDataFrame([], schema)
-        id_col = self.spec.id_dim.name
         up = (
-            self._with_partition_cols(live)
+            self._with_partition_cols(p.live)
             .groupBy(*pcols)
             .agg(F.count(F.lit(1)).alias("pending_upserts"))
         )
         base = self._base()
-        if base is not None and touched is not None:
+        if base is not None:
             # deletes/relocations dirty the partition currently holding
             # the touched id on disk
+            held = (
+                base.filter(p.hit) if p.keep is not None
+                else base.join(p.touched, on=self.spec.id_dim.name, how="left_semi")
+            )
             dels = (
-                base.join(touched, on=id_col, how="left_semi")
-                .groupBy(*pcols)
+                held.groupBy(*pcols)
                 .agg(F.count(F.lit(1)).alias("pending_deletes"))
             )
             out = up.join(dels, on=pcols, how="full_outer")
@@ -1339,9 +1406,8 @@ class World:
             return n
 
     def _flush_locked(self) -> None:
-        live, touched = self._resolved_pending()
-        if self.validate == "flush":
-            live = self._domain_guard(live)
+        p = self._resolved_pending()
+        live = self._domain_guard(p.live) if self.validate == "flush" else p.live
         base = self._base()
         if base is None:
             # a fresh world has no old locations: publish every live
@@ -1354,7 +1420,32 @@ class World:
         # immutable id, so an id's stored row sits in the c0 group its
         # value routes to: the old-location lookup reads only those.
         key = self._part_key_col()
-        id_col = self.spec.id_dim.name
+        if p.keep is not None:
+            dirty = set(p.new_keys)
+            if p.groups:
+                # one scan job; duplicates fold here, not in a shuffle
+                dirty.update(r[0] for r in base.filter(p.hit).select(key).collect())
+        else:
+            dirty = self._dirty_by_joins(base, live, p.touched)
+        if not dirty:
+            return
+        dirty = sorted(dirty)
+        # a literal IN on the key: the merge reads the dirty dirs only
+        base_part = base.filter(key.isin(dirty)).drop(*self.partition_cols())
+        live_cast = self._align_to(live, base_part)
+        merged = self._drop_touched(base_part, p).unionByName(
+            live_cast, allowMissingColumns=True
+        )
+        self._publish(self._with_partition_cols(merged), dirty)
+
+    def _dirty_by_joins(
+        self, base: DataFrame, live: DataFrame, touched: DataFrame
+    ) -> set[str]:
+        """The dirty keys of a batch past ``ID_LIST_CAP`` touched ids:
+        the live rows' keys and the touched ids' groups in one distinct
+        collect, then the old locations by a semi-join within those
+        groups."""
+        key = self._part_key_col()
         routed = (
             self._with_partition_cols(live)
             .select("c0", key.alias("key"))
@@ -1373,28 +1464,28 @@ class World:
             dirty.update(
                 r[0]
                 for r in base.filter(F.col("c0").isin(groups))
-                .join(touched, on=id_col, how="left_semi")
+                .join(touched, on=self.spec.id_dim.name, how="left_semi")
                 .select(key)
                 .distinct()
                 .collect()
             )
-        if not dirty:
-            return
-        dirty = sorted(dirty)
-        # a literal IN on the key: the merge reads the dirty dirs only
-        base_part = base.filter(key.isin(dirty)).drop(*self.partition_cols())
-        kept = base_part.join(touched, on=id_col, how="left_anti")
-        live_cast = self._align_to(live, base_part)
-        merged = kept.unionByName(live_cast, allowMissingColumns=True)
-        self._publish(self._with_partition_cols(merged), dirty)
+        return dirty
 
-    def _publish(self, out: DataFrame, dirty: list[str]) -> None:
+    def _publish(self, out: DataFrame, dirty: list[str], order=None) -> None:
         """The one publish path of every World write (flush and
         compact): ``out`` holds the new rows of the ``dirty``
         partitions plus any partitions it creates. Versioned worlds
         commit it as the next snapshot; plain worlds stage and swap.
         Either way the data lands in a fresh directory first, so the
-        write never reads what it replaces and needs no barrier."""
+        write never reads what it replaces and needs no barrier.
+
+        Each partition is written as one file, its rows sorted by
+        ``order`` (default: the id, the reference's BTreeMap order,
+        src/world.rs:25), so a flush leaves nothing for ``compact``."""
+        pcols = self.partition_cols()
+        out = out.repartition(*pcols).sortWithinPartitions(
+            *pcols, self.spec.id_dim.name if order is None else order
+        )
         if self.versioned:
             self._commit_version_write(out, set(dirty))
         else:
@@ -1414,11 +1505,7 @@ class World:
         aside = f"{self.path}.aside-{tag}"
         swapped = []  # (live dir, its set-aside copy or None)
         try:
-            (
-                out.write.partitionBy(*self.partition_cols())
-                .mode("overwrite")
-                .parquet(staging)
-            )
+            self._write_fresh(out, staging)
             self._writer_lock.verify_token()  # fence the swap
             for key in sorted({*dirty, *self._written_partitions(staging)}):
                 dst, src = self._part_dir(key), self._part_dir(key, staging)
@@ -1487,15 +1574,16 @@ class World:
         """Rewrite fragmented physical partitions down to one file each,
         rows sorted by id within the file.
 
-        Every flush rewrites whole partitions, but a large flush still
-        writes one file per task that holds a partition's rows (and at
-        100 TB the small-file problem is
-        the #1 scan-throughput killer: each file costs a task + a
-        footer read). Compaction = the reference's whole-chunk rewrite
-        (src/world.rs:96-122) applied for layout instead of
-        durability; sorting by id restores the BTreeMap order
-        (src/world.rs:25) so parquet row-group min/max stats prune id
-        point-gets again.
+        Every flush already writes each partition it touches as one
+        id-sorted file (``_publish``), so compaction matters for
+        ``order="zorder"`` and for layouts written some other way
+        (earlier versions of this engine, external writers). At 100 TB
+        the small-file problem is the #1 scan-throughput killer: each
+        file costs a task + a footer read. Compaction = the reference's
+        whole-chunk rewrite (src/world.rs:96-122) applied for layout
+        instead of durability; sorting by id restores the BTreeMap
+        order (src/world.rs:25) so parquet row-group min/max stats
+        prune id point-gets again.
 
         ``order`` picks the within-file sort: ``"id"`` restores the
         BTreeMap id order (best for point-gets), ``"zorder"`` sorts by
@@ -1521,7 +1609,6 @@ class World:
             base = self._base()
             if base is None:
                 return 0
-            pcols = self.partition_cols()
             key = self._part_key_col()
             # one collect of the fragmented keys (at most the ~4096
             # physical partitions; the file name is projected first
@@ -1537,17 +1624,11 @@ class World:
             )
             if not frag:
                 return 0
-            id_col = self.spec.id_dim.name
-            sort_key = self.zvalue() if order == "zorder" else F.col(id_col)
-            out = (
-                # the same literal key IN as flush: reads those dirs only
-                base.filter(key.isin(frag))
-                # one task (=> one file) per physical partition, rows
-                # sorted within it for row-group stats pruning
-                .repartition(*[F.col(c) for c in pcols])
-                .sortWithinPartitions(*pcols, sort_key)
+            # the same literal key IN as flush: reads those dirs only
+            self._publish(
+                base.filter(key.isin(frag)), frag,
+                self.zvalue() if order == "zorder" else None,
             )
-            self._publish(out, frag)
             self._writer_lock.data_version += 1  # invalidate base caches
             return len(frag)
 

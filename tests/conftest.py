@@ -14,3 +14,44 @@ def spark():
     s = get_spark(app_name="dmds_spark_tests", shuffle_partitions=8,
                   extra_conf={"spark.driver.memory": "8g"})
     yield s
+
+
+def split_partition_files(world) -> int:
+    """Fragment a World's layout the way a writer that spreads one
+    partition over several tasks would: every parquet file the world
+    currently reads that holds two or more rows is replaced by two
+    files, its first and second half, with the same rows and the same
+    schema. Plain and versioned worlds alike (on a versioned world, the
+    files of the partitions the current manifest maps). Returns the
+    number of files split."""
+    import glob
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    if world.versioned:
+        owner = world._read_owner(world.current_version())
+        dirs = [world._part_dir(k, world._version_dir(v)) for k, v in owner.items()]
+    else:
+        dirs = {
+            os.path.dirname(f)
+            for f in glob.glob(os.path.join(world.path, "**", "*.parquet"), recursive=True)
+        }
+    split = 0
+    for d in sorted(dirs):
+        for f in sorted(glob.glob(os.path.join(d, "*.parquet"))):
+            table = pq.ParquetFile(f).read()
+            if table.num_rows < 2:
+                continue
+            half = table.num_rows // 2
+            for k, part in enumerate((table.slice(0, half), table.slice(half))):
+                out = os.path.join(d, f"part-split{k}-{uuid.uuid4().hex}.parquet")
+                pq.write_table(part, out)
+                assert pq.ParquetFile(out).schema_arrow == table.schema
+            os.remove(f)
+            crc = os.path.join(d, f".{os.path.basename(f)}.crc")
+            if os.path.exists(crc):
+                os.remove(crc)
+            split += 1
+    world.invalidate_base_cache()
+    return split

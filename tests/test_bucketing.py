@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 
 from dmds_spark.operators.bucketing import bucketed_join, write_bucketed
 
+from .conftest import split_partition_files
+
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -49,19 +51,14 @@ def test_world_compact(spark, tmp_path):
         [DimSpec("d0", 0, 1023, 64), DimSpec("d1", 0, 1023, 64)]
     )
     w = World(spark, spec, str(tmp_path / "world"))
-    # at test sizes AQE coalesces the flush's shuffle to one task (one
-    # file per dir); disable it so rows of one physical partition span
-    # many tasks — the fragmentation a large flush produces naturally
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        w.upsert(
-            spark.createDataFrame(
-                [(i, (i * 7) % 1024) for i in range(300)], ["d0", "d1"]
-            )
+    w.upsert(
+        spark.createDataFrame(
+            [(i, (i * 7) % 1024) for i in range(300)], ["d0", "d1"]
         )
-        w.flush()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    )
+    w.flush()
+    # a flush writes one file per dir: split them to have fragments
+    assert split_partition_files(w) > 0
     before = w.snapshot().orderBy("d0").collect()
     files_before = len(glob.glob(str(tmp_path / "world/**/*.parquet"), recursive=True))
 

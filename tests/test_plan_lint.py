@@ -76,3 +76,12 @@ def test_heavy_builders_stay_under_budget(spark):
     ):
         n = py4j_call_count(lambda: qs[name](spark, SF))
         assert n < 30_000, f"{name} builds with {n} py4j calls"
+
+
+def test_driver_threads_fit_deep_column_trees(spark):
+    """The seeded 300-node tree converts on a py4j thread whose stack
+    must hold the converter's recursion before the JIT compiles it: at
+    the JVM's default 1 MiB stack, the 2nd to 21st such build in a fresh
+    session raised StackOverflowError in ColumnNodeToExpressionConverter."""
+    opts = spark.sparkContext.getConf().get("spark.driver.extraJavaOptions", "")
+    assert "-Xss4m" in opts.split(), opts

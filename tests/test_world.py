@@ -25,6 +25,8 @@ from dmds_spark.core.dims import DimSpec, WorldSpec
 from dmds_spark.core.errors import ValueOutOfRangeError
 from dmds_spark.world import FlushDaemon, World
 
+from .conftest import split_partition_files
+
 
 def spec_1024() -> WorldSpec:
     # reference geometry: dims ..1024, items_per_chunk 8 and 16
@@ -261,11 +263,11 @@ def test_zvalue_interleave(spark, world):
 def test_compact_zorder(spark, tmp_path):
     spec = spec_1024()
     w = World(spark, spec, str(tmp_path / "wz"), physical_factors=(128, 64))
-    # two flushes -> fragmented partition dirs
     w.upsert(spark.createDataFrame([{"dim0": i, "dim1": (i * 37) % 1024} for i in range(0, 200, 2)]))
     w.flush()
     w.upsert(spark.createDataFrame([{"dim0": i, "dim1": (i * 37) % 1024} for i in range(1, 200, 2)]))
     w.flush()
+    assert split_partition_files(w) >= 1  # a flush writes one file per dir
     n = w.compact(order="zorder")
     assert n >= 1
     assert rows(w.snapshot()) == [(i, (i * 37) % 1024) for i in range(200)]
@@ -405,7 +407,7 @@ def test_stats_counts_rows_files_and_id_bounds(spark, tmp_path):
               physical_factors=(1, 1))
     w.insert_rows([{"dim0": i, "dim1": i} for i in range(0, 16)])
     w.flush()
-    # second flush writes additional files into the same partitions
+    # second flush rewrites the partitions it shares with the first
     w.insert_rows([{"dim0": i, "dim1": 1023 - i} for i in range(16, 24)])
     w.flush()
     st = {tuple(r[:2]): r for r in w.stats().collect()}
@@ -417,7 +419,7 @@ def test_stats_counts_rows_files_and_id_bounds(spark, tmp_path):
     allr = list(st.values())
     assert min(r["min_id"] for r in allr) == 0
     assert max(r["max_id"] for r in allr) == 23
-    # fragmentation is visible: compact() brings every partition to 1
+    # compact() leaves every partition at 1 file
     frag_before = [r["n_files"] for r in allr]
     w.compact()
     st2 = list(w.stats().collect())
@@ -494,7 +496,9 @@ def test_pending_reads_share_one_resolved_log(spark, monkeypatch, world):
     world.get(1)  # resolves and caches the pending log
     df, jobs = _jobs(spark, lambda: world.get(2))
     assert jobs == 0  # second pending get: no job before it returns
-    assert rows(df) == [(2, 20)]
+    got, jobs = _jobs(spark, lambda: rows(df))
+    assert got == [(2, 20)]
+    assert jobs == 1  # one scan of base and pending rows, no join
 
     barriers = []
     real = world_mod.materialize
@@ -587,12 +591,22 @@ def _parquet_files(path):
     return out
 
 
-@pytest.mark.parametrize("versioned", [False, True])
+@pytest.mark.parametrize(
+    "versioned,cap",
+    [(False, None), (True, None), (False, 2), (True, 2)],
+    ids=["False", "True", "False-joins_past_cap", "True-joins_past_cap"],
+)
 def test_flush_pruning_rewrites_exactly_the_dirty_set(
-    spark, tmp_path, monkeypatch, versioned
+    spark, tmp_path, monkeypatch, versioned, cap
 ):
+    import pyarrow.parquet as pq
     from pyspark.sql import DataFrameWriter
 
+    import dmds_spark.world as world_mod
+
+    if cap is not None:
+        # the batch touches 7 ids: past the cap it routes by joins
+        monkeypatch.setattr(world_mod, "ID_LIST_CAP", cap)
     path = str(tmp_path / "w")
     w = World(spark, PRUNE_SPEC, path, physical_factors=PRUNE_FACTORS,
               versioned=versioned)
@@ -663,11 +677,51 @@ def test_flush_pruning_rewrites_exactly_the_dirty_set(
         }
     assert changed == expect_dirty
 
+    # every dirty partition that still holds rows is one id-sorted file
+    root = w._version_dir(w.current_version()) if versioned else path
+    live_dirty = expect_dirty & {_prune_key(i, a, b) for i, (a, b, _) in model.items()}
+    for key in live_dirty:
+        files = [f for f in os.listdir(w._part_dir(key, root)) if f.endswith(".parquet")]
+        assert len(files) == 1, (key, files)
+        ids = pq.read_table(os.path.join(w._part_dir(key, root), files[0])).column("id")
+        assert ids.to_pylist() == sorted(ids.to_pylist())
+
     want = sorted((i, a, b, p) for i, (a, b, p) in model.items())
     for reader in (w, World(spark, PRUNE_SPEC, path,
                             physical_factors=PRUNE_FACTORS, versioned=versioned)):
         got = sorted(tuple(r) for r in reader.snapshot().select("id", "a", "b", "p").collect())
         assert got == want
+    assert w.compact() == 0  # the flush left nothing to compact
+    w.close()
+
+
+@pytest.mark.parametrize("versioned", [False, True])
+def test_pending_gets_and_flush_job_counts(spark, tmp_path, versioned):
+    # the first pending get resolves and routes the batch; a second
+    # get then plans without a job and runs one, and the flush needs
+    # one old-location scan plus the shuffled write
+    w = World(spark, PRUNE_SPEC, str(tmp_path / "w"),
+              physical_factors=PRUNE_FACTORS, versioned=versioned)
+    model = _prune_base()
+    w.upsert(_prune_df(spark, model))
+    w.flush()
+    ups, dels = _prune_batch(model)
+    w.upsert(_prune_df(spark, ups))
+    w.delete_ids(dels)
+    assert [tuple(r) for r in w.get(644).collect()] == [(644, 10, 10, "reloc")]
+    df, jobs = _jobs(spark, lambda: w.get(LONELY))
+    assert jobs == 0
+    got, jobs = _jobs(spark, df.collect)
+    assert [tuple(r) for r in got] == [(LONELY, 10, 20, "moved")]
+    assert jobs == 1
+    n, jobs = _jobs(spark, w.flush)
+    assert n == 2
+    assert jobs <= 3, jobs
+    model.update(ups)
+    for i in dels:
+        del model[i]
+    got = sorted(tuple(r) for r in w.snapshot().select("id", "a", "b", "p").collect())
+    assert got == sorted((i, a, b, p) for i, (a, b, p) in model.items())
     w.close()
 
 
@@ -679,16 +733,12 @@ def _prune_df(spark, model):
 
 
 def _fragmented_prune_world(spark, path):
-    """A PRUNE_SPEC world whose partitions each hold several files: with
-    AQE off the collapsed op log keeps one task per shuffle partition,
-    and every task writes its own file into each partition it holds."""
+    """A PRUNE_SPEC world whose partitions each hold two files (a flush
+    writes one file per partition, so the second is made by hand)."""
     w = World(spark, PRUNE_SPEC, path, physical_factors=PRUNE_FACTORS)
     w.upsert(_prune_df(spark, _prune_base()))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        w.flush()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    w.flush()
+    assert split_partition_files(w) > 2
     return w
 
 

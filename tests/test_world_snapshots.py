@@ -14,6 +14,8 @@ import pytest
 from dmds_spark.core.dims import DimSpec, WorldSpec
 from dmds_spark.world import World
 
+from .conftest import split_partition_files
+
 
 def spec_1024() -> WorldSpec:
     return WorldSpec(
@@ -109,11 +111,52 @@ def test_compact_versioned(world):
     for i in range(3):
         world.insert_rows([{"dim0": 10 + i, "dim1": 30 + i}])
         world.flush()
+    # a flush writes one file per partition: fragment them by hand
+    assert split_partition_files(world) >= 1
     before = rows(world.snapshot())
     n = world.compact(max_files_per_partition=1)
     assert n >= 1
     assert rows(world.snapshot()) == before
     assert rows(world.snapshot(version=1)) == [(10, 30)]
+
+
+def test_dead_commit_attempt_publishes_none_of_its_rows(
+    spark, tmp_path, monkeypatch
+):
+    """A writer that dies between writing ``_v{N}`` and the manifest
+    flip leaves that directory behind. The next writer's commit reuses
+    ``_v{N}`` and must publish its own partitions only, never a row the
+    dead attempt wrote but never acknowledged."""
+    path = str(tmp_path / "w")
+
+    def open_world():
+        return World(spark, spec_1024(), path, physical_factors=(1, 1),
+                     versioned=True)
+
+    w = open_world()
+    w.insert_rows([{"dim0": 0, "dim1": 0}, {"dim0": 100, "dim1": 100}])
+    w.flush()
+    w.insert_rows([{"dim0": 0, "dim1": 500}])  # relocates id 0
+
+    def die(*_a, **_kw):
+        raise OSError("writer died before the manifest flip")
+
+    monkeypatch.setattr(World, "_commit_snapshot", die)
+    with pytest.raises(OSError, match="died"):
+        w.flush()
+    monkeypatch.undo()
+    assert os.path.isdir(w._version_dir(2))  # the dead attempt's data
+    w._ops.clear()  # its ops died with it
+    w.close()
+
+    w2 = open_world()
+    w2.insert_rows([{"dim0": 900, "dim1": 900}])  # another partition
+    w2.flush()
+    w2.close()
+    assert w2.current_version() == 2
+    want = [(0, 0), (100, 100), (900, 900)]
+    assert rows(w2.snapshot()) == want
+    assert rows(open_world().snapshot()) == want
 
 
 def test_vacuum_drops_unreferenced_versions(world):

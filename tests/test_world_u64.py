@@ -23,6 +23,8 @@ from dmds_spark.core.dims import U64_MAX, DimSpec, WorldSpec
 from dmds_spark.core.errors import ValueOutOfRangeError, WorldSpecError
 from dmds_spark.world import World
 
+from .conftest import split_partition_files
+
 # full u64 id space in 2^32 chunks of 2^32 values; a second small dim
 # groups physical partitions the usual way
 SPEC = WorldSpec(
@@ -92,6 +94,34 @@ def test_u64_crud_roundtrip(spark, uworld):
     uworld.delete_ids([MID])
     uworld.flush()
     assert {r[0] for r in _rows(uworld)} == {SMALL, NEAR_MAX}
+
+
+@pytest.mark.parametrize("versioned", [False, True])
+def test_u64_pending_get_then_relocating_flush(spark, tmp_path, versioned):
+    """A batch is routed by literal lists of its touched ids, which on a
+    u64 world are DECIMAL values past 2^63: a pending get and the
+    relocating flush after it must match them exactly."""
+    path = str(tmp_path / "w")
+    w = World(spark, SPEC, path, versioned=versioned)
+    model = {SMALL: (10, 1), MID: (20, 2), MID + 2**32: (30, 3), NEAR_MAX: (1000, 4)}
+    w.insert_rows([{"id": i, "t": t, "v": v} for i, (t, v) in model.items()])
+    w.flush()
+    # relocate MID, update NEAR_MAX in place, add u64::MAX, delete one
+    ups = {MID: (900, 20), NEAR_MAX: (1000, 40), U64_MAX: (5, 50)}
+    w.insert_rows([{"id": i, "t": t, "v": v} for i, (t, v) in ups.items()])
+    w.delete_ids([MID + 2**32])
+    model.update(ups)
+    del model[MID + 2**32]
+
+    got = [(int(r["id"]), r["t"], r["v"]) for r in w.get(MID).collect()]
+    assert got == [(MID, 900, 20)]
+    assert w.get(MID + 2**32).collect() == []
+    assert w._pending_cache.keep is not None  # routed by literal ids
+    w.flush()
+    want = {(i, t, v) for i, (t, v) in model.items()}
+    assert _rows(w) == want
+    assert _rows(World(spark, SPEC, path, versioned=versioned)) == want
+    w.close()
 
 
 def test_u64_point_get_and_range_select(spark, uworld):
@@ -230,11 +260,12 @@ def test_u64_zorder_compact_roundtrip(spark, tmp_path):
         {"id": 2**63 + i * 2**31, "t": (i % 4) * 16, "v": i}
         for i in range(24)
     ]
-    # two flushes -> fragmented partitions worth compacting
     w.insert_rows(rows[:12])
     w.flush()
     w.insert_rows(rows[12:])
     w.flush()
+    # a flush writes one file per partition: fragment them by hand
+    assert split_partition_files(w) >= 1
     before = _rows(w)
     n = w.compact(max_files_per_partition=1, order="zorder")
     assert n >= 1
