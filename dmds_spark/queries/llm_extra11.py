@@ -487,9 +487,11 @@ def multimodal_byte_histogram(spark, sf_dir):
 def dmds_world_maintenance(spark, sf_dir):
     """The World maintenance surface exercised end to end as a driver
     row: build a world from an orders slice, flush, flush a second
-    upsert wave, COMPACT to one file per partition (id order; the
-    flushes already write that layout, so it finds nothing to do),
-    and return stats() — per-partition row/file/byte accounting. The
+    upsert wave, rewrite every partition in Z-order and then in id
+    order (``max_files_per_partition=0``: the flushes already write
+    one file per partition, so the default threshold would find
+    nothing to rewrite), and return stats() — per-partition
+    row/file/byte accounting. The
     row count equals the live physical partitions and every partition
     must report n_files=1 after compaction (asserted in the plan via
     the n_files column; the engine test suite pins the same invariant
@@ -516,7 +518,8 @@ def dmds_world_maintenance(spark, sf_dir):
         w.flush()
         w.upsert(o.filter(F.col("id") % 2 == 1))
         w.flush()
-        w.compact(order="id")
+        w.compact(max_files_per_partition=0, order="zorder")
+        w.compact(max_files_per_partition=0, order="id")
         return w.stats().select(
             "c0", "c1", "n_rows", "n_files", "min_id", "max_id"
         )

@@ -54,10 +54,22 @@ from dmds_spark.core.errors import (
 )
 from dmds_spark.core.engine import materialize
 
-# Most touched ids a batch routes through literal IN lists: the ~4096
-# physical partitions ``World._default_factors`` targets, which also
-# bound the dirty-key IN. A larger batch is routed by joins instead.
-ID_LIST_CAP = 4096
+# Most touched ids a batch routes through literal IN lists; a larger
+# batch is routed by joins instead. Timing a pending get, a second get
+# and the flush on a 16,000-row world of 128 partitions (local[2],
+# 4-core host), literals took x0.92 of the joins' time at 128 ids, x0.96
+# at 512 and 768, x1.08 at 1,024 and x1.89 at 16,384: every plan carries
+# the list. The cap sits below the crossover.
+ID_LIST_CAP = 512
+
+
+def _in_list(name: str, values: list) -> Column:
+    """``name IN (values)`` for integer ids, parsed from one SQL string:
+    one gateway call, where ``Column.isin`` makes one per value (a
+    pending get routing 4,096 ids took 5.0 s that way against 1.5 s)."""
+    if not values:
+        return F.lit(False)
+    return F.expr(f"`{name}` IN ({','.join(str(int(v)) for v in values)})")
 
 
 class _Pending(NamedTuple):
@@ -136,12 +148,16 @@ class WriterLock:
       ``World.flush`` and ``compact``), IVF pointer flips — and raises
       ``WorldFencedError`` if the token changed: a live writer whose
       lock was broken (manually or by lease reclaim) aborts BEFORE
-      clobbering the new holder's state. Data is always written to a
-      fresh directory first (``_v{N}`` or a staging sibling), so the
-      residual window is the plain world's rename loop alone, which
-      runs after the check; prefer ``versioned=True`` worlds where
-      concurrent breakers are a real possibility (one verified manifest
-      flip publishes a whole commit)."""
+      clobbering the new holder's state. A plain world writes to a
+      staging sibling unique to the attempt. A versioned world writes
+      ``_v{N}`` (N = current version + 1) with a static overwrite that
+      clears it first, so the token is also checked right before that
+      write. The residual windows: the plain world's rename loop,
+      which runs after its check, and a break that lands between the
+      versioned check and the clear of ``_v{N}`` while the new holder
+      commits v{N} (its files would be lost). Prefer ``versioned=True``
+      worlds where concurrent breakers are a real possibility (one
+      verified manifest flip publishes a whole commit)."""
 
     FILENAME = "_writer.lock"
     LOCK_DIR_SUFFIX = ".lockd"
@@ -839,6 +855,10 @@ class World:
         volume — untouched partitions are never rewritten or copied."""
         cur = self.current_version()
         v = cur + 1
+        # the static write clears _v{v} first: fence it, or a writer
+        # whose lock was broken after it read ``cur`` would wipe the
+        # new holder's committed v{v}
+        self._writer_lock.verify_token()
         self._write_fresh(out, self._version_dir(v))
         # partition keys from the written directory tree (no Spark job;
         # bounded by the ~4096 physical-partition cap) — also correct
@@ -1054,14 +1074,15 @@ class World:
         id wins — a window over __seq, the deterministic replacement
         for the reference's chunk/item write locks.
 
-        Materialized once per op-log state, then one small collect
-        routes it: each touched id with its ``c0`` group and its live
-        row's partition key, computed by the same expressions the write
-        uses (``validate="off"`` admits out-of-range values, and Spark's
-        ``div`` truncates where Python's ``//`` floors). Cached under
-        the last op's sequence number: pending reads and the flush that
-        commits them share it. A successful flush drops the cache; the
-        checkpoint lives on while any DataFrame built from it does."""
+        Materialized once per op-log state, then, once the world has
+        stored rows, one small collect routes it: each touched id with
+        its ``c0`` group and its live row's partition key, computed by
+        the same expressions the write uses (``validate="off"`` admits
+        out-of-range values, and Spark's ``div`` truncates where
+        Python's ``//`` floors). Cached under the last op's sequence
+        number: pending reads and the flush that commits them share it.
+        A successful flush drops the cache; the checkpoint lives on
+        while any DataFrame built from it does."""
         ops = list(self._ops)  # appends may race an unlocked read
         if not ops:
             return None
@@ -1120,6 +1141,12 @@ class World:
         # reads off the collapsed log — no second pass over the raw ops
         touched = latest.select(id_col)
         live = latest.filter(~F.col("__del")).drop("__seq", "__del")
+        pending = _Pending(ops[-1][0], live, touched, None, None, None, None)
+        if self._base() is None:
+            # nothing stored to filter or relocate: a read returns the
+            # live rows and a flush publishes them, unrouted
+            self._pending_cache = pending
+            return pending
         routed = (
             self._with_partition_cols(latest)
             .select(
@@ -1129,12 +1156,11 @@ class World:
             .limit(ID_LIST_CAP + 1)
             .collect()
         )
-        pending = _Pending(ops[-1][0], live, touched, None, None, None, None)
         if len(routed) <= ID_LIST_CAP:
             # a null id matches no stored row (as in the joins)
             ids = [r[0] for r in routed if r[0] is not None]
             groups = sorted({r[1] for r in routed if r[1] is not None})
-            id_in = F.col(id_col).isin(ids)
+            id_in = _in_list(id_col, ids)
             pending = pending._replace(
                 groups=groups,
                 new_keys={r[2] for r in routed if r[2] is not None},

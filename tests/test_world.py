@@ -695,6 +695,29 @@ def test_flush_pruning_rewrites_exactly_the_dirty_set(
     w.close()
 
 
+def test_fresh_world_resolves_without_routing(spark, tmp_path):
+    # nothing is stored yet, so neither a pending read nor the load
+    # needs the routing collect: resolving the same batch runs one job
+    # fewer than it does once the world holds rows
+    w = World(spark, PRUNE_SPEC, str(tmp_path / "w"),
+              physical_factors=PRUNE_FACTORS)
+    model = _prune_base()
+    w.upsert(_prune_df(spark, model))
+    p, fresh_jobs = _jobs(spark, w._resolved_pending)
+    assert p.keep is None and p.new_keys is None
+    assert len(w.get(LONELY).collect()) == 1
+    w.flush()
+    w.upsert(_prune_df(spark, model))
+    w._base()  # the listing of the new files is not the routing's
+    p, stored_jobs = _jobs(spark, w._resolved_pending)
+    assert p.keep is not None
+    assert stored_jobs == fresh_jobs + 1
+    w.flush()
+    got = sorted(tuple(r) for r in w.snapshot().select("id", "a", "b", "p").collect())
+    assert got == sorted((i, a, b, p) for i, (a, b, p) in model.items())
+    w.close()
+
+
 @pytest.mark.parametrize("versioned", [False, True])
 def test_pending_gets_and_flush_job_counts(spark, tmp_path, versioned):
     # the first pending get resolves and routes the batch; a second

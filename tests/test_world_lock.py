@@ -468,6 +468,38 @@ def test_fenced_flush_aborts_before_versioned_commit(spark, tmp_path):
     w.close()
 
 
+def test_fenced_version_write_leaves_new_holders_files(spark, tmp_path,
+                                                       monkeypatch):
+    """A versioned writer whose lock was broken after it read the
+    current version must not clear ``_v{N}`` while a new holder commits
+    v{N}: the static version write is fenced before it runs."""
+    import shutil
+
+    from dmds_spark.core.errors import WorldFencedError
+
+    path = str(tmp_path / "w")
+    w = World(spark, SPEC, path, validate="off", versioned=True)
+    w.insert_rows([{"x": 1, "y": 2, "v": 10}])
+    w.flush()
+    w.insert_rows([{"x": 2, "y": 3, "v": 20}])
+    # the new holder's v2 files land after this writer read version 1
+    shutil.copytree(w._version_dir(1), w._version_dir(2))
+    theirs = sorted(
+        os.path.relpath(os.path.join(r, f), w._version_dir(2))
+        for r, _d, fs in os.walk(w._version_dir(2)) for f in fs
+    )
+    monkeypatch.setattr(w, "current_version", lambda: 1)
+    World.break_lock(path)
+    with pytest.raises(WorldFencedError):
+        w.flush()
+    assert sorted(
+        os.path.relpath(os.path.join(r, f), w._version_dir(2))
+        for r, _d, fs in os.walk(w._version_dir(2)) for f in fs
+    ) == theirs
+    w._ops = []
+    w.close()
+
+
 def test_fenced_flush_aborts_nonversioned_overwrite(spark, tmp_path):
     from dmds_spark.core.errors import WorldFencedError
 
