@@ -15,12 +15,11 @@ level so pruning happens before any file is opened.
 
 Safety model (the part that makes refresh OPTIONAL, never a
 correctness dependency): each partition's zone records a fingerprint of
-the partition's current content — its file listing (name, size, mtime)
-for plain worlds, its owning snapshot version for versioned worlds. At
-read time the CURRENT fingerprint is recomputed (driver-side metadata
-walk, bounded by the <=4096-dir layout that flush's dirty-key collect
-already relies on) and a partition is pruned ONLY when its fingerprint
-still matches the sidecar AND its zone excludes the bounds. A partition
+the partition's current content — its owning snapshot version from the
+world's manifest. At read time the CURRENT fingerprint is re-read (one
+manifest read, bounded by the <=4096-dir layout) and a partition is
+pruned ONLY when its fingerprint still matches the sidecar AND its zone
+excludes the bounds. A partition
 written since the last refresh simply loses pruning until the next
 ``zonemap_refresh`` — stale zones degrade performance, never results.
 
@@ -38,7 +37,6 @@ push down to the parquet scan.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import tempfile
@@ -90,41 +88,10 @@ def _part_key(pcols, row) -> str:
 
 def _fingerprints(world) -> dict[str, str]:
     """Current per-partition content fingerprint, driver-side metadata
-    only. Versioned worlds: the owning snapshot version IS the
-    fingerprint (a partition's bytes change only via a new commit).
-    Plain worlds: hash of the sorted (file, size, mtime_ns) listing."""
-    out: dict[str, str] = {}
-    if world.versioned:
-        owner = world._read_owner(world.current_version())
-        return {k: f"v{v}" for k, v in owner.items()}
-    root = world.path
-    if not os.path.isdir(root):
-        return out
-    ncols = len(world.partition_cols())
-
-    def walk(d: str, depth: int, key_parts: list[str]):
-        try:
-            entries = sorted(os.scandir(d), key=lambda e: e.name)
-        except FileNotFoundError:
-            return
-        if depth == ncols:
-            h = hashlib.sha256()
-            for e in entries:
-                if e.name.startswith(("_", ".")):
-                    continue
-                st = e.stat()
-                h.update(
-                    f"{e.name}:{st.st_size}:{st.st_mtime_ns}".encode()
-                )
-            out["/".join(key_parts)] = h.hexdigest()[:16]
-            return
-        for e in entries:
-            if e.is_dir() and "=" in e.name and not e.name.startswith("_"):
-                val = str(int(e.name.split("=", 1)[1]))
-                walk(e.path, depth + 1, key_parts + [val])
-
-    walk(root, 0, [])
-    return out
+    only: the owning snapshot version (a partition's bytes change only
+    via a new commit, which gives it a new owner)."""
+    owner = world._read_owner(world.current_version())
+    return {k: f"v{v}" for k, v in owner.items()}
 
 
 def _sidecar_path(world) -> str:

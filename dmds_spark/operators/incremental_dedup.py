@@ -114,10 +114,15 @@ class IncrementalMinHashDedup:
 
     def _flip(self, state: dict) -> None:
         from dmds_spark.operators.rollup import _atomic_flip
+        from dmds_spark.world import WriterLock
 
+        # fencing token at the commit point (every _flip runs inside
+        # _writer()): a writer whose lock was broken or reclaimed while
+        # it wrote the increment aborts before publishing it. Then
         # temp-write + os.replace: a crash mid-flip leaves the old
         # pointer readable, never a torn file that orphans every
         # committed version
+        WriterLock.for_dir(self.store_dir).verify_token()
         _atomic_flip(self._pointer, state)
 
     def _paths(self, kind: str, versions: list[int]) -> list[str]:

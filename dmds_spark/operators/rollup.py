@@ -321,54 +321,61 @@ class IncrementalRollup:
         {"new_files": n, "version": v}. Raises SourceMutatedError if
         an already-folded file was rewritten in place (partials cannot
         be patched for history rewrites)."""
-        st = self._state()
-        seen = _seen_as_dict(st["seen_files"], st.get("size_src"))
-        current = _list_source_files(self.spark, self.source_dir)
-        new_files = _split_new_and_check(current, seen, "rollup")
-        if not new_files:
-            return {"new_files": 0, "version": st["version"]}
-        new_df = self.spark.read.parquet(*new_files)
-        if self.transform is not None:
-            new_df = self.transform(new_df)
-        fresh = _partial_agg(
-            new_df,
-            self.group_cols,
-            self.value_cols,
-            self.distinct_cols,
-        )
-        cur = self.read()
-        merged = (
-            _merge_partials(
-                cur.unionByName(fresh),
+        with store_writer(self.rollup_dir):
+            st = self._state()
+            seen = _seen_as_dict(st["seen_files"], st.get("size_src"))
+            current = _list_source_files(self.spark, self.source_dir)
+            new_files = _split_new_and_check(current, seen, "rollup")
+            if not new_files:
+                return {"new_files": 0, "version": st["version"]}
+            new_df = self.spark.read.parquet(*new_files)
+            if self.transform is not None:
+                new_df = self.transform(new_df)
+            fresh = _partial_agg(
+                new_df,
                 self.group_cols,
                 self.value_cols,
                 self.distinct_cols,
             )
-            if cur is not None
-            else fresh
-        )
-        next_version = st["version"] + 1
-        merged.write.mode("overwrite").parquet(
-            self._version_path(next_version)
-        )
-        # flip the pointer LAST: readers never see a half-written version
-        self._flip(
-            {
-                "version": next_version,
-                # {path: size} — FS sizes let the next refresh detect
-                # in-place rewrites; legacy/split-derived sizes
-                # backfill from the listing here
-                "seen_files": {
-                    **{f: current.get(f, sz) for f, sz in seen.items()},
-                    **{f: current[f] for f in new_files},
-                },
-                "size_src": "fs",
-                "last_batch_id": st.get("last_batch_id", -1),
-            }
-        )
-        return {"new_files": len(new_files), "version": next_version}
+            cur = self.read()
+            merged = (
+                _merge_partials(
+                    cur.unionByName(fresh),
+                    self.group_cols,
+                    self.value_cols,
+                    self.distinct_cols,
+                )
+                if cur is not None
+                else fresh
+            )
+            next_version = st["version"] + 1
+            merged.write.mode("overwrite").parquet(
+                self._version_path(next_version)
+            )
+            # flip the pointer LAST: readers never see a half-written version
+            self._flip(
+                {
+                    "version": next_version,
+                    # {path: size} — FS sizes let the next refresh detect
+                    # in-place rewrites; legacy/split-derived sizes
+                    # backfill from the listing here
+                    "seen_files": {
+                        **{f: current.get(f, sz) for f, sz in seen.items()},
+                        **{f: current[f] for f in new_files},
+                    },
+                    "size_src": "fs",
+                    "last_batch_id": st.get("last_batch_id", -1),
+                }
+            )
+            return {"new_files": len(new_files), "version": next_version}
 
     def _flip(self, state: dict) -> None:
+        from dmds_spark.world import WriterLock
+
+        # fencing token at the commit point (refresh and fold_batch run
+        # inside store_writer): a writer whose lock was broken or
+        # reclaimed while it wrote the version aborts before publishing
+        WriterLock.for_dir(self.rollup_dir).verify_token()
         _atomic_flip(self._pointer, state)
 
     def fold_batch(self, df: DataFrame, batch_id: int | None = None) -> dict:
@@ -380,42 +387,43 @@ class IncrementalRollup:
         double-counted (the pointer flip commits data + batch id
         atomically-enough: a crash between write and flip replays into
         a fresh version directory, never into served data)."""
-        st = self._state()
-        last = st.get("last_batch_id", -1)
-        if batch_id is not None and batch_id <= last:
-            return {"skipped": True, "version": st["version"]}
-        if self.transform is not None:
-            df = self.transform(df)
-        fresh = _partial_agg(
-            df, self.group_cols, self.value_cols, self.distinct_cols
-        )
-        cur = self.read()
-        merged = (
-            _merge_partials(
-                cur.unionByName(fresh),
-                self.group_cols,
-                self.value_cols,
-                self.distinct_cols,
+        with store_writer(self.rollup_dir):
+            st = self._state()
+            last = st.get("last_batch_id", -1)
+            if batch_id is not None and batch_id <= last:
+                return {"skipped": True, "version": st["version"]}
+            if self.transform is not None:
+                df = self.transform(df)
+            fresh = _partial_agg(
+                df, self.group_cols, self.value_cols, self.distinct_cols
             )
-            if cur is not None
-            else fresh
-        )
-        next_version = st["version"] + 1
-        merged.write.mode("overwrite").parquet(
-            self._version_path(next_version)
-        )
-        self._flip(
-            {
-                "version": next_version,
-                "seen_files": st["seen_files"],
-                # carry the size provenance: fold_batch never re-lists
-                "size_src": st.get("size_src"),
-                "last_batch_id": (
-                    batch_id if batch_id is not None else last
-                ),
-            }
-        )
-        return {"skipped": False, "version": next_version}
+            cur = self.read()
+            merged = (
+                _merge_partials(
+                    cur.unionByName(fresh),
+                    self.group_cols,
+                    self.value_cols,
+                    self.distinct_cols,
+                )
+                if cur is not None
+                else fresh
+            )
+            next_version = st["version"] + 1
+            merged.write.mode("overwrite").parquet(
+                self._version_path(next_version)
+            )
+            self._flip(
+                {
+                    "version": next_version,
+                    "seen_files": st["seen_files"],
+                    # carry the size provenance: fold_batch never re-lists
+                    "size_src": st.get("size_src"),
+                    "last_batch_id": (
+                        batch_id if batch_id is not None else last
+                    ),
+                }
+            )
+            return {"skipped": False, "version": next_version}
 
     def foreach_batch(self):
         """Sink function for ``writeStream.foreachBatch``: keeps this

@@ -17,9 +17,10 @@ Mapping (SURVEY.md §1.5):
 - relocation (``Lazy::close``, src/world/iter.rs:193-211) is automatic:
   partition columns are recomputed from the new dim values at flush;
 - flush (``Chunk::write_buf`` + ``FsHandle::write_chunk``,
-  src/world.rs:96-122, tokio-fs/src/lib.rs:85-107) is a
-  staged rewrite of exactly the dirty chunks —
-  the same whole-chunk-rewrite granularity as the reference.
+  src/world.rs:96-122, tokio-fs/src/lib.rs:85-107) rewrites exactly
+  the dirty chunks into a new version directory and publishes them by
+  one manifest flip — the same whole-chunk-rewrite granularity as the
+  reference.
 
 Scale design (100 TB): a huge logical grid must not produce millions of
 tiny files, so each dimension takes a ``physical_factor`` that groups
@@ -144,20 +145,16 @@ class WriterLock:
       reference's in-process lock).
     - Fencing token at commit points: ``verify_token()`` re-reads the
       lock file immediately before every publish — the manifest flip
-      of a versioned world, the directory swap of a plain one (both
-      ``World.flush`` and ``compact``), IVF pointer flips — and raises
-      ``WorldFencedError`` if the token changed: a live writer whose
-      lock was broken (manually or by lease reclaim) aborts BEFORE
-      clobbering the new holder's state. A plain world writes to a
-      staging sibling unique to the attempt. A versioned world writes
+      of every ``World.flush`` and ``compact``, and the store pointer
+      flips — and raises ``WorldFencedError`` if the token changed: a
+      live writer whose lock was broken (manually or by lease reclaim)
+      aborts BEFORE clobbering the new holder's state. A World writes
       ``_v{N}`` (N = current version + 1) with a static overwrite that
       clears it first, so the token is also checked right before that
-      write. The residual windows: the plain world's rename loop,
-      which runs after its check, and a break that lands between the
-      versioned check and the clear of ``_v{N}`` while the new holder
-      commits v{N} (its files would be lost). Prefer ``versioned=True``
-      worlds where concurrent breakers are a real possibility (one
-      verified manifest flip publishes a whole commit)."""
+      write. The residual window: a break that lands between that
+      check and the clear of ``_v{N}`` while the new holder commits
+      v{N} (its files would be lost). One verified manifest flip
+      publishes a whole commit."""
 
     FILENAME = "_writer.lock"
     LOCK_DIR_SUFFIX = ".lockd"
@@ -408,11 +405,10 @@ class WriterLock:
     def verify_token(self) -> None:
         """Fencing check for commit points: re-read the lock file and
         raise ``WorldFencedError`` unless it still carries OUR token.
-        Called immediately before every manifest/pointer flip and,
-        in a non-versioned world, after staging and before the first
-        directory rename, so a writer whose lock was broken or
-        lease-reclaimed mid-write aborts instead of clobbering the new
-        holder's state."""
+        Called immediately before every manifest/pointer flip and
+        before a World clears its next version dir, so a writer whose
+        lock was broken or lease-reclaimed mid-write aborts instead of
+        clobbering the new holder's state."""
         holder = self._holder()
         if self._refs == 0 or not holder or holder.get("token") != self.token:
             raise WorldFencedError(self.dir_path, holder or {})
@@ -468,31 +464,32 @@ class World:
     ):
         self.spark = spark
         self.spec = spec
-        # versioned=True: every flush/compact COMMITS a new immutable
-        # snapshot version instead of overwriting partitions in place —
-        # data files go to append-only ``_v{N}/`` directories and a
+        # Every flush/compact COMMITS a new immutable snapshot version:
+        # data files go to an append-only ``_v{N}/`` directory and a
         # manifest maps each live partition to the version that owns
-        # its current rows (Iceberg-lite). ``snapshot(version=K)``
-        # reads any retained committed state; ``vacuum_snapshots``
-        # reclaims. The reference's 4-byte version header
-        # (tokio-fs/src/lib.rs:89-90) generalized from payload bytes to
-        # table state. Manifests are local-FS JSON (same constraint as
-        # the WriterLock files). The ``_`` prefix is deliberate: Spark
-        # file indexes treat it as hidden (same convention as
-        # ``_delta_log``), so a naive ``spark.read.parquet(root)`` of a
-        # versioned world sees NOTHING instead of double-counting every
-        # version — readers must come through the manifest. Each commit
-        # logs one cosmetic "DataSource: All paths were ignored" WARN
-        # (write-side resolution of the hidden target dir); explicit
-        # per-directory reads are unaffected.
+        # its current rows (Iceberg-lite); flipping ``current.json``
+        # publishes the whole commit at once. The reference's 4-byte
+        # version header (tokio-fs/src/lib.rs:89-90) generalized from
+        # payload bytes to table state. versioned=True keeps the
+        # history: ``snapshot(version=K)`` and ``snapshot_as_of`` read
+        # any retained commit, ``vacuum_snapshots`` reclaims.
+        # versioned=False vacuums to the newest commit after each one
+        # and rejects pinned reads. Manifests are local-FS JSON (same
+        # constraint as the WriterLock files). The ``_`` prefix is
+        # deliberate: Spark file indexes treat it as hidden (same
+        # convention as ``_delta_log``), so a naive
+        # ``spark.read.parquet(root)`` sees no committed file instead
+        # of double-counting every version — readers come through the
+        # manifest. Reading ``_v{N}`` roots logs a cosmetic
+        # "DataSource: All paths were ignored" WARN; the files are read.
         self.versioned = bool(versioned)
         self._dim_index = {d.name: i for i, d in enumerate(spec.dims)}
         if urlsplit(path).scheme:
             # Spark would write through Hadoop FS while the driver's
-            # renames, manifests and lock files landed on local disk
+            # manifests, listings and lock files landed on local disk
             raise ValueError(
                 f"World path {path!r} has a URI scheme; the writer lock, "
-                "manifests and publish renames use local file operations, "
+                "manifests and vacuum use local file operations, "
                 "so a World needs a plain local path"
             )
         self.path = path
@@ -679,35 +676,20 @@ class World:
     # -- lifecycle -----------------------------------------------------------
 
     def exists(self) -> bool:
-        """True iff the world has any persisted data files; the listing
-        stops at the first one. Empty partition-directory skeletons
-        don't count."""
-        if self.versioned:
-            v = self.current_version()
-            return v > 0 and bool(self._read_owner(v))
-        jvm = self.spark.sparkContext._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(self.path)
-        fs = jpath.getFileSystem(self.spark.sparkContext._jsc.hadoopConfiguration())
-        if not fs.exists(jpath):
-            return False
-        it = fs.listFiles(jpath, True)
-        while it.hasNext():
-            name = it.next().getPath().getName()
-            if name.endswith(".parquet"):
-                return True
-        return False
+        """True iff the committed state maps any partition (before the
+        first commit: iff a legacy plain layout holds parquet files)."""
+        return bool(self._read_owner(self.current_version()))
 
     def _base(self) -> DataFrame | None:
-        """The persisted base relation, cached per on-disk-state
-        version. ``spark.read.parquet`` builds a fresh file index
-        (a full recursive listing) on every call; read-heavy loops —
-        point-gets, select iterations, pending-merge reads — were
-        paying that listing each time. The cache key is the interned
-        WriterLock's ``data_version``, bumped by every flush/compact
-        through ANY same-process World on this path, so writers
-        invalidate all readers' caches. This is the engine's analogue
-        of the reference's ``hint_is_valid`` negative cache
-        (tokio-fs/src/lib.rs:38-73): O(1) re-answers for repeated
+        """The committed base relation, cached per on-disk-state
+        version. Building it reads the manifest and lists the owning
+        version dirs; read-heavy loops — point-gets, select iterations,
+        pending-merge reads — were paying that listing each time. The
+        cache key is the interned WriterLock's ``data_version``, bumped
+        by every flush/compact through ANY same-process World on this
+        path, so writers invalidate all readers' caches. This is the
+        engine's analogue of the reference's ``hint_is_valid`` negative
+        cache (tokio-fs/src/lib.rs:38-73): O(1) re-answers for repeated
         existence/listing questions, with the same staleness contract
         — a DIFFERENT PROCESS writing the path is not seen until this
         process's next version bump (single-writer discipline makes
@@ -717,13 +699,7 @@ class World:
         cached = self._base_cache
         if cached is not None and cached[0] == version:
             return cached[1]
-        if self.versioned:
-            cur = self.current_version()
-            df = (
-                self._resolve_manifest(self._read_owner(cur)) if cur else None
-            )
-        else:
-            df = self.spark.read.parquet(self.path) if self.exists() else None
+        df = self._resolve_manifest(self.current_version())
         self._base_cache = (version, df)
         return df
 
@@ -732,14 +708,17 @@ class World:
         when an EXTERNAL process wrote the path)."""
         self._base_cache = None
 
-    # -- snapshot manifests (versioned mode) ----------------------------------
+    # -- snapshot manifests ----------------------------------------------------
 
     @property
     def _snapdir(self) -> str:
         return os.path.join(self.path, "_snapshots")
 
     def _version_dir(self, v: int) -> str:
-        return os.path.join(self.path, f"_v{v}")
+        """Data root of version ``v``. Version 0, the state before the
+        first commit, is the world root: a layout written before every
+        World committed manifests opens as version 0."""
+        return os.path.join(self.path, f"_v{v}") if v else self.path
 
     def current_version(self) -> int:
         """Latest committed snapshot version (0 = nothing committed)."""
@@ -759,9 +738,14 @@ class World:
             if n.startswith("v") and n.endswith(".json")
         )
 
-    def _read_owner(self, version: int) -> dict[str, int]:
-        """partition-key ("3/7") -> owning data-version map for one
-        committed snapshot."""
+    def _read_manifest(self, version: int) -> dict:
+        """Committed manifest ``version``: ``owner`` maps each partition
+        key ("3/7") to the version owning its rows, and ``schema`` is
+        the relation's schema at commit (manifests written before it
+        was stored have none). Version 0 owns the root's own partition
+        dirs, stores no schema and has no manifest file."""
+        if version == 0:
+            return {"owner": dict.fromkeys(self._leaf_keys(self.path), 0)}
         p = os.path.join(self._snapdir, f"v{version}.json")
         if not os.path.exists(p):
             raise ValueError(
@@ -769,9 +753,17 @@ class World:
                 f"{self.snapshot_versions()})"
             )
         with open(p) as fh:
-            return {k: int(v) for k, v in json.load(fh)["owner"].items()}
+            return json.load(fh)
 
-    def _commit_snapshot(self, v: int, owner: dict[str, int]) -> None:
+    def _read_owner(self, version: int) -> dict[str, int]:
+        """partition-key ("3/7") -> owning data-version map for one
+        committed snapshot."""
+        owner = self._read_manifest(version)["owner"]
+        return {k: int(v) for k, v in owner.items()}
+
+    def _commit_snapshot(
+        self, v: int, owner: dict[str, int], schema: T.StructType
+    ) -> None:
         """Write manifest v, then atomically flip current.json — a
         crash between data write and flip leaves the previous snapshot
         served and the new files orphaned-but-unread (same discipline
@@ -801,7 +793,8 @@ class World:
             pass  # first snapshot, or legacy manifest without the field
         _atomic_flip(
             os.path.join(self._snapdir, f"v{v}.json"),
-            {"version": v, "owner": owner, "committed_at": committed},
+            {"version": v, "owner": owner, "committed_at": committed,
+             "schema": schema.jsonValue()},
         )
         _atomic_flip(
             os.path.join(self._snapdir, "current.json"), {"current": v}
@@ -847,70 +840,37 @@ class World:
             )
         return best
 
-    def _commit_version_write(self, out: DataFrame, dirty_keys: set[str]) -> int:
-        """Write ``out`` (rows + partition cols) as the next immutable
-        version directory, then commit a manifest that carries forward
-        every non-dirty partition from the previous snapshot and points
-        the written partitions at the new version. O(changed) write
-        volume — untouched partitions are never rewritten or copied."""
-        cur = self.current_version()
-        v = cur + 1
-        # the static write clears _v{v} first: fence it, or a writer
-        # whose lock was broken after it read ``cur`` would wipe the
-        # new holder's committed v{v}
-        self._writer_lock.verify_token()
-        self._write_fresh(out, self._version_dir(v))
-        # partition keys from the written directory tree (no Spark job;
-        # bounded by the ~4096 physical-partition cap) — also correct
-        # when the write is EMPTY (all dirty rows deleted): zero keys,
-        # so the dirty partitions simply drop out of the manifest
-        written = self._written_partitions(self._version_dir(v))
-        owner = {
-            k: ov
-            for k, ov in (self._read_owner(cur) if cur else {}).items()
-            if k not in dirty_keys
-        }
-        owner.update({k: v for k in written})
-        self._commit_snapshot(v, owner)
-        return v
-
-    def _write_fresh(self, out: DataFrame, path: str) -> None:
-        """Write ``out`` under ``path``, partitioned by chunk. Static
-        overwrite clears ``path`` first: no partition a dead earlier
-        attempt left there (an uncommitted ``_v{N}``) can be committed
-        with this write, and the rename pass of dynamic mode is
-        skipped."""
-        (
-            out.write.partitionBy(*self.partition_cols())
-            .mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .parquet(path)
+    def _leaf_keys(self, root: str) -> list[str]:
+        """Partition keys ("3/7") of the partition dirs under ``root``
+        that hold parquet files, from the c0=../c1=.. layout (local FS,
+        like the manifests). Only ``c{i}=`` dirs are descended, so the
+        world root lists its own partitions, never the ``_v{N}`` ones."""
+        level = [("", root)]
+        for c in self.partition_cols():
+            nxt = []
+            for key, d in level:
+                try:
+                    names = os.listdir(d)
+                except (FileNotFoundError, NotADirectoryError):
+                    continue
+                for n in names:
+                    if n.startswith(c + "="):
+                        v = str(int(n.split("=", 1)[1]))
+                        nxt.append((f"{key}/{v}" if key else v, os.path.join(d, n)))
+            level = nxt
+        return sorted(
+            key for key, d in level
+            if any(n.endswith(".parquet") for n in os.listdir(d))
         )
-
-    def _written_partitions(self, vdir: str) -> list[str]:
-        """Partition keys ("3/7") present in a just-written version
-        directory, from the c0=../c1=.. layout (local FS, like the
-        manifests)."""
-        ndims = self.spec.ndims
-        keys = []
-        for root, _dirs, files in os.walk(vdir):
-            if not any(f.endswith(".parquet") for f in files):
-                continue
-            rel = os.path.relpath(root, vdir)
-            parts = [
-                seg.split("=", 1)[1]
-                for seg in rel.split(os.sep)
-                if "=" in seg
-            ]
-            if len(parts) == ndims:
-                keys.append("/".join(str(int(p)) for p in parts))
-        return keys
 
     def vacuum_snapshots(self, retain_last: int = 1) -> int:
         """Drop manifests older than the newest ``retain_last`` and
-        delete every version directory no retained manifest references.
-        Returns directories deleted. Readers pinned to a vacuumed
-        snapshot fail loudly on their next manifest resolve."""
+        delete every partition dir no retained manifest maps; a version
+        dir left owning nothing goes whole. Returns version directories
+        deleted. The world root (version 0) only ever loses partition
+        dirs. Readers pinned to a vacuumed snapshot fail loudly on
+        their next manifest resolve. A ``versioned=False`` world runs
+        this with ``retain_last=1`` after every commit."""
         if retain_last < 1:
             raise ValueError("retain_last must be >= 1")
         cur = self.current_version()
@@ -924,38 +884,80 @@ class World:
         vs = [v for v in self.snapshot_versions() if v <= cur]
         orphans = [v for v in self.snapshot_versions() if v > cur]
         keep, drop = vs[-retain_last:], vs[:-retain_last]
-        referenced = set()
-        for v in keep:
-            referenced.update(self._read_owner(v).values())
+        mapped = {
+            (k, ov) for v in {cur, *keep} for k, ov in self._read_owner(v).items()
+        }
+        owners = {ov for _k, ov in mapped}
+        # manifests first: no manifest left maps a dir deleted below
         for v in drop + orphans:
             os.remove(os.path.join(self._snapdir, f"v{v}.json"))
+        on_disk = [
+            int(n[2:]) for n in os.listdir(self.path)
+            if n.startswith("_v") and n[2:].isdigit()
+        ]
         deleted = 0
-        for v in drop + orphans:
-            if v not in referenced and os.path.isdir(self._version_dir(v)):
-                shutil.rmtree(self._version_dir(v))
+        for v in sorted({0, *on_disk}):
+            if v > cur and v not in orphans:
+                continue  # an uncommitted write: the next commit clears it
+            vdir = self._version_dir(v)
+            if v and v not in keep and v not in owners:
+                shutil.rmtree(vdir)
                 deleted += 1
+                continue
+            for k in self._leaf_keys(vdir):
+                if (k, v) in mapped:
+                    continue
+                d = self._part_dir(k, vdir)
+                shutil.rmtree(d)
+                for _ in self.partition_cols()[1:]:  # emptied parents
+                    d = os.path.dirname(d)
+                    try:
+                        os.rmdir(d)
+                    except OSError:
+                        break
         return deleted
 
-    def _resolve_manifest(self, owner: dict[str, int]) -> DataFrame | None:
-        """Manifest -> DataFrame: for each data version owning live
-        partitions, ONE scan of its ``_v{K}`` directory filtered (on
-        the partition-directory columns, so pruning happens at file
-        listing) to the partitions it still owns; union across
-        versions. The filter is an isin over at most ~4096 keys (the
-        physical-partition bound ``_default_factors`` enforces)."""
-        if not owner:
-            return None
+    def _resolve_manifest(self, version: int) -> DataFrame | None:
+        """Committed snapshot ``version`` as ONE file index over the
+        roots of the versions owning its partitions; None when it maps
+        none. A root that also holds partitions the snapshot maps
+        elsewhere (kept for older snapshots, or not vacuumed yet) gives
+        its owned partition dirs instead. Spark's partition pruning on
+        ``c0…`` does the chunk pruning, as for any partitioned table.
+        The schema comes from the manifest, so building the relation
+        runs no Spark job (up to 32 paths are listed on the driver).
+        ``ignoreInvalidPartitionPaths`` lets several ``_v{N}`` roots
+        share the index: without it Spark rejects them as conflicting
+        directory structures."""
+        manifest = self._read_manifest(version)
         by_ver: dict[int, list[str]] = {}
-        for key, ver in owner.items():
-            by_ver.setdefault(ver, []).append(key)
-        tag = self._part_key_col()
-        out = None
-        for ver in sorted(by_ver):
-            part = self.spark.read.parquet(self._version_dir(ver)).filter(
-                tag.isin(by_ver[ver])
-            )
-            out = part if out is None else out.unionByName(part)
-        return out
+        for key, ver in manifest["owner"].items():
+            by_ver.setdefault(int(ver), []).append(key)
+        if not by_ver:
+            return None
+        paths = []
+        for ver, keys in sorted(by_ver.items()):
+            root = self._version_dir(ver)
+            if set(self._leaf_keys(root)) <= set(keys):
+                paths.append(root)
+            else:
+                paths += [self._part_dir(k, root) for k in sorted(keys)]
+        reader = (
+            self.spark.read.option("basePath", self.path)
+            .option("ignoreInvalidPartitionPaths", "true")
+        )
+        stored = manifest.get("schema")
+        if stored is not None:
+            schema = T.StructType.fromJson(stored)
+        else:
+            # a manifest that predates stored schemas (or version 0):
+            # infer from the files, partition columns typed as written
+            pcols = self.partition_cols()
+            schema = T.StructType([
+                T.StructField(f.name, T.LongType()) if f.name in pcols else f
+                for f in reader.parquet(*paths).schema
+            ])
+        return reader.schema(schema).parquet(*paths)
 
     # -- write path (reference: src/world.rs:553-584) -------------------------
 
@@ -1216,31 +1218,25 @@ class World:
         pending buffer: the manifest is immutable, so the same version
         hashes identically forever however much the world advances
         (corpus-release reproducibility at 100 TB)."""
+        # an empty world has just the dim columns
+        dims_only = T.StructType(
+            [T.StructField(d.name, T.LongType()) for d in self.spec.dims]
+        )
         if version is not None:
             if not self.versioned:
                 raise ValueError(
                     "version-pinned reads need World(versioned=True)"
                 )
-            pinned = self._resolve_manifest(self._read_owner(version))
+            pinned = self._resolve_manifest(version)
             if pinned is None:
-                # committed-but-empty snapshot: take the schema from any
-                # retained version's files so payload columns survive
-                # (a dims-only fabrication would break unionByName with
-                # non-empty versions); dims-only only when NO version
-                # dir exists at all
-                for v in reversed(self.snapshot_versions()):
-                    # a dir is only readable if it holds actual parquet
-                    # (an all-deleted commit leaves _SUCCESS alone)
-                    if self._written_partitions(self._version_dir(v)):
-                        return (
-                            self.spark.read.parquet(self._version_dir(v))
-                            .drop(*self.partition_cols())
-                            .limit(0)
-                        )
-                schema = T.StructType(
-                    [T.StructField(d.name, T.LongType()) for d in self.spec.dims]
+                # committed-but-empty snapshot: the schema stored at
+                # commit keeps the payload columns (a dims-only
+                # fabrication would break unionByName with non-empty
+                # versions)
+                stored = self._read_manifest(version).get("schema")
+                pinned = self.spark.createDataFrame(
+                    [], T.StructType.fromJson(stored) if stored else dims_only
                 )
-                return self.spark.createDataFrame([], schema)
             return pinned.drop(*self.partition_cols())
         base = self._base()
         p = self._resolved_pending()
@@ -1248,11 +1244,7 @@ class World:
         if base is not None:
             base = base.drop(*self.partition_cols())
         if base is None and live is None:
-            # empty world with just the dim columns
-            schema = T.StructType(
-                [T.StructField(d.name, T.LongType()) for d in self.spec.dims]
-            )
-            return self.spark.createDataFrame([], schema)
+            return self.spark.createDataFrame([], dims_only)
         if live is None:
             return base
         if base is None:
@@ -1426,10 +1418,18 @@ class World:
                 self._reraise_domain(e)
             n, self._ops = len(self._ops), []
             self._pending_cache = None
-            # new on-disk state: invalidate every same-process World's
-            # cached base relation (the interned version is the key)
-            self._writer_lock.data_version += 1
+            self._committed()
             return n
+
+    def _committed(self) -> None:
+        """After a commit: invalidate every same-process World's cached
+        base relation (the interned version is the key), then, on a
+        world that keeps no history, vacuum down to the new commit. A
+        kill before or during the vacuum leaves the commit published;
+        the next commit's vacuum removes what this one left."""
+        self._writer_lock.data_version += 1
+        if not self.versioned:
+            self.vacuum_snapshots(retain_last=1)
 
     def _flush_locked(self) -> None:
         p = self._resolved_pending()
@@ -1500,61 +1500,44 @@ class World:
     def _publish(self, out: DataFrame, dirty: list[str], order=None) -> None:
         """The one publish path of every World write (flush and
         compact): ``out`` holds the new rows of the ``dirty``
-        partitions plus any partitions it creates. Versioned worlds
-        commit it as the next snapshot; plain worlds stage and swap.
-        Either way the data lands in a fresh directory first, so the
-        write never reads what it replaces and needs no barrier.
+        partitions plus any partitions it creates. It is written as the
+        next immutable version directory, then a manifest carrying
+        forward every other partition of the previous snapshot is
+        committed (``_commit_snapshot``). O(changed) write volume —
+        untouched partitions are never rewritten or copied — and the
+        write never reads what it replaces, so it needs no barrier.
 
         Each partition is written as one file, its rows sorted by
         ``order`` (default: the id, the reference's BTreeMap order,
-        src/world.rs:25), so a flush leaves nothing for ``compact``."""
+        src/world.rs:25), so a flush leaves nothing for ``compact``.
+        Static overwrite clears ``_v{N}`` first: no partition a dead
+        earlier attempt left there can be committed with this write,
+        and the rename pass of dynamic mode is skipped."""
         pcols = self.partition_cols()
-        out = out.repartition(*pcols).sortWithinPartitions(
-            *pcols, self.spec.id_dim.name if order is None else order
+        cur = self.current_version()
+        vdir = self._version_dir(cur + 1)
+        # the write clears _v{N}: fence it, or a writer whose lock was
+        # broken after it read ``cur`` would wipe the new holder's v{N}
+        self._writer_lock.verify_token()
+        (
+            out.repartition(*pcols)
+            .sortWithinPartitions(
+                *pcols, self.spec.id_dim.name if order is None else order
+            )
+            .write.partitionBy(*pcols)
+            .mode("overwrite")
+            .option("partitionOverwriteMode", "static")
+            .parquet(vdir)
         )
-        if self.versioned:
-            self._commit_version_write(out, set(dirty))
-        else:
-            self._stage_and_swap(out, dirty)
-
-    def _stage_and_swap(self, out: DataFrame, dirty: list[str]) -> None:
-        """Publish ``out`` into a non-versioned world: write it to a
-        sibling staging dir, then swap in, by local-FS renames, every
-        ``dirty`` directory and every directory the staging holds. A
-        dirty key with no staged dir means the partition emptied: it is
-        cleared (the reference rewrites dirty chunks even to empty,
-        src/world.rs:96-122). Each live dir is renamed aside first; any
-        failure renames them back, so the world keeps its prior
-        contents."""
-        tag = uuid.uuid4().hex[:12]
-        staging = f"{self.path}.staging-{tag}"
-        aside = f"{self.path}.aside-{tag}"
-        swapped = []  # (live dir, its set-aside copy or None)
-        try:
-            self._write_fresh(out, staging)
-            self._writer_lock.verify_token()  # fence the swap
-            for key in sorted({*dirty, *self._written_partitions(staging)}):
-                dst, src = self._part_dir(key), self._part_dir(key, staging)
-                parked = None
-                if os.path.isdir(dst):
-                    parked = self._part_dir(key, aside)
-                    os.makedirs(os.path.dirname(parked), exist_ok=True)
-                    os.rename(dst, parked)
-                swapped.append((dst, parked))
-                if os.path.isdir(src):
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
-                    shutil.move(src, dst)
-        except BaseException:
-            for dst, parked in reversed(swapped):
-                shutil.rmtree(dst, ignore_errors=True)
-                if parked is not None:
-                    os.rename(parked, dst)
-            # reached only when every set-aside dir is back in place
-            shutil.rmtree(aside, ignore_errors=True)
-            raise
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(aside, ignore_errors=True)
+        dirty = set(dirty)
+        owner = {
+            k: ov for k, ov in self._read_owner(cur).items() if k not in dirty
+        }
+        # the written keys come from the directory tree (no Spark job);
+        # an EMPTY write (all dirty rows deleted) adds none, so the
+        # dirty partitions simply drop out of the manifest
+        owner.update(dict.fromkeys(self._leaf_keys(vdir), cur + 1))
+        self._commit_snapshot(cur + 1, owner, out.schema)
 
     def _part_dir(self, key: str, root: str | None = None) -> str:
         return "/".join(
@@ -1632,30 +1615,24 @@ class World:
             if not self._writer_ref:
                 self._writer_lock.acquire()
                 self._writer_ref = True
-            base = self._base()
-            if base is None:
-                return 0
-            key = self._part_key_col()
-            # one collect of the fragmented keys (at most the ~4096
-            # physical partitions; the file name is projected first
-            # because an aggregate cannot take input_file_name directly)
+            # count each mapped partition dir's files on the driver:
+            # no Spark job finds the fragments
+            owner = self._read_owner(self.current_version())
             frag = sorted(
-                r[0]
-                for r in base.select(key.alias("__k"), F.input_file_name().alias("__f"))
-                .groupBy("__k")
-                .agg(F.count_distinct("__f").alias("__nf"))
-                .filter(F.col("__nf") > max_files_per_partition)
-                .select("__k")
-                .collect()
+                k for k, v in owner.items()
+                if sum(
+                    n.endswith(".parquet")
+                    for n in os.listdir(self._part_dir(k, self._version_dir(v)))
+                ) > max_files_per_partition
             )
             if not frag:
                 return 0
             # the same literal key IN as flush: reads those dirs only
             self._publish(
-                base.filter(key.isin(frag)), frag,
+                self._base().filter(self._part_key_col().isin(frag)), frag,
                 self.zvalue() if order == "zorder" else None,
             )
-            self._writer_lock.data_version += 1  # invalidate base caches
+            self._committed()
             return len(frag)
 
     def stats(self) -> DataFrame:

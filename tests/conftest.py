@@ -21,22 +21,15 @@ def split_partition_files(world) -> int:
     partition over several tasks would: every parquet file the world
     currently reads that holds two or more rows is replaced by two
     files, its first and second half, with the same rows and the same
-    schema. Plain and versioned worlds alike (on a versioned world, the
-    files of the partitions the current manifest maps). Returns the
-    number of files split."""
+    schema. Only the partition dirs the current manifest maps are
+    touched. Returns the number of files split."""
     import glob
     import uuid
 
     import pyarrow.parquet as pq
 
-    if world.versioned:
-        owner = world._read_owner(world.current_version())
-        dirs = [world._part_dir(k, world._version_dir(v)) for k, v in owner.items()]
-    else:
-        dirs = {
-            os.path.dirname(f)
-            for f in glob.glob(os.path.join(world.path, "**", "*.parquet"), recursive=True)
-        }
+    owner = world._read_owner(world.current_version())
+    dirs = [world._part_dir(k, world._version_dir(v)) for k, v in owner.items()]
     split = 0
     for d in sorted(dirs):
         for f in sorted(glob.glob(os.path.join(d, "*.parquet"))):
@@ -55,3 +48,27 @@ def split_partition_files(world) -> int:
             split += 1
     world.invalidate_base_cache()
     return split
+
+
+def steal_lock_on_write(monkeypatch, store_dir: str) -> None:
+    """Make the next parquet write hand ``store_dir``'s writer lock to
+    another holder: once the write finishes, the lock file carries a
+    foreign token, as after a break or a lease reclaim while the
+    writer was writing."""
+    import json
+
+    from pyspark.sql import DataFrameWriter
+
+    from dmds_spark.world import WriterLock
+
+    real = DataFrameWriter.parquet
+
+    def write_then_steal(self, *a, **kw):
+        real(self, *a, **kw)
+        lock = WriterLock.lock_path(store_dir)
+        with open(lock) as fh:
+            holder = json.load(fh)
+        with open(lock, "w") as fh:
+            json.dump({**holder, "token": "someone-else"}, fh)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_steal)

@@ -67,8 +67,10 @@ def test_world_compact(spark, tmp_path):
     files_after = len(glob.glob(str(tmp_path / "world/**/*.parquet"), recursive=True))
     assert files_after < files_before
     # one file per partition dir now
-    for d in glob.glob(str(tmp_path / "world/c0=*/c1=*")):
-        assert len(glob.glob(d + "/*.parquet")) == 1
+    owner = w._read_owner(w.current_version())
+    assert owner
+    for k, v in owner.items():
+        assert len(glob.glob(w._part_dir(k, w._version_dir(v)) + "/*.parquet")) == 1
     assert w.snapshot().orderBy("d0").collect() == before
     # idempotent: nothing left to compact
     assert w.compact() == 0

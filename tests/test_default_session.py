@@ -11,8 +11,8 @@ mid-write (`dmds_world_maintenance` ERR in CORRECTNESS_r14.json).
 Fixed two ways (either suffices, both are in): the lock file moved to
 a sibling ``<path>.lockd/`` dir no engine rewrite can touch, and no
 World write overwrites in place any more: every flush and compact
-writes a fresh staging or version directory and publishes by rename
-or manifest flip, so the overwrite mode never matters.
+writes a fresh version directory and publishes it by a manifest flip,
+so the overwrite mode never matters.
 
 These tests pin the CLASS of bug: run the write-path query families
 under Spark-DEFAULT values of every correctness-relevant session conf
@@ -87,7 +87,8 @@ def test_world_lifecycle_survives_static_overwrite_mode(spark, tmp_path):
             w.flush()  # second commit point: fenced itself in r14
         got = {
             (r["x"], r["y"], r["v"])
-            for r in spark.read.parquet(path).select("x", "y", "v").collect()
+            for r in World(spark, SPEC, path)._base()
+            .select("x", "y", "v").collect()
         }
     assert got == {(1, 2, 10), (2, 3, 20)}
     # lock released on close, lock dir is OUTSIDE the data dir

@@ -466,3 +466,30 @@ def test_maintain_clusters_cannot_be_retrofitted(spark, tmp_path):
     docs.filter(F.col("doc_id") % 2 == 1).write.mode("append").parquet(src)
     with pytest.raises(ValueError, match="retrofitted"):
         flipped.refresh()
+
+
+def test_flip_is_fenced_by_the_writer_token(spark, tmp_path, monkeypatch):
+    """A writer whose lock passed to another holder while it wrote an
+    increment must not flip the pointer to it."""
+    import os
+
+    from dmds_spark.core.errors import WorldFencedError
+    from dmds_spark.world import WriterLock
+
+    from .conftest import steal_lock_on_write
+
+    docs = _docs(spark)
+    sdir = str(tmp_path / "store")
+    store = IncrementalMinHashDedup(
+        spark, str(tmp_path / "src"), sdir, "text", "doc_id", NH, B, K, T
+    )
+    store.fold_batch(docs.filter(F.col("doc_id") % 2 == 0), batch_id=0)
+    with open(f"{sdir}/_current.json") as fh:
+        pointer = fh.read()
+    steal_lock_on_write(monkeypatch, sdir)
+    with pytest.raises(WorldFencedError):
+        store.fold_batch(docs.filter(F.col("doc_id") % 2 == 1), batch_id=1)
+    monkeypatch.undo()
+    with open(f"{sdir}/_current.json") as fh:
+        assert fh.read() == pointer
+    os.unlink(WriterLock.lock_path(sdir))  # the other holder's

@@ -373,7 +373,8 @@ def test_flip_survives_midwrite_crash(spark, tmp_path, source, monkeypatch):
         raise OSError(28, "No space left on device")
 
     monkeypatch.setattr(R.json, "dump", torn_dump)
-    with pytest.raises(OSError):
+    # the flip is fenced: it runs inside the writer, as refresh runs it
+    with R.store_writer(ru.rollup_dir), pytest.raises(OSError):
         ru._flip({"version": 99, "seen_files": {}})
     monkeypatch.undo()
 
@@ -452,3 +453,27 @@ def test_in_flight_commit_dirs_are_ignored(spark, tmp_path, source):
     r2 = ru.refresh()
     assert r2["new_files"] == 1
     assert _rows(ru.read()) == _rows(_full(spark, d))
+
+
+
+def test_flip_is_fenced_by_the_writer_token(spark, tmp_path, source, monkeypatch):
+    """A writer whose lock passed to another holder while it wrote the
+    next version must not flip the pointer to it."""
+    from dmds_spark.core.errors import WorldFencedError
+    from dmds_spark.world import WriterLock
+
+    from .conftest import steal_lock_on_write
+
+    d, orders = source
+    rdir = str(tmp_path / "rollup")
+    ru = IncrementalRollup(spark, d, rdir, ["o_orderstatus"], ["o_totalprice"])
+    ru.refresh()
+    with open(f"{rdir}/_current.json") as fh:
+        pointer = fh.read()
+    steal_lock_on_write(monkeypatch, rdir)
+    with pytest.raises(WorldFencedError):
+        ru.fold_batch(orders.filter(F.col("o_orderkey") % 3 == 1), batch_id=0)
+    monkeypatch.undo()
+    with open(f"{rdir}/_current.json") as fh:
+        assert fh.read() == pointer
+    os.unlink(WriterLock.lock_path(rdir))  # the other holder's

@@ -71,8 +71,12 @@ def test_save_load(spark, tmp_path, world):
     w2 = World(spark, spec_1024(), world.path, physical_factors=(1, 1))
     assert rows(w2.get(114)) == [(114, 514)]
     # partition layout: chunk of 114 along dim0 (ipc 8) = 14,
-    # chunk of 514 along dim1 (ipc 16) = 32 -> c0=14/c1=32
-    assert os.path.isdir(os.path.join(world.path, "c0=14", "c1=32"))
+    # chunk of 514 along dim1 (ipc 16) = 32 -> c0=14/c1=32 under the
+    # version dir the manifest maps it to
+    owner = world._read_owner(world.current_version())
+    assert os.path.isdir(
+        os.path.join(world._version_dir(owner["14/32"]), "c0=14", "c1=32")
+    )
 
 
 def test_select(world):
@@ -104,7 +108,7 @@ def test_io_modify(spark, world):
     assert rows(w3.read(w3.select(1, (500, 600)))) == []
     # old partition dir rewritten without the row: value query via the
     # pruned path returns nothing (dir may remain, rows must not)
-    base = spark.read.parquet(world.path)
+    base = w3._base()
     old = base.filter((F.col("c0") == 14) & (F.col("c1") == 32))
     assert old.count() == 0
 
@@ -581,16 +585,6 @@ def _prune_batch(model):
     return ups, [12, 648]
 
 
-def _parquet_files(path):
-    out = set()
-    for root, _dirs, files in os.walk(path):
-        out.update(
-            os.path.relpath(os.path.join(root, f), path)
-            for f in files if f.endswith(".parquet")
-        )
-    return out
-
-
 @pytest.mark.parametrize(
     "versioned,cap",
     [(False, None), (True, None), (False, 2), (True, 2)],
@@ -644,8 +638,7 @@ def test_flush_pruning_rewrites_exactly_the_dirty_set(
         plans.append(self._df._jdf.queryExecution().executedPlan().toString())
         return parquet(self, *a, **kw)
 
-    before = _parquet_files(path)
-    owner_before = w._read_owner(w.current_version()) if versioned else None
+    owner_before = w._read_owner(w.current_version())
     monkeypatch.setattr(df_cls, "collect", spy_collect)
     monkeypatch.setattr(DataFrameWriter, "parquet", spy_parquet)
     assert w.flush() == 2
@@ -655,8 +648,9 @@ def test_flush_pruning_rewrites_exactly_the_dirty_set(
         line.split("PartitionFilters: [", 1)[1].split("], PushedFilters", 1)[0]
         for p in plans for line in p.split("\n") if "PartitionFilters: [" in line
     ]
-    # old-location lookup reads only the touched id groups ...
-    assert any(re.search(r"\bc0#\d+ IN \(0,5,7\)", f) for f in filters)
+    # old-location lookup reads only the touched id groups (partition
+    # columns are longs: Spark prints their ids with an L) ...
+    assert any(re.search(r"\bc0#\d+L? IN \(0,5,7\)", f) for f in filters)
     # ... and the merge reads only the dirty partitions, by key (Spark
     # prints a long IN list as a sorted INSET)
     keys = sorted(expect_dirty)
@@ -666,19 +660,13 @@ def test_flush_pruning_rewrites_exactly_the_dirty_set(
         for f in filters
     )
 
-    if versioned:
-        owner = w._read_owner(w.current_version())
-        changed = {k for k in owner_before if owner.get(k) != owner_before[k]}
-        changed |= set(owner) - set(owner_before)
-    else:
-        changed = {
-            "/".join(seg.split("=")[1] for seg in os.path.dirname(f).split("/"))
-            for f in before ^ _parquet_files(path)
-        }
+    owner = w._read_owner(w.current_version())
+    changed = {k for k in owner_before if owner.get(k) != owner_before[k]}
+    changed |= set(owner) - set(owner_before)
     assert changed == expect_dirty
 
     # every dirty partition that still holds rows is one id-sorted file
-    root = w._version_dir(w.current_version()) if versioned else path
+    root = w._version_dir(w.current_version())
     live_dirty = expect_dirty & {_prune_key(i, a, b) for i, (a, b, _) in model.items()}
     for key in live_dirty:
         files = [f for f in os.listdir(w._part_dir(key, root)) if f.endswith(".parquet")]
@@ -766,14 +754,15 @@ def _fragmented_prune_world(spark, path):
 
 
 @pytest.mark.parametrize("publish", ["later_flush", "first_flush", "compact"])
-def test_failed_swap_restores_partitions_and_retry_publishes(
+def test_failed_flip_keeps_snapshot_and_retry_publishes(
     spark, tmp_path, monkeypatch, publish
 ):
-    """Fault injection in every non-versioned publish: a move that
-    raises part-way through the swapped partitions must leave the world
-    exactly as it was before the call, with any flush ops still pending,
-    and a retry must publish the whole state."""
-    import shutil
+    """Fault injection at the commit point of every publish: a
+    ``current.json`` flip that raises (after the data and the new
+    manifest are written) must leave the world serving exactly the
+    snapshot before the call, with any flush ops still pending, and a
+    retry must publish the whole state."""
+    import dmds_spark.operators.rollup as rollup
 
     path = str(tmp_path / "w")
     model = _prune_base()
@@ -794,25 +783,26 @@ def test_failed_swap_restores_partitions_and_retry_publishes(
         ops = 2
     post = sorted((i, a, b, p) for i, (a, b, p) in model.items())
     call = w.compact if publish == "compact" else w.flush
-    pre_files = _parquet_files(path)
+    version = w.current_version()
+    owner = w._read_owner(version)
 
-    moves, real_move = [], shutil.move
+    flips, real_flip = [], rollup._atomic_flip
 
-    def failing_move(src, dst, *a, **kw):
-        moves.append(dst)
-        if len(moves) == 3:
-            raise OSError("injected move failure")
-        return real_move(src, dst, *a, **kw)
+    def failing_flip(target, payload):
+        flips.append(os.path.basename(target))
+        if os.path.basename(target) == "current.json":
+            raise OSError("injected flip failure")
+        return real_flip(target, payload)
 
-    monkeypatch.setattr(shutil, "move", failing_move)
+    monkeypatch.setattr(rollup, "_atomic_flip", failing_flip)
     with pytest.raises(OSError, match="injected"):
         call()
     monkeypatch.undo()
 
-    assert len(moves) == 3  # failed on the 3rd of more partitions
+    assert flips == [f"v{version + 1}.json", "current.json"]
     assert w.writes == ops
-    assert _parquet_files(path) == pre_files
-    assert not [n for n in os.listdir(tmp_path) if ".aside-" in n or ".staging-" in n]
+    assert w.current_version() == version
+    assert w._read_owner(version) == owner
 
     def state(world):
         snap = world.snapshot()  # an empty world has the dims alone
@@ -830,8 +820,9 @@ def test_failed_swap_restores_partitions_and_retry_publishes(
     if publish == "compact":
         assert done > 2
         assert all(
-            len([f for f in fs if f.endswith(".parquet")]) <= 1
-            for _root, _dirs, fs in os.walk(path)
+            len([f for f in os.listdir(w._part_dir(k, w._version_dir(v)))
+                 if f.endswith(".parquet")]) == 1
+            for k, v in w._read_owner(w.current_version()).items()
         )
     else:
         assert done == ops
@@ -839,23 +830,124 @@ def test_failed_swap_restores_partitions_and_retry_publishes(
 
 
 def test_compact_collects_fragments_in_one_pass(spark, tmp_path, monkeypatch):
-    # compact finds the fragmented keys with one collect and publishes
-    # through the staging dir: no barrier, no second pass over the keys
+    # compact finds the fragmented partitions by counting the mapped
+    # dirs' files on the driver: no Spark job runs before the write,
+    # and no barrier
+    from pyspark.sql import DataFrameWriter
+
     import dmds_spark.world as world_mod
 
     w = _fragmented_prune_world(spark, str(tmp_path / "w"))
     w._base()  # list the directory outside the measured call
-    barriers = []
+    barriers, before_write = [], []
     real = world_mod.materialize
     monkeypatch.setattr(
         world_mod, "materialize", lambda d: barriers.append(1) or real(d)
     )
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = dag.nextJobId()
+    parquet = DataFrameWriter.parquet
+
+    def spy_parquet(self, *a, **kw):
+        before_write.append(dag.nextJobId() - j0)
+        return parquet(self, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy_parquet)
     n, jobs = _jobs(spark, w.compact)
     assert n > 2
     assert barriers == []  # no localCheckpoint job
-    # measured with AQE on: three jobs for the fragmented keys (the
-    # distinct file count shuffles twice), two for the sorted write
-    assert jobs <= 5, jobs
+    assert before_write == [0]  # one write, and nothing ran before it
+    # measured with AQE on: two jobs for the sorted write
+    assert jobs <= 2, jobs
+    w.close()
+
+
+@pytest.mark.parametrize("versioned", [False, True])
+def test_committed_relation_is_one_file_index(spark, tmp_path, versioned):
+    # three commits leave partitions owned by three versions; the base
+    # relation is still one file index, built without a Spark job, and
+    # a point get scans it once with a c0 partition filter, no union
+    w = World(spark, PRUNE_SPEC, str(tmp_path / "w"),
+              physical_factors=PRUNE_FACTORS, versioned=versioned)
+    model = _prune_base()
+    w.upsert(_prune_df(spark, model))
+    w.flush()
+    ups, dels = _prune_batch(model)
+    w.upsert(_prune_df(spark, ups))
+    w.delete_ids(dels)
+    w.flush()
+    model.update(ups)
+    for i in dels:
+        del model[i]
+    extra = {900: (900, 900, "v3")}
+    w.upsert(_prune_df(spark, extra))
+    w.flush()
+    model.update(extra)
+    assert len(set(w._read_owner(w.current_version()).values())) >= 3
+
+    w.invalidate_base_cache()
+    base, jobs = _jobs(spark, w._base)
+    if not versioned:
+        assert jobs == 0  # every owning root passed whole
+    get = w.get(LONELY)
+    plan = get._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1 and "Union" not in plan, plan
+    assert re.search(r"PartitionFilters: \[[^\]]*\bc0#\d+L? = 7\b", plan), plan
+    assert [tuple(r) for r in get.collect()] == [(LONELY, 10, 20, "moved")]
+    got = sorted(tuple(r) for r in base.select("id", "a", "b", "p").collect())
+    assert got == sorted((i, a, b, p) for i, (a, b, p) in model.items())
+    w.close()
+
+
+def test_legacy_plain_layout_opens_as_version_zero(spark, tmp_path):
+    # a directory of c0=/c1=/c2= partitions at the world root, as
+    # worlds wrote before every commit went through a manifest
+    path = str(tmp_path / "w")
+    w = World(spark, PRUNE_SPEC, path, physical_factors=PRUNE_FACTORS)
+    model = _prune_base()
+    w._with_partition_cols(_prune_df(spark, model)).write.partitionBy(
+        *w.partition_cols()
+    ).parquet(path)
+    assert w.current_version() == 0 and w.exists()
+
+    def state(world):
+        snap = world.snapshot().select("id", "a", "b", "p")
+        return sorted(tuple(r) for r in snap.collect())
+
+    assert state(w) == sorted((i, a, b, p) for i, (a, b, p) in model.items())
+    assert [tuple(r) for r in w.get(LONELY).collect()] == [
+        (LONELY, *model[LONELY])
+    ]
+    ups, dels = _prune_batch(model)
+    w.upsert(_prune_df(spark, ups))
+    w.delete_ids(dels)
+    w.flush()
+    model.update(ups)
+    for i in dels:
+        del model[i]
+    owner = w._read_owner(w.current_version())
+    assert set(owner.values()) == {0, 1}
+    # vacuum deleted the root's superseded partition dirs, not the root
+    assert sorted(k for k, v in owner.items() if v == 0) == w._leaf_keys(path)
+    want = sorted((i, a, b, p) for i, (a, b, p) in model.items())
+    assert state(w) == want
+    assert state(World(spark, PRUNE_SPEC, path,
+                       physical_factors=PRUNE_FACTORS)) == want
+    # a manifest written before schemas were stored: inferred instead
+    import json
+
+    mpath = os.path.join(w._snapdir, f"v{w.current_version()}.json")
+    with open(mpath) as fh:
+        manifest = json.load(fh)
+    del manifest["schema"]
+    with open(mpath, "w") as fh:
+        json.dump(manifest, fh)
+    w.invalidate_base_cache()
+    assert state(w) == want
+    # rewriting every partition moves the rest out of the root
+    assert w.compact(max_files_per_partition=0) == len(owner)
+    assert w._leaf_keys(path) == [] and os.path.isdir(path)
+    assert state(w) == want
     w.close()
 
 

@@ -29,6 +29,11 @@ def _lockfile(path: str) -> str:
     return p
 
 
+def _committed(spark, path):
+    """The committed relation a fresh reader of ``path`` serves."""
+    return World(spark, SPEC, path, validate="off")._base()
+
+
 def _try_acquire_in_subprocess(path: str) -> dict:
     """Run a second OS process that attempts to take the writer lock;
     returns {"acquired": bool, "error": str|None}."""
@@ -88,7 +93,7 @@ def test_same_process_second_instance_shares_interned_lock(spark, tmp_path):
     b.close()
     got = {
         (r["x"], r["y"], r["v"])
-        for r in spark.read.parquet(path).select("x", "y", "v").collect()
+        for r in _committed(spark, path).select("x", "y", "v").collect()
     }
     assert got == {(1, 2, 10), (2, 3, 20)}
 
@@ -319,7 +324,7 @@ def test_racing_first_writes_take_exactly_one_ref(spark, tmp_path):
     assert nxt["acquired"] is True
     got = {
         (r["x"], r["y"], r["v"])
-        for r in spark.read.parquet(path).select("x", "y", "v").collect()
+        for r in _committed(spark, path).select("x", "y", "v").collect()
     }
     assert got == {(1, 2, 10), (2, 3, 20)}
 
@@ -513,7 +518,7 @@ def test_fenced_flush_aborts_nonversioned_overwrite(spark, tmp_path):
         w.flush()
     # on-disk state untouched by the fenced writer
     got = {tuple(r) for r in
-           spark.read.parquet(path).select("x", "y", "v").collect()}
+           _committed(spark, path).select("x", "y", "v").collect()}
     assert got == {(1, 2, 10)}
     w._ops = []
     w.close()

@@ -203,6 +203,21 @@ def test_version_dirs_hidden_from_naive_root_scan(spark, world):
         spark.read.parquet(world.path).count()
 
 
+def test_version_dirs_hidden_from_naive_root_scan_unversioned(spark, tmp_path):
+    """The same for a world that vacuums its history: its committed
+    partitions live under ``_v{N}`` too, so a naive root scan never
+    reads a superseded or uncommitted file."""
+    world = World(spark, spec_1024(), str(tmp_path / "w"),
+                  physical_factors=(1, 1))
+    world.insert_rows([{"dim0": 10, "dim1": 39}])
+    world.flush()
+    world.insert_rows([{"dim0": 10, "dim1": 40}])
+    world.flush()
+    with pytest.raises(Exception, match="[Uu]nable to infer schema|PATH"):
+        spark.read.parquet(world.path).count()
+    assert rows(world.snapshot()) == [(10, 40)]
+
+
 def test_export_pinned_snapshot_as_reference_tree(spark, world, tmp_path):
     """A PINNED snapshot exports as a reference-compatible chunk tree
     (release v1 in the reference's own on-disk format) and re-imports

@@ -82,7 +82,7 @@ def test_u64_crud_roundtrip(spark, uworld):
         (SMALL, 10, 1), (MID, 20, 2), (NEAR_MAX, 1000, 3),
     }
     # persisted column type is DECIMAL(20,0); values are exact
-    base = spark.read.parquet(uworld.path)
+    base = uworld._base()
     assert dict(base.dtypes)["id"] == "decimal(20,0)"
 
     # upsert replaces by id at full magnitude
@@ -156,7 +156,7 @@ def test_u64_chunk_routing_matches_planner(spark, uworld):
         [{"id": v, "t": (i * 16) % 1024, "v": i} for i, v in enumerate(vals)]
     )
     uworld.flush()
-    base = spark.read.parquet(uworld.path)
+    base = uworld._base()
     got = {
         int(r["id"]): (int(r["c0"]), int(r["c1"]))
         for r in base.select("id", "c0", "c1").collect()
@@ -243,7 +243,7 @@ def test_long_dim_chunk_routing_exact_past_2_53(spark, tmp_path):
     tricky = k * 2**31 - 1
     w.insert_rows([{"id": tricky, "t": 0, "v": 1}])
     w.flush()
-    base = spark.read.parquet(w.path)
+    base = w._base()
     got_c0 = int(base.select("c0").collect()[0]["c0"])
     assert got_c0 == spec.dims[0].chunk_of(tricky) == k - 1
     w.close()
