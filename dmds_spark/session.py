@@ -70,6 +70,9 @@ def get_spark(
         # default 1 MiB stack while that code still ran interpreted
         .config("spark.driver.extraJavaOptions", "-Xss4m")
         .config("spark.ui.enabled", "false")
+        # the SQL status store keeps every retained execution's plan
+        # metrics even with the UI off, and nothing here reads them
+        .config("spark.sql.ui.retainedExecutions", "50")
         # plan introspection (plans/inspect.py) needs untruncated
         # FileScan metadata (PushedFilters/ReadSchema lines)
         .config("spark.sql.maxMetadataStringLength", "10000")

@@ -11,7 +11,9 @@ Mapping (SURVEY.md §1.5):
 - the in-memory dirty buffer pool (``chunks_buf``, src/world.rs:254) is
   a driver-tracked op log of upsert/delete batches, merged into every
   read (the reference's iterator likewise merges buffered chunks with
-  on-disk chunks, src/world/iter.rs:726-750);
+  on-disk chunks, src/world/iter.rs:726-750). A small log of local
+  batches collapses on the driver, as the reference's pool does in
+  process; any other log collapses in one Spark window;
 - ``insert``/``try_insert``/``remove`` (src/world.rs:553-584,77-87) are
   batch operations keyed on dim 0;
 - relocation (``Lazy::close``, src/world/iter.rs:193-211) is automatic:
@@ -60,28 +62,46 @@ from dmds_spark.core.engine import materialize
 # and the flush on a 16,000-row world of 128 partitions (local[2],
 # 4-core host), literals took x0.92 of the joins' time at 128 ids, x0.96
 # at 512 and 768, x1.08 at 1,024 and x1.89 at 16,384: every plan carries
-# the list. The cap sits below the crossover.
+# the list. The cap sits below the crossover. It also bounds the op-log
+# rows the driver collapses: past it, the window collapses the log.
 ID_LIST_CAP = 512
 
 
-def _in_list(name: str, values: list) -> Column:
-    """``name IN (values)`` for integer ids, parsed from one SQL string:
-    one gateway call, where ``Column.isin`` makes one per value (a
-    pending get routing 4,096 ids took 5.0 s that way against 1.5 s)."""
+def _in_sql(sql: str, values) -> str:
+    """``sql IN (values)`` as SQL text, for integers or partition keys
+    (digits and ``/``, quoted as strings); ``false`` when empty."""
     if not values:
-        return F.lit(False)
-    return F.expr(f"`{name}` IN ({','.join(str(int(v)) for v in values)})")
+        return "false"
+    lits = (repr(v) if isinstance(v, str) else str(int(v)) for v in values)
+    return f"{sql} IN ({','.join(lits)})"
+
+
+def _in_list(sql: str, values) -> Column:
+    """``_in_sql`` as a Column, parsed from one SQL string: one gateway
+    call, where ``Column.isin`` makes one per value (a pending get
+    routing 4,096 ids took 5.0 s that way against 1.5 s)."""
+    return F.expr(_in_sql(sql, values))
+
+
+def _is_local(df: DataFrame) -> bool:
+    """True when ``df`` optimizes to one local relation, whose rows
+    the driver holds: collecting it runs no job."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation"
 
 
 class _Pending(NamedTuple):
     """The op log collapsed to its latest op per id, as of op ``seq``.
 
     ``live`` holds the latest upsert rows, ``touched`` every id an op
-    names. When at most ``ID_LIST_CAP`` ids were touched, the batch is
-    also routed in literals (``keep`` is set): ``keep`` is NOT id IN
-    (touched ids), ``hit`` is c0 IN ``groups`` AND id IN (touched ids),
-    and ``new_keys`` are the partitions the live rows land in. Above
-    the cap those three are None and ``touched`` is joined instead."""
+    names. Collapsed on the driver, both are the op log filtered to
+    each id's latest op: a local relation that reads without a job.
+    Collapsed by the window, they read a checkpoint. When at most
+    ``ID_LIST_CAP`` ids were touched, the batch is also routed in
+    literals (``keep`` is set): ``keep`` is NOT id IN (touched ids),
+    ``hit`` is c0 IN ``groups`` AND id IN (touched ids), and
+    ``new_keys`` are the partitions the live rows land in. Above the
+    cap those three are None and ``touched`` is joined instead."""
 
     seq: int
     live: DataFrame
@@ -577,16 +597,24 @@ class World:
             df = df.withColumn(f"c{i}", self._partition_col(i))
         return df
 
-    def _partition_col(self, i: int):
+    def _partition_sql(self, i: int) -> str:
         d, f = self.spec.dims[i], self.factors[i]
         start = f"CAST('{d.start}' AS DECIMAL(20,0))" if d.u64 else f"{d.start}L"
-        expr = f"((`{d.name}` - {start}) div {d.spacing}) div {int(f)}"
-        return F.expr(expr).cast("long")
+        return f"CAST(((`{d.name}` - {start}) div {d.spacing}) div {int(f)} AS BIGINT)"
+
+    def _partition_col(self, i: int):
+        return F.expr(self._partition_sql(i))
+
+    def _part_key_sql(self, cols: list[str] | None = None) -> str:
+        """The manifest key "c0/c1/…" as SQL over ``cols``, by default
+        the partition columns alone, so filters on it prune at file
+        listing."""
+        return "concat_ws('/', {})".format(
+            ", ".join(f"CAST({c} AS STRING)" for c in cols or self.partition_cols())
+        )
 
     def _part_key_col(self):
-        """The manifest key "c0/c1/…" as a column of the partition
-        columns alone, so filters on it prune at file listing."""
-        return F.concat_ws("/", *[F.col(c).cast("string") for c in self.partition_cols()])
+        return F.expr(self._part_key_sql())
 
     def _physical_partition_predicate(self, shape: Shape):
         """Chunk-index Shape -> predicate over physical partition cols.
@@ -1020,8 +1048,18 @@ class World:
         """Convenience: upsert a small batch of row dicts (tests, REPL).
         Ints destined for u64 dim columns are converted to Decimal
         before schema inference (a Python int past 2^63 won't fit the
-        inferred LongType)."""
-        rows = list(rows)
+        inferred LongType). The frame has the schema
+        ``createDataFrame(rows)`` infers; when every column is a long,
+        decimal, string, binary or boolean it is built through
+        ``_local_frame``, so the op log collapses on the driver."""
+        self.upsert(self._rows_frame(list(rows)))
+
+    # column types whose values a pandas object column carries to Arrow
+    # unchanged (a double NaN would turn null, timestamps shift zones)
+    _ARROW_EXACT = (T.LongType, T.DecimalType, T.StringType, T.BinaryType,
+                    T.BooleanType)
+
+    def _rows_frame(self, rows: list[dict]) -> DataFrame:
         u64_dims = {d.name for d in self.spec.dims if d.u64}
         if u64_dims:
             from decimal import Decimal
@@ -1033,8 +1071,25 @@ class World:
                 }
                 for r in rows
             ]
-        df = self.spark.createDataFrame(rows)
-        self.upsert(df)
+        # the schema createDataFrame(rows) infers, without building its frame
+        schema = self.spark._inferSchemaFromList(rows)
+        if not all(isinstance(f.dataType, self._ARROW_EXACT) for f in schema.fields):
+            return self.spark.createDataFrame(rows)
+        return self._local_frame(
+            {n: [r.get(n) for r in rows] for n in schema.names}, schema
+        )
+
+    def _local_frame(self, columns: dict[str, list], schema: T.StructType) -> DataFrame:
+        """A frame of driver-side values, built through Arrow when the
+        session enables it: one local relation, which reads without a
+        job and lets ``_resolved_pending`` collapse on the driver.
+        Without Arrow, or for no rows, Spark's row path builds it."""
+        import pandas as pd
+
+        return self.spark.createDataFrame(
+            pd.DataFrame({n: pd.Series(columns[n], dtype=object) for n in schema.names}),
+            schema,
+        )
 
     def try_insert(self, df: DataFrame) -> None:
         """Insert-if-absent (reference ``World::try_insert``,
@@ -1057,11 +1112,11 @@ class World:
             from decimal import Decimal
 
             field = T.StructField(id_dim.name, T.DecimalType(20, 0))
-            rows = [(Decimal(int(i)),) for i in ids]
+            values = [Decimal(int(i)) for i in ids]
         else:
             field = T.StructField(id_dim.name, T.LongType())
-            rows = [(int(i),) for i in ids]
-        df = self.spark.createDataFrame(rows, T.StructType([field]))
+            values = [int(i) for i in ids]
+        df = self._local_frame({id_dim.name: values}, T.StructType([field]))
         self._append_op("delete", df)
 
     def delete_where(self, sel: Select) -> None:
@@ -1073,104 +1128,155 @@ class World:
 
     def _resolved_pending(self) -> _Pending | None:
         """Collapse the op log (None when it is empty). Latest op per
-        id wins — a window over __seq, the deterministic replacement
-        for the reference's chunk/item write locks.
+        id wins, the deterministic replacement for the reference's
+        chunk/item write locks. Two sources give the same result:
 
-        Materialized once per op-log state, then, once the world has
-        stored rows, one small collect routes it: each touched id with
-        its ``c0`` group and its live row's partition key, computed by
-        the same expressions the write uses (``validate="off"`` admits
-        out-of-range values, and Spark's ``div`` truncates where
-        Python's ``//`` floors). Cached under the last op's sequence
-        number: pending reads and the flush that commits them share it.
-        A successful flush drops the cache; the checkpoint lives on
-        while any DataFrame built from it does."""
+        - on the driver (``_collapse_on_driver``), when every op's
+          frame is a local relation and the log holds at most
+          ``ID_LIST_CAP`` rows, as the reference merges its in-memory
+          buffer pool in process: no job runs;
+        - otherwise a window over ``__seq``, materialized once.
+
+        Once the world has stored rows, the batch is routed: each
+        touched id with its ``c0`` group and its live row's partition
+        key, computed by the same expressions the write uses
+        (``validate="off"`` admits out-of-range values, and Spark's
+        ``div`` truncates where Python's ``//`` floors). The driver
+        collapse has these rows already; the window's log takes one
+        small collect. Cached under the last op's sequence number:
+        pending reads and the flush that commits them share it. A
+        successful flush drops the cache; the checkpoint lives on while
+        any DataFrame built from it does."""
         ops = list(self._ops)  # appends may race an unlocked read
         if not ops:
             return None
         cached = self._pending_cache
         if cached is not None and cached.seq == ops[-1][0]:
             return cached
-        from pyspark.sql import Window as W
-
         id_col = self.spec.id_dim.name
-        parts = []
-        for seq, kind, df in ops:
-            if kind == "upsert":
-                parts.append(
-                    df.withColumn("__seq", F.lit(seq)).withColumn("__del", F.lit(False))
-                )
-            else:
-                parts.append(
-                    df.select(id_col)
-                    .withColumn("__seq", F.lit(seq))
-                    .withColumn("__del", F.lit(True))
-                )
-        # align schemas: deletes carry only the id column
-        all_cols = []
-        for p in parts:
-            for c in p.columns:
-                if c not in all_cols:
-                    all_cols.append(c)
-        aligned = []
-        for p in parts:
-            for c in all_cols:
-                if c not in p.columns:
-                    p = p.withColumn(c, F.lit(None))
-            aligned.append(p.select(all_cols))
-        log = aligned[0]
-        for p in aligned[1:]:
+        parts = self._aligned_ops(ops)
+        log = parts[0]
+        for p in parts[1:]:
             log = log.unionByName(p)
-        w = W.partitionBy(id_col).orderBy(F.col("__seq").desc())
-        # materialize the collapsed log: its consumers (live for the
-        # merge and new-location sides, touched for the old-location
-        # and anti joins, across every read of this op-log state) would
-        # otherwise each re-run every pending op's source plan — a CDC
-        # merge buffers the whole net-changes pipeline here (guide
-        # §2.4). The barrier is micro-batch-sized (the pending buffer),
-        # never table-sized.
-        latest = (
-            log.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        ).transform(materialize)
-        # delete-only op logs leave live empty AND missing dim columns —
-        # give it the full dim schema so downstream plans resolve
-        for d in self.spec.dims:
-            if d.name not in latest.columns:
-                latest = latest.withColumn(d.name, F.lit(None).cast(d.spark_type))
-        # every touched id has exactly one rn=1 row, so the touched set
-        # reads off the collapsed log — no second pass over the raw ops
-        touched = latest.select(id_col)
-        live = latest.filter(~F.col("__del")).drop("__seq", "__del")
+        collapsed = self._collapse_on_driver(ops, parts, log)
+        if collapsed is not None:
+            live, touched, routed = collapsed
+        else:
+            from pyspark.sql import Window as W
+
+            w = W.partitionBy(id_col).orderBy(F.col("__seq").desc())
+            # materialize the collapsed log: its consumers (live for
+            # the merge and new-location sides, touched for the
+            # old-location and anti joins, across every read of this
+            # op-log state) would otherwise each re-run every pending
+            # op's source plan — a CDC merge buffers the whole
+            # net-changes pipeline here (guide §2.4). The barrier is
+            # micro-batch-sized (the pending buffer), never table-sized.
+            latest = (
+                log.withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") == 1)
+                .drop("__rn")
+            ).transform(materialize)
+            # every touched id has exactly one rn=1 row, so the touched
+            # set reads off the collapsed log — no second pass
+            touched = latest.select(id_col)
+            live = latest.filter(~F.col("__del")).drop("__seq", "__del")
+            routed = None
         pending = _Pending(ops[-1][0], live, touched, None, None, None, None)
         if self._base() is None:
             # nothing stored to filter or relocate: a read returns the
             # live rows and a flush publishes them, unrouted
             self._pending_cache = pending
             return pending
-        routed = (
-            self._with_partition_cols(latest)
-            .select(
-                id_col, "c0",
-                F.when(~F.col("__del"), self._part_key_col()).alias("key"),
-            )
-            .limit(ID_LIST_CAP + 1)
-            .collect()
-        )
+        if routed is None:
+            routed = self._routing(latest).limit(ID_LIST_CAP + 1).collect()
         if len(routed) <= ID_LIST_CAP:
             # a null id matches no stored row (as in the joins)
             ids = [r[0] for r in routed if r[0] is not None]
             groups = sorted({r[1] for r in routed if r[1] is not None})
-            id_in = _in_list(id_col, ids)
+            id_in = _in_list(f"`{id_col}`", ids)
             pending = pending._replace(
                 groups=groups,
                 new_keys={r[2] for r in routed if r[2] is not None},
                 keep=~F.coalesce(id_in, F.lit(False)),
-                hit=F.col("c0").isin(groups) & id_in,
+                hit=_in_list("c0", groups) & id_in,
             )
         self._pending_cache = pending
         return pending
+
+    def _aligned_ops(self, ops) -> list[DataFrame]:
+        """Each op's frame with ``__seq`` and ``__del`` and one shared
+        column list: deletes carry only the id, and a delete-only log
+        gets typed null dims so downstream plans resolve. One
+        ``selectExpr`` per op: each Column built from Python costs
+        gateway calls, and this runs on every pending read."""
+        id_col = self.spec.id_dim.name
+        cols = [df.columns if kind == "upsert" else [id_col] for _, kind, df in ops]
+        all_cols = []
+        for have in cols:
+            all_cols += [c for c in have if c not in all_cols]
+        nulls = [
+            f"CAST(NULL AS {d.spark_type}) AS `{d.name}`"
+            for d in self.spec.dims if d.name not in all_cols
+        ]
+        return [
+            df.selectExpr(
+                *[f"`{c}`" if c in have else f"NULL AS `{c}`" for c in all_cols],
+                f"{seq} AS __seq", f"{str(kind != 'upsert').lower()} AS __del",
+                *nulls,
+            )
+            for (seq, kind, df), have in zip(ops, cols)
+        ]
+
+    def _routing(self, log: DataFrame) -> DataFrame:
+        """``(id, c0, key)`` of each op-log row, by the expressions the
+        write partitions with; ``key``, the partition the row lands in,
+        is null for a delete."""
+        pcols = [self._partition_sql(i) for i in range(self.spec.ndims)]
+        return log.selectExpr(
+            f"`{self.spec.id_dim.name}`", f"{pcols[0]} AS c0",
+            f"CASE WHEN NOT __del THEN {self._part_key_sql(pcols)} END AS key",
+        )
+
+    def _collapse_on_driver(self, ops, parts: list[DataFrame], log: DataFrame):
+        """``(live, touched, routed)`` collapsed without a Spark job, or
+        None to collapse by the window instead: when an op's frame does
+        not optimize to a local relation, the log holds more than
+        ``ID_LIST_CAP`` rows, or an id is null or repeats within one op
+        (the window's tie-break decides those).
+
+        Each op's routing rows fold into its local relation, so their
+        collect runs no job; the latest op per id is picked here, and
+        ``live``/``touched`` are the aligned log filtered to the
+        winners, which Catalyst folds back into local relations."""
+        latest = {}  # id -> (seq, kind, c0, key)
+        room = ID_LIST_CAP
+        for (seq, kind, _), part in zip(ops, parts):
+            route = self._routing(part).limit(room + 1)
+            if not _is_local(route):
+                return None
+            rows = route.collect()
+            room -= len(rows)
+            ids = [r[0] for r in rows]
+            if room < 0 or None in ids or len(set(ids)) < len(ids):
+                return None
+            for i, c0, key in rows:
+                latest[i] = (seq, kind, c0, key)
+
+        def winners(kinds) -> Column:
+            by_seq: dict[int, list] = {}
+            for i, (seq, kind, _, _) in latest.items():
+                if kind in kinds:
+                    by_seq.setdefault(seq, []).append(i)
+            id_sql = f"`{self.spec.id_dim.name}`"
+            return F.expr(" OR ".join(
+                f"(__seq = {s} AND {_in_sql(id_sql, ids)})" for s, ids in by_seq.items()
+            ) or "false")
+
+        live = log.filter(winners(("upsert",))).drop("__seq", "__del")
+        touched = log.filter(winners(("upsert", "delete"))).select(self.spec.id_dim.name)
+        routed = [(i, c0, key) for i, (_, _, c0, key) in latest.items()]
+        return live, touched, routed
 
     def _drop_touched(self, df: DataFrame, p: _Pending) -> DataFrame:
         """``df`` (stored rows) without the ids the op log touched."""
@@ -1457,7 +1563,9 @@ class World:
             return
         dirty = sorted(dirty)
         # a literal IN on the key: the merge reads the dirty dirs only
-        base_part = base.filter(key.isin(dirty)).drop(*self.partition_cols())
+        base_part = base.filter(_in_list(self._part_key_sql(), dirty)).drop(
+            *self.partition_cols()
+        )
         live_cast = self._align_to(live, base_part)
         merged = self._drop_touched(base_part, p).unionByName(
             live_cast, allowMissingColumns=True
@@ -1489,7 +1597,7 @@ class World:
         if groups:
             dirty.update(
                 r[0]
-                for r in base.filter(F.col("c0").isin(groups))
+                for r in base.filter(_in_list("c0", groups))
                 .join(touched, on=self.spec.id_dim.name, how="left_semi")
                 .select(key)
                 .distinct()
@@ -1629,7 +1737,7 @@ class World:
                 return 0
             # the same literal key IN as flush: reads those dirs only
             self._publish(
-                self._base().filter(self._part_key_col().isin(frag)), frag,
+                self._base().filter(_in_list(self._part_key_sql(), frag)), frag,
                 self.zvalue() if order == "zorder" else None,
             )
             self._committed()

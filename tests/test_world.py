@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from dmds_spark.core.dims import DimSpec, WorldSpec
 from dmds_spark.core.errors import ValueOutOfRangeError
-from dmds_spark.world import FlushDaemon, World
+from dmds_spark.world import FlushDaemon, World, _is_local
 
 from .conftest import split_partition_files
 
@@ -741,6 +741,256 @@ def _prune_df(spark, model):
         [(i, a, b, p) for i, (a, b, p) in model.items()],
         "id long, a long, b long, p string",
     )
+
+
+# -- the driver collapse of local op logs -----------------------------------
+
+
+def _local_df(spark, model, extra=None):
+    """``_prune_df`` built through Arrow: a local relation. ``extra``
+    adds a payload column ``q`` (schema evolution)."""
+    import pandas as pd
+
+    cols = {"id": list(model), "a": [v[0] for v in model.values()],
+            "b": [v[1] for v in model.values()], "p": [v[2] for v in model.values()]}
+    schema = "id long, a long, b long, p string"
+    if extra is not None:
+        cols["q"] = [extra] * len(model)
+        schema += ", q long"
+    return spark.createDataFrame(pd.DataFrame(cols), schema)
+
+
+def test_insert_rows_frame_has_the_inferred_schema(spark, world, tmp_path):
+    from decimal import Decimal
+
+    rows_ = [{"dim0": 1, "dim1": 2, "s": "x", "blob": b"\x00", "ok": True},
+             {"dim0": 3, "dim1": 4, "s": None, "blob": None, "ok": None}]
+    df, ref = world._rows_frame(rows_), spark.createDataFrame(rows_)
+    assert df.schema == ref.schema
+    assert _is_local(df)
+    assert df.collect() == ref.collect()
+    # u64 ints become Decimal before inference: DECIMAL(38,18), as before
+    u = World(spark, WorldSpec(dims=(DimSpec("id", 0, 2**64 - 1, 2**56, u64=True),)),
+              str(tmp_path / "u"))
+    big = [{"id": 2**64 - 1, "v": 7}]
+    df = u._rows_frame(big)
+    assert df.schema == spark.createDataFrame([{"id": Decimal(2**64 - 1), "v": 7}]).schema
+    assert _is_local(df) and df.collect()[0]["id"] == 2**64 - 1
+    # doubles take Spark's row path (Arrow would turn a NaN into null)
+    nan = [{"dim0": 1, "dim1": 2, "x": float("nan")}]
+    df = world._rows_frame(nan)
+    assert df.schema == spark.createDataFrame(nan).schema and not _is_local(df)
+
+
+def _collapse_pair(spark, tmp_path, base_dir, name):
+    """Two copies of the world at ``base_dir``: the first collapses on
+    the driver, the second is forced onto the window."""
+    import shutil
+
+    worlds = []
+    for side in ("driver", "window"):
+        path = str(tmp_path / f"{name}-{side}")
+        if base_dir is not None:
+            shutil.copytree(base_dir, path)
+        worlds.append(World(spark, PRUNE_SPEC, path, physical_factors=PRUNE_FACTORS))
+    return worlds
+
+
+def _assert_same_collapse(spark, monkeypatch, driver, window, routed=True):
+    p, jobs = _jobs(spark, driver._resolved_pending)
+    assert jobs == 0  # collapsed and routed on the driver
+    with monkeypatch.context() as mp:
+        mp.setattr(World, "_collapse_on_driver", lambda self, *a: None)
+        q, jobs = _jobs(spark, window._resolved_pending)
+    assert jobs >= 2  # the window's checkpoint, then the routing collect
+    assert p.live.dtypes == q.live.dtypes
+    for a, b in ((p.live, q.live), (p.touched, q.touched)):
+        assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    assert (p.groups, p.new_keys) == (q.groups, q.new_keys)
+    assert (p.keep is not None) == (q.keep is not None) == routed
+    driver.flush()
+    window.flush()
+    snap = [sorted(map(tuple, w.snapshot().collect())) for w in (driver, window)]
+    assert snap[0] == snap[1]
+    return snap[0]
+
+
+@pytest.fixture(scope="module")
+def prune_base_dir(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("collapse") / "base")
+    w = World(spark, PRUNE_SPEC, path, physical_factors=PRUNE_FACTORS)
+    w.upsert(_prune_df(spark, _prune_base()))
+    w.flush()
+    w.close()
+    return path
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_driver_collapse_matches_the_window(spark, tmp_path, monkeypatch,
+                                            prune_base_dir, seed):
+    # random logs of re-upserts, relocations, new ids, deletes and
+    # delete-then-upsert, one op adding a payload column: both sources
+    # give the same live rows, touched ids, routing and flushed rows
+    import random
+
+    rng = random.Random(seed)
+    base = _prune_base()
+    pool = rng.sample(sorted(base), 12) + [1 + 4 * k for k in range(8)]
+    model = dict(base)
+    driver, window = _collapse_pair(spark, tmp_path, prune_base_dir, f"s{seed}")
+    kinds = ["upsert", "delete", "upsert"]
+    kinds += rng.choices(["upsert", "delete"], k=rng.randint(0, 2))
+    deleted = []
+    for n, kind in enumerate(kinds):
+        picked = rng.sample(pool, rng.randint(1, 6))
+        if n == 2:  # upserts some ids the op before deleted
+            picked = sorted(set(picked) | set(deleted[:2]))
+        if kind == "delete":
+            deleted = picked
+            for w in (driver, window):
+                w.delete_ids(picked)
+            for i in picked:
+                model.pop(i, None)
+        else:
+            ups = {i: (rng.randrange(1024), rng.randrange(1024), f"s{seed}n{n}")
+                   for i in picked}
+            extra = 7 if n == 2 else None
+            for w in (driver, window):
+                w.upsert(_local_df(spark, ups, extra))
+            model.update(ups)
+    got = _assert_same_collapse(spark, monkeypatch, driver, window)
+    assert sorted((r[0], *r[1:4]) for r in got) == sorted(
+        (i, a, b, p) for i, (a, b, p) in model.items())
+
+
+def test_driver_collapse_delete_only_and_fresh_logs(spark, tmp_path, monkeypatch,
+                                                    prune_base_dir):
+    driver, window = _collapse_pair(spark, tmp_path, prune_base_dir, "dels")
+    for w in (driver, window):
+        w.delete_ids([4, 8, 3])  # 3 is not stored
+        w.delete_ids([8, LONELY])
+    got = _assert_same_collapse(spark, monkeypatch, driver, window)
+    assert {4, 8, LONELY} & {r[0] for r in got} == set()
+    # a fresh world is not routed by either source
+    driver, window = _collapse_pair(spark, tmp_path, None, "fresh")
+    for w in (driver, window):
+        w.upsert(_local_df(spark, {1: (1, 1, "a"), 2: (2, 2, "b")}))
+        w.delete_ids([1])
+    assert _assert_same_collapse(spark, monkeypatch, driver, window,
+                                 routed=False) == [(2, 2, 2, "b")]
+
+
+def test_driver_collapse_u64_ids(spark, tmp_path, monkeypatch):
+    spec = WorldSpec(dims=(DimSpec("id", 0, 2**64 - 1, 2**60, u64=True),
+                           DimSpec("t", 0, 1023, 64)))
+    top = 2**64 - 1
+    worlds = [World(spark, spec, str(tmp_path / s)) for s in ("driver", "window")]
+    for w in worlds:
+        w.insert_rows([{"id": top - k, "t": k, "v": k} for k in range(6)])
+        w.flush()
+        w.insert_rows([{"id": top, "t": 900, "v": 100}, {"id": 2**63 + 1, "t": 1, "v": 1}])
+        w.delete_ids([top - 1, top - 2])
+    p, jobs = _jobs(spark, worlds[0]._resolved_pending)
+    assert jobs == 0
+    with monkeypatch.context() as mp:
+        mp.setattr(World, "_collapse_on_driver", lambda self, *a: None)
+        q = worlds[1]._resolved_pending()
+    assert sorted(map(tuple, p.live.collect())) == sorted(map(tuple, q.live.collect()))
+    assert (p.groups, p.new_keys) == (q.groups, q.new_keys)
+    for w in worlds:
+        w.flush()
+    want = [(2**63 + 1, 1, 1), (top - 5, 5, 5), (top - 4, 4, 4), (top - 3, 3, 3),
+            (top, 900, 100)]
+    for w in worlds:
+        assert sorted((int(r[0]), r[1], r[2]) for r in w.snapshot().collect()) == want
+
+
+def test_null_repeated_or_too_many_ids_fall_back_to_the_window(
+    spark, tmp_path, prune_base_dir
+):
+    import pandas as pd
+
+    import dmds_spark.world as world_mod
+
+    many = {i: (1, 1, "c") for i in range(world_mod.ID_LIST_CAP + 1)}
+    for name, ids in (("null", [4, None]), ("repeat", [4, 4]), ("cap", None)):
+        w, _ = _collapse_pair(spark, tmp_path, prune_base_dir, name)
+        w.upsert(_local_df(spark, many) if ids is None else spark.createDataFrame(
+            pd.DataFrame({"id": pd.Series(ids, dtype=object), "a": [1, 2],
+                          "b": [1, 2], "p": ["x", "y"]}),
+            "id long, a long, b long, p string"))
+        ops = list(w._ops)
+        parts = w._aligned_ops(ops)
+        assert _is_local(parts[0])
+        assert w._collapse_on_driver(ops, parts, parts[0]) is None
+        _, jobs = _jobs(spark, w._resolved_pending)
+        assert jobs >= 2  # the window ran
+        assert len(w.get(4).collect()) == 1
+
+
+@pytest.mark.parametrize("versioned", [False, True])
+def test_local_log_pending_get_and_flush_job_counts(spark, tmp_path, versioned):
+    # an op log of local frames collapses on the driver: the first
+    # pending get plans without a job and runs one, and the flush runs
+    # the old-location scan and the shuffled write
+    w = World(spark, PRUNE_SPEC, str(tmp_path / "w"),
+              physical_factors=PRUNE_FACTORS, versioned=versioned)
+    model = _prune_base()
+    w.upsert(_prune_df(spark, model))
+    w.flush()
+    ups, dels = _prune_batch(model)
+    w.upsert(_local_df(spark, ups))
+    w.delete_ids(dels)
+    w._base()  # the listing of the new files is not the pending get's
+    df, jobs = _jobs(spark, lambda: w.get(644))
+    assert jobs == 0
+    got, jobs = _jobs(spark, df.collect)
+    assert [tuple(r) for r in got] == [(644, 10, 10, "reloc")]
+    assert jobs == 1
+    n, jobs = _jobs(spark, w.flush)
+    assert n == 2
+    assert jobs <= 3, jobs
+    model.update(ups)
+    for i in dels:
+        del model[i]
+    got = sorted(tuple(r) for r in w.snapshot().select("id", "a", "b", "p").collect())
+    assert got == sorted((i, a, b, p) for i, (a, b, p) in model.items())
+    w.close()
+
+
+def test_flush_guard_raises_on_a_local_log(spark, world):
+    # Catalyst may evaluate the raise_error guard on the driver while it
+    # optimizes a local relation: the flush still raises the typed error
+    world.insert_rows([{"dim0": 1, "dim1": 1}])
+    world.flush()
+    world.insert_rows([{"dim0": 2, "dim1": 1500}])
+    p, jobs = _jobs(spark, world._resolved_pending)
+    assert jobs == 0 and _is_local(p.live)
+    with pytest.raises(ValueOutOfRangeError) as ei:
+        world.flush()
+    assert (ei.value.dim, ei.value.value) == (1, 1500)
+    assert world.writes == 1
+
+
+def test_literal_lists_are_one_gateway_call_each(spark, tmp_path):
+    # c0 IN groups, id IN ids and key IN dirty are parsed from one SQL
+    # string each: a batch touching 96 groups and about 190 partitions
+    # builds its pending get and flush in as many py4j calls as a batch
+    # touching two
+    from dmds_spark.core.plan_lint import py4j_call_count
+
+    calls = []
+    for n in (2, 96):
+        w = World(spark, spec_1024(), str(tmp_path / f"w{n}"), physical_factors=(1, 1))
+        w.insert_rows([{"dim0": i, "dim1": i} for i in range(0, 1024, 8)])
+        w.flush()
+        w.insert_rows([{"dim0": 8 * k, "dim1": 1023 - 8 * k} for k in range(n)])
+        w._base()
+        calls.append(py4j_call_count(lambda: w.get(0).collect())
+                     + py4j_call_count(w.flush))
+        assert len(w._read_owner(w.current_version())) == 128
+        w.close()
+    assert calls[1] - calls[0] <= 10, calls
 
 
 def _fragmented_prune_world(spark, path):

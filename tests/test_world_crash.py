@@ -78,7 +78,14 @@ def open_world(spark, path, versioned):
 
 
 def frame(spark, model):
-    return spark.createDataFrame(list(model.values()), SCHEMA)
+    # built through Arrow: a local relation, so the flushes collapse
+    # their op log on the driver (the window path is covered by
+    # test_world.py; every kill point is in the shared publish/commit)
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame(list(model.values()), columns=["id", "a", "p"]), SCHEMA
+    )
 
 
 # -- ops, run in the child ------------------------------------------------------
