@@ -1618,23 +1618,32 @@ class World:
         Each partition is written as one file, its rows sorted by
         ``order`` (default: the id, the reference's BTreeMap order,
         src/world.rs:25), so a flush leaves nothing for ``compact``.
-        Static overwrite clears ``_v{N}`` first: no partition a dead
-        earlier attempt left there can be committed with this write,
-        and the rename pass of dynamic mode is skipped."""
+        The write costs per file, not per byte: on the local FS without
+        Hadoop's native library, every file, ``.crc`` and directory it
+        creates forks a ``chmod``. So the exchange has a fixed count,
+        one task per dirty partition up to the shuffle-partition count
+        (all of them on a fresh world), which AQE does not coalesce
+        onto one task as it does a byte-sized one. Static overwrite clears ``_v{N}`` first: no
+        partition a dead earlier attempt left there can be committed
+        with this write, and the rename pass of dynamic mode is
+        skipped. No ``_SUCCESS`` marker is written: the manifest flip
+        is the commit."""
         pcols = self.partition_cols()
         cur = self.current_version()
         vdir = self._version_dir(cur + 1)
+        n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         # the write clears _v{N}: fence it, or a writer whose lock was
         # broken after it read ``cur`` would wipe the new holder's v{N}
         self._writer_lock.verify_token()
         (
-            out.repartition(*pcols)
+            out.repartition(min(n, len(dirty) or n), *pcols)
             .sortWithinPartitions(
                 *pcols, self.spec.id_dim.name if order is None else order
             )
             .write.partitionBy(*pcols)
             .mode("overwrite")
             .option("partitionOverwriteMode", "static")
+            .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
             .parquet(vdir)
         )
         dirty = set(dirty)

@@ -465,9 +465,8 @@ def test_base_relation_cache_and_cross_instance_invalidation(spark, tmp_path):
 # -- resolved op-log cache and flush job counts -----------------------------
 
 
-def _jobs(spark, fn):
-    """Run ``fn`` under a fresh job group; return (result, jobs it
-    launched before returning)."""
+def _in_group(spark, fn):
+    """Run ``fn`` under a fresh job group; return (result, group)."""
     import uuid
 
     sc = spark.sparkContext
@@ -477,7 +476,14 @@ def _jobs(spark, fn):
         out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, group
+
+
+def _jobs(spark, fn):
+    """Run ``fn`` under a fresh job group; return (result, jobs it
+    launched before returning)."""
+    out, group = _in_group(spark, fn)
+    return out, len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
 
 
 def test_pending_read_sees_each_new_op(world):
@@ -593,7 +599,6 @@ def _prune_batch(model):
 def test_flush_pruning_rewrites_exactly_the_dirty_set(
     spark, tmp_path, monkeypatch, versioned, cap
 ):
-    import pyarrow.parquet as pq
     from pyspark.sql import DataFrameWriter
 
     import dmds_spark.world as world_mod
@@ -665,14 +670,9 @@ def test_flush_pruning_rewrites_exactly_the_dirty_set(
     changed |= set(owner) - set(owner_before)
     assert changed == expect_dirty
 
-    # every dirty partition that still holds rows is one id-sorted file
-    root = w._version_dir(w.current_version())
-    live_dirty = expect_dirty & {_prune_key(i, a, b) for i, (a, b, _) in model.items()}
-    for key in live_dirty:
-        files = [f for f in os.listdir(w._part_dir(key, root)) if f.endswith(".parquet")]
-        assert len(files) == 1, (key, files)
-        ids = pq.read_table(os.path.join(w._part_dir(key, root), files[0])).column("id")
-        assert ids.to_pylist() == sorted(ids.to_pylist())
+    # every partition, the dirty ones that still hold rows among them,
+    # is one id-sorted file
+    _assert_one_sorted_file_per_partition(w)
 
     want = sorted((i, a, b, p) for i, (a, b, p) in model.items())
     for reader in (w, World(spark, PRUNE_SPEC, path,
@@ -1198,6 +1198,125 @@ def test_legacy_plain_layout_opens_as_version_zero(spark, tmp_path):
     assert w.compact(max_files_per_partition=0) == len(owner)
     assert w._leaf_keys(path) == [] and os.path.isdir(path)
     assert state(w) == want
+    w.close()
+
+
+# -- every write spreads over the shuffle partitions ------------------------
+
+
+def _write_tasks(spark, fn):
+    """Run ``fn`` under a fresh job group; return (result, tasks of the
+    last job's final stage). Nothing runs a job after a World write's
+    parquet write, so that stage is the write."""
+    out, group = _in_group(spark, fn)
+    st = spark.sparkContext.statusTracker()
+    job = st.getJobInfo(max(st.getJobIdsForGroup(group)))
+    return out, st.getStageInfo(max(job.stageIds)).numTasks
+
+
+def _morton(spec, row):
+    """``World.zvalue`` in Python: the low ``63 // ndims`` bits of each
+    dim offset, interleaved dim by dim."""
+    bits = 63 // spec.ndims
+    z = 0
+    for i, d in enumerate(spec.dims):
+        off = (row[d.name] - d.start) % (1 << bits)
+        for b in range(bits):
+            z |= ((off >> b) & 1) << (b * spec.ndims + i)
+    return z
+
+
+def _assert_one_sorted_file_per_partition(w, key=lambda r: r["id"]):
+    """Every partition dir the current manifest maps holds one parquet
+    file whose rows are sorted by ``key``."""
+    import pyarrow.parquet as pq
+
+    owner = w._read_owner(w.current_version())
+    assert owner
+    for k, v in owner.items():
+        d = w._part_dir(k, w._version_dir(v))
+        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
+        assert len(files) == 1, (k, files)
+        got = [key(r) for r in pq.read_table(os.path.join(d, files[0])).to_pylist()]
+        assert got == sorted(got), k
+
+
+def test_publish_writes_on_one_task_per_dirty_partition(spark, tmp_path):
+    # a small write is byte-sized onto one task by AQE unless its
+    # exchange has a fixed count: min(shuffle partitions, dirty), all
+    # of them on a fresh world
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert shuffle > 1
+    w = World(spark, PRUNE_SPEC, str(tmp_path / "w"),
+              physical_factors=PRUNE_FACTORS)
+    model = _prune_base()
+    w.upsert(_prune_df(spark, model))
+    _, tasks = _write_tasks(spark, w.flush)
+    assert tasks == shuffle  # the load: a fresh world has no dirty list
+    _assert_one_sorted_file_per_partition(w)
+
+    # in-place updates in 12 partitions: the flush dirties exactly those
+    ups = {i: (a, b, "up") for i, (a, b, _) in list(model.items())[::20][:12]}
+    dirty = {_prune_key(i, a, b) for i, (a, b, _) in ups.items()}
+    assert len(dirty) >= 8
+    w.upsert(_prune_df(spark, ups))
+    _, tasks = _write_tasks(spark, w.flush)
+    assert tasks == min(shuffle, len(dirty)) > 1
+    _assert_one_sorted_file_per_partition(w)
+    model.update(ups)
+
+    ups = {LONELY: (1000, 1000, "alone")}
+    w.upsert(_prune_df(spark, ups))
+    _, tasks = _write_tasks(spark, w.flush)
+    assert tasks == 1  # one dirty partition
+    model.update(ups)
+
+    n, tasks = _write_tasks(
+        spark, lambda: w.compact(max_files_per_partition=0, order="zorder")
+    )
+    assert n == len(w._read_owner(w.current_version()))
+    assert tasks == min(shuffle, n) > 1
+    _assert_one_sorted_file_per_partition(w, lambda r: _morton(PRUNE_SPEC, r))
+    got = sorted(tuple(r) for r in w.snapshot().select("id", "a", "b", "p").collect())
+    assert got == sorted((i, a, b, p) for i, (a, b, p) in model.items())
+    w.close()
+
+
+def test_committed_version_dirs_hold_only_partition_dirs(spark, tmp_path):
+    # the manifest flip is the only commit marker: a _v{N} holds its
+    # c0= dirs and nothing else (no _SUCCESS or its .crc), and the
+    # listing, the vacuum and a reopen see the same partitions
+    path = str(tmp_path / "w")
+    w = World(spark, PRUNE_SPEC, path, physical_factors=PRUNE_FACTORS,
+              versioned=True)
+    model = _prune_base()
+    w.upsert(_prune_df(spark, model))
+    w.flush()
+    ups, dels = _prune_batch(model)
+    w.upsert(_prune_df(spark, ups))
+    w.delete_ids(dels)
+    w.flush()
+    assert w.compact(max_files_per_partition=0) > 0
+    model.update(ups)
+    for i in dels:
+        del model[i]
+
+    def vdirs():
+        return sorted(n for n in os.listdir(path) if n.startswith("_v"))
+
+    assert len(vdirs()) == 3
+    for n in vdirs():
+        names = os.listdir(os.path.join(path, n))
+        assert names and all(x.startswith("c0=") for x in names), (n, names)
+    cur = w.current_version()
+    assert w._leaf_keys(w._version_dir(cur)) == sorted(w._read_owner(cur))
+    want = sorted((i, a, b, p) for i, (a, b, p) in model.items())
+    assert w.vacuum_snapshots(retain_last=1) == 2
+    assert vdirs() == [f"_v{cur}"]
+    for reader in (w, World(spark, PRUNE_SPEC, path,
+                            physical_factors=PRUNE_FACTORS)):
+        got = sorted(tuple(r) for r in reader.snapshot().select("id", "a", "b", "p").collect())
+        assert got == want
     w.close()
 
 
