@@ -3,13 +3,41 @@
 Local mode for tests/bench; the same settings (AQE, adaptive coalesce,
 UTC session TZ, Arrow) are what we would ship on a real cluster — only
 master/shuffle-partition count change with deployment size.
+
+With a ``local[...]`` master the session's ``file://`` file system is
+``dmds_spark.jvm.NioLocalFileSystem`` (``dmds_spark/jvm/``): Hadoop's
+checksummed local file system (``.crc`` sidecars written and verified
+as before) whose raw layer sets permissions through java.nio, and
+which leaves a file that fails its checksum in place instead of moving
+it into a ``bad_files/`` dir at the top of the mount. The
+stock one forks a ``chmod`` child for every file, ``.crc`` and
+directory a write creates, because pyspark ships no ``libhadoop``.
+The two classes are compiled once with the JDK's ``javac`` against
+pyspark's ``hadoop-client-api`` jar and cached by source hash under
+``dmds_spark/jvm/__jarcache__/`` (a temp dir when the package is
+read-only), then put on the driver class path. Executors share the
+driver JVM only in local mode, so a non-local master, or a host without
+``javac``, keeps the stock file system and logs one warning.
 """
 
 from __future__ import annotations
 
+import functools
+import glob
+import hashlib
+import logging
 import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
+
+JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+LOCAL_FS_CLASS = "dmds_spark.jvm.NioLocalFileSystem"
 
 
 def default_cpus() -> str:
@@ -31,6 +59,84 @@ def default_driver_memory() -> str:
     return f"{max(1, ram // 2**31)}g"
 
 
+def _javac() -> str | None:
+    home = os.environ.get("JAVA_HOME")
+    if home and os.access(os.path.join(home, "bin", "javac"), os.X_OK):
+        return os.path.join(home, "bin", "javac")
+    return shutil.which("javac")
+
+
+def build_jvm_jar(src_dir: str = JVM_DIR, cache_dirs: list[str] | None = None) -> str:
+    """The jar of the ``*.java`` sources in ``src_dir``, compiled with
+    ``javac --release 17`` against pyspark's ``hadoop-client-api`` jar.
+
+    The jar is named by a hash of the sources and reused while they are
+    unchanged. It is kept in the first writable of ``cache_dirs``, by
+    default beside the sources (like ``__pycache__``), else in a temp
+    dir. A build goes to a temp file that is renamed into place, so
+    concurrent first sessions do not race. Raises ``OSError`` (no
+    ``javac``, no writable cache dir) or ``CalledProcessError``."""
+    import pyspark
+
+    sources = sorted(glob.glob(os.path.join(src_dir, "*.java")))
+    digest = hashlib.sha256()
+    for src in sources:
+        with open(src, "rb") as fh:
+            digest.update(os.path.basename(src).encode() + b"\0" + fh.read())
+    name = f"dmds-jvm-{digest.hexdigest()[:16]}.jar"
+    cache_dirs = cache_dirs or [
+        os.path.join(src_dir, "__jarcache__"),
+        os.path.join(tempfile.gettempdir(), "dmds_spark-jarcache"),
+    ]
+    for d in cache_dirs:
+        if os.path.isfile(os.path.join(d, name)):
+            return os.path.join(d, name)
+    javac = _javac()
+    if javac is None:
+        raise FileNotFoundError("no javac in JAVA_HOME or on PATH")
+    api = glob.glob(os.path.join(
+        os.path.dirname(pyspark.__file__), "jars", "hadoop-client-api-*.jar"))
+    for d in cache_dirs:
+        try:
+            os.makedirs(d, exist_ok=True)
+            work = tempfile.mkdtemp(dir=d, prefix=".build-")
+            break
+        except OSError:
+            continue
+    else:
+        raise PermissionError(f"no writable jar cache dir in {cache_dirs}")
+    try:
+        classes = os.path.join(work, "classes")
+        subprocess.run(
+            [javac, "--release", "17", "-nowarn", "-cp", os.pathsep.join(api),
+             "-d", classes, *sources],
+            check=True, capture_output=True, text=True,
+        )
+        tmp_jar = os.path.join(work, name)
+        with zipfile.ZipFile(tmp_jar, "w") as jar:
+            for root, _, files in os.walk(classes):
+                for f in files:
+                    path = os.path.join(root, f)
+                    jar.write(path, os.path.relpath(path, classes))
+        os.replace(tmp_jar, os.path.join(d, name))
+        return os.path.join(d, name)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+@functools.lru_cache(maxsize=None)
+def local_fs_jar() -> str | None:
+    """``build_jvm_jar()`` once per process; ``None`` (logged once) when
+    it cannot be built."""
+    try:
+        return build_jvm_jar()
+    except (OSError, subprocess.CalledProcessError) as e:
+        detail = getattr(e, "stderr", None) or e
+        log.warning("stock local file system kept (forks chmod per file): "
+                    "cannot build %s: %s", LOCAL_FS_CLASS, detail)
+        return None
+
+
 def get_spark(
     app_name: str = "dmds_spark",
     master: str | None = None,
@@ -45,6 +151,12 @@ def get_spark(
     splitting, partition coalescing) at any scale, and shuffle
     partition count should track total cores (set explicitly per
     deployment).
+
+    The engine's JVM flags go in ``spark.driver.defaultJavaOptions``, so
+    a caller's ``spark.driver.extraJavaOptions`` adds to them; a caller's
+    ``spark.driver.extraClassPath`` is appended to the engine's jar.
+    A ``local[...]`` master installs ``LOCAL_FS_CLASS`` for ``file://``
+    (module docstring).
     """
     cpus = default_cpus()
     if master is None:
@@ -68,7 +180,7 @@ def get_spark(
         # Column trees built from Python are converted to expressions
         # recursively on the py4j thread: a 300-deep tree overflowed the
         # default 1 MiB stack while that code still ran interpreted
-        .config("spark.driver.extraJavaOptions", "-Xss4m")
+        .config("spark.driver.defaultJavaOptions", "-Xss4m")
         .config("spark.ui.enabled", "false")
         # the SQL status store keeps every retained execution's plan
         # metrics even with the UI off, and nothing here reads them
@@ -79,9 +191,22 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    extra_conf = dict(extra_conf or {})
+    class_path = extra_conf.pop("spark.driver.extraClassPath", None)
+    jar = None
+    if master.split("[")[0] == "local":
+        jar = local_fs_jar()
+    else:
+        log.warning("stock local file system kept (forks chmod per file): "
+                    "%s is not on the executors of master %s",
+                    LOCAL_FS_CLASS, master)
+    if jar:
+        builder = builder.config("spark.hadoop.fs.file.impl", LOCAL_FS_CLASS)
+        class_path = os.pathsep.join(filter(None, (jar, class_path)))
+    if class_path:
+        builder = builder.config("spark.driver.extraClassPath", class_path)
+    for k, v in extra_conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -1618,9 +1618,11 @@ class World:
         Each partition is written as one file, its rows sorted by
         ``order`` (default: the id, the reference's BTreeMap order,
         src/world.rs:25), so a flush leaves nothing for ``compact``.
-        The write costs per file, not per byte: on the local FS without
-        Hadoop's native library, every file, ``.crc`` and directory it
-        creates forks a ``chmod``. So the exchange has a fixed count,
+        A small write costs per file more than per byte: each file gets
+        a ``.crc`` sidecar, a directory, permission calls and a commit
+        rename (the session's local file system makes the permission
+        calls in process; the stock one forks a ``chmod`` for each, see
+        ``session``). So the exchange has a fixed count,
         one task per dirty partition up to the shuffle-partition count
         (all of them on a fresh world), which AQE does not coalesce
         onto one task as it does a byte-sized one. Static overwrite clears ``_v{N}`` first: no

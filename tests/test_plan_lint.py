@@ -82,6 +82,9 @@ def test_driver_threads_fit_deep_column_trees(spark):
     """The seeded 300-node tree converts on a py4j thread whose stack
     must hold the converter's recursion before the JIT compiles it: at
     the JVM's default 1 MiB stack, the 2nd to 21st such build in a fresh
-    session raised StackOverflowError in ColumnNodeToExpressionConverter."""
-    opts = spark.sparkContext.getConf().get("spark.driver.extraJavaOptions", "")
-    assert "-Xss4m" in opts.split(), opts
+    session raised StackOverflowError in ColumnNodeToExpressionConverter.
+    Read from the running JVM, so a caller's own JVM options cannot drop
+    the flag unnoticed."""
+    mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    args = list(mx.getRuntimeMXBean().getInputArguments())
+    assert "-Xss4m" in args, args
