@@ -39,10 +39,11 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from dmds_spark.core import commit
 
 _SIDECAR = "_zonemap.json"
 
@@ -108,10 +109,7 @@ def load_zonemap(world) -> dict:
 
 def _store(world, zm: dict) -> None:
     os.makedirs(world.path, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=world.path, prefix="._zonemap.")
-    with os.fdopen(fd, "w") as f:
-        json.dump(zm, f)
-    os.replace(tmp, _sidecar_path(world))  # atomic on POSIX
+    commit.atomic_flip(_sidecar_path(world), zm)
 
 
 def refresh(world, cols: list[str]) -> dict:

@@ -16,9 +16,9 @@ increment that saw its second member emits it). Pinned against the
 full-corpus pipeline in tests/test_incremental_dedup.py and oracle-
 checked end to end by the registered ``dedup_incremental_minhash``.
 
-Storage follows the same crash-safe discipline as
-``operators/rollup.py`` (and the reference's dirty-chunk incremental
-flush, tokio-fs/src/lib.rs:207-235): each increment writes NEW
+Storage follows the commit protocol of ``core/commit.py`` (and the
+reference's dirty-chunk incremental flush,
+tokio-fs/src/lib.rs:207-235): each increment writes NEW
 immutable parquet files (``sigs/batch-v*``, ``pairs/batch-v*``) and
 then flips a pointer file listing the committed versions — an
 increment is O(new) write volume (the store is appended, never
@@ -31,18 +31,18 @@ high-water mark, exactly like the rollup sink.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dmds_spark.core.commit import PointerStore
 from dmds_spark.functions.text import lsh_band_keys, minhash_jaccard_estimate
 from dmds_spark.operators.dedup import minhash_signatures
 from dmds_spark.core.engine import materialize
 
 
-class IncrementalMinHashDedup:
+class IncrementalMinHashDedup(PointerStore):
     """A maintained MinHash near-dup index over an append-only corpus.
 
     ``refresh()`` ingests unseen source files; ``fold_batch()`` ingests
@@ -77,9 +77,9 @@ class IncrementalMinHashDedup:
         threshold: float = 0.5,
         maintain_clusters: bool = False,
     ):
+        super().__init__(store_dir)
         self.spark = spark
         self.source_dir = source_dir
-        self.store_dir = store_dir
         self.text_col = text_col
         self.id_col = id_col
         self.num_hashes = num_hashes
@@ -92,38 +92,14 @@ class IncrementalMinHashDedup:
         # (see _cluster_delta). Opt-in: pair-only consumers skip the
         # per-increment contracted-CC cost.
         self.maintain_clusters = maintain_clusters
-        os.makedirs(store_dir, exist_ok=True)
-
-    def _writer(self):
-        """Single-writer fence for every read-state → write → flip
-        sequence (see operators.rollup.store_writer)."""
-        from dmds_spark.operators.rollup import store_writer
-
-        return store_writer(self.store_dir)
 
     # -- pointer ---------------------------------------------------------
-    @property
-    def _pointer(self) -> str:
-        return os.path.join(self.store_dir, "_current.json")
+    def _empty_state(self) -> dict:
+        return {"versions": [], "seen_files": [], "last_batch_id": -1}
 
-    def _state(self) -> dict:
-        if not os.path.exists(self._pointer):
-            return {"versions": [], "seen_files": [], "last_batch_id": -1}
-        with open(self._pointer) as fh:
-            return json.load(fh)
-
-    def _flip(self, state: dict) -> None:
-        from dmds_spark.operators.rollup import _atomic_flip
-        from dmds_spark.world import WriterLock
-
-        # fencing token at the commit point (every _flip runs inside
-        # _writer()): a writer whose lock was broken or reclaimed while
-        # it wrote the increment aborts before publishing it. Then
-        # temp-write + os.replace: a crash mid-flip leaves the old
-        # pointer readable, never a torn file that orphans every
-        # committed version
-        WriterLock.for_dir(self.store_dir).verify_token()
-        _atomic_flip(self._pointer, state)
+    def _referenced(self, st: dict) -> dict[str, set[str]]:
+        keep = {f"batch-v{v}" for v in st["versions"]}
+        return {kind: keep for kind in ("sigs", "pairs", "cmap")}
 
     def _paths(self, kind: str, versions: list[int]) -> list[str]:
         return [
@@ -472,33 +448,3 @@ class IncrementalMinHashDedup:
             )
             return {"compacted": True, "versions": 1,
                     "merged": len(st["versions"])}
-
-    def vacuum(self) -> dict:
-        """Reclaim store directories not referenced by the committed
-        pointer: compact()-superseded increments and crashed-ingest
-        orphans. A SEPARATE step from compact() on purpose: a reader's
-        lazy DataFrame holds the paths it resolved from the pre-compact
-        pointer, so reclamation must wait until no pinned reader needs
-        the old generation (the vacuum_snapshots retention contract).
-        New pointer resolutions never see unreferenced dirs — mirrors
-        ``IncrementalIVFIndex.vacuum`` / ``World.vacuum_snapshots``."""
-        with self._writer():
-            return {"removed": self._vacuum_unreferenced()}
-
-    def _vacuum_unreferenced(self) -> list[str]:
-        """Delete unreferenced version dirs. Caller holds the lock."""
-        import shutil
-
-        st = self._state()
-        keep = {f"batch-v{v}" for v in st["versions"]}
-        removed: list[str] = []
-        for kind in ("sigs", "pairs", "cmap"):
-            kdir = os.path.join(self.store_dir, kind)
-            if not os.path.isdir(kdir):
-                continue
-            for name in sorted(os.listdir(kdir)):
-                if name not in keep:
-                    shutil.rmtree(os.path.join(kdir, name),
-                                  ignore_errors=True)
-                    removed.append(f"{kind}/{name}")
-        return removed

@@ -18,15 +18,15 @@ the registered ``rollup_incremental_ivf`` (DuckDB states the full
 assignment declaratively; the driver hash-compares it against the
 two-increment store).
 
-Storage follows the crash-safe discipline of ``operators/rollup.py``
-(reference analogue: the dirty-chunk incremental flush,
+Storage follows the commit protocol of ``core/commit.py`` (reference
+analogue: the dirty-chunk incremental flush,
 tokio-fs/src/lib.rs:207-235): centroids and per-batch assignments are
 immutable parquet (``centroids/v*``, ``assign/batch-v*``); a pointer
 file lists the committed versions and flips atomically, so a crashed
 increment leaves orphan files that are never read. ``compact()``
-merges increment files for scan hygiene without recomputing anything
-(and reclaims what it superseded); ``vacuum()`` deletes every
-unreferenced directory. ``retrain()`` is the staged quantizer
+merges increment files for scan hygiene without recomputing anything;
+``vacuum()`` deletes what it superseded and every other unreferenced
+directory. ``retrain()`` is the staged quantizer
 migration: a new centroid generation is written and every increment
 re-materialized under it while the old generation keeps serving, then
 ONE atomic pointer flip retargets readers — search under the new
@@ -44,10 +44,11 @@ import shutil
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dmds_spark.core.commit import PointerStore
 from dmds_spark.operators.similarity import EMB_DIM, cosine as _cos
 
 
-class IncrementalIVFIndex:
+class IncrementalIVFIndex(PointerStore):
     """A maintained IVF index over an append-only vector corpus.
 
     ``set_centroids``/``train`` freeze the coarse quantizer;
@@ -68,9 +69,9 @@ class IncrementalIVFIndex:
         vec_col: str,
         dim: int = EMB_DIM,
     ):
+        super().__init__(store_dir)
         self.spark = spark
         self.source_dir = source_dir
-        self.store_dir = store_dir
         self.id_col = id_col
         self.vec_col = vec_col
         self.dim = dim
@@ -84,35 +85,36 @@ class IncrementalIVFIndex:
         # centroids, M*K codewords), scoped to this handle's lifetime.
         self._cent_memo: tuple[tuple, list[list[float]]] | None = None
         self._books_memo: tuple[tuple, dict] | None = None
-        os.makedirs(store_dir, exist_ok=True)
-
-    # -- writer fencing ----------------------------------------------------
-    def _writer(self):
-        """Single-writer token for the store directory — see
-        ``operators.rollup.store_writer``. Every read-state →
-        write-increment → flip sequence runs inside it."""
-        from dmds_spark.operators.rollup import store_writer
-
-        return store_writer(self.store_dir)
 
     # -- pointer ---------------------------------------------------------
-    @property
-    def _pointer(self) -> str:
-        return os.path.join(self.store_dir, "_current.json")
+    def _empty_state(self) -> dict:
+        return {
+            "centroid_version": 0,
+            "versions": [],
+            "seen_files": [],
+            "last_batch_id": -1,
+            "pq_version": 0,
+        }
 
     def _state(self) -> dict:
-        if not os.path.exists(self._pointer):
-            return {
-                "centroid_version": 0,
-                "versions": [],
-                "seen_files": [],
-                "last_batch_id": -1,
-                "pq_version": 0,
-            }
-        with open(self._pointer) as fh:
-            st = json.load(fh)
+        st = super()._state()
         st.setdefault("pq_version", 0)  # pre-round-14 pointer: no PQ
         return st
+
+    def _referenced(self, st: dict) -> dict[str, set[str]]:
+        """Committed assignment dirs, plus the centroid and PQ
+        generations; ``centroids/`` and ``pq/`` are left alone while
+        their version is 0. Pre-retrain generations are unreferenced
+        once the pointer flips."""
+        ref = {"assign": {
+            os.path.basename(p)
+            for p in self._current_assign_paths(st["versions"], st)
+        }}
+        if st["centroid_version"]:
+            ref["centroids"] = {f"v{st['centroid_version']}"}
+        if st["pq_version"]:
+            ref["pq"] = {f"v{st['pq_version']}"}
+        return ref
 
     @staticmethod
     def _base_cv(st: dict) -> int:
@@ -126,18 +128,6 @@ class IncrementalIVFIndex:
         via repeated pre-ingest set_centroids calls)."""
         bc = st.get("base_cv")
         return bc if bc is not None else max(1, st["centroid_version"])
-
-    def _flip(self, state: dict) -> None:
-        from dmds_spark.operators.rollup import _atomic_flip
-        from dmds_spark.world import WriterLock
-
-        # fencing token at the commit point: every _flip runs inside
-        # _writer() (the interned WriterLock on store_dir), so if our
-        # lock was broken or lease-reclaimed while the increment was
-        # being written, abort BEFORE publishing — the increment dir is
-        # orphaned-but-unread and vacuum() reclaims it.
-        WriterLock.for_dir(self.store_dir).verify_token()
-        _atomic_flip(self._pointer, state)
 
     def _assign_paths(
         self, versions: list[int], cv: int, base_cv: int
@@ -500,8 +490,6 @@ class IncrementalIVFIndex:
             for _r, _d, fs in os.walk(path)
             for f in fs
         ):
-            import shutil
-
             shutil.rmtree(path, ignore_errors=True)
             return None
         return v
@@ -1006,53 +994,3 @@ class IncrementalIVFIndex:
             )
             .orderBy("sub", "code")
         )
-
-    def vacuum(self) -> dict:
-        """Reclaim directories not referenced by the committed pointer:
-        compact()-superseded increments, crashed-ingest orphans, and
-        pre-retrain generations. Safe under the writer lock because the
-        pointer flip is atomic and unreferenced dirs are never read by
-        FRESH readers — mirrors ``World.vacuum_snapshots``.
-
-        Reader contract (tested:
-        tests/test_incremental_ivf.py::test_reader_across_retrain_flip_and_vacuum):
-        a reader plan built before a flip keeps serving the OLD
-        generation until vacuum; after vacuum, a pinned reader that
-        must touch storage fails with a missing-file error rather than
-        silently serving partial/mixed-generation rows (requires the
-        default ``spark.sql.files.ignoreMissingFiles=false``). Run
-        vacuum only past your reader horizon."""
-        with self._writer():
-            return {"removed": self._vacuum_unreferenced()}
-
-    def _vacuum_unreferenced(self) -> list[str]:
-        """Delete unreferenced assign/centroid dirs. Caller holds the
-        writer lock."""
-        st = self._state()
-        keep = {
-            os.path.basename(p)
-            for p in self._current_assign_paths(st["versions"], st)
-        }
-        removed: list[str] = []
-        adir = os.path.join(self.store_dir, "assign")
-        if os.path.isdir(adir):
-            for name in sorted(os.listdir(adir)):
-                if name not in keep:
-                    shutil.rmtree(os.path.join(adir, name),
-                                  ignore_errors=True)
-                    removed.append(f"assign/{name}")
-        cdir = os.path.join(self.store_dir, "centroids")
-        if os.path.isdir(cdir) and st["centroid_version"]:
-            for name in sorted(os.listdir(cdir)):
-                if name != f"v{st['centroid_version']}":
-                    shutil.rmtree(os.path.join(cdir, name),
-                                  ignore_errors=True)
-                    removed.append(f"centroids/{name}")
-        pdir = os.path.join(self.store_dir, "pq")
-        if os.path.isdir(pdir) and st["pq_version"]:
-            for name in sorted(os.listdir(pdir)):
-                if name != f"v{st['pq_version']}":
-                    shutil.rmtree(os.path.join(pdir, name),
-                                  ignore_errors=True)
-                    removed.append(f"pq/{name}")
-        return removed

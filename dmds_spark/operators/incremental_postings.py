@@ -14,10 +14,11 @@ against the declarative full build; ``retrieval_bm25_incremental``
 hash-checks ranked retrieval SERVED from the store against the
 declarative BM25).
 
-Layout and lifecycle mirror ``operators/incremental_ivf.py`` (same
-crash-safe pointer-flip discipline, same cross-process WriterLock and
-fencing token, same compact()/vacuum() hygiene; reference analogue:
-the dirty-chunk incremental flush, tokio-fs/src/lib.rs:207-235):
+Layout and lifecycle mirror ``operators/incremental_ivf.py`` (the
+commit protocol of ``core/commit.py``: pointer flip, cross-process
+WriterLock and fencing token, vacuum; the same compact() hygiene;
+reference analogue: the dirty-chunk incremental flush,
+tokio-fs/src/lib.rs:207-235):
 
 * ``postings/batch-v{N}`` — (term, doc_id, tf) partitioned by the
   term's hash bucket ``tb = pmod(xxhash64(term), 64)``: a query for k
@@ -44,12 +45,13 @@ generation.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from dmds_spark.core.commit import PointerStore
 
 TERM_BUCKETS = 64
 
@@ -64,7 +66,7 @@ TERM_BUCKETS = 64
 ANALYZERS = ("ws", "stem3")
 
 
-class IncrementalPostingsIndex:
+class IncrementalPostingsIndex(PointerStore):
     """A maintained inverted index over an append-only document corpus.
 
     ``refresh()`` ingests unseen source files, ``fold_batch()`` a
@@ -87,7 +89,6 @@ class IncrementalPostingsIndex:
     ):
         self.spark = spark
         self.source_dir = source_dir
-        self.store_dir = store_dir
         self.id_col = id_col
         self.text_col = text_col
         # positions=True additionally maintains the POSITIONAL grain
@@ -103,26 +104,24 @@ class IncrementalPostingsIndex:
         if analyzer not in ANALYZERS:
             raise ValueError(f"unknown analyzer {analyzer!r}: {ANALYZERS}")
         self.analyzer = analyzer
-        os.makedirs(store_dir, exist_ok=True)
+        super().__init__(store_dir)
 
-    # -- writer fencing / pointer (the incremental_ivf discipline) --------
-    def _writer(self):
-        from dmds_spark.operators.rollup import store_writer
+    # -- pointer -----------------------------------------------------------
+    def _empty_state(self) -> dict:
+        return {"versions": [], "seen_files": [], "last_batch_id": -1,
+                "positions": self.positions,
+                "analyzer": self.analyzer, "analyzer_version": 1,
+                "files_by_version": {}}
 
-        return store_writer(self.store_dir)
-
-    @property
-    def _pointer(self) -> str:
-        return os.path.join(self.store_dir, "_current.json")
+    def _referenced(self, st: dict) -> dict[str, set[str]]:
+        return {
+            grain: {os.path.basename(p)
+                    for p in self._grain_paths(grain, st["versions"], st)}
+            for grain in ("postings", "doclen", "positional")
+        }
 
     def _state(self) -> dict:
-        if not os.path.exists(self._pointer):
-            return {"versions": [], "seen_files": [], "last_batch_id": -1,
-                    "positions": self.positions,
-                    "analyzer": self.analyzer, "analyzer_version": 1,
-                    "files_by_version": {}}
-        with open(self._pointer) as fh:
-            st = json.load(fh)
+        st = super()._state()
         st.setdefault("analyzer", "ws")        # legacy pointers: ws
         st.setdefault("analyzer_version", 1)
         st.setdefault("files_by_version", {})
@@ -152,13 +151,6 @@ class IncrementalPostingsIndex:
                 "to change it)"
             )
         return st
-
-    def _flip(self, state: dict) -> None:
-        from dmds_spark.operators.rollup import _atomic_flip
-        from dmds_spark.world import WriterLock
-
-        WriterLock.for_dir(self.store_dir).verify_token()
-        _atomic_flip(self._pointer, state)
 
     def _gen_paths(
         self, grain: str, versions: list[int], av: int
@@ -585,25 +577,3 @@ class IncrementalPostingsIndex:
                 "analyzer_version": av2,
                 "migrated_versions": len(st["versions"]),
             }
-
-    def vacuum(self) -> dict:
-        """Reclaim directories not referenced by the committed pointer
-        (compact()-superseded increments, crashed-ingest orphans, and
-        post-retokenize superseded analyzer generations)."""
-        with self._writer():
-            st = self._state()
-            removed: list[str] = []
-            for grain in ("postings", "doclen", "positional"):
-                keep = {
-                    os.path.basename(p)
-                    for p in self._grain_paths(grain, st["versions"], st)
-                }
-                gdir = os.path.join(self.store_dir, grain)
-                if not os.path.isdir(gdir):
-                    continue
-                for name in sorted(os.listdir(gdir)):
-                    if name not in keep:
-                        shutil.rmtree(os.path.join(gdir, name),
-                                      ignore_errors=True)
-                        removed.append(f"{grain}/{name}")
-            return {"removed": removed}

@@ -11,10 +11,12 @@ cost is O(new data + |rollup|), never O(source) — the difference
 between re-scanning 100 TB nightly and scanning the day's append.
 
 Consistency: the swap writes the next rollup VERSION to a fresh
-subdirectory and flips a pointer file last (readers resolve the
-pointer, so a crashed maintenance run leaves the previous version
-intact — same flush-versioning discipline as the World codec,
-reference src/world.rs:33-47's version header).
+``v{N}`` subdirectory and flips a pointer file last (readers resolve
+the pointer, so a crashed maintenance run leaves the previous version
+intact — the commit protocol of ``core/commit.py``, shared with the
+World; reference src/world.rs:33-47's version header). Every version
+is a full copy of the partials: ``vacuum()`` deletes the superseded
+ones.
 
 Derived values (avg = sum/cnt) are computed by readers from the
 partials; the rollup never stores non-decomposable results. For
@@ -29,14 +31,13 @@ the full key set; the sketch is the scale answer (estimates via
 
 from __future__ import annotations
 
-import json
 import os
 import re
-import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from dmds_spark.core.commit import PointerStore
 
 
 def _norm_path(p: str) -> str:
@@ -46,41 +47,6 @@ def _norm_path(p: str) -> str:
     either era must keep matching). Non-``file`` schemes are left
     untouched: their authority part is significant."""
     return re.sub(r"^file:/+", "/", p)
-
-
-def _atomic_flip(pointer: str, state: dict) -> None:
-    """Crash-safe pointer write: serialize to a temp file in the same
-    directory, fsync, then ``os.replace`` onto the pointer. A crash or
-    ENOSPC mid-write leaves either the old pointer or the new one,
-    never a torn/empty file that would make every committed version
-    unreachable (the in-place truncate+write it replaces had exactly
-    that failure mode)."""
-    tmp = f"{pointer}.tmp.{os.getpid()}.{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(state, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, pointer)
-
-
-@contextmanager
-def store_writer(store_dir: str):
-    """Single-writer fence for a pointer-flipped store directory — the
-    same cross-process ``WriterLock`` that fences ``World``. Every
-    read-state → write-increment → flip sequence of the incremental
-    stores (MinHash dedup, IVF) runs inside this: without it two
-    concurrent writers both read the pointer, mint the same next
-    version number, and overwrite each other's increment. Readers are
-    never blocked (they resolve the committed pointer)."""
-    from dmds_spark.world import WriterLock
-
-    lk = WriterLock.for_dir(store_dir)
-    lk.acquire()
-    try:
-        with lk.mutex:
-            yield
-    finally:
-        lk.release()
 
 
 def _list_source_files(spark: SparkSession, source_dir: str) -> dict[str, int]:
@@ -219,12 +185,13 @@ class RollupSchemaError(ValueError):
     missing-column error."""
 
 
-class IncrementalRollup:
+class IncrementalRollup(PointerStore):
     """A maintained rollup of ``source_dir`` grouped by ``group_cols``
     with decomposable partials over ``value_cols``.
 
     ``refresh()`` scans only unseen files and returns how many it
-    processed; ``read()`` returns the current rollup DataFrame."""
+    processed; ``read()`` returns the current rollup DataFrame;
+    ``vacuum()`` deletes the versions the pointer no longer names."""
 
     def __init__(
         self,
@@ -244,6 +211,7 @@ class IncrementalRollup:
         derivation keeps the O(new) maintenance cost; it must be
         row-local/deterministic (no cross-batch aggregation — that is
         what the partials are for)."""
+        super().__init__(rollup_dir)
         self.spark = spark
         self.source_dir = source_dir
         self.rollup_dir = rollup_dir
@@ -251,18 +219,13 @@ class IncrementalRollup:
         self.value_cols = list(value_cols)
         self.distinct_cols = list(distinct_cols or [])
         self.transform = transform
-        os.makedirs(rollup_dir, exist_ok=True)
 
     # -- manifest / version pointer ------------------------------------
-    @property
-    def _pointer(self) -> str:
-        return os.path.join(self.rollup_dir, "_current.json")
+    def _empty_state(self) -> dict:
+        return {"version": 0, "seen_files": []}
 
-    def _state(self) -> dict:
-        if not os.path.exists(self._pointer):
-            return {"version": 0, "seen_files": []}
-        with open(self._pointer) as fh:
-            return json.load(fh)
+    def _referenced(self, st: dict) -> dict[str, set[str]]:
+        return {"": {f"v{st['version']}"}}
 
     def _version_path(self, version: int) -> str:
         return os.path.join(self.rollup_dir, f"v{version}")
@@ -321,7 +284,7 @@ class IncrementalRollup:
         {"new_files": n, "version": v}. Raises SourceMutatedError if
         an already-folded file was rewritten in place (partials cannot
         be patched for history rewrites)."""
-        with store_writer(self.rollup_dir):
+        with self._writer():
             st = self._state()
             seen = _seen_as_dict(st["seen_files"], st.get("size_src"))
             current = _list_source_files(self.spark, self.source_dir)
@@ -369,15 +332,6 @@ class IncrementalRollup:
             )
             return {"new_files": len(new_files), "version": next_version}
 
-    def _flip(self, state: dict) -> None:
-        from dmds_spark.world import WriterLock
-
-        # fencing token at the commit point (refresh and fold_batch run
-        # inside store_writer): a writer whose lock was broken or
-        # reclaimed while it wrote the version aborts before publishing
-        WriterLock.for_dir(self.rollup_dir).verify_token()
-        _atomic_flip(self._pointer, state)
-
     def fold_batch(self, df: DataFrame, batch_id: int | None = None) -> dict:
         """Fold a DataFrame of new rows directly into the rollup — the
         streaming maintenance path (use via ``foreach_batch()``).
@@ -387,7 +341,7 @@ class IncrementalRollup:
         double-counted (the pointer flip commits data + batch id
         atomically-enough: a crash between write and flip replays into
         a fresh version directory, never into served data)."""
-        with store_writer(self.rollup_dir):
+        with self._writer():
             st = self._state()
             last = st.get("last_batch_id", -1)
             if batch_id is not None and batch_id <= last:

@@ -19,10 +19,10 @@ survivorship rule family is MERGEABLE:
   vote (``min_by`` on the inverted-count padded key) off that bounded
   grain.
 
-Layout and lifecycle mirror the other incremental stores
-(``operators/rollup.py`` discipline: versioned state dirs, atomic
-pointer flip, cross-process ``store_writer`` fence, batch-id
-high-water replay marks, vacuum):
+Layout and lifecycle mirror the other incremental stores (the commit
+protocol of ``core/commit.py``: versioned state dirs, atomic pointer
+flip, cross-process ``store_writer`` fence, vacuum; batch-id
+high-water replay marks):
 
 * ``state/v{N}`` — one row per entity: recency/precedence values WITH
   their winning keys, min/max/count partials;
@@ -37,17 +37,17 @@ DuckDB oracle as ``survivorship_golden_record``.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.column import Column
 
+from dmds_spark.core.commit import PointerStore
 
-class IncrementalSurvivorship:
+
+class IncrementalSurvivorship(PointerStore):
     """Maintained golden-record store over an append-only observation
     stream (CDC feed). Rules are fixed at construction:
 
@@ -74,38 +74,21 @@ class IncrementalSurvivorship:
         count_col: str = "n_records",
         modal: tuple[str, str] | None = None,
     ):
+        super().__init__(store_dir)
         self.spark = spark
-        self.store_dir = store_dir
         self.entity_col = entity_col
         self.recency_rules = dict(recency_rules)
         self.min_cols = dict(min_cols)
         self.max_cols = dict(max_cols)
         self.count_col = count_col
         self.modal = modal
-        os.makedirs(store_dir, exist_ok=True)
 
-    # -- pointer / fencing (the shared incremental-store discipline) ------
-    def _writer(self):
-        from dmds_spark.operators.rollup import store_writer
+    # -- pointer -------------------------------------------------------------
+    def _empty_state(self) -> dict:
+        return {"version": 0, "last_batch_id": -1}
 
-        return store_writer(self.store_dir)
-
-    @property
-    def _pointer(self) -> str:
-        return os.path.join(self.store_dir, "_current.json")
-
-    def _state(self) -> dict:
-        if not os.path.exists(self._pointer):
-            return {"version": 0, "last_batch_id": -1}
-        with open(self._pointer) as fh:
-            return json.load(fh)
-
-    def _flip(self, state: dict) -> None:
-        from dmds_spark.operators.rollup import _atomic_flip
-        from dmds_spark.world import WriterLock
-
-        WriterLock.for_dir(self.store_dir).verify_token()
-        _atomic_flip(self._pointer, state)
+    def _referenced(self, st: dict) -> dict[str, set[str]]:
+        return {grain: {f"v{st['version']}"} for grain in ("state", "counts")}
 
     def _path(self, grain: str, version: int) -> str:
         return os.path.join(self.store_dir, grain, f"v{version}")
@@ -253,22 +236,3 @@ class IncrementalSurvivorship:
             ).alias(m_out)
         )
         return out.join(modal, self.entity_col)
-
-    # -- hygiene -------------------------------------------------------------
-    def vacuum(self) -> dict:
-        """Reclaim version dirs not referenced by the committed pointer
-        (superseded states, crashed-fold orphans)."""
-        with self._writer():
-            st = self._state()
-            removed: list[str] = []
-            for grain in ("state", "counts"):
-                gdir = os.path.join(self.store_dir, grain)
-                if not os.path.isdir(gdir):
-                    continue
-                keep = f"v{st['version']}"
-                for name in sorted(os.listdir(gdir)):
-                    if name != keep:
-                        shutil.rmtree(os.path.join(gdir, name),
-                                      ignore_errors=True)
-                        removed.append(f"{grain}/{name}")
-            return {"removed": removed}

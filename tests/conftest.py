@@ -54,21 +54,24 @@ def steal_lock_on_write(monkeypatch, store_dir: str) -> None:
     """Make the next parquet write hand ``store_dir``'s writer lock to
     another holder: once the write finishes, the lock file carries a
     foreign token, as after a break or a lease reclaim while the
-    writer was writing."""
+    writer was writing. Writes that run on several threads at once
+    steal one after the other."""
     import json
+    import threading
 
     from pyspark.sql import DataFrameWriter
 
     from dmds_spark.world import WriterLock
 
-    real = DataFrameWriter.parquet
+    real, one_at_a_time = DataFrameWriter.parquet, threading.Lock()
 
     def write_then_steal(self, *a, **kw):
         real(self, *a, **kw)
         lock = WriterLock.lock_path(store_dir)
-        with open(lock) as fh:
-            holder = json.load(fh)
-        with open(lock, "w") as fh:
-            json.dump({**holder, "token": "someone-else"}, fh)
+        with one_at_a_time:
+            with open(lock) as fh:
+                holder = json.load(fh)
+            with open(lock, "w") as fh:
+                json.dump({**holder, "token": "someone-else"}, fh)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", write_then_steal)

@@ -1012,7 +1012,7 @@ def test_failed_flip_keeps_snapshot_and_retry_publishes(
     manifest are written) must leave the world serving exactly the
     snapshot before the call, with any flush ops still pending, and a
     retry must publish the whole state."""
-    import dmds_spark.operators.rollup as rollup
+    from dmds_spark.core import commit
 
     path = str(tmp_path / "w")
     model = _prune_base()
@@ -1036,7 +1036,7 @@ def test_failed_flip_keeps_snapshot_and_retry_publishes(
     version = w.current_version()
     owner = w._read_owner(version)
 
-    flips, real_flip = [], rollup._atomic_flip
+    flips, real_flip = [], commit.atomic_flip
 
     def failing_flip(target, payload):
         flips.append(os.path.basename(target))
@@ -1044,7 +1044,7 @@ def test_failed_flip_keeps_snapshot_and_retry_publishes(
             raise OSError("injected flip failure")
         return real_flip(target, payload)
 
-    monkeypatch.setattr(rollup, "_atomic_flip", failing_flip)
+    monkeypatch.setattr(commit, "atomic_flip", failing_flip)
     with pytest.raises(OSError, match="injected"):
         call()
     monkeypatch.undo()

@@ -7,7 +7,7 @@ compact, vacuum) in a child process that dies at one step (see
 - ``data_write``: the ``_v{N}`` files are written, the manifest is not
   (``World._commit_snapshot`` never runs);
 - ``manifest``: ``v{N}.json`` is written, ``current.json`` is not (the
-  second ``_atomic_flip``);
+  second ``commit.atomic_flip``);
 - ``flip``: the commit is published, its bookkeeping and vacuum never
   run (``World._committed``);
 - ``vacuum_partway``: one directory of the vacuum is deleted, the next
@@ -37,7 +37,7 @@ SCHEMA = "id long, a long, p string"
 
 KILLS = {
     "data_write": ("dmds_spark.world:World._commit_snapshot", "pre"),
-    "manifest": ("dmds_spark.operators.rollup:_atomic_flip#2", "pre"),
+    "manifest": ("dmds_spark.core.commit:atomic_flip#2", "pre"),
     "flip": ("dmds_spark.world:World._committed", "post"),
     "vacuum_partway": ("shutil:rmtree#2", "post"),
 }

@@ -541,28 +541,6 @@ def test_compact_requires_writer_token(spark, tmp_path):
     os.unlink(_lockfile(path))
 
 
-def test_ivf_flip_is_fenced(spark, tmp_path):
-    """The IVF store's pointer flip re-verifies the writer token at the
-    commit point: a store whose lock was broken mid-sequence aborts the
-    flip instead of publishing over the new holder's state."""
-    from dmds_spark.core.errors import WorldFencedError
-    from dmds_spark.operators.incremental_ivf import IncrementalIVFIndex
-
-    store = str(tmp_path / "ivf_store")
-    idx = IncrementalIVFIndex(spark, None, store, "vec_id", "embedding",
-                              dim=4)
-    lk = WriterLock.for_dir(store)
-    lk.acquire()
-    try:
-        World.break_lock(store)  # fence the live writer mid-hold
-        with pytest.raises(WorldFencedError):
-            idx._flip({"centroid_version": 1, "versions": [],
-                       "seen_files": [], "last_batch_id": -1})
-        assert not os.path.exists(idx._pointer)  # nothing published
-    finally:
-        lk._refs = 0  # file already gone; don't unlink someone else's
-
-
 def test_heartbeat_serializes_with_breaker_sidecar(tmp_path):
     """The zombie-heartbeat race (round-13 review): a heartbeat must
     not clobber a NEW holder's lock file. The heartbeat now runs its
