@@ -109,6 +109,14 @@ class DimSpec:
         """DDL type of the dim's DataFrame column."""
         return "decimal(20,0)" if self.u64 else "bigint"
 
+    def sql_lit(self, value: int) -> str:
+        """``value`` as a SQL literal of the column's domain:
+        DECIMAL(20,0) for u64 dims (values past 2^63 don't fit a long
+        literal), a long otherwise."""
+        if self.u64:
+            return f"CAST('{int(value)}' AS DECIMAL(20,0))"
+        return f"{int(value)}L"
+
     @property
     def spacing(self) -> int:
         return self.items_per_chunk

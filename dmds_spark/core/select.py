@@ -286,51 +286,51 @@ class Select:
 
     # -- compile to Spark predicates ----------------------------------------
 
+    def pinned_ids(self) -> frozenset | None:
+        """The dim-0 values every row this selection matches takes:
+        the hint ids when hinted, else the dim-0 point of each box
+        when every box pins dim 0 to one value; None when dim 0 is not
+        pinned. The World's pending merge builds only the sides that
+        hold such ids."""
+        if self.hint_ids:
+            return frozenset(int(i) for i in self.hint_ids)
+        points = {b.intervals[0] for b in self.boxes}
+        if points and all(lo == hi for lo, hi in points):
+            return frozenset(lo for lo, _ in points)
+        return None
+
     def to_predicate(self):
         """Exact value predicate: OR over boxes of AND over dims of
-        closed-interval comparisons, AND id IN-list if hinted. Built
-        from Column expressions only — stays inside whole-stage
-        codegen, and Catalyst pushes it into the parquet scan. u64
-        dims compare against DECIMAL(20,0) literals (a bound past 2^63
-        doesn't fit a long literal); pushdown into the parquet scan
-        carries over — decimal min/max stats prune the same way."""
+        closed-interval comparisons, AND id IN-list if hinted. Parsed
+        from one SQL string (one gateway call, where a tree of Column
+        calls makes one per node and ``Column.isin`` one per id); it
+        stays inside whole-stage codegen, and Catalyst pushes it into
+        the parquet scan. u64 dims compare against DECIMAL(20,0)
+        literals (a bound past 2^63 doesn't fit a long literal);
+        pushdown into the parquet scan carries over — decimal min/max
+        stats prune the same way."""
         from pyspark.sql import functions as F
 
-        def lit(d, v):
-            if d.u64:
-                return F.expr(f"CAST('{int(v)}' AS DECIMAL(20,0))")
-            return F.lit(int(v))
-
         if not self.boxes:
-            return F.lit(False)
-        pred = None
+            return F.expr("false")
+        ors = []
         for vb in self.boxes:
-            box_pred = None
+            ands = []
             for d, (lo, hi) in zip(self.spec.dims, vb.intervals):
                 if lo == d.start and hi == d.end:
                     continue  # full-range dim contributes no filter
-                c = F.col(d.name)
-                p = (
-                    (c >= lit(d, lo)) & (c <= lit(d, hi))
-                    if lo != hi
-                    else (c == lit(d, lo))
+                c = f"`{d.name}`"
+                ands.append(
+                    f"{c} = {d.sql_lit(lo)}" if lo == hi
+                    else f"{c} >= {d.sql_lit(lo)} AND {c} <= {d.sql_lit(hi)}"
                 )
-                box_pred = p if box_pred is None else (box_pred & p)
-            if box_pred is None:
-                box_pred = F.lit(True)
-            pred = box_pred if pred is None else (pred | box_pred)
+            ors.append(f"({' AND '.join(ands) or 'true'})")
+        pred = " OR ".join(ors)
         if self.hint_ids:
             id_dim = self.spec.id_dim
-            c = F.col(id_dim.name)
-            if id_dim.u64:
-                in_list = None
-                for i in sorted(self.hint_ids):
-                    eq = c == lit(id_dim, i)
-                    in_list = eq if in_list is None else (in_list | eq)
-                pred = pred & in_list
-            else:
-                pred = pred & c.isin(*[int(i) for i in self.hint_ids])
-        return pred
+            ids = ",".join(id_dim.sql_lit(i) for i in sorted(set(self.hint_ids)))
+            pred = f"({pred}) AND `{id_dim.name}` IN ({ids})"
+        return F.expr(pred)
 
     def to_partition_predicate(self):
         """Chunk-index predicate over partition columns c0..cN — this is

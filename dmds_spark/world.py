@@ -96,17 +96,22 @@ class _Pending(NamedTuple):
     Collapsed by the window, they read a checkpoint. When at most
     ``ID_LIST_CAP`` ids were touched, the batch is also routed in
     literals (``keep`` is set): ``keep`` is NOT id IN (touched ids),
-    ``hit`` is c0 IN ``groups`` AND id IN (touched ids), and
-    ``new_keys`` are the partitions the live rows land in. Above the
-    cap those three are None and ``touched`` is joined instead."""
+    ``hit`` is c0 IN ``groups`` AND id IN (touched ids), ``new_keys``
+    are the partitions the live rows land in, and ``touched_ids`` and
+    ``live_ids`` are the touched and the upserted ids as Python ints,
+    from which ``read`` decides which sides of its merge to build.
+    Above the cap those five are None and ``touched`` is joined
+    instead."""
 
     seq: int
     live: DataFrame
     touched: DataFrame
-    groups: list | None
-    new_keys: set | None
-    keep: Column | None
-    hit: Column | None
+    groups: list | None = None
+    new_keys: set | None = None
+    keep: Column | None = None
+    hit: Column | None = None
+    touched_ids: frozenset | None = None
+    live_ids: frozenset | None = None
 
 
 class World:
@@ -222,12 +227,8 @@ class World:
 
     @staticmethod
     def _dim_lit(d, v: int):
-        """Typed literal in the dim's column domain: DECIMAL(20,0) for
-        u64 dims (values past 2^63 don't fit a long literal), plain
-        long otherwise."""
-        if d.u64:
-            return F.expr(f"CAST('{int(v)}' AS DECIMAL(20,0))")
-        return F.lit(int(v))
+        """``DimSpec.sql_lit`` as a Column."""
+        return F.expr(d.sql_lit(v))
 
     def _with_partition_cols(self, df: DataFrame) -> DataFrame:
         """Append physical partition columns computed from dim values —
@@ -238,15 +239,21 @@ class World:
         spacing) over doubles mis-buckets once v-s exceeds the 53-bit
         mantissa (a value just below a chunk boundary rounds up across
         it), and u64 dims don't fit a double at all. ``div`` is exact
-        on both long and decimal operands and returns a long."""
-        for i in range(self.spec.ndims):
-            df = df.withColumn(f"c{i}", self._partition_col(i))
-        return df
+        on both long and decimal operands and returns a long.
+
+        One ``selectExpr``, as ``withColumn`` would: an existing
+        ``c{i}`` column is replaced in place, the others are appended."""
+        pcols = {f"c{i}": self._partition_sql(i) for i in range(self.spec.ndims)}
+        have = df.columns
+        return df.selectExpr(
+            *[f"{pcols[c]} AS {c}" if c in pcols else f"`{c}`" for c in have],
+            *[f"{sql} AS {c}" for c, sql in pcols.items() if c not in have],
+        )
 
     def _partition_sql(self, i: int) -> str:
         d, f = self.spec.dims[i], self.factors[i]
-        start = f"CAST('{d.start}' AS DECIMAL(20,0))" if d.u64 else f"{d.start}L"
-        return f"CAST(((`{d.name}` - {start}) div {d.spacing}) div {int(f)} AS BIGINT)"
+        return (f"CAST(((`{d.name}` - {d.sql_lit(d.start)}) div {d.spacing})"
+                f" div {int(f)} AS BIGINT)")
 
     def _partition_col(self, i: int):
         return F.expr(self._partition_sql(i))
@@ -265,25 +272,20 @@ class World:
     def _physical_partition_predicate(self, shape: Shape):
         """Chunk-index Shape -> predicate over physical partition cols.
         Chunk ranges are widened to the physical grouping (floor-div by
-        factor) — pruning stays correct, value predicates stay exact."""
-        if shape.is_none():
-            return F.lit(False)
-        pred = None
+        factor) — pruning stays correct, value predicates stay exact.
+        Parsed from one SQL string, like ``Select.to_predicate``."""
+        ors = []
         for box in shape.boxes:
-            box_pred = None
+            ands = []
             for i, (s, e) in enumerate(zip(box.start, box.end)):
                 d, f = self.spec.dims[i], self.factors[i]
                 ps, pe = s // f, e // f
-                full = (d.chunks_len - 1) // f
-                if ps == 0 and pe == full:
+                if ps == 0 and pe == (d.chunks_len - 1) // f:
                     continue
-                c = F.col(f"c{i}")
-                p = (c == ps) if ps == pe else ((c >= ps) & (c <= pe))
-                box_pred = p if box_pred is None else (box_pred & p)
-            if box_pred is None:
-                box_pred = F.lit(True)
-            pred = box_pred if pred is None else (pred | box_pred)
-        return pred
+                ands.append(f"c{i} = {ps}" if ps == pe
+                            else f"c{i} >= {ps} AND c{i} <= {pe}")
+            ors.append(f"({' AND '.join(ands) or 'true'})")
+        return F.expr(" OR ".join(ors) or "false")
 
     # -- schema / validation -------------------------------------------------
 
@@ -319,21 +321,20 @@ class World:
         inside the same executor pass that materializes the flush
         output — zero extra scans, fully distributed. The error message
         carries dim index + bounds so the driver re-raises a typed
-        ValueOutOfRangeError (``_reraise_domain``)."""
+        ValueOutOfRangeError (``_reraise_domain``). One ``selectExpr``:
+        the flush plans this on every commit."""
         cols = []
         for i, d in enumerate(self.spec.dims):
-            c = F.col(d.name)
-            bad = c.isNotNull() & (
-                (c < self._dim_lit(d, d.start)) | (c > self._dim_lit(d, d.end))
+            c = f"`{d.name}`"
+            cols.append(
+                f"CASE WHEN {c} IS NOT NULL AND ({c} < {d.sql_lit(d.start)}"
+                f" OR {c} > {d.sql_lit(d.end)}) THEN raise_error(concat("
+                f"'{self._GUARD_MARK}:{i}:{d.start}:{d.end}:', CAST({c} AS STRING)))"
+                f" ELSE {c} END AS {c}"
             )
-            msg = F.concat(
-                F.lit(f"{self._GUARD_MARK}:{i}:{d.start}:{d.end}:"),
-                c.cast("string"),
-            )
-            cols.append(F.when(bad, F.raise_error(msg)).otherwise(c).alias(d.name))
         guarded = {d.name for d in self.spec.dims}
-        return df.select(
-            *cols, *[F.col(c) for c in df.columns if c not in guarded]
+        return df.selectExpr(
+            *cols, *[f"`{c}`" for c in df.columns if c not in guarded]
         )
 
     def _reraise_domain(self, exc: Exception):
@@ -538,13 +539,30 @@ class World:
     def vacuum_snapshots(self, retain_last: int = 1) -> int:
         """Drop manifests older than the newest ``retain_last`` and
         delete every partition dir no retained manifest maps; a version
-        dir left owning nothing goes whole. Returns version directories
+        dir left owning nothing goes whole. Also removes the temp files
+        a commit or zone-map write that died inside
+        ``commit.atomic_flip`` left. Returns version directories
         deleted. The world root (version 0) only ever loses partition
         dirs. Readers pinned to a vacuumed snapshot fail loudly on
         their next manifest resolve. A ``versioned=False`` world runs
-        this with ``retain_last=1`` after every commit."""
+        this with ``retain_last=1`` after every commit.
+
+        Runs under the writer token and the path mutex, as ``compact``
+        does: otherwise a vacuum racing a commit between its manifest
+        write and its flip takes the new manifest for a crash orphan
+        and deletes it with its ``_v{N}``. Raises ``WorldLockedError``
+        when another process holds the token; the token is released
+        again unless this World already held it."""
         if retain_last < 1:
             raise ValueError("retain_last must be >= 1")
+        with commit.store_writer(self.path):
+            # a writer whose lock was broken or reclaimed deletes nothing
+            self._writer_lock.verify_token()
+            return self._vacuum_locked(retain_last)
+
+    def _vacuum_locked(self, retain_last: int) -> int:
+        """``vacuum_snapshots`` for a caller holding the token and the
+        mutex (the commit path)."""
         cur = self.current_version()
         # anchor retention on the COMMITTED pointer, never the manifest
         # listing: a crash between the v{N}.json write and the
@@ -587,7 +605,29 @@ class World:
                         os.rmdir(d)
                     except OSError:
                         break
+        # ``atomic_flip`` temps: under the token and the mutex no
+        # commit and no same-process zone-map write is in flight, so
+        # they are a dead writer's; a zone-map refresh of another live
+        # process (it takes no token) keeps its own
+        for d, prefix in ((self._snapdir, ""), (self.path, "_zonemap.json")):
+            for n in os.listdir(d) if os.path.isdir(d) else ():
+                pid = n.partition(".json.tmp.")[2].split(".")[0]
+                if (n.startswith(prefix) and pid.isdigit()
+                        and not self._live_other_process(int(pid))):
+                    os.remove(os.path.join(d, n))
         return deleted
+
+    @staticmethod
+    def _live_other_process(pid: int) -> bool:
+        if pid == os.getpid():
+            return False
+        try:
+            os.kill(pid, 0)
+        except ProcessLookupError:
+            return False
+        except OSError:
+            pass  # exists, another user's
+        return True
 
     def _resolve_manifest(self, version: int) -> DataFrame | None:
         """Committed snapshot ``version`` as ONE file index over the
@@ -826,7 +866,7 @@ class World:
             touched = latest.select(id_col)
             live = latest.filter(~F.col("__del")).drop("__seq", "__del")
             routed = None
-        pending = _Pending(ops[-1][0], live, touched, None, None, None, None)
+        pending = _Pending(ops[-1][0], live, touched)
         if self._base() is None:
             # nothing stored to filter or relocate: a read returns the
             # live rows and a flush publishes them, unrouted
@@ -838,12 +878,17 @@ class World:
             # a null id matches no stored row (as in the joins)
             ids = [r[0] for r in routed if r[0] is not None]
             groups = sorted({r[1] for r in routed if r[1] is not None})
-            id_in = _in_list(f"`{id_col}`", ids)
+            id_in = _in_sql(f"`{id_col}`", ids)
             pending = pending._replace(
                 groups=groups,
                 new_keys={r[2] for r in routed if r[2] is not None},
-                keep=~F.coalesce(id_in, F.lit(False)),
-                hit=_in_list("c0", groups) & id_in,
+                keep=F.expr(f"NOT coalesce({id_in}, false)"),
+                hit=F.expr(f"{_in_sql('c0', groups)} AND {id_in}"),
+                touched_ids=frozenset(int(i) for i in ids),
+                # a key is null exactly for a delete
+                live_ids=frozenset(
+                    int(r[0]) for r in routed if r[0] is not None and r[2] is not None
+                ),
             )
         self._pending_cache = pending
         return pending
@@ -933,18 +978,17 @@ class World:
         """Project ``df`` to ``ref``'s columns/types for a union:
         shared columns cast to ref's type, ref-only columns become
         typed nulls, df-only columns (payload schema evolution — a
-        later batch introduced a new column) ride along at the end."""
-        rtypes = dict(ref.dtypes)
-        return df.select(
+        later batch introduced a new column) ride along at the end. One
+        ``selectExpr``; a column already of ref's type is not cast."""
+        have = dict(df.dtypes)
+        rtypes = ref.dtypes
+        return df.selectExpr(
             *[
-                (
-                    F.col(c).cast(rtypes[c])
-                    if c in df.columns
-                    else F.lit(None).cast(rtypes[c])
-                ).alias(c)
-                for c in ref.columns
+                f"`{c}`" if have.get(c) == t
+                else f"CAST({f'`{c}`' if c in have else 'NULL'} AS {t}) AS `{c}`"
+                for c, t in rtypes
             ],
-            *[F.col(c) for c in df.columns if c not in rtypes],
+            *[f"`{c}`" for c in have if c not in dict(rtypes)],
         )
 
     # -- read path (reference: §3A) -------------------------------------------
@@ -1006,32 +1050,59 @@ class World:
         """Execute a selection: partition pruning on the on-disk side
         (physical chunk predicate) + exact value predicate everywhere +
         pending-buffer merge. This is the reference's
-        ``Select::iter`` (src/world.rs:638-643) as one DataFrame."""
+        ``Select::iter`` (src/world.rs:638-643) as one DataFrame.
+
+        The merge is the stored side without the touched ids, unioned
+        with the live rows. When the selection pins dim 0 to known ids
+        (``Select.pinned_ids``) and the op log is routed in literals,
+        only the sides that can hold such ids are built, as the
+        reference answers a buffered id from memory: the stored side
+        when some pinned id is untouched, without the touched-id filter
+        when none is touched, and the live side when some pinned id was
+        upserted (or when the stored side is left out, for the schema).
+        A get of a touched id on a log collapsed on the driver is then
+        a filter on a local relation and runs no job; a get of an
+        untouched id plans the one pruned scan of a world with nothing
+        pending. Either way the rows, column order and types are those
+        of the whole merge."""
         value_pred = sel.to_predicate()
         base = self._base()
         p = self._resolved_pending()
-        live = p.live if p is not None else None
-        out = None
-        if base is not None:
-            pruned = base.filter(self._physical_partition_predicate(sel.shape()))
-            pruned = pruned.filter(value_pred).drop(*self.partition_cols())
-            if p is not None:
-                pruned = self._drop_touched(pruned, p)
-            out = pruned
-        if live is not None:
-            live_sel = live.filter(value_pred)
-            if out is None:
-                out = live_sel
-            else:
-                live_sel = self._align_to(live_sel, out)
-                out = out.unionByName(live_sel, allowMissingColumns=True)
-        if out is None:
-            return self.snapshot().filter(value_pred)
-        return out
+        if base is None:
+            return (p.live if p is not None else self.snapshot()).filter(value_pred)
+        stored_side, keep, live_side = True, p is not None, p is not None
+        ids = sel.pinned_ids() if p is not None and p.keep is not None else None
+        if ids is not None:
+            stored_side = bool(ids - p.touched_ids)
+            keep = bool(ids & p.touched_ids)
+            live_side = bool(ids & p.live_ids) or not stored_side
+        if stored_side:
+            stored = base.filter(self._physical_partition_predicate(sel.shape()))
+            stored = stored.filter(value_pred).drop(*self.partition_cols())
+            if keep:
+                stored = self._drop_touched(stored, p)
+        else:
+            stored = base.drop(*self.partition_cols())  # the live side's schema
+        if live_side:
+            live_sel = self._align_to(p.live.filter(value_pred), stored)
+            if not stored_side:
+                return live_sel
+            return stored.unionByName(live_sel, allowMissingColumns=True)
+        if p is not None:
+            # the live side is left out: its extra columns still come
+            # out as typed nulls, as the union gives them
+            extra = [f for f in p.live.schema.fields if f.name not in stored.columns]
+            if extra:
+                stored = stored.select(
+                    "*", *[F.lit(None).cast(f.dataType).alias(f.name) for f in extra]
+                )
+        return stored
 
     def get(self, id_value: int) -> DataFrame:
         """Point lookup by id — one pruned chunk on the IO side
-        (reference ``chunk_pos_of_data`` routing, src/world.rs:544-551)."""
+        (reference ``chunk_pos_of_data`` routing, src/world.rs:544-551).
+        With ops pending it reads only the side of the merge that holds
+        the id (see ``read``)."""
         return self.read(self.select(0, int(id_value)))
 
     # -- zone maps: data skipping on non-dimension columns --------------------
@@ -1179,7 +1250,7 @@ class World:
         the next commit's vacuum removes what this one left."""
         self._writer_lock.data_version += 1
         if not self.versioned:
-            self.vacuum_snapshots(retain_last=1)
+            self._vacuum_locked(retain_last=1)
 
     def _flush_locked(self) -> None:
         p = self._resolved_pending()

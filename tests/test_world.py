@@ -508,6 +508,10 @@ def test_pending_reads_share_one_resolved_log(spark, monkeypatch, world):
     assert jobs == 0  # second pending get: no job before it returns
     got, jobs = _jobs(spark, lambda: rows(df))
     assert got == [(2, 20)]
+    assert jobs == 0  # the touched id reads the local pending rows only
+    df = world.read(world.select(0, (1, 2)))
+    got, jobs = _jobs(spark, lambda: rows(df))
+    assert got == [(1, 10), (2, 20)]
     assert jobs == 1  # one scan of base and pending rows, no join
 
     barriers = []
@@ -725,6 +729,8 @@ def test_pending_gets_and_flush_job_counts(spark, tmp_path, versioned):
     got, jobs = _jobs(spark, df.collect)
     assert [tuple(r) for r in got] == [(LONELY, 10, 20, "moved")]
     assert jobs == 1
+    # the touched id is read from the checkpoint alone
+    assert "FileScan" not in df._jdf.queryExecution().executedPlan().toString()
     n, jobs = _jobs(spark, w.flush)
     assert n == 2
     assert jobs <= 3, jobs
@@ -931,8 +937,8 @@ def test_null_repeated_or_too_many_ids_fall_back_to_the_window(
 @pytest.mark.parametrize("versioned", [False, True])
 def test_local_log_pending_get_and_flush_job_counts(spark, tmp_path, versioned):
     # an op log of local frames collapses on the driver: the first
-    # pending get plans without a job and runs one, and the flush runs
-    # the old-location scan and the shuffled write
+    # pending get of a touched id plans and runs without a job, and the
+    # flush runs the old-location scan and the shuffled write
     w = World(spark, PRUNE_SPEC, str(tmp_path / "w"),
               physical_factors=PRUNE_FACTORS, versioned=versioned)
     model = _prune_base()
@@ -946,7 +952,7 @@ def test_local_log_pending_get_and_flush_job_counts(spark, tmp_path, versioned):
     assert jobs == 0
     got, jobs = _jobs(spark, df.collect)
     assert [tuple(r) for r in got] == [(644, 10, 10, "reloc")]
-    assert jobs == 1
+    assert jobs == 0
     n, jobs = _jobs(spark, w.flush)
     assert n == 2
     assert jobs <= 3, jobs

@@ -131,7 +131,7 @@ def _build(spark, path, versioned, commits, vacuum=True):
     batches = [(base_model(), []), (second_batch(), []), later_batch()]
     with pytest.MonkeyPatch.context() as mp:
         if not vacuum:
-            mp.setattr(World, "vacuum_snapshots", lambda self, retain_last=1: 0)
+            mp.setattr(World, "_vacuum_locked", lambda self, retain_last=1: 0)
         for ups, dels in batches[:commits]:
             w.upsert(frame(spark, ups))
             if dels:

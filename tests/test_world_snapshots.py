@@ -257,6 +257,85 @@ def test_vacuum_ignores_crash_orphan_manifest(spark, world):
     assert rows(world.snapshot()) == [(10, 39)]     # world NOT bricked
 
 
+def _layout(world) -> list[str]:
+    """Every file and directory under the world root."""
+    return sorted(
+        os.path.relpath(os.path.join(d, n), world.path)
+        for d, dirs, files in os.walk(world.path) for n in dirs + files
+    )
+
+
+def _in_child(code: str) -> str:
+    """Last stdout line of ``code`` run in a second OS process."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = f"import sys\nsys.path.insert(0, {repo!r})\n{code}"
+    out = subprocess.run([sys.executable, "-c", code],
+                         capture_output=True, text=True, timeout=120)
+    assert out.returncode == 0, out.stderr
+    return out.stdout.strip().splitlines()[-1]
+
+
+def test_vacuum_without_the_writer_token_deletes_nothing(world):
+    """A writer between its manifest write and its flip: the next
+    manifest and its ``_v{N}`` exist, ``current.json`` still names the
+    one before. A vacuum from a second process would take them for a
+    crash orphan; without the writer token it deletes nothing."""
+    import json
+
+    world.insert_rows([{"dim0": 10, "dim1": 39}])
+    world.flush()
+    world.insert_rows([{"dim0": 10, "dim1": 40}])
+    world.flush()  # v1 is superseded: a vacuum has work
+    with open(os.path.join(world._snapdir, "v3.json"), "w") as fh:
+        json.dump({"version": 3, "owner": {"1/2": 3}}, fh)
+    os.makedirs(os.path.join(world._version_dir(3), "c0=1", "c1=2"))
+    before = _layout(world)
+    got = _in_child(
+        "from dmds_spark.core.errors import WorldLockedError\n"
+        "from dmds_spark.core.dims import DimSpec, WorldSpec\n"
+        "from dmds_spark.world import World\n"
+        "spec = WorldSpec((DimSpec('dim0', 0, 1023, 8), DimSpec('dim1', 0, 1023, 16)))\n"
+        f"w = World(None, spec, {world.path!r}, physical_factors=(1, 1), versioned=True)\n"
+        "try:\n"
+        "    print(w.vacuum_snapshots(retain_last=1))\n"
+        "except WorldLockedError:\n"
+        "    print('locked')\n"
+    )
+    assert got == "locked"
+    assert _layout(world) == before
+    # the token holder vacuums: v1 and the unflipped v3 go
+    assert world.vacuum_snapshots(retain_last=1) == 2
+    assert world.snapshot_versions() == [2]
+    assert rows(world.snapshot()) == [(10, 40)]
+
+
+def test_vacuum_removes_dead_commit_temps(world):
+    """``commit.atomic_flip`` temps of a commit or a zone-map write
+    killed before its rename go with the next vacuum; a zone-map temp
+    of a live process (a refresh takes no writer token) stays."""
+    world.insert_rows([{"dim0": 10, "dim1": 39}])
+    world.flush()
+    dead = int(_in_child("import os\nprint(os.getpid())"))
+    litter = [
+        os.path.join(world._snapdir, f"current.json.tmp.{dead}.ab12"),
+        os.path.join(world._snapdir, f"v2.json.tmp.{dead}.cd34"),
+        os.path.join(world.path, f"_zonemap.json.tmp.{dead}.ef56"),
+        os.path.join(world.path, f"_zonemap.json.tmp.{os.getpid()}.ef78"),
+    ]
+    live = os.path.join(world.path, f"_zonemap.json.tmp.{os.getppid()}.9a0b")
+    for f in litter + [live]:
+        with open(f, "w") as fh:
+            fh.write("{")
+    assert world.vacuum_snapshots(retain_last=1) == 0
+    assert [f for f in litter if os.path.exists(f)] == []
+    assert os.path.exists(live)
+    assert world.current_version() == 1
+    assert rows(world.snapshot()) == [(10, 39)]
+
+
 def test_empty_pinned_snapshot_keeps_payload_schema(spark, world):
     """A committed-but-empty snapshot must carry the SAME schema as
     non-empty versions (payload columns included) so version unions —
