@@ -432,6 +432,30 @@ def minhash_shingle_rows(
     )
 
 
+def shared_shingles(
+    df: DataFrame, text_col: str, id_col: str, k: int, num_hashes: int
+) -> tuple[DataFrame, DataFrame]:
+    """Shingle the corpus ONCE: ``(srows, sigs)``, the persisted
+    distinct (id, shingle) rows of ``df`` (spread to the default
+    parallelism first) and the MinHash signatures built from them.
+    Pass ``srows`` as ``shingle_rows`` to the verify operators (or to
+    an exact truth side) so the text is tokenized once; the signatures
+    are bit-identical to :func:`minhash_signatures` over the raw text
+    (min over a doc's distinct shingles equals min over its raw k-gram
+    stream).
+
+    ``srows`` stays persisted after the returned DataFrames are
+    dropped: ``session.release_materialized_state``, which ``bench.py``
+    and ``tests/test_oracle.py`` call between queries, owns its
+    lifetime."""
+    from dmds_spark.operators.parallel import ensure_parallelism
+
+    srows = minhash_shingle_rows(
+        ensure_parallelism(df), text_col, id_col, k
+    ).persist()
+    return srows, minhash_signatures_from_shingles(srows, id_col, num_hashes)
+
+
 def containment_verify_pairs(
     df: DataFrame,
     pairs: DataFrame,

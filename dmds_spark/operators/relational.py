@@ -449,6 +449,16 @@ def exact_floordiv(num, den, out_type: str = "decimal(38,0)"):
     return ((num - F.pmod(num, den)) / den).cast(out_type)
 
 
+# DuckDB twin of ``cents``: format with ``c=<column>``
+CENTS_SQL = "CAST(CAST({c} AS DECIMAL(12,2)) * 100 AS BIGINT)"
+
+
+def cents(col: str):
+    """Integer cents of a money column, ``CENTS_SQL`` in the oracle:
+    exact, since the source doubles carry at most 2 decimals."""
+    return (F.col(col).cast("decimal(12,2)") * 100).cast("bigint")
+
+
 def ntile_from_group_rank(r0, n, k: int):
     """Exact NTILE(k) bucket (1-based) from a 0-based rank column and a
     per-GROUP row-count COLUMN — the column-``n`` twin of

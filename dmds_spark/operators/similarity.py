@@ -558,10 +558,27 @@ def semdedup_prune(
     The within-cluster prune is pinned equal to an independent
     numpy brute-force in tests/test_similarity_ops.py."""
     assigned = kmeans_assign(df, id_col, vec_col, k, iters)
-    # norm folded ONCE per vector into the materialized block table
-    # (same expression, same fold — bit-identical doubles); the
-    # sum-of-size^2 pairwise stage then pays one HOF fold per pair
-    # (the dot) instead of three (guide §2.4, the pair_cosine pattern)
+    return semdedup_prune_clusters(df, assigned, id_col, vec_col, threshold)
+
+
+def semdedup_prune_clusters(
+    df: DataFrame,
+    assigned: DataFrame,
+    id_col: str,
+    vec_col: str,
+    threshold: float,
+) -> DataFrame:
+    """The within-cluster stage of SemDeDup over a given assignment
+    ``assigned`` (id, cluster): drop every vector whose cosine to a
+    LOWER-id cluster-mate reaches ``threshold``; returns the survivors
+    (id, cluster). Pairs are compared only inside a cluster block
+    (the cluster key is the join key), so the cost is sum over
+    clusters of size^2.
+
+    The norm is folded ONCE per vector into the materialized block
+    table (same expression over the same array, so the doubles are
+    bit-identical); each pair then pays one HOF fold (the dot) instead
+    of three (guide §2.4, the pair_cosine pattern)."""
     vecs = (
         df.select(F.col(id_col), F.col(vec_col))
         .join(assigned, id_col)

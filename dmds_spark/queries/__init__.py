@@ -19,10 +19,27 @@ sf0.01 (order-insensitive, columns sorted by name), so:
   (seen in CORRECTNESS_r04 for agg_collect_sorted/embedding_centroids).
   Emit `array_join(array_sort(...), ',')` or long-format rows instead;
   keep array-returning operators for engine use only.
+
+Order. ``list(_REGISTRY)`` is registration order: the module order of
+``_MODULES``, then definition order within each module. It is frozen.
+``all_queries()``/``all_oracle_sql()`` yield the correctness rotation
+instead: each correctness round hash-checks the first 50 queries they
+yield and leaves one ``CORRECTNESS_r{N}.json`` in the repo root. The
+rotation is read from those files: queries with no evidence lead, in
+registration order, then the rest, oldest latest-evidence round first,
+ties in registration order. An entry is evidence unless its ``err`` is
+set to something other than ``"no_oracle"`` (a harness crash means the
+query was not checked that round). With no files, every query counts
+as never checked and the rotation is registration order.
 """
 
 from __future__ import annotations
 
+import glob
+import importlib
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,439 +62,37 @@ def register(name: str, sql: str | None):
     return deco
 
 
-# The correctness driver hash-checks the FIRST 50 queries in the order
-# ``queries()`` yields them. To accumulate driver-grade evidence for the
-# whole surface across rounds, we order: (1) queries with no driver row
-# yet, (2) explicitly deferred low-risk queries, (3) queries already
-# green in a previous round's CORRECTNESS_r{N}.json, OLDEST evidence
-# first so the window's spare slots keep rotating stale evidence back
-# through the driver. Update the per-round sets with each round's
-# checked keys FIRST thing each round.
-_CHECKED_R01: frozenset[str] = frozenset({
-    # round 1 (CORRECTNESS_r01.json): 50 queries, all green
-    "dmds_select_range", "dmds_select_and", "dmds_select_plus",
-    "dmds_select_hints", "dmds_point_get", "dmds_select_half_open",
-    "dmds_select_empty_domain", "q1_pricing_summary",
-    "q3_shipping_priority", "q5_local_supplier_volume",
-    "q6_forecast_revenue", "q10_returned_revenue", "join_inner",
-    "join_left", "join_right", "join_full_outer", "join_semi",
-    "join_anti", "join_cross", "join_theta_range", "join_asof",
-    "agg_basic_stats", "agg_count_distinct", "agg_approx_distinct",
-    "agg_rollup", "agg_cube", "agg_grouping_sets", "agg_having",
-    "distinct_projection", "pivot_conditional", "window_row_number",
-    "window_rank_dense_ntile", "window_lag_lead", "window_running_sum",
-    "window_range_between", "sort_limit_topn", "topk_per_group",
-    "sort_nulls_ordering", "setop_union_all", "setop_union_distinct",
-    "setop_intersect", "setop_except", "scalar_string", "scalar_date",
-    "scalar_math", "scalar_conditional", "semi_json_extract",
-    "semi_array_explode", "semi_array_ops", "q2_min_cost_supplier",
-})
-
-# round 2 (CORRECTNESS_r02.json): 50 queries, all green
-_CHECKED_R02: frozenset[str] = frozenset({
-    "agg_percentiles", "agg_salted_sum", "dedup_cluster_assign",
-    "dedup_embedding_neardup", "dedup_exact", "dedup_exact_keep_first",
-    "dedup_jaccard_verify", "dedup_minhash_keep_first",
-    "dedup_minhash_pairs", "dedup_simhash_pairs", "dmds_crud_snapshot",
-    "join_bucketed_colocated", "join_salted_skew", "pipeline_curation",
-    "q4_order_priority", "q7_volume_shipping", "q8_market_share",
-    "q9_product_profit", "q11_important_parts", "q12_priority_lateness",
-    "q13_customer_distribution", "q14_promo_revenue", "q15_top_supplier",
-    "q16_supplier_part_count", "q17_small_quantity_revenue",
-    "q18_large_volume_customer", "q19_bracket_revenue",
-    "q20_promotion_suppliers", "q21_late_suppliers", "q22_idle_customers",
-    "sample_bucket_distribution", "sample_hash_10pct",
-    "sample_referential", "sample_stratified_events",
-    "sample_train_val_test", "sample_weighted_quality", "sessionize_10m",
-    "similarity_ann_lsh_topk", "similarity_cosine_topk",
-    "similarity_ivf_topk", "similarity_pairs_threshold",
-    "text_bpe_token_count", "text_fingerprint", "text_lang_id",
-    "text_quality_score", "text_rolling_fingerprint", "text_token_stats",
-    "timeseries_gapfill", "window_sliding_1h_30m", "window_tumbling_1h",
-})
-
-# round 4 (CORRECTNESS_r04.json): 50 rows — 44 hash-green (incl.
-# re-greens of 10 round-1 queries, listed here because their evidence is
-# now r04-fresh), 4 rows-only-by-design passes, and 2 harness errors
-# (agg_collect_sorted, embedding_centroids: array-typed output columns
-# crash the driver canonicalizer) which are deliberately NOT listed in
-# any checked set so they lead the round-5 window after their
-# scalar-output reshape.
-_CHECKED_R04: frozenset[str] = frozenset({
-    "dmds_select_range", "dmds_select_and", "dmds_select_plus",
-    "dmds_select_hints", "dmds_point_get", "dmds_select_half_open",
-    "dmds_select_empty_domain", "q1_pricing_summary",
-    "q3_shipping_priority", "q5_local_supplier_volume",
-    "agg_mode_per_group", "customers_rfm_segments",
-    "dedup_cluster_keep_best", "events_conversion_latency",
-    "events_daily_anomalies", "events_funnel_steps",
-    "events_retention_cohorts", "graph_pagerank", "join_null_safe",
-    "join_range_attribution", "pipeline_pretrain_corpus",
-    "profile_column_stats", "profile_price_histogram",
-    "sample_balanced_by_lang", "sample_cap_per_source",
-    "sample_split_by_source", "setop_except_all", "setop_intersect_all",
-    "similarity_knn_batch", "stream_dedup_events",
-    "text_boilerplate_ngrams", "text_contamination_ngram",
-    "text_cooccurrence_topk", "text_gopher_rules", "text_ngram_topk",
-    "text_tfidf_topk", "text_vocab_coverage", "tokens_chunk_overlap",
-    "tokens_pack_sequences", "tokens_pack_spans", "unpivot_measures",
-    "window_cume_percent", "window_first_last", "window_moving_median",
-    "embedding_kmeans_assign", "multimodal_audio_energy",
-    "multimodal_decode_stats", "multimodal_frame_sample",
-})
-
-# round 5 (CORRECTNESS_r05.json): 50 rows — 49 hash-green, 1 rows-only
-# by design (multimodal_audio_resample: no oracle SQL, plausible rows).
-_CHECKED_R05: frozenset[str] = frozenset({
-    "agg_collect_sorted", "agg_weighted_median",
-    "dedup_cluster_size_dist", "dedup_containment_verify",
-    "dedup_cross_source_overlap", "dedup_embedding_neardup_arrow",
-    "dedup_fuzzy_fingerprint_pairs", "dmds_select_3d",
-    "dmds_select_hinted_box", "embedding_centroids",
-    "embedding_dim_stats", "embedding_norm_stats",
-    "embedding_quantize_int8", "events_active_users_rolling",
-    "events_attribution_last_touch", "events_concurrency_peak",
-    "events_daily_anomalies_mad", "events_inter_arrival_median",
-    "events_late_arrivals", "events_scd2_intervals",
-    "events_session_stats", "events_time_weighted_value",
-    "events_transition_counts", "events_user_path_topk",
-    "graph_common_neighbors", "graph_degree_distribution",
-    "graph_triangle_count", "market_basket_pairs",
-    "multimodal_audio_resample", "orders_cohort_ltv",
-    "orders_rolling_7d_revenue", "parts_price_dispersion",
-    "parts_yoy_revenue", "profile_covariance", "profile_equidepth_bins",
-    "profile_field_completeness", "profile_ks_drift",
-    "rollup_incremental_orders", "sample_temperature_mixture",
-    "similarity_pairs_threshold_arrow",
-    "similarity_quantized_rerank_topk", "suppliers_pareto_class",
-    "suppliers_winsorized_balance", "text_hapax_ratio",
-    "text_source_vocab_jaccard", "text_trigram_novelty",
-    "text_zipf_topk", "tokens_domain_mixture",
-    "tokens_length_histogram", "tokens_shard_plan",
-})
-
-# round 6 (CORRECTNESS_r06.json): 50 rows — 45 hash-green (incl.
-# re-greens of 9 round-1 join/agg queries), 5 rows-only-by-design passes
-# (fingerprint fast twin, capped common-neighbors, SemDeDup composite,
-# byte histogram, world maintenance).
-_CHECKED_R06: frozenset[str] = frozenset({
-    "agg_basic_stats", "agg_count_distinct",
-    "dedup_fuzzy_fingerprint_pairs_fast", "dedup_incremental_minhash",
-    "dedup_method_agreement", "dedup_minhash_precision",
-    "dedup_semdedup_prune", "dmds_world_maintenance",
-    "events_activity_streaks_topk", "events_attribution_linear",
-    "events_inter_arrival_histogram", "events_weekday_hour_heatmap",
-    "graph_clustering_coefficient", "graph_common_neighbors_capped",
-    "graph_khop_reachability", "graph_supplier_jaccard", "join_anti",
-    "join_asof", "join_cross", "join_full_outer", "join_inner",
-    "join_left", "join_right", "join_semi", "join_theta_range",
-    "lineitem_corr_components", "lineitem_revenue_waterfall",
-    "multimodal_byte_histogram", "orders_basket_size_stats",
-    "orders_repeat_purchase_rate", "orders_value_gini",
-    "profile_benford_digits", "profile_duplicate_rows",
-    "q10_returned_revenue", "q6_forecast_revenue",
-    "sample_hamilton_allocation", "sample_systematic_every_k",
-    "similarity_lsh_bucket_stats", "similarity_lsh_recall_report",
-    "similarity_radius_count", "text_lang_confusion", "text_pii_counts",
-    "text_readability_profile", "text_repetition_profile",
-    "text_term_burstiness_topk", "text_vocab_growth",
-    "tokens_bpe_merge_candidates", "tokens_packing_efficiency_sweep",
-    "tokens_vocab_truncation_loss", "window_ewma_pow2",
-})
-
-# round 7 (CORRECTNESS_r07.json): 50 rows — 43 hash-green, 7 rows-only
-# by design (no oracle SQL: sketch calibrations, phash/VAD binary
-# plumbing, PCA power iteration). Covered all 31 round-7 additions
-# plus 19 rotated round-1-vintage queries.
-_CHECKED_R07: frozenset[str] = frozenset({
-    "agg_approx_distinct", "agg_approx_percentile_calibration",
-    "agg_cms_calibration", "agg_cube", "agg_grouping_sets",
-    "agg_having", "agg_hll_calibration", "agg_rollup",
-    "dedup_doc_dup_span_topk", "dedup_duplicated_span_fraction",
-    "dedup_minhash_recall_report", "dedup_repeated_ngram_spans",
-    "dedup_span_coverage", "dedup_span_rewrite_stats",
-    "distinct_projection", "embedding_centroid_drift",
-    "embedding_pca_power", "events_survival_curve",
-    "events_transition_lift", "join_asof_forward",
-    "join_interval_overlap", "join_scd2_lookup",
-    "multimodal_audio_vad", "multimodal_phash_neardup",
-    "orders_seasonality_decomposition", "parts_xyz_classification",
-    "pivot_conditional", "profile_cardinality_report",
-    "profile_functional_dependency", "profile_join_skew_advisor",
-    "profile_outlier_iqr", "profile_partition_size_planner",
-    "rollup_incremental_spans", "sample_neyman_allocation",
-    "setop_except", "setop_intersect", "setop_union_all",
-    "setop_union_distinct", "similarity_mips_topk",
-    "sort_limit_topn", "sort_nulls_ordering",
-    "text_source_tv_distance", "text_token_rarity_score",
-    "text_vocab_gini_impurity", "topk_per_group", "window_lag_lead",
-    "window_range_between", "window_rank_dense_ntile",
-    "window_row_number", "window_running_sum",
-})
-
-# round 8 (CORRECTNESS_r08.json): 50 rows — all hash-green (the driver
-# window rotated the oldest r01/r02-vintage evidence: TPC-H tail,
-# scalar/semi-structured, sampling, dedup and similarity batteries).
-_CHECKED_R08: frozenset[str] = frozenset({
-    "agg_percentiles", "dedup_cluster_assign",
-    "dedup_embedding_neardup", "dedup_exact", "dedup_exact_keep_first",
-    "dedup_jaccard_verify", "dedup_minhash_keep_first",
-    "dedup_minhash_pairs", "dedup_simhash_pairs", "dmds_crud_snapshot",
-    "q11_important_parts", "q12_priority_lateness",
-    "q13_customer_distribution", "q14_promo_revenue",
-    "q15_top_supplier", "q16_supplier_part_count",
-    "q17_small_quantity_revenue", "q18_large_volume_customer",
-    "q19_bracket_revenue", "q20_promotion_suppliers",
-    "q21_late_suppliers", "q22_idle_customers", "q2_min_cost_supplier",
-    "q4_order_priority", "q7_volume_shipping", "q8_market_share",
-    "q9_product_profit", "sample_bucket_distribution",
-    "sample_hash_10pct", "sample_referential",
-    "sample_stratified_events", "sample_train_val_test",
-    "sample_weighted_quality", "scalar_conditional", "scalar_date",
-    "scalar_math", "scalar_string", "semi_array_explode",
-    "semi_array_ops", "semi_json_extract", "similarity_ann_lsh_topk",
-    "similarity_cosine_topk", "similarity_ivf_topk",
-    "similarity_pairs_threshold", "text_bpe_token_count",
-    "text_fingerprint", "text_lang_id", "text_quality_score",
-    "text_rolling_fingerprint", "text_token_stats",
-})
-
-# round 9 (CORRECTNESS_r09.json): 50 rows — 46 hash-green, 4 rows-only
-# by design (webdataset manifest, FFD bin packing, multimodal decode
-# stats / frame sample). Covered all 24 round-9 additions plus rotated
-# r01/r02/r04-vintage evidence.
-_CHECKED_R09: frozenset[str] = frozenset({
-    "agg_salted_sum", "dmds_point_get", "dmds_select_and",
-    "dmds_select_empty_domain", "dmds_select_half_open",
-    "dmds_select_hints", "dmds_select_plus", "dmds_select_range",
-    "dmds_u64_snapshot", "events_regression_trend", "join_asof_nearest",
-    "join_asof_nulls", "join_bucketed_colocated", "join_salted_skew",
-    "multimodal_decode_stats", "multimodal_frame_sample",
-    "pipeline_curation", "pipeline_sft_corpus", "profile_schema_drift",
-    "q1_pricing_summary", "q3_shipping_priority",
-    "q5_local_supplier_volume", "sample_cap_per_source",
-    "sample_ntile_curriculum", "sample_split_leakage_safe",
-    "sample_split_temporal", "sessionize_10m", "sft_decontaminate_convs",
-    "sft_loss_mask_spans", "sft_pack_conversations",
-    "sft_pack_training_sequences", "sft_preference_pairs",
-    "sft_reply_dedup", "sft_role_alternation", "sft_truncate_to_budget",
-    "sink_webdataset_manifest", "sink_webdataset_roundtrip",
-    "text_bm25_topk", "text_ngram_topk", "text_pii_redact",
-    "timeseries_gapfill", "timeseries_interp_linear",
-    "tokens_bin_pack_ffd", "tokens_epoch_plan",
-    "tokens_epoch_shuffle_order", "unpivot_measures",
-    "window_cume_percent", "window_first_last", "window_sliding_1h_30m",
-    "window_tumbling_1h",
-})
-
-# round 10 (CORRECTNESS_r10.json): 50 rows — 46 hash-green, 4 rows-only
-# by design (BPE train/apply pinned vs a pure-Python reference,
-# compression-ratio and streaming-dedup engine paths). Covered all 27
-# round-10 additions plus rotated r04-vintage evidence.
-_CHECKED_R10: frozenset[str] = frozenset({
-    "agg_kmv_distinct_calibration",
-    "embedding_jl_projection_calibration", "embedding_kmeans_assign",
-    "embedding_kmeans_lloyd_step", "entity_resolution_pairs",
-    "events_conversion_latency", "events_funnel_steps",
-    "events_ohlc_downsample", "events_retention_cohorts",
-    "join_null_safe", "layout_zorder_locality",
-    "pipeline_attrition_report", "pipeline_pretrain_corpus",
-    "profile_bloom_prejoin_calibration", "profile_column_stats",
-    "profile_k_anonymity", "profile_price_histogram",
-    "profile_snapshot_diff", "rollup_incremental_lines",
-    "sample_balanced_by_lang", "sample_contrastive_negatives",
-    "sample_dsir_importance", "sample_dsir_resample",
-    "sample_kfold_assign", "sample_softdedup_weights",
-    "sample_split_by_source", "setop_except_all", "setop_intersect_all",
-    "similarity_hard_negatives", "similarity_knn_batch",
-    "similarity_semantic_decontaminate", "stream_dedup_events",
-    "text_boilerplate_ngrams", "text_compression_ratio",
-    "text_contamination_ngram", "text_cooccurrence_topk",
-    "text_gopher_rules", "text_tfidf_topk", "text_vocab_coverage",
-    "timeseries_backtest_snaive", "tokens_bpe_apply_learned",
-    "tokens_bpe_train_merges", "tokens_chunk_overlap",
-    "tokens_pack_sequences", "web_blocklist_filter",
-    "web_dedup_method_agreement", "web_domain_stats",
-    "web_line_boilerplate_topk", "web_line_dedup_rewrite",
-    "web_url_canonicalize",
-})
-
-# round 11 (CORRECTNESS_r11.json): 50 rows — 48 hash-green, 2 rows-only
-# by design (PCM16 audio energy/resample engine paths). Covered all 9
-# round-11 additions, the 2 priority re-checks that moved rows-only →
-# full oracle, plus rotated r04/r05-vintage evidence.
-_CHECKED_R11: frozenset[str] = frozenset({
-    "agg_collect_sorted", "agg_mode_per_group", "customers_rfm_segments",
-    "dedup_cluster_keep_best", "dedup_cluster_size_dist",
-    "dedup_containment_verify", "dedup_cross_source_overlap",
-    "dedup_embedding_neardup_arrow", "dedup_fuzzy_fingerprint_pairs",
-    "dmds_select_3d", "dmds_select_hinted_box", "dmds_snapshot_diff",
-    "dmds_snapshot_timetravel", "embedding_centroids",
-    "embedding_kmeans_assign", "embedding_norm_stats",
-    "embedding_quantize_int8", "events_attribution_last_touch",
-    "events_daily_anomalies", "events_inter_arrival_median",
-    "events_scd2_intervals", "events_session_stats",
-    "events_time_weighted_value", "events_transition_counts",
-    "events_user_path_topk", "graph_degree_distribution",
-    "graph_pagerank", "graph_triangle_count", "join_range_attribution",
-    "market_basket_pairs", "multimodal_audio_energy",
-    "multimodal_audio_resample", "multimodal_byte_histogram",
-    "pipeline_web_curation_full", "pipeline_web_ingest",
-    "profile_covariance", "profile_equidepth_bins",
-    "profile_field_completeness", "rollup_incremental_ivf",
-    "similarity_ivf_probe_sweep", "similarity_pairs_threshold_arrow",
-    "similarity_quantized_rerank_topk", "text_quality_linear_score",
-    "text_zipf_topk", "tokens_domain_mixture", "tokens_length_histogram",
-    "tokens_pack_spans", "web_html_extract", "web_html_links",
-    "window_moving_median",
-})
-
-# round 12 (CORRECTNESS_r12.json): 50 rows — ALL hash-green, zero
-# failures (first all-green window since r08). Covered all 25 round-12
-# additions, the 2 priority re-checks that moved rows-only → full
-# oracle, plus rotated r05/r06-vintage evidence.
-_CHECKED_R12: frozenset[str] = frozenset({
-    "join_asof_tolerance", "rollup_incremental_clusters",
-    "rollup_ivf_retrain", "similarity_ivf_search_batch",
-    "similarity_ivf_drift_report", "multimodal_real_decode_stats",
-    "cdc_apply_changeset", "cdc_net_changes", "cdc_world_merge",
-    "text_lm_train_bigram", "text_lm_score_docs",
-    "text_inverted_postings", "text_boolean_retrieval",
-    "text_phrase_retrieval", "dmds_zonemap_read",
-    "rollup_incremental_cdc", "quality_constraint_report",
-    "quality_referential_report", "eval_auc_rank_sum",
-    "eval_confusion_prf", "eval_calibration_bins", "eval_pr_curve",
-    "multimodal_decode_stats", "multimodal_frame_sample",
-    "suppliers_pareto_class", "parts_yoy_revenue", "tokens_shard_plan",
-    "events_concurrency_peak", "graph_common_neighbors",
-    "events_late_arrivals", "text_hapax_ratio",
-    "parts_price_dispersion", "rollup_incremental_orders",
-    "agg_weighted_median", "suppliers_winsorized_balance",
-    "text_trigram_novelty", "events_daily_anomalies_mad",
-    "events_active_users_rolling", "orders_cohort_ltv",
-    "sample_temperature_mixture", "profile_ks_drift",
-    "text_source_vocab_jaccard", "orders_rolling_7d_revenue",
-    "embedding_dim_stats", "q6_forecast_revenue",
-    "q10_returned_revenue", "join_inner", "join_left", "join_right",
-    "join_full_outer",
-})
-
-
-# round 13 (CORRECTNESS_r13.json): 50 rows — 47 hash-green, 0
-# failures (3 no_oracle rows-only by design: semdedup/bpe-merge/
-# common-neighbors-capped). Covered all 17 round-13 additions, the 5
-# priority re-checks (pHash + audio family rows-only -> full oracle,
-# kmeans seed TakeOrdered reshape), plus rotated older evidence.
-_CHECKED_R13: frozenset[str] = frozenset({
-    "agg_basic_stats", "agg_count_distinct",
-    "dedup_fuzzy_fingerprint_pairs_fast", "dedup_incremental_minhash",
-    "dedup_minhash_precision", "dedup_semdedup_prune",
-    "embedding_kmeans_assign", "embedding_pq_codebook_census",
-    "embedding_truncation_recall", "events_activity_streaks_topk",
-    "events_time_to_convert", "feature_hash_bucket_stats",
-    "feature_point_in_time", "feature_target_encoding_oof",
-    "forecast_eval_mase_smape", "graph_clustering_coefficient",
-    "graph_common_neighbors_capped", "join_anti", "join_asof",
-    "join_cross", "join_semi", "join_theta_range",
-    "lineitem_revenue_waterfall", "multimodal_audio_energy",
-    "multimodal_audio_resample", "multimodal_audio_vad",
-    "multimodal_phash_neardup", "orders_basket_size_stats",
-    "orders_repeat_purchase_rate", "orders_value_gini",
-    "privacy_l_diversity", "privacy_t_closeness", "profile_benford_digits",
-    "quality_reconciliation_report", "rank_eval_catalog_coverage",
-    "rank_eval_mrr_hit", "rank_eval_ndcg", "rank_eval_recall_curve",
-    "sample_hamilton_allocation", "similarity_ivfadc_topk",
-    "similarity_lsh_bucket_stats", "similarity_pq_adc_topk",
-    "similarity_radius_count", "text_keyphrase_rake",
-    "text_lang_confusion", "text_pii_counts", "text_readability_profile",
-    "text_term_burstiness_topk", "tokens_bpe_merge_candidates",
-    "tokens_packing_efficiency_sweep",
-})
-
-# round 14 (CORRECTNESS_r14.json): 50 rows — 48 hash-green, 1
-# no_oracle by design (agg_approx_distinct), 1 real ERR
-# (dmds_world_maintenance, the default-session lock-wipe crash fixed in
-# round 15 — it re-enters via _PRIORITY_RECHECK below). Covered all 20
-# round-14 additions, the 6 priority re-checks, plus rotated evidence.
-_CHECKED_R14: frozenset[str] = frozenset({
-    "agg_approx_distinct", "agg_cube", "agg_grouping_sets", "agg_having",
-    "agg_rollup", "basket_association_rules", "dedup_bcubed_quality",
-    "dedup_method_agreement", "dedup_method_kappa", "distinct_projection",
-    "dmds_world_maintenance", "embedding_pq_drift_report",
-    "eval_conformal_coverage", "events_attribution_linear",
-    "events_cusum_changepoint", "events_inter_arrival_histogram",
-    "events_mannwhitney_u", "events_weekday_hour_heatmap",
-    "forecast_eval_pinball", "graph_common_neighbors_capped",
-    "graph_khop_reachability", "graph_supplier_jaccard",
-    "lineitem_corr_components", "multimodal_png_decode_stats",
-    "orders_kendall_tau", "orders_theilsen_trend", "parts_price_dispersion",
-    "parts_yoy_revenue", "pivot_conditional", "privacy_l_diversity",
-    "privacy_t_closeness", "profile_chi2_independence", "profile_cramers_v2",
-    "profile_duplicate_rows", "retrieval_bm25_incremental",
-    "retrieval_phrase_incremental", "rollup_incremental_ivfadc",
-    "rollup_incremental_postings", "sample_systematic_every_k",
-    "similarity_lsh_recall_report", "survivorship_golden_record",
-    "text_bm25_topk", "text_repetition_profile", "text_vocab_growth",
-    "tokens_vocab_truncation_loss", "window_ewma_pow2", "window_lag_lead",
-    "window_rank_dense_ntile", "window_row_number", "window_running_sum",
-})
-
-# Oldest evidence first: a query's age is its most recent checked round.
-# Each round's fold-in is ONE new frozenset in this tuple — the aging
-# subtraction (later evidence supersedes earlier) is computed below.
-_ROUND_SETS: tuple[frozenset[str], ...] = (
-    _CHECKED_R01, _CHECKED_R02, _CHECKED_R04, _CHECKED_R05,
-    _CHECKED_R06, _CHECKED_R07, _CHECKED_R08, _CHECKED_R09,
-    _CHECKED_R10, _CHECKED_R11, _CHECKED_R12, _CHECKED_R13,
-    _CHECKED_R14,
-)
-_CHECKED_ROUNDS: tuple[frozenset[str], ...] = tuple(
-    rnd - frozenset().union(*_ROUND_SETS[i + 1:])
-    if i + 1 < len(_ROUND_SETS) else rnd
-    for i, rnd in enumerate(_ROUND_SETS)
-)
-_DRIVER_CHECKED: frozenset[str] = frozenset().union(*_ROUND_SETS)
-
-# Low-risk queries pushed behind the rest of the unchecked set when the
-# unchecked set exceeds the driver's 50-query window. Empty since round
-# 5: every registered query now has a driver row (r01+r02+r04).
-_DEFERRED: tuple[str, ...] = ()
-
-# Queries whose oracle status or semantics CHANGED after their last
-# driver check, so their recorded evidence is stale regardless of age:
-# they slot directly behind the never-checked set. Round 15: the four
-# World/CDC write-path queries hit (or were latent-broken by) the
-# default-session lock-wipe crash — the r14 window's only ERR. The
-# round-15 fix (writer lock moved OUT of the Spark-owned data dir +
-# per-write dynamic partitionOverwriteMode on the first flush) must be
-# re-proved by the driver's own session, which is exactly the
-# environment that crashed them.
-_PRIORITY_RECHECK: tuple[str, ...] = (
-    "dmds_world_maintenance",
-    "dmds_crud_snapshot",
-    "cdc_world_merge",
-    "rollup_incremental_cdc",
-    # round-15 overflow hardening (ADVICE): confidence/lift and the
-    # Mann-Whitney rank sum moved to decimal(38,0)/HUGEINT exact
-    # arithmetic — values identical at test scales, re-prove anyway
-    "basket_association_rules",
-    "events_mannwhitney_u",
-    # round-15: moved rows-only -> full SQL oracle (grid-exact k-means
-    # CTE + threshold-compare cosine prune) — r13 evidence is
-    # no_oracle-vintage, re-prove under the hash gate
-    "dedup_semdedup_prune",
+_REPO_ROOT = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
 
-def _ordered_names() -> list[str]:
-    names = list(_REGISTRY)
-    front = [n for n in names
-             if n not in _DRIVER_CHECKED and n not in _DEFERRED]
-    recheck = [n for n in _PRIORITY_RECHECK if n in _REGISTRY]
-    deferred = [n for n in _DEFERRED if n in _REGISTRY]
-    back = [n for rnd in _CHECKED_ROUNDS for n in names
-            if n in rnd and n not in _PRIORITY_RECHECK]
-    return front + recheck + deferred + back
+def correctness_rounds(root: str = _REPO_ROOT) -> dict[int, dict[str, dict]]:
+    """Every ``CORRECTNESS_r{N}.json`` in ``root``, keyed by N."""
+    rounds = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        m = re.search(r"r(\d+)\.json$", path)
+        if m:
+            with open(path) as fh:
+                rounds[int(m.group(1))] = json.load(fh)
+    return rounds
+
+
+def latest_evidence(rounds: dict[int, dict[str, dict]]) -> dict[str, int]:
+    """Query name -> the last round whose entry for it is evidence
+    (see the module docstring)."""
+    last = {}
+    for rnd in sorted(rounds):
+        for name, entry in rounds[rnd].items():
+            if not entry.get("err") or entry["err"] == "no_oracle":
+                last[name] = rnd
+    return last
+
+
+def _ordered_names(root: str = _REPO_ROOT) -> list[str]:
+    last = latest_evidence(correctness_rounds(root))
+    # stable sort: never-checked (0) first, ties in registration order
+    return sorted(_REGISTRY, key=lambda n: last.get(n, 0))
 
 
 def all_queries() -> dict[str, QueryFn]:
@@ -491,6 +106,25 @@ def all_oracle_sql() -> dict[str, str]:
             if _REGISTRY[k][1] is not None}
 
 
+# Registration order, ``list(_REGISTRY)``: this module order, then
+# definition order within each module. It is frozen (append new modules
+# at the end); tests/test_query_registry.py pins it by hash.
+_MODULES = (
+    "dmds_core", "relational", "tpch_extra", "extra_ops", "sampling_q",
+    "llm_ops", "llm_dedup", "streaming_batch", "advanced", "llm_extra",
+    "llm_extra2", "events_q", "profiling_q", "llm_extra3", "llm_extra4",
+    "llm_extra5", "llm_extra6", "llm_extra7", "llm_extra8", "llm_extra9",
+    "llm_extra10", "llm_extra11", "llm_extra12", "llm_extra13", "llm_extra14",
+    "llm_extra15", "llm_extra16", "llm_extra17", "llm_extra18", "llm_extra19",
+    "llm_extra20", "llm_extra21", "round9", "round9b", "round9c", "round9d",
+    "round9e", "round9f", "round10", "round10b", "round10c", "round10d",
+    "round10e", "round10f", "round10g", "round10h", "round10i", "round11",
+    "round12", "round12b", "round12c", "round12d", "round12e", "round12f",
+    "round13", "round13b", "round13c", "round13d", "round13e", "round13f",
+    "round14", "round14b", "round14c", "round14d", "round14e", "round14f",
+    "round15", "round15b", "round15c", "round15d",
+)
+
 _LOADED = False
 
 
@@ -498,110 +132,15 @@ def _load():
     global _LOADED
     if _LOADED:
         return
-    # import for side effect: each module registers its queries
-    from dmds_spark.queries import dmds_core  # noqa: F401
-    from dmds_spark.queries import relational  # noqa: F401
-    from dmds_spark.queries import tpch_extra  # noqa: F401
-    from dmds_spark.queries import extra_ops  # noqa: F401
-    from dmds_spark.queries import sampling_q  # noqa: F401
-    from dmds_spark.queries import llm_ops  # noqa: F401
-    from dmds_spark.queries import llm_dedup  # noqa: F401
-    from dmds_spark.queries import streaming_batch  # noqa: F401
-    from dmds_spark.queries import advanced  # noqa: F401
-    # imported LAST: round-2 additions register behind the round-1
-    # unchecked set so they don't displace it from the driver's
-    # 50-query correctness window (see _ordered_names)
-    from dmds_spark.queries import llm_extra  # noqa: F401
-    from dmds_spark.queries import llm_extra2  # noqa: F401
-    from dmds_spark.queries import events_q  # noqa: F401
-    from dmds_spark.queries import profiling_q  # noqa: F401
-    # round-4 additions: queue behind the round-3-unchecked set (the
-    # front + these + deferred still fit the driver's 50-query window)
-    from dmds_spark.queries import llm_extra3  # noqa: F401
-    # round-5 additions (arrow fast-path variants + corpus operations)
-    from dmds_spark.queries import llm_extra4  # noqa: F401
-    from dmds_spark.queries import llm_extra5  # noqa: F401
-    from dmds_spark.queries import llm_extra6  # noqa: F401
-    from dmds_spark.queries import llm_extra7  # noqa: F401
-    # batch seven registers BEHIND the round-5 window (50 unchecked
-    # already queued): these lead round 6's driver evidence instead
-    from dmds_spark.queries import llm_extra8  # noqa: F401
-    # round-6 additions: queue behind the 15 round-5 never-checked
-    # queries at the front of the driver window (15 + these <= 50,
-    # leaving the remaining slots to rotate the oldest r01 evidence)
-    from dmds_spark.queries import llm_extra9  # noqa: F401
-    from dmds_spark.queries import llm_extra10  # noqa: F401
-    from dmds_spark.queries import llm_extra11  # noqa: F401
-    # round-7 additions: every pre-existing query has driver evidence
-    # (225/225 after r06), so these lead the round-7 window and the
-    # remaining slots rotate the oldest evidence
-    from dmds_spark.queries import llm_extra12  # noqa: F401
-    from dmds_spark.queries import llm_extra13  # noqa: F401
-    from dmds_spark.queries import llm_extra14  # noqa: F401
-    from dmds_spark.queries import llm_extra15  # noqa: F401
-    from dmds_spark.queries import llm_extra16  # noqa: F401
-    from dmds_spark.queries import llm_extra17  # noqa: F401
-    from dmds_spark.queries import llm_extra18  # noqa: F401
-    from dmds_spark.queries import llm_extra19  # noqa: F401
-    from dmds_spark.queries import llm_extra20  # noqa: F401
-    from dmds_spark.queries import llm_extra21  # noqa: F401
-    # round-9 additions: every pre-existing query has driver evidence
-    # (256/256 after r08), so these lead the round-9 window
-    from dmds_spark.queries import round9  # noqa: F401
-    from dmds_spark.queries import round9b  # noqa: F401
-    from dmds_spark.queries import round9c  # noqa: F401
-    from dmds_spark.queries import round9d  # noqa: F401
-    from dmds_spark.queries import round9e  # noqa: F401
-    from dmds_spark.queries import round9f  # noqa: F401
-    # round-10 additions: every pre-existing query has driver evidence
-    # (281/281 after r09), so these lead the round-10 window and the
-    # remaining slots rotate the oldest (r04-vintage) evidence
-    from dmds_spark.queries import round10  # noqa: F401
-    from dmds_spark.queries import round10b  # noqa: F401
-    from dmds_spark.queries import round10c  # noqa: F401
-    from dmds_spark.queries import round10d  # noqa: F401
-    from dmds_spark.queries import round10e  # noqa: F401
-    from dmds_spark.queries import round10f  # noqa: F401
-    from dmds_spark.queries import round10g  # noqa: F401
-    from dmds_spark.queries import round10h  # noqa: F401
-    from dmds_spark.queries import round10i  # noqa: F401
-    # round-11 additions: every pre-existing query has driver evidence
-    # (309/309 after r10), so these lead the round-11 window and the
-    # remaining slots rotate the oldest (r04/r05-vintage) evidence
-    from dmds_spark.queries import round11  # noqa: F401
-    # round-12 additions: every pre-existing query has driver evidence
-    # (318/318 after r11), so these lead the round-12 window and the
-    # remaining slots rotate the oldest (r05/r06-vintage) evidence
-    from dmds_spark.queries import round12  # noqa: F401
-    from dmds_spark.queries import round12b  # noqa: F401
-    from dmds_spark.queries import round12c  # noqa: F401
-    from dmds_spark.queries import round12d  # noqa: F401
-    from dmds_spark.queries import round12e  # noqa: F401
-    from dmds_spark.queries import round12f  # noqa: F401
-    # round-13 additions: every pre-existing query has driver evidence
-    # (340/340 after r12), so these lead the round-13 window and the
-    # remaining slots rotate the oldest (r06/r07-vintage) evidence
-    from dmds_spark.queries import round13  # noqa: F401
-    from dmds_spark.queries import round13b  # noqa: F401
-    from dmds_spark.queries import round13c  # noqa: F401
-    from dmds_spark.queries import round13d  # noqa: F401
-    from dmds_spark.queries import round13e  # noqa: F401
-    from dmds_spark.queries import round13f  # noqa: F401
-    # round-14 additions: every pre-existing query has driver evidence
-    # (357/357 after r13), so these lead the round-14 window and the
-    # remaining slots rotate the priority rechecks + oldest evidence
-    from dmds_spark.queries import round14  # noqa: F401
-    from dmds_spark.queries import round14b  # noqa: F401
-    from dmds_spark.queries import round14c  # noqa: F401
-    from dmds_spark.queries import round14d  # noqa: F401
-    from dmds_spark.queries import round14e  # noqa: F401
-    from dmds_spark.queries import round14f  # noqa: F401
-    # round-15 additions: every pre-existing query has driver evidence
-    # (375/375 after r14), so these lead the round-15 window with the
-    # four lock-fix priority rechecks right behind them
-    from dmds_spark.queries import round15  # noqa: F401
-    from dmds_spark.queries import round15b  # noqa: F401
-    from dmds_spark.queries import round15c  # noqa: F401
-    from dmds_spark.queries import round15d  # noqa: F401
-
+    # Import for side effect: each module registers its queries. A
+    # module imported on its own first (a test importing one builder)
+    # registers early, so restore the module order afterwards.
+    for m in _MODULES:
+        importlib.import_module(f"dmds_spark.queries.{m}")
+    rank = {f"dmds_spark.queries.{m}": i for i, m in enumerate(_MODULES)}
+    entries = sorted(
+        _REGISTRY.items(), key=lambda e: rank[e[1][0].__module__]
+    )
+    _REGISTRY.clear()
+    _REGISTRY.update(entries)
     _LOADED = True

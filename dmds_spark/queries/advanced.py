@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from dmds_spark.queries import register
 from dmds_spark.queries.relational import T, _dec
+from dmds_spark.sources.registry import load_events
 
 
 @register(
@@ -245,9 +246,7 @@ def timeseries_gapfill(spark, sf_dir):
     until the one join back to the hourly aggregate; the LOCF window
     partitions by type (bounded state, streaming-friendly). Exact
     DECIMAL fill values so both engines agree bit-for-bit."""
-    from dmds_spark.queries.streaming_batch import _events
-
-    ev = _events(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     step = 3_600_000_000  # one hour in microseconds
     hourly = ev.groupBy(
         F.unix_micros(F.window("ts", "1 hour").start).alias("ws_us"), "event_type"

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from dmds_spark.core.dims import DimSpec, WorldSpec
 from dmds_spark.core.select import Select
 from dmds_spark.queries import register
+from dmds_spark.sources.registry import load_events
 
 
 def events_world_spec() -> WorldSpec:
@@ -35,12 +36,6 @@ def events_world_spec() -> WorldSpec:
     )
 
 
-def _events(spark, sf_dir):
-    from dmds_spark.sources.registry import load_events
-
-    return load_events(spark, sf_dir)
-
-
 @register(
     "dmds_select_range",
     """
@@ -52,7 +47,7 @@ def _events(spark, sf_dir):
 def dmds_select_range(spark, sf_dir):
     """``world.select(1, 10..=40)`` (reference: src/world.rs:302-329)."""
     sel = Select.dim(events_world_spec(), 1, (10, 40))
-    return _events(spark, sf_dir).filter(sel.to_predicate()).select(
+    return load_events(spark, sf_dir).filter(sel.to_predicate()).select(
         "event_id", "user_id", "event_type"
     )
 
@@ -70,7 +65,7 @@ def dmds_select_and(spark, sf_dir):
     """``select(1, 10..=40).and(0, 1000..=8000)`` — box intersection
     (reference: src/world.rs:595-605 -> select.rs:273-291)."""
     sel = Select.dim(events_world_spec(), 1, (10, 40)).and_(0, (1000, 8000))
-    return _events(spark, sf_dir).filter(sel.to_predicate()).select("event_id", "user_id")
+    return load_events(spark, sf_dir).filter(sel.to_predicate()).select("event_id", "user_id")
 
 
 @register(
@@ -91,7 +86,7 @@ def dmds_select_plus(spark, sf_dir):
         .and_(0, (1000, 8000))
         .plus(1, (90, 99))
     )
-    return _events(spark, sf_dir).filter(sel.to_predicate()).select("event_id", "user_id")
+    return load_events(spark, sf_dir).filter(sel.to_predicate()).select("event_id", "user_id")
 
 
 @register(
@@ -109,7 +104,7 @@ def dmds_select_hints(spark, sf_dir):
     positions still prune partitions in the World path
     (SURVEY.md §4.3.3)."""
     sel = Select.all(events_world_spec()).hints([3, 17, 256, 999, 5000])
-    return _events(spark, sf_dir).filter(sel.to_predicate()).select(
+    return load_events(spark, sf_dir).filter(sel.to_predicate()).select(
         "event_id", "user_id", "event_type"
     )
 
@@ -126,7 +121,7 @@ def dmds_point_get(spark, sf_dir):
     this prunes to exactly one chunk (the reference's
     chunk_pos_of_data routing, src/world.rs:544-551)."""
     sel = Select.dim(events_world_spec(), 0, 42)
-    return _events(spark, sf_dir).filter(sel.to_predicate()).select(
+    return load_events(spark, sf_dir).filter(sel.to_predicate()).select(
         "event_id", "user_id", "event_type", "value"
     )
 
@@ -146,7 +141,7 @@ def dmds_select_half_open(spark, sf_dir):
     sel = Select.dim(events_world_spec(), 1, slice(100, 120)).and_(
         0, slice(None, 5000)
     )
-    return _events(spark, sf_dir).filter(sel.to_predicate()).select("event_id", "user_id")
+    return load_events(spark, sf_dir).filter(sel.to_predicate()).select("event_id", "user_id")
 
 
 @register(
@@ -160,7 +155,7 @@ def dmds_select_empty_domain(spark, sf_dir):
     reference's ``Shape::None`` (src/world.rs:313-317). Catalyst folds
     ``lit(False)`` to a LocalRelation: zero I/O."""
     sel = Select.dim(events_world_spec(), 1, (5000, 6000))
-    return _events(spark, sf_dir).filter(sel.to_predicate()).select("event_id", "user_id")
+    return load_events(spark, sf_dir).filter(sel.to_predicate()).select("event_id", "user_id")
 
 
 def events_world_spec_3d() -> WorldSpec:
@@ -201,7 +196,7 @@ def dmds_select_3d(spark, sf_dir):
         .and_(0, (1000, 200000))
         .plus(1, (90, 99))
     )
-    ev = _events(spark, sf_dir).withColumn(
+    ev = load_events(spark, sf_dir).withColumn(
         "day", F.dayofmonth("ts").cast("long")
     )
     return ev.filter(sel.to_predicate()).select("event_id", "user_id", "day")
@@ -226,6 +221,6 @@ def dmds_select_hinted_box(spark, sf_dir):
     sel = Select.dim(events_world_spec(), 1, (10, 40)).hints(
         [3, 17, 1024, 2048, 4096, 123456]
     )
-    return _events(spark, sf_dir).filter(sel.to_predicate()).select(
+    return load_events(spark, sf_dir).filter(sel.to_predicate()).select(
         "event_id", "user_id"
     )

@@ -25,6 +25,7 @@ from dmds_spark.operators.dedup import (
     jaccard_verify_pairs,
     minhash_lsh_candidates,
     minhash_signatures,
+    shared_shingles,
     simhash_pairs,
 )
 from dmds_spark.functions.text import (
@@ -37,19 +38,12 @@ from dmds_spark.functions.text import (
 )
 from dmds_spark.queries import register
 from dmds_spark.core.engine import materialize
+from dmds_spark.sources.registry import load_table
 
 NUM_HASHES = 16
 BANDS = 4
 ROWS = NUM_HASHES // BANDS
 K_SHINGLE = 3
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -116,7 +110,8 @@ def dedup_minhash_pairs(spark, sf_dir):
     4 bands -> bucket join -> signature-agreement estimate >= 0.5.
     One shuffle (the band-key join) — the web-scale near-dup shape."""
     return dedup_minhash(
-        _docs(spark, sf_dir), "text", "doc_id", NUM_HASHES, BANDS, 0.5
+        load_table(spark, sf_dir, "documents"),
+        "text", "doc_id", NUM_HASHES, BANDS, 0.5,
     )
 
 
@@ -134,7 +129,7 @@ def dedup_minhash_keep_first_q(spark, sf_dir):
     """Keep-canonical near-dedup: drop docs that near-duplicate a
     lower-id doc."""
     return dedup_minhash_keep_first(
-        _docs(spark, sf_dir), "text", "doc_id",
+        load_table(spark, sf_dir, "documents"), "text", "doc_id",
         num_hashes=NUM_HASHES, bands=BANDS, threshold=0.5,
     ).select("doc_id")
 
@@ -162,17 +157,10 @@ def dedup_jaccard_verify(spark, sf_dir):
     doc's distinct shingles equals min over its raw k-gram stream, so
     the signatures are bit-identical; guide §2.4 remove duplicate
     work)."""
-    from dmds_spark.operators.dedup import (
-        minhash_shingle_rows,
-        minhash_signatures_from_shingles,
+    docs = load_table(spark, sf_dir, "documents")
+    srows, sigs = shared_shingles(
+        docs, "text", "doc_id", K_SHINGLE, NUM_HASHES
     )
-    from dmds_spark.operators.parallel import ensure_parallelism
-
-    docs = ensure_parallelism(_docs(spark, sf_dir))
-    srows = minhash_shingle_rows(
-        docs, "text", "doc_id", K_SHINGLE
-    ).persist()
-    sigs = minhash_signatures_from_shingles(srows, "doc_id", NUM_HASHES)
     cand = minhash_lsh_candidates(sigs, "doc_id", NUM_HASHES, BANDS).select(
         "id_a", "id_b"
     )
@@ -221,7 +209,7 @@ def dedup_simhash_pairs(spark, sf_dir):
     EXACT), hamming <= 3 verify. 16 bits saturates on a
     shared-vocabulary corpus; 32 bits keeps the pair set selective."""
     return simhash_pairs(
-        _docs(spark, sf_dir), "text", "doc_id",
+        load_table(spark, sf_dir, "documents"), "text", "doc_id",
         num_bits=SIMHASH_BITS, max_hamming=SIMHASH_MAX_HAMMING,
         bands=SIMHASH_BANDS,
     )
@@ -260,7 +248,7 @@ _LANG_CASE_SQL = (
 def text_lang_id(spark, sf_dir):
     """Deterministic stopword-profile language ID (argmax hit rate,
     alphabetic tie-break, 'und' when nothing matches)."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     return d.select("doc_id", lang_id(words("text")).alias("lang_guess"))
 
 
@@ -276,7 +264,7 @@ def text_lang_id(spark, sf_dir):
 def text_bpe_token_count(spark, sf_dir):
     """Token counting with a BPE-style pretokenizer regex vs whitespace
     — the billing unit of every LLM pipeline."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         F.size(bpe_ish_tokens("text")).cast("bigint").alias("n_bpe_tokens"),
@@ -306,7 +294,7 @@ def text_rolling_fingerprint(spark, sf_dir):
     """Rolling-window fingerprint (min-md5 over char 8-grams, the
     select-minimum flavor of winnowing): fingerprint groups = near-dup
     clusters under small edits."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     return (
         d.select("doc_id", rolling_fingerprint("text", NGRAM).alias("fp"))
         .filter(F.col("fp").isNotNull())
@@ -370,7 +358,7 @@ def similarity_ann_lsh_topk(spark, sf_dir):
     bucket. At 100 TB the bucket column becomes the partition key and
     each query touches 1/16th of the data; the hyperplane constants are
     broadcast literals."""
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
 
     def dot_lit(vec_col, plane):
         return F.aggregate(
@@ -457,7 +445,7 @@ def dedup_cluster_assign(spark, sf_dir):
     exact same components."""
     from dmds_spark.operators.dedup import connected_components
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     pairs = dedup_minhash(docs, "text", "doc_id", NUM_HASHES, BANDS, 0.5)
     return connected_components(
         pairs, "id_a", "id_b", vertices=docs, id_col="doc_id"
@@ -520,7 +508,7 @@ def pipeline_curation(spark, sf_dir):
     oracle-checkable."""
     from dmds_spark.operators.dedup import dedup_exact as dedup_exact_op
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     toks = words("text")
     quality = docs.filter(
         (lang_id(toks) == "en")

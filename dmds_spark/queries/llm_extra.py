@@ -17,18 +17,11 @@ from pyspark.sql import functions as F
 from dmds_spark.operators.similarity import centroids_long, cosine
 from dmds_spark.queries import register
 from dmds_spark.queries.relational import T  # noqa: F401 (sf table loader)
+from dmds_spark.sources.registry import load_events, load_table
 
 _BUCKET_SQL = (
     "(('0x' || substr(md5(CAST({k} AS VARCHAR)), 1, 15))::BIGINT % 10000)"
 )
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 CAP_PER_SOURCE = 10
@@ -62,7 +55,7 @@ def sample_cap_per_source(spark, sf_dir):
     bounded window input (pinned in test_plans.py)."""
     from dmds_spark.operators.sampling import capped_per_group, hash_bucket
 
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     capped = capped_per_group(
         d.select("doc_id", "source"),
         "source",
@@ -112,7 +105,7 @@ def text_tfidf_topk(spark, sf_dir):
     single-row corpus count, then a per-doc window. The df table is
     vocabulary-sized — AQE picks broadcast vs shuffle for the score
     join."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tok.groupBy("term").agg(
@@ -178,7 +171,7 @@ def text_boilerplate_ngrams(spark, sf_dir):
     TakeOrderedAndProject, never a global sort."""
     from dmds_spark.operators.dedup import minhash_shingle_rows
 
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     sh = minhash_shingle_rows(d, "text", "doc_id", k=BOILER_K)
     return (
         sh.groupBy(F.col("__s").alias("shingle"))
@@ -213,8 +206,6 @@ def stream_dedup_events(spark, sf_dir):
     window), earliest (ts, event_id) wins. In streaming the watermark
     bounds the dedup state to one window's keys; here the same
     semantics is one window pass over the batch table."""
-    from dmds_spark.sources.registry import load_events
-
     ev = load_events(spark, sf_dir)
     w = W.partitionBy(
         "user_id", "event_type", F.window("ts", "10 minutes").start
@@ -254,7 +245,8 @@ def embedding_centroids(spark, sf_dir):
     every output column is scalar (the driver canonicalizer cannot
     hash array cells; queries/__init__.py). The array-assembling
     ``centroids`` operator stays for engine use (k-means M-step)."""
-    return centroids_long(_emb(spark, sf_dir), "label", "embedding")
+    emb = load_table(spark, sf_dir, "embeddings")
+    return centroids_long(emb, "label", "embedding")
 
 
 _KM_K = 8
@@ -345,7 +337,7 @@ def embedding_kmeans_assign(spark, sf_dir):
     cid row_number runs over the already-limited ≤K rows. The argmin
     tie-break key is zero-padded (dist, cid) — dist <= 64 *
     (2*2^22)^2 ~ 4.5e15 < 10^20, so the 20-char pad never truncates."""
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     q = emb.select(
         "vec_id",
         F.expr(
@@ -524,7 +516,7 @@ def similarity_knn_batch(spark, sf_dir):
     fully distributed. The exact-scan baseline for the LSH/IVF paths,
     batched; swap the crossJoin for lsh_blocked_pairs at corpus
     scale."""
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < KNN_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )

@@ -13,14 +13,7 @@ from pyspark.sql import functions as F
 
 from dmds_spark.queries import register
 from dmds_spark.core.engine import materialize
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+from dmds_spark.sources.registry import load_events, load_table
 
 
 # ---------------------------------------------------------------------------
@@ -55,7 +48,9 @@ def tokens_bpe_merge_candidates(spark, sf_dir):
     one partial-combined count shuffle, TakeOrdered(30) by the total
     order (n desc, pair) — identical shape to text_ngram_topk, which
     has been driver-green since round 4."""
-    tok = _docs(spark, sf_dir).select(F.split("text", " ").alias("t"))
+    tok = load_table(spark, sf_dir, "documents").select(
+        F.split("text", " ").alias("t")
+    )
     pairs = tok.filter(F.size("t") >= 2).select(
         F.explode(
             F.expr(
@@ -117,7 +112,7 @@ def text_pii_counts(spark, sf_dir):
     agree EXACTLY on sparse counts too (zero-inflated columns are
     where miscounts hide). One scan, regexp_count per pattern fused
     into the same projection, one partial-combined aggregate."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     aggs = [F.count(F.lit(1)).cast("bigint").alias("n_docs")]
     any_hit = None
     for name, p in _PII_PATTERNS.items():
@@ -177,7 +172,7 @@ def text_vocab_growth(spark, sf_dir):
     aggregate to exactly 10 rows, and the cumulative sum runs
     on those 10 rows (a calendar-bounded-style tiny window —
     never over data-sized partitions)."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("t"))
     firsts = tok.groupBy("t").agg(F.min("doc_id").alias("first_doc"))
     mx = d.agg(F.max("doc_id").alias("mx"))
@@ -279,7 +274,7 @@ def similarity_lsh_recall_report(spark, sf_dir):
     from dmds_spark.operators.similarity import cosine
     from dmds_spark.queries.llm_dedup import ANN_PLANES, _hyperplane
 
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
 
     def dot_lit(vec_col, plane):
         return F.aggregate(
@@ -485,7 +480,7 @@ def sample_systematic_every_k(spark, sf_dir):
     driver) — no single-partition window."""
     from dmds_spark.operators.relational import global_row_number
 
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.md5(F.col("doc_id").cast("string")).alias("__h")
     )
     r = global_row_number(d, ["__h", "doc_id"], out="rnk")
@@ -530,8 +525,6 @@ def events_inter_arrival_histogram(spark, sf_dir):
     thresholds, so both engines bin identically (no float log
     bucketing). One (user, type)-partitioned lag window + one count
     shuffle."""
-    from dmds_spark.sources.registry import load_events
-
     ev = load_events(spark, sf_dir)
     w = W.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     g = ev.select(

@@ -14,10 +14,7 @@ from pyspark.sql import functions as F
 
 from dmds_spark.queries import register
 from dmds_spark.core.engine import materialize
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from dmds_spark.sources.registry import load_events, load_table
 
 
 # ---------------------------------------------------------------------------
@@ -147,7 +144,7 @@ def text_repetition_profile(spark, sf_dir):
     doc_id (high cardinality, no skew pole); the per-source rollup is
     the only small aggregate. Short docs (< 3 words) count as
     non-repetitive via the left join, not silently dropped."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.split("text", " ").alias("t"))
     tri = tok.filter(F.size("t") >= 3).select(
         "doc_id",
@@ -271,7 +268,7 @@ def tokens_vocab_truncation_loss(spark, sf_dir):
     sorting the whole vocabulary. The window that assigns rnk runs
     post-limit over k rows, bounded by construction. Totals (stream
     size, type count) fold over the full count table in parallel."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     cnt = (
         d.select(F.explode(F.split("text", " ")).alias("t"))
         .groupBy("t")
@@ -350,9 +347,10 @@ def graph_supplier_jaccard(spark, sf_dir):
     over edges. Jaccard is one division of exact integers; top-20 by
     the (jaccard, supp_a, supp_b) total order."""
     from dmds_spark.operators.graph import common_neighbor_counts
-    from dmds_spark.queries.llm_extra6 import _li
 
-    li = _li(spark, sf_dir).select("l_orderkey", "l_suppkey")
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_suppkey"
+    )
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_custkey"
     )
@@ -409,8 +407,6 @@ def events_weekday_hour_heatmap(spark, sf_dir):
     cross-engine silent mismatch (it would hash-fail here, which is
     the point of pinning it). One aggregate; distinct users via the
     exact count (the HLL variant is the rollup operator's job)."""
-    from dmds_spark.sources.registry import load_events
-
     ev = load_events(spark, sf_dir)
     return ev.groupBy(
         (F.dayofweek("ts") - 1).cast("bigint").alias("dow"),
@@ -472,7 +468,7 @@ def multimodal_byte_histogram(spark, sf_dir):
         media_table_from_documents,
     )
 
-    media = media_table_from_documents(_docs(spark, sf_dir))
+    media = media_table_from_documents(load_table(spark, sf_dir, "documents"))
     h = extract_byte_histograms(media, bins=16)
     return h.select(
         "media_id", F.posexplode("histogram").alias("bin", "share")
@@ -572,8 +568,6 @@ def events_attribution_linear(spark, sf_dir):
     predicates post-join, co-partitioned on user at scale); the
     per-purchase touch count is one extra purchase-keyed aggregate
     instead of a rank window."""
-    from dmds_spark.sources.registry import load_events
-
     ev = load_events(spark, sf_dir)
     p = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"), "user_id",
@@ -678,7 +672,7 @@ def dedup_method_agreement(spark, sf_dir):
         SIMHASH_MAX_HAMMING,
     )
 
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     mh = dedup_minhash(d, "text", "doc_id", NUM_HASHES, BANDS, 0.5).select(
         "id_a", "id_b", F.lit(1).alias("in_mh")
     )
@@ -742,9 +736,9 @@ def graph_khop_reachability(spark, sf_dir):
     double-count). At 100 TB each hop is one shuffle keyed on the
     frontier side; unbounded reachability belongs to the iterative
     min-label CC operator (dedup_cluster_assign), not this query."""
-    from dmds_spark.queries.llm_extra6 import _li
-
-    li = _li(spark, sf_dir).select("l_orderkey", "l_suppkey")
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_suppkey"
+    )
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_custkey"
     )

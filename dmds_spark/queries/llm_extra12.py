@@ -16,10 +16,7 @@ from pyspark.sql import functions as F
 
 from dmds_spark.queries import register
 from dmds_spark.core.engine import materialize
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from dmds_spark.sources.registry import load_events, load_table
 
 
 # ---------------------------------------------------------------------------
@@ -51,7 +48,7 @@ def _grams(spark, sf_dir):
     """Every word-8-gram occurrence: (doc_id, source, g). Token-stream
     sized — the expensive projection all three span queries start
     from. slice/sequence keeps it in whole-stage codegen (no UDF)."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", "source", F.split("text", " ").alias("t"))
     return tok.filter(F.size("t") >= _SPAN_N).select(
         "doc_id",
@@ -259,7 +256,7 @@ def text_token_rarity_score(spark, sf_dir):
     histogram; the common-word mass never enters the join. Per-doc
     token counts come straight from the split (no join), and docs with
     zero rare tokens survive via the left join."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
     rare = (
         tok.groupBy("w")
@@ -335,8 +332,6 @@ def events_transition_lift(spark, sf_dir):
     One per-user sort window builds the transitions; the three
     marginal aggregates fold from the same pairs frame; marginals are
     |event-type|^2-sized — broadcast onto the pair counts."""
-    from dmds_spark.sources.registry import load_events
-
     ev = load_events(spark, sf_dir)
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (

@@ -15,10 +15,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from dmds_spark.queries import register
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from dmds_spark.sources.registry import load_table
 
 
 # The aHash of the synthesized media is DECLARATIVE ARITHMETIC (the
@@ -112,7 +109,7 @@ def multimodal_phash_neardup(spark, sf_dir):
         phash_candidate_pairs,
     )
 
-    media = media_table_from_documents(_docs(spark, sf_dir))
+    media = media_table_from_documents(load_table(spark, sf_dir, "documents"))
     pairs = phash_candidate_pairs(perceptual_hashes(media))
     return (
         pairs.groupBy("hamming")
@@ -147,7 +144,7 @@ def multimodal_audio_vad(spark, sf_dir):
         media_table_from_documents,
     )
 
-    media = media_table_from_documents(_docs(spark, sf_dir))
+    media = media_table_from_documents(load_table(spark, sf_dir, "documents"))
     frames = audio_frame_features(media)
     totals = frames.groupBy("media_id").agg(
         F.count(F.lit(1)).alias("n_frames_total"),

@@ -19,10 +19,7 @@ from pyspark.sql import functions as F
 from dmds_spark.queries import register
 from dmds_spark.queries.llm_extra12 import _SPAN_N
 from dmds_spark.core.engine import materialize
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from dmds_spark.sources.registry import load_table
 
 
 # ---------------------------------------------------------------------------
@@ -75,7 +72,7 @@ def dedup_span_coverage(spark, sf_dir):
     both keyed on doc_id, no skew pole; the gram-stats join reuses the
     same g-keyed shuffle as the other span queries."""
     # llm_extra12._grams drops positions; this variant carries them
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", "source", F.split("text", " ").alias("t"))
     grams = (
         tok.filter(F.size("t") >= _SPAN_N)
@@ -195,7 +192,9 @@ def text_source_tv_distance(spark, sf_dir):
     run per-token partial mins keyed on token — same join, the source
     pair count is the fan-out, never the corpus."""
     srcs = _TV_SOURCES
-    d = _docs(spark, sf_dir).filter(F.col("source").isin(*srcs))
+    d = load_table(spark, sf_dir, "documents").filter(
+        F.col("source").isin(*srcs)
+    )
     cnt = (
         d.select("source", F.explode(F.split("text", " ")).alias("w"))
         .groupBy("source", "w")
@@ -278,7 +277,7 @@ def text_vocab_gini_impurity(spark, sf_dir):
     One (source, token) aggregate, one per-source fold. sum(c^2) <=
     N^2 (~1e12 at sf0.1, int64-safe; at 100 TB switch the numerator to
     DECIMAL(38,0) — the expression is otherwise unchanged)."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     cnt = (
         d.select("source", F.explode(F.split("text", " ")).alias("w"))
         .groupBy("source", "w")

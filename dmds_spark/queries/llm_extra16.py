@@ -88,24 +88,16 @@ def dedup_minhash_recall_report(spark, sf_dir):
     from dmds_spark.functions.text import minhash_jaccard_estimate
     from dmds_spark.operators.dedup import (
         minhash_lsh_candidates,
-        minhash_shingle_rows,
-        minhash_signatures_from_shingles,
+        shared_shingles,
     )
-    from dmds_spark.operators.parallel import ensure_parallelism
 
-    d = ensure_parallelism(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id", "text"
-        )
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "text"
     )
-    # shingle the corpus ONCE: the persisted distinct rows feed the
-    # detector's signatures (bit-identical — min over a doc's distinct
-    # shingles equals min over its raw k-gram stream) AND the exact
+    # the shingle rows feed the detector's signatures AND the exact
     # truth side's inverted index, which consumes them three more
-    # times (sz + both join sides); previously four separate shingle
-    # passes (guide §2.4)
-    srows = minhash_shingle_rows(d, "text", "doc_id", K_SHINGLE).persist()
-    sigs = minhash_signatures_from_shingles(srows, "doc_id", NUM_HASHES)
+    # times (sz + both join sides)
+    srows, sigs = shared_shingles(d, "text", "doc_id", K_SHINGLE, NUM_HASHES)
     est = minhash_jaccard_estimate(
         F.col("sig_a"), F.col("sig_b"), NUM_HASHES
     )

@@ -12,10 +12,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from dmds_spark.queries import register
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from dmds_spark.sources.registry import load_events, load_table
 
 
 # ---------------------------------------------------------------------------
@@ -135,7 +132,7 @@ def sample_neyman_allocation(spark, sf_dir):
 
     Shape: one data-sized aggregate folds to #sources rows; every
     window after that is over the stratum table."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     s = d.groupBy("source").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.length("text")).alias("s1"),
@@ -264,8 +261,6 @@ def agg_hll_calibration(spark, sf_dir):
     Shape: the exact count is the expensive side (full distinct
     shuffle) — which is exactly why the rollup stores the sketch; this
     query is the calibration you run once per corpus, not nightly."""
-    from dmds_spark.sources.registry import load_events
-
     ev = load_events(spark, sf_dir)
     return (
         ev.groupBy("event_type")

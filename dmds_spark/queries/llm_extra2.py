@@ -19,10 +19,7 @@ from dmds_spark.functions.text import words
 from dmds_spark.operators.sampling import hash_bucket
 from dmds_spark.queries import register
 from dmds_spark.queries.llm_dedup import SHINGLES_SQL  # k=3 word shingles
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from dmds_spark.sources.registry import load_table
 
 
 # ---------------------------------------------------------------------------
@@ -64,7 +61,7 @@ def text_contamination_ngram(spark, sf_dir):
     """
     from dmds_spark.operators.dedup import word_kgram_rows
 
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     # posexplode+lead k-grams (the codegen-stable shape shared with
     # MinHash) — the array-HOF word_shingles form ran interpreted and
     # was 10x this stage's cost at sf0.1
@@ -131,7 +128,7 @@ def tokens_pack_sequences(spark, sf_dir):
     """
     from dmds_spark.operators.relational import sharded_exclusive_cumsum
 
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     t = d.select("doc_id", "source", F.size(words("text")).alias("n_tokens"))
     c = sharded_exclusive_cumsum(t, "source", ["doc_id"], "n_tokens", "cb")
     cum_before = F.col("cb")
@@ -228,7 +225,7 @@ def text_gopher_rules(spark, sf_dir):
     whole-stage codegen, and the keep flag composes with the scan
     filter of a downstream curation query (predicate pushdown applies).
     """
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     t = d.select(
         "doc_id",
         words("text").alias("toks"),
@@ -292,7 +289,7 @@ def sample_split_by_source(spark, sf_dir):
     sources dimension join (cheaper than a join below ~hundreds of
     bytes per row, and always deterministic).
     """
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     b = hash_bucket(F.col("source"))
     split = (
         F.when(b < 8000, "train").when(b < 9000, "val").otherwise("test")
@@ -383,7 +380,7 @@ def pipeline_pretrain_corpus(spark, sf_dir):
     from dmds_spark.operators.dedup import kgram_rows_from_tokens
     from dmds_spark.operators.relational import sharded_exclusive_cumsum
 
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     base = d.select(
         "doc_id",
         "source",

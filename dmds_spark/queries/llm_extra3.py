@@ -22,10 +22,7 @@ from dmds_spark.queries import register
 from dmds_spark.queries.llm_extra import _BUCKET_SQL  # hash_bucket's SQL twin
 from dmds_spark.queries.llm_extra2 import SEQ_LEN, _int_div
 from dmds_spark.core.engine import materialize
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from dmds_spark.sources.registry import load_events, load_table
 
 
 # ---------------------------------------------------------------------------
@@ -68,7 +65,7 @@ def text_vocab_coverage(spark, sf_dir):
     token stream; the only wide stage is the per-doc count shuffle on
     doc_id. A vocab of 100k-1M (real tokenizer sizes) still broadcasts
     in MBs."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(words("text")).alias("w"))
     vocab = (
         tok.groupBy("w")
@@ -129,7 +126,7 @@ def text_cooccurrence_topk(spark, sf_dir):
     shuffle on the pair and a TakeOrdered top-N. The tie-break string
     'a b' sorts identically to the (a, b) tuple because the space
     separator is below every token character."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.posexplode(words("text")).alias("pos", "w"))
     win = W.partitionBy("doc_id").orderBy("pos")
     pairs = tok.select(
@@ -187,7 +184,6 @@ def events_conversion_latency(spark, sf_dir):
     (sort-based exact here; swap approx_percentile at 100 TB user
     counts, documented divergence)."""
     from dmds_spark.operators.events import funnel_step_times
-    from dmds_spark.sources.registry import load_events
 
     e = load_events(spark, sf_dir)
     ft = funnel_step_times(e, ["view", "click", "purchase"])
@@ -231,7 +227,7 @@ def tokens_chunk_overlap(spark, sf_dir):
     fan-out is bounded by corpus token count / stride. The degenerate
     single-partition hazard of packing does not apply: spans are
     per-doc independent."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     n = F.size(words("text"))
     t = d.select("doc_id", n.alias("n"))
     s = F.explode(
@@ -283,7 +279,7 @@ def sample_balanced_by_lang(spark, sf_dir):
     through one window task."""
     from dmds_spark.operators.sampling import capped_per_group
 
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     m = (
         d.groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -335,7 +331,6 @@ def join_range_attribution(spark, sf_dir):
     windows. All time arithmetic in exact integer microseconds, so
     the boundary semantics hash-match any engine."""
     from dmds_spark.operators.relational import bucketized_range_join
-    from dmds_spark.sources.registry import load_events
 
     e = load_events(spark, sf_dir)
     views = e.filter(F.col("event_type") == "view").select(
@@ -410,7 +405,7 @@ def tokens_pack_spans(spark, sf_dir):
     ceil(n/L)+1 elements — no further shuffle. All integer arithmetic."""
     from dmds_spark.operators.relational import sharded_exclusive_cumsum
 
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     t = d.select(
         "doc_id", "source", F.size(words("text")).alias("n_tokens")
     ).filter(F.col("n_tokens") > 0)
@@ -563,7 +558,7 @@ def multimodal_audio_energy(spark, sf_dir):
         media_table_from_documents,
     )
 
-    media = media_table_from_documents(_docs(spark, sf_dir))
+    media = media_table_from_documents(load_table(spark, sf_dir, "documents"))
     frames = audio_frame_features(media)
     return frames.groupBy("media_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_frames"),
@@ -773,7 +768,7 @@ def dedup_cluster_keep_best(spark, sf_dir):
         dedup_minhash,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     pairs = dedup_minhash(docs, "text", "doc_id", NUM_HASHES, BANDS, 0.5)
     clusters = connected_components(
         pairs, "id_a", "id_b", vertices=docs, id_col="doc_id"
@@ -834,8 +829,6 @@ def events_daily_anomalies(spark, sf_dir):
     Scale shape: the daily rollup is one map-side-partial count
     shuffle; the per-type stats are a tiny second aggregate that
     broadcasts back onto the daily rows."""
-    from dmds_spark.sources.registry import load_events
-
     e = load_events(spark, sf_dir)
     daily = e.groupBy(
         "event_type", F.date_trunc("day", "ts").cast("date").alias("d")

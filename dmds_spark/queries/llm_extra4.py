@@ -21,14 +21,7 @@ from dmds_spark.queries.llm_ops import (
     LSH_PLANES,
     LSH_TABLES,
 )
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+from dmds_spark.sources.registry import load_events, load_table
 
 
 # ---------------------------------------------------------------------------
@@ -66,7 +59,7 @@ def dedup_embedding_neardup_arrow(spark, sf_dir):
         pair_cosine_rows_arrow,
     )
 
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     cand = lsh_blocked_pairs(
         e, "vec_id", "embedding", LSH_TABLES, LSH_PLANES, arrow=True
     )
@@ -97,7 +90,7 @@ def similarity_pairs_threshold_arrow(spark, sf_dir):
         pair_cosine_rows_arrow,
     )
 
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     cand = lsh_blocked_pairs(
         e, "vec_id", "embedding", LSH_TABLES, LSH_PLANES, arrow=True
     )
@@ -147,7 +140,7 @@ def tokens_domain_mixture(spark, sf_dir):
     Scale shape: one map-side-partial sum shuffle to source grain
     (sources are few: the aggregate is tiny), then a broadcast of the
     single-row total."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     per = d.groupBy("source").agg(
         F.sum(F.size(F.split("text", " "))).alias("tok")
     )
@@ -205,8 +198,6 @@ def events_user_path_topk(spark, sf_dir):
     (high-cardinality key — never a skew hazard), one map-side-partial
     count shuffle on the path string, TakeOrderedAndProject for the
     top-k (never a global sort). Total order via (n desc, path)."""
-    from dmds_spark.sources.registry import load_events
-
     e = load_events(spark, sf_dir)
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     seq = e.select(
@@ -311,8 +302,6 @@ def events_inter_arrival_median(spark, sf_dir):
     operators/relational.py) is the drop-in at 100 TB if type
     cardinality stays tiny while rows grow. Ties share a gap value, so
     WHICH tied row takes rank m doesn't change the reported median."""
-    from dmds_spark.sources.registry import load_events
-
     e = load_events(spark, sf_dir)
     w = W.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     gaps = e.select(
@@ -389,7 +378,7 @@ def profile_field_completeness(spark, sf_dir):
     aggregate, not extra scans. Exact COUNT(DISTINCT) here because the
     oracle needs determinism; profile_column_stats carries the HLL
     variant for the 100 TB path."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     string_cols = {"text", "lang", "source"}
     cols = ["doc_id", "text", "lang", "source", "n_chars"]
     aggs = [F.count(F.lit(1)).alias("n_rows")]
@@ -456,7 +445,7 @@ def embedding_quantize_int8(spark, sf_dir):
     back onto the component stream — never a second corpus shuffle.
     The long layout is the natural parquet shape for a code matrix
     consumed columnarly downstream."""
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     r = e.select(
         "vec_id",
         F.posexplode(F.col("embedding")).alias("pos", "xf"),
@@ -558,7 +547,7 @@ def similarity_quantized_rerank_topk(spark, sf_dir):
         .limit(RERANK_CANDIDATES)
         .select("vec_id")
     )
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     qv = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
 
     def dot(a, c):

@@ -27,18 +27,7 @@ from dmds_spark.queries.llm_dedup import (
     NUM_HASHES,
     _CLUSTER_SQL,
 )
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
-def _events(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
+from dmds_spark.sources.registry import load_events, load_table
 
 
 # ---------------------------------------------------------------------------
@@ -67,7 +56,7 @@ def text_zipf_topk(spark, sf_dir):
     one count shuffle; the top-k is TakeOrdered (never a global sort)
     and the rank window runs over the already-limited 50 rows, so the
     single-partition window touches k rows, not the corpus."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select(F.explode(words("text")).alias("token"))
     top = (
         tok.groupBy("token")
@@ -110,19 +99,13 @@ def dedup_containment_verify(spark, sf_dir):
     from dmds_spark.operators.dedup import (
         containment_verify_pairs,
         minhash_lsh_candidates,
-        minhash_shingle_rows,
-        minhash_signatures_from_shingles,
+        shared_shingles,
     )
-    from dmds_spark.operators.parallel import ensure_parallelism
 
-    # shingle ONCE: the persisted distinct rows feed the signature
-    # stage and all three verify consumers (guide §2.4; signatures over
-    # distinct shingles are bit-identical — min is idempotent)
-    docs = ensure_parallelism(_docs(spark, sf_dir))
-    srows = minhash_shingle_rows(
-        docs, "text", "doc_id", K_SHINGLE
-    ).persist()
-    sigs = minhash_signatures_from_shingles(srows, "doc_id", NUM_HASHES)
+    docs = load_table(spark, sf_dir, "documents")
+    srows, sigs = shared_shingles(
+        docs, "text", "doc_id", K_SHINGLE, NUM_HASHES
+    )
     cand = minhash_lsh_candidates(sigs, "doc_id", NUM_HASHES, BANDS).select(
         "id_a", "id_b"
     )
@@ -169,7 +152,7 @@ def graph_triangle_count(spark, sf_dir):
     would be a written intermediate, hash-partitioned on u."""
     from dmds_spark.operators.dedup import dedup_minhash
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     edges = (
         dedup_minhash(docs, "text", "doc_id", NUM_HASHES, BANDS, 0.5)
         .select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
@@ -282,7 +265,7 @@ def embedding_norm_stats(spark, sf_dir):
     — a float fold would hash-differ between engines on summation
     order. Pure per-row scan + one 5-group aggregate: no shuffle
     beyond the final tiny exchange."""
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     elem = lambda x: F.round(x.cast("double") * 1000000.0, 0).cast("long")  # noqa: E731
     sq = F.aggregate(
         F.transform(F.col("embedding"), lambda x: elem(x) * elem(x)),
@@ -321,7 +304,7 @@ def tokens_length_histogram(spark, sf_dir):
     packing-efficiency and truncation-loss planning input (how much of
     each source exceeds the sequence length). Single scan, one
     aggregate; bucket arithmetic is integer div on both engines."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     n = F.size(words("text")).cast("long")
     bucket = F.expr("(size(split(text, ' ')) div 10) * 10").cast("long")
     return (
@@ -332,10 +315,6 @@ def tokens_length_histogram(spark, sf_dir):
             F.sum("__n").cast("long").alias("total_tokens"),
         )
     )
-
-
-def _lineitem(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/lineitem.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -397,7 +376,8 @@ def dedup_fuzzy_fingerprint_pairs(spark, sf_dir):
     from dmds_spark.functions.text import rolling_fingerprint
 
     return fuzzy_pairs_blocked(
-        _docs(spark, sf_dir), rolling_fingerprint("text", _FP_NGRAM)
+        load_table(spark, sf_dir, "documents"),
+        rolling_fingerprint("text", _FP_NGRAM),
     )
 
 
@@ -475,7 +455,7 @@ def market_basket_pairs(spark, sf_dir):
     per-group cross products — never an unbounded cross join; top-k is
     TakeOrdered with a total-order tie-break."""
     li = (
-        _lineitem(spark, sf_dir)
+        load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
@@ -538,8 +518,6 @@ def events_scd2_intervals(spark, sf_dir):
     (user_id; ts, event_id) sort order, so Spark reuses ONE sort-shuffle
     for both; the open interval carries an integer sentinel instead of
     NULL (dtype-stable hashing, see _SCD2_OPEN_US)."""
-    from dmds_spark.sources.registry import load_events
-
     ev = load_events(spark, sf_dir)
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     chg = F.when(
@@ -604,8 +582,6 @@ def events_attribution_last_touch(spark, sf_dir):
     standard attribution shape; at 100 TB both sides partition on
     user_id so the join is co-located and the window state is one row
     per purchase. Gap arithmetic is exact integer microseconds."""
-    from dmds_spark.sources.registry import load_events
-
     ev = load_events(spark, sf_dir)
     p = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"),
@@ -658,7 +634,7 @@ def multimodal_audio_resample(spark, sf_dir):
         media_table_from_documents,
     )
 
-    media = media_table_from_documents(_docs(spark, sf_dir))
+    media = media_table_from_documents(load_table(spark, sf_dir, "documents"))
     res = audio_resample(media, factor=2)
 
     @F.pandas_udf(T.LongType())
@@ -706,7 +682,7 @@ def dedup_cluster_size_dist(spark, sf_dir):
     (operators/dedup.py)."""
     from dmds_spark.operators.dedup import connected_components, dedup_minhash
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     pairs = dedup_minhash(docs, "text", "doc_id", NUM_HASHES, BANDS, 0.5)
     assign = connected_components(
         pairs, "id_a", "id_b", vertices=docs, id_col="doc_id"

@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 
 from dmds_spark.core.engine import maybe_broadcast
 from dmds_spark.operators.relational import (
+    CENTS_SQL,
+    cents,
     global_row_number,
     ntile_from_rn,
     sharded_exclusive_cumsum,
@@ -40,28 +42,7 @@ from dmds_spark.queries.llm_dedup import (
     EST_SQL,
     NUM_HASHES,
 )
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _li(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-
-
-def _events(spark, sf_dir):
-    from dmds_spark.sources.registry import load_events
-
-    return load_events(spark, sf_dir)
-
-
-# integer-cents projections (exact: source doubles carry <= 2 dp)
-def _cents(col, prec="decimal(12,2)"):
-    return (F.col(col).cast(prec) * 100).cast("long")
-
-
-_CENTS_SQL = "CAST(CAST({c} AS DECIMAL(12,2)) * 100 AS BIGINT)"
+from dmds_spark.sources.registry import load_events, load_table
 
 
 # ---------------------------------------------------------------------------
@@ -83,8 +64,8 @@ _COV_AGG_SQL = """
     "profile_covariance",
     f"""
     WITH c AS (
-      SELECT {_CENTS_SQL.format(c='l_quantity')} AS q,
-             {_CENTS_SQL.format(c='l_extendedprice')} AS p,
+      SELECT {CENTS_SQL.format(c='l_quantity')} AS q,
+             {CENTS_SQL.format(c='l_extendedprice')} AS p,
              CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT) AS d
       FROM lineitem
     ), a AS ({_COV_AGG_SQL})
@@ -123,10 +104,10 @@ def profile_covariance(spark, sf_dir):
     DuckDB's HUGEINT->DOUBLE cast is not correctly rounded there
     (see parts_price_dispersion); the per-column sums stay DOUBLE —
     they are below 2^53 at the oracle's sf0.01 so the cast is exact."""
-    li = _li(spark, sf_dir)
+    li = load_table(spark, sf_dir, "lineitem")
     c = li.select(
-        _cents("l_quantity").alias("q"),
-        _cents("l_extendedprice").alias("p"),
+        cents("l_quantity").alias("q"),
+        cents("l_extendedprice").alias("p"),
         (F.col("l_discount").cast("decimal(4,2)") * 100)
         .cast("long")
         .alias("d"),
@@ -165,7 +146,7 @@ def profile_covariance(spark, sf_dir):
     "profile_equidepth_bins",
     f"""
     WITH r AS (
-      SELECT {_CENTS_SQL.format(c='l_extendedprice')} AS pc,
+      SELECT {CENTS_SQL.format(c='l_extendedprice')} AS pc,
              l_orderkey, l_linenumber
       FROM lineitem
     ), b AS (
@@ -190,8 +171,8 @@ def profile_equidepth_bins(spark, sf_dir):
     ``ntile_from_rn`` turns rank + total count into the SQL-standard
     bucket in pure integer math (exact past 2^53 rows). The total count
     is parquet row-group metadata (a metadata-only job, no data scan)."""
-    li = _li(spark, sf_dir).select(
-        _cents("l_extendedprice").alias("pc"), "l_orderkey", "l_linenumber"
+    li = load_table(spark, sf_dir, "lineitem").select(
+        cents("l_extendedprice").alias("pc"), "l_orderkey", "l_linenumber"
     )
     n = li.count()
     ranked = global_row_number(
@@ -243,7 +224,7 @@ def dedup_cross_source_overlap(spark, sf_dir):
     plus two shuffle equi-joins."""
     from dmds_spark.operators.dedup import dedup_minhash
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     pairs = dedup_minhash(docs, "text", "doc_id", NUM_HASHES, BANDS, 0.5)
     src = docs.select("doc_id", "source")
     j = (
@@ -299,7 +280,7 @@ def events_transition_counts(spark, sf_dir):
     shuffle balances) and one count shuffle over at most |types|^2
     groups. State per window frame is one row; never a per-user
     collect."""
-    ev = _events(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     s = ev.select(
         "event_type", F.lead("event_type").over(w).alias("next_type")
@@ -354,7 +335,7 @@ def events_time_weighted_value(spark, sf_dir):
     rounded — see parts_price_dispersion); den_us stays double (below
     2^53 at the oracle scale). num/den are emitted separately (division would reintroduce
     engine-specific rounding)."""
-    ev = _events(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     w = W.partitionBy("event_type", "user_id").orderBy("ts", "event_id")
     dec = "decimal(38,0)"
     s = ev.select(
@@ -387,7 +368,7 @@ def events_time_weighted_value(spark, sf_dir):
     f"""
     WITH r AS (
       SELECT l_suppkey AS s_suppkey,
-             SUM(CAST({_CENTS_SQL.format(c='l_extendedprice')} *
+             SUM(CAST({CENTS_SQL.format(c='l_extendedprice')} *
                       (100 - CAST(CAST(l_discount AS DECIMAL(4,2)) * 100
                                   AS BIGINT)) AS HUGEINT)) AS rev
       FROM lineitem GROUP BY 1
@@ -421,13 +402,13 @@ def suppliers_pareto_class(spark, sf_dir):
     that's 10M rows at 100 TB: still far too big for the naive
     single-partition ORDER BY window this avoids. Class thresholds are
     integer cross-multiplications (5*cum <= 4*total), never a ratio."""
-    li = _li(spark, sf_dir)
+    li = load_table(spark, sf_dir, "lineitem")
     dec = "decimal(38,0)"
     disc_pct = (F.col("l_discount").cast("decimal(4,2)") * 100).cast("long")
     rev = (
         li.select(
             F.col("l_suppkey").alias("s_suppkey"),
-            (_cents("l_extendedprice") * (100 - disc_pct))
+            (cents("l_extendedprice") * (100 - disc_pct))
             .cast(dec)
             .alias("rev_row"),
         )
@@ -466,7 +447,7 @@ def suppliers_pareto_class(spark, sf_dir):
     WITH r AS (
       SELECT p.p_brand,
              CAST(EXTRACT(YEAR FROM l.l_shipdate) AS BIGINT) AS yr,
-             SUM(CAST({_CENTS_SQL.format(c='l.l_extendedprice')}
+             SUM(CAST({CENTS_SQL.format(c='l.l_extendedprice')}
                       AS HUGEINT)) AS rev
       FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
       GROUP BY 1, 2
@@ -489,7 +470,7 @@ def parts_yoy_revenue(spark, sf_dir):
     bites when a window drags fact rows; this one drags group rows).
     Revenue is integer cents, decimal(38,0)/HUGEINT-summed; the delta
     is integer subtraction before the final DOUBLE cast."""
-    li = _li(spark, sf_dir)
+    li = load_table(spark, sf_dir, "lineitem")
     part = spark.read.parquet(f"{sf_dir}/part.parquet")
     dec = "decimal(38,0)"
     r = (
@@ -498,7 +479,7 @@ def parts_yoy_revenue(spark, sf_dir):
         .select(
             "p_brand",
             F.year("l_shipdate").cast("long").alias("yr"),
-            _cents("l_extendedprice").cast(dec).alias("rev_row"),
+            cents("l_extendedprice").cast(dec).alias("rev_row"),
         )
         .groupBy("p_brand", "yr")
         .agg(F.sum("rev_row").alias("rev"))
@@ -543,7 +524,7 @@ def tokens_shard_plan(spark, sf_dir):
     scan (``size(split(...))``, JVM-side)."""
     from dmds_spark.functions.text import words
 
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     return (
         d.groupBy((F.col("doc_id") % 16).cast("long").alias("shard"))
         .agg(
@@ -594,7 +575,7 @@ def events_concurrency_peak(spark, sf_dir):
     t, and within a run of equal (t, d) the running sum is monotone, so
     MAX over the partition is identical for every tie order the two
     engines (or shard boundaries) pick."""
-    ev = _events(spark, sf_dir).select(
+    ev = load_events(spark, sf_dir).select(
         "event_type", F.unix_micros("ts").alias("t")
     )
     pts = ev.select("event_type", "t", F.lit(1).alias("d")).unionAll(
@@ -652,7 +633,9 @@ def graph_common_neighbors(spark, sf_dir):
     collapses lineitem multiplicity first, so the wedge input is the
     edge set, orders of magnitude smaller than the fact table. Top-20
     is TakeOrdered over a total order (count desc, supplier pair)."""
-    li = _li(spark, sf_dir).select("l_orderkey", "l_suppkey")
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_suppkey"
+    )
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_custkey"
     )
@@ -725,7 +708,6 @@ def events_late_arrivals(spark, sf_dir):
     ``greatest`` (associativity makes the cumsum construction carry
     over). All time arithmetic in integer microseconds."""
     from dmds_spark.operators.relational import sharded_exclusive_running_max
-    from dmds_spark.sources.registry import load_events
 
     ev = load_events(spark, sf_dir).select(
         "event_type", "event_id", F.unix_micros("ts").alias("t")
@@ -771,7 +753,7 @@ def text_hapax_ratio(spark, sf_dir):
     leaves the first stage."""
     from dmds_spark.functions.text import words
 
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     c = (
         d.select("source", F.explode(words("text")).alias("token"))
         .groupBy("source", "token")
@@ -793,7 +775,7 @@ def text_hapax_ratio(spark, sf_dir):
     "parts_price_dispersion",
     f"""
     WITH c AS (
-      SELECT p.p_brand, {_CENTS_SQL.format(c='l.l_extendedprice')} AS pc
+      SELECT p.p_brand, {CENTS_SQL.format(c='l.l_extendedprice')} AS pc
       FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
     )
     SELECT p_brand, CAST(COUNT(*) AS BIGINT) AS n,
@@ -822,12 +804,12 @@ def parts_price_dispersion(spark, sf_dir):
     IEEE-nearest ...479e19 from Spark's BigDecimal path), so a double
     column would hash-differ in the last bit. Digit strings are exact
     at any magnitude on both engines."""
-    li = _li(spark, sf_dir)
+    li = load_table(spark, sf_dir, "lineitem")
     part = spark.read.parquet(f"{sf_dir}/part.parquet")
     dec = "decimal(38,0)"
     # part is SF-proportional — size-gated broadcast, not forced.
     c = li.join(maybe_broadcast(part), li.l_partkey == part.p_partkey).select(
-        "p_brand", _cents("l_extendedprice").alias("pc")
+        "p_brand", cents("l_extendedprice").alias("pc")
     )
     a = c.groupBy("p_brand").agg(
         F.count(F.lit(1)).cast(dec).alias("n"),
@@ -855,11 +837,11 @@ def parts_price_dispersion(spark, sf_dir):
     f"""
     SELECT o_orderstatus,
            CAST(COUNT(*) AS BIGINT) AS cnt,
-           CAST(SUM({_CENTS_SQL.format(c='o_totalprice')}) AS BIGINT)
+           CAST(SUM({CENTS_SQL.format(c='o_totalprice')}) AS BIGINT)
              AS sum_c,
-           CAST(MIN({_CENTS_SQL.format(c='o_totalprice')}) AS BIGINT)
+           CAST(MIN({CENTS_SQL.format(c='o_totalprice')}) AS BIGINT)
              AS min_c,
-           CAST(MAX({_CENTS_SQL.format(c='o_totalprice')}) AS BIGINT)
+           CAST(MAX({CENTS_SQL.format(c='o_totalprice')}) AS BIGINT)
              AS max_c
     FROM orders GROUP BY o_orderstatus
     """,
@@ -884,7 +866,7 @@ def rollup_incremental_orders(spark, sf_dir):
     root = scratch_dir("rollup", sf_dir)
     src = f"{root}/src"
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_orderstatus", _cents("o_totalprice").alias("vc")
+        "o_orderkey", "o_orderstatus", cents("o_totalprice").alias("vc")
     )
     orders.filter(F.col("o_orderkey") % 2 == 0).write.parquet(src)
     ru = IncrementalRollup(

@@ -30,24 +30,14 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from dmds_spark.operators.relational import sharded_exclusive_cumsum
+from dmds_spark.operators.relational import (
+    CENTS_SQL,
+    cents,
+    sharded_exclusive_cumsum,
+)
 from dmds_spark.queries import register
 from dmds_spark.core.engine import materialize
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _li(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-
-
-def _cents(col, prec="decimal(12,2)"):
-    return (F.col(col).cast(prec) * 100).cast("long")
-
-
-_CENTS_SQL = "CAST(CAST({c} AS DECIMAL(12,2)) * 100 AS BIGINT)"
+from dmds_spark.sources.registry import load_events, load_table
 
 
 # ---------------------------------------------------------------------------
@@ -60,7 +50,7 @@ _CENTS_SQL = "CAST(CAST({c} AS DECIMAL(12,2)) * 100 AS BIGINT)"
     f"""
     WITH v AS (
       SELECT l_returnflag AS flag,
-             {_CENTS_SQL.format(c='l_extendedprice')} AS pc,
+             {CENTS_SQL.format(c='l_extendedprice')} AS pc,
              CAST(l_quantity AS BIGINT) AS w
       FROM lineitem
     ), g AS (SELECT flag, pc, SUM(w) AS w FROM v GROUP BY 1, 2),
@@ -92,10 +82,10 @@ def agg_weighted_median(spark, sf_dir):
     a 100 TB scan through ONE task; the sharded shape keeps both
     shuffles even. Group totals ride a broadcast join (3 rows).
     total_weight tops out ~5e14 at a 10^13-row corpus — bigint-safe."""
-    li = _li(spark, sf_dir)
+    li = load_table(spark, sf_dir, "lineitem")
     v = li.select(
         F.col("l_returnflag").alias("flag"),
-        _cents("l_extendedprice").alias("pc"),
+        cents("l_extendedprice").alias("pc"),
         F.col("l_quantity").cast("long").alias("w"),
     )
     g = v.groupBy("flag", "pc").agg(F.sum("w").alias("w"))
@@ -126,7 +116,7 @@ def agg_weighted_median(spark, sf_dir):
     f"""
     WITH v AS (
       SELECT s_nationkey AS nk,
-             {_CENTS_SQL.format(c='s_acctbal')} AS bc,
+             {CENTS_SQL.format(c='s_acctbal')} AS bc,
              s_suppkey AS sk
       FROM supplier
     ), r AS (
@@ -176,7 +166,7 @@ def suppliers_winsorized_balance(spark, sf_dir):
     s = spark.read.parquet(f"{sf_dir}/supplier.parquet")
     v = s.select(
         F.col("s_nationkey").alias("nk"),
-        _cents("s_acctbal").alias("bc"),
+        cents("s_acctbal").alias("bc"),
         F.col("s_suppkey").alias("sk"),
         # three consumers (rank stream, group sizes, clamp pass):
         # materialize the 3-column projection once, scan once
@@ -271,7 +261,7 @@ def text_trigram_novelty(spark, sf_dir):
     from dmds_spark.functions.text import words
 
     d = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select("doc_id", "source", words("text").alias("toks"))
         .filter(F.size("toks") >= 3)
     )
@@ -360,8 +350,6 @@ def events_daily_anomalies_mad(spark, sf_dir):
     groupBy producing it. Both medians are the sorted element at rank
     (n+1)//2 (an observed value, no interpolation), per the engine-wide
     exact-median idiom (events_inter_arrival_median)."""
-    from dmds_spark.sources.registry import load_events
-
     e = load_events(spark, sf_dir)
     d = e.groupBy(
         "event_type", F.date_trunc("day", "ts").cast("date").alias("day")
@@ -453,8 +441,6 @@ def events_active_users_rolling(spark, sf_dir):
     window. The observed-days semi-join (broadcast, calendar-sized)
     drops covered days beyond the data's horizon so both engines
     evaluate the same day set."""
-    from dmds_spark.sources.registry import load_events
-
     e = load_events(spark, sf_dir)
     ud = (
         e.select(
@@ -505,7 +491,7 @@ def events_active_users_rolling(spark, sf_dir):
               + EXTRACT(month FROM o.o_orderdate))
              - (EXTRACT(year FROM f.cm) * 12
                 + EXTRACT(month FROM f.cm)) AS age,
-             {_CENTS_SQL.format(c='o.o_totalprice')} AS cents
+             {CENTS_SQL.format(c='o.o_totalprice')} AS cents
       FROM orders o JOIN fo f ON o.o_custkey = f.o_custkey
     ), g AS (
       SELECT cm, age, SUM(cents) AS rev, COUNT(*) AS n_orders
@@ -546,7 +532,7 @@ def orders_cohort_ltv(spark, sf_dir):
     r = withcm.select(
         "cm",
         (mo - mc).alias("age"),
-        _cents("o_totalprice").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     g = r.groupBy("cm", "age").agg(
         F.sum("cents").alias("rev"), F.count(F.lit(1)).alias("n_orders")
@@ -609,7 +595,7 @@ def sample_temperature_mixture(spark, sf_dir):
 
     Shape: one token-count agg per source (partial-combined), then a
     ~#sources-row table; the total rides a 1-row cross join."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     s = d.groupBy("source").agg(
         F.sum(F.size(F.split("text", " "))).alias("toks")
     )
@@ -685,7 +671,7 @@ def profile_ks_drift(spark, sf_dir):
     recovered as the SUM of per-source cumulatives at each length —
     partitioned by the high-cardinality length key, so no
     single-partition global window anywhere."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     sc = (
         d.groupBy("source", F.col("n_chars").alias("v"))
         .agg(F.count(F.lit(1)).alias("c"))
@@ -774,7 +760,7 @@ def text_source_vocab_jaccard(spark, sf_dir):
     integers); jaccard is the one IEEE division at the end."""
     from dmds_spark.functions.text import words
 
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     st = d.select(
         "source", F.explode(words("text")).alias("tok")
     ).distinct()
@@ -817,7 +803,7 @@ def text_source_vocab_jaccard(spark, sf_dir):
     f"""
     WITH d AS (
       SELECT o_orderdate AS day,
-             SUM({_CENTS_SQL.format(c='o_totalprice')}) AS rev,
+             SUM({CENTS_SQL.format(c='o_totalprice')}) AS rev,
              COUNT(*) AS n_orders
       FROM orders GROUP BY 1
     )
@@ -848,7 +834,7 @@ def orders_rolling_7d_revenue(spark, sf_dir):
     d = o.groupBy(
         F.col("o_orderdate").cast("date").alias("day")
     ).agg(
-        F.sum(_cents("o_totalprice")).alias("rev"),
+        F.sum(cents("o_totalprice")).alias("rev"),
         F.count(F.lit(1)).alias("n_orders"),
     )
     w = (

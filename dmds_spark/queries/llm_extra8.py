@@ -23,14 +23,7 @@ from pyspark.sql import functions as F
 from dmds_spark.queries import register
 from dmds_spark.queries.llm_dedup import BANDS, CAND_CTE, EST_SQL, NUM_HASHES
 from dmds_spark.core.engine import materialize
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+from dmds_spark.sources.registry import load_events, load_table
 
 
 # ---------------------------------------------------------------------------
@@ -81,7 +74,7 @@ def graph_clustering_coefficient(spark, sf_dir):
     doc_id — a total order identical on both engines."""
     from dmds_spark.operators.dedup import dedup_minhash
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     edges = (
         dedup_minhash(docs, "text", "doc_id", NUM_HASHES, BANDS, 0.5)
         .select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
@@ -165,7 +158,7 @@ def text_term_burstiness_topk(spark, sf_dir):
     per-term mean."""
     from dmds_spark.functions.text import words
 
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(words("text")).alias("w"))
     dc = tok.groupBy("w", "doc_id").agg(F.count(F.lit(1)).alias("c"))
     dec = "decimal(38,0)"
@@ -217,7 +210,7 @@ def similarity_radius_count(spark, sf_dir):
     (similarity_pairs_threshold's blocking) before the exact fold; the
     brute-force form is the exactness baseline the blocked variant is
     measured against."""
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )
@@ -289,8 +282,6 @@ def events_activity_streaks_topk(spark, sf_dir):
     The window partitions on user_id (high cardinality, even) over the
     DISTINCT (user, day) table — bounded by users x days, the same
     collapse the rolling-actives query leans on."""
-    from dmds_spark.sources.registry import load_events
-
     e = load_events(spark, sf_dir)
     ud = e.select(
         "user_id", F.date_trunc("day", "ts").cast("date").alias("day")
@@ -408,7 +399,7 @@ def text_readability_profile(spark, sf_dir):
 
     Pure per-row projection (regexp_count + split stay in codegen) and
     one partial-combined aggregate; floor division both sides."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     m = d.select(
         "source",
         F.size(F.split("text", " ")).alias("n_words"),
@@ -455,7 +446,7 @@ def tokens_packing_efficiency_sweep(spark, sf_dir):
     One scan; the 3-row length grid broadcasts onto the per-doc
     lengths and one partial-combined aggregate folds the sweep — the
     cost of trying 10 more lengths is sums, not scans."""
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents").select(
         F.size(F.split("text", " ")).alias("n")
     )
     s = spark.range(1).selectExpr(
@@ -692,7 +683,7 @@ def similarity_lsh_bucket_stats(spark, sf_dir):
     from dmds_spark.operators.similarity import lsh_buckets
     from dmds_spark.queries.llm_ops import LSH_PLANES, LSH_TABLES
 
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     b = e.select(
         F.explode(
             lsh_buckets(F.col("embedding"), LSH_TABLES, LSH_PLANES)
@@ -757,20 +748,14 @@ def dedup_minhash_precision(spark, sf_dir):
     from dmds_spark.operators.dedup import (
         jaccard_verify_pairs,
         minhash_lsh_candidates,
-        minhash_shingle_rows,
-        minhash_signatures_from_shingles,
+        shared_shingles,
     )
-    from dmds_spark.operators.parallel import ensure_parallelism
     from dmds_spark.queries.llm_dedup import K_SHINGLE
 
-    # shingle ONCE (guide §2.4): the persisted distinct rows feed the
-    # signature stage and the verify's three consumers; signatures
-    # over distinct shingles are bit-identical (min is idempotent)
-    docs = ensure_parallelism(_docs(spark, sf_dir))
-    srows = minhash_shingle_rows(
-        docs, "text", "doc_id", K_SHINGLE
-    ).persist()
-    sigs = minhash_signatures_from_shingles(srows, "doc_id", NUM_HASHES)
+    docs = load_table(spark, sf_dir, "documents")
+    srows, sigs = shared_shingles(
+        docs, "text", "doc_id", K_SHINGLE, NUM_HASHES
+    )
     cand = minhash_lsh_candidates(sigs, "doc_id", NUM_HASHES, BANDS).select(
         "id_a", "id_b"
     ).transform(materialize)  # counted AND verified: one LSH pass
@@ -887,7 +872,7 @@ def text_lang_confusion(spark, sf_dir):
     on both sides; one scan, one partial-combined aggregate."""
     from dmds_spark.functions.text import lang_id, words
 
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     p = d.select(
         F.col("lang").alias("actual_lang"),
         lang_id(words("text")).alias("predicted_lang"),
@@ -939,7 +924,7 @@ def sample_hamilton_allocation(spark, sf_dir):
     Shape: one data-sized aggregate collapses to the #strata-row
     table; the remainder rank windows over THAT (bounded by #sources,
     legitimately tiny forever)."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     s = d.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     t = s.agg(F.sum("n").alias("tot"))
     q = s.crossJoin(F.broadcast(t)).select(

@@ -23,10 +23,7 @@ from dmds_spark.queries.llm_dedup import (
     K_SHINGLE,
     NUM_HASHES,
 )
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from dmds_spark.sources.registry import load_table
 
 
 def _scratch(sf_dir: str, kind: str) -> str:
@@ -73,7 +70,7 @@ def dedup_incremental_minhash(spark, sf_dir):
 
     root = _scratch(sf_dir, "inc_dedup")
     src = f"{root}/src"
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     docs.filter(F.col("doc_id") % 2 == 0).write.parquet(src)
     store = IncrementalMinHashDedup(
         spark, src, f"{root}/store", "text", "doc_id",
@@ -128,7 +125,7 @@ def dedup_fuzzy_fingerprint_pairs_fast(spark, sf_dir):
     from dmds_spark.queries.llm_extra5 import _FP_NGRAM, fuzzy_pairs_blocked
 
     return fuzzy_pairs_blocked(
-        _docs(spark, sf_dir).select("doc_id", "text"),
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         rolling_fingerprint_fast("text", _FP_NGRAM),
     )
 
@@ -177,9 +174,10 @@ def graph_common_neighbors_capped(spark, sf_dir):
     SAMPLE itself — not just its undercount/determinism properties
     (still pinned in tests/test_graph_ops.py) — is hash-checked."""
     from dmds_spark.operators.graph import common_neighbor_counts
-    from dmds_spark.queries.llm_extra6 import _li
 
-    li = _li(spark, sf_dir).select("l_orderkey", "l_suppkey")
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_suppkey"
+    )
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_custkey"
     )
@@ -247,7 +245,8 @@ def dedup_semdedup_prune(spark, sf_dir):
     operators/similarity.semdedup_prune (numpy-pinned in
     tests/test_similarity_ops.py); this registered form trades its
     double M-step for the grid floor-means so the WHOLE composite is
-    hash-checkable.
+    hash-checkable, and runs the same within-cluster prune
+    (similarity.semdedup_prune_clusters).
 
     Shape at scale: assignment is two broadcast-k scans + one
     (cluster, dim) hash aggregate (scale account on
@@ -258,49 +257,13 @@ def dedup_semdedup_prune(spark, sf_dir):
     synthetic corpus's similarity range (the generator plants no true
     semantic dups), so the prune is non-trivial (82 doomed pairs at
     sf0.01) and deterministic."""
-    from dmds_spark.core.engine import materialize
-    from dmds_spark.operators.similarity import dot
+    from dmds_spark.operators.similarity import semdedup_prune_clusters
     from dmds_spark.queries.llm_extra import embedding_kmeans_assign
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    asg = embedding_kmeans_assign(spark, sf_dir)
-    # the vector NORM is per-vector work: fold it once into the
-    # materialized block table instead of re-deriving it per PAIR —
-    # the pairwise stage's cost is sum-of-size^2, so each pair now
-    # pays ONE interpreted HOF fold (the dot) instead of three
-    # (guide §2.4; sqrt(dot(x,x)) is the identical expression over
-    # the identical array, so the cosine doubles are bit-identical)
-    vecs = (
-        emb.select("vec_id", "embedding")
-        .join(asg, "vec_id")
-        .withColumn(
-            "__nrm", F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-        )
-        .transform(materialize)  # consumed by both pair sides + anti
-    )
-    a = vecs.select(
-        "cluster",
-        F.col("vec_id").alias("__ida"),
-        F.col("embedding").alias("__va"),
-        F.col("__nrm").alias("__na"),
-    )
-    b = vecs.select(
-        "cluster",
-        F.col("vec_id").alias("__idb"),
-        F.col("embedding").alias("__vb"),
-        F.col("__nrm").alias("__nb"),
-    )
-    doomed = (
-        a.join(b, "cluster")
-        .filter(F.col("__ida") < F.col("__idb"))
-        .filter(
-            dot(F.col("__va"), F.col("__vb"))
-            / (F.col("__na") * F.col("__nb"))
-            >= 0.35
-        )
-        .select(F.col("__idb").alias("vec_id"))
-        .distinct()
-    )
-    return vecs.join(doomed, "vec_id", "left_anti").select(
-        "vec_id", "cluster"
+    return semdedup_prune_clusters(
+        load_table(spark, sf_dir, "embeddings"),
+        embedding_kmeans_assign(spark, sf_dir),
+        "vec_id",
+        "embedding",
+        0.35,
     )

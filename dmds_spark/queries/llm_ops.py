@@ -21,6 +21,7 @@ from dmds_spark.operators.similarity import (
     pair_cosine,
 )
 from dmds_spark.queries import register
+from dmds_spark.sources.registry import load_table
 
 # Multi-table sign-LSH blocking parameters shared by the near-dup and
 # pairs-threshold queries (and their generated oracle SQL). 6 planes =
@@ -43,14 +44,6 @@ WITH b AS (
 """
 
 
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
 # ---------------------------------------------------------------------------
 # Text analysis
 # ---------------------------------------------------------------------------
@@ -69,7 +62,7 @@ def _emb(spark, sf_dir):
 def text_token_stats(spark, sf_dir):
     """Whitespace token counting + char stats — the unit everything in
     a data pipeline is billed in. Pure built-ins, no UDF."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         F.length("text").cast("bigint").alias("n_chars"),
@@ -92,7 +85,7 @@ def text_token_stats(spark, sf_dir):
 def text_quality_score(spark, sf_dir):
     """Quality heuristics: token density, length gate, letter frequency
     — the building blocks of C4/Gopher-style quality filters."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     n_tok = F.size(F.split("text", " ")).cast("decimal(18,9)")
     n_char = F.greatest(F.length("text"), F.lit(1))
     return d.select(
@@ -116,7 +109,7 @@ def text_quality_score(spark, sf_dir):
 def text_fingerprint(spark, sf_dir):
     """Document fingerprint: md5 of normalized text; groups = exact-dup
     clusters. At scale this is a single hash-shuffle on a 32-char key."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     fp = F.md5(F.lower(F.trim(F.col("text"))))
     return d.groupBy(fp.alias("fp")).agg(
         F.count(F.lit(1)).alias("n"),
@@ -141,7 +134,7 @@ def text_fingerprint(spark, sf_dir):
 def dedup_exact(spark, sf_dir):
     """Exact dedup stats via content hash. The keep-first variant is
     dedup_exact_keep_first."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     return d.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.countDistinct(F.md5(F.col("text"))).cast("bigint").alias("n_unique"),
@@ -165,7 +158,7 @@ def dedup_exact_keep_first(spark, sf_dir):
     hash-shuffle; at 100 TB the md5 key bounds shuffle width."""
     from pyspark.sql import Window as W
 
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     w = W.partitionBy(F.md5(F.col("text"))).orderBy("doc_id")
     return (
         d.withColumn("rn", F.row_number().over(w))
@@ -201,7 +194,7 @@ def similarity_cosine_topk(spark, sf_dir):
     engines: float inputs promoted to double, same multiply-add order),
     rounded only for display.
     """
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     joined = e.filter(F.col("vec_id") != 0).crossJoin(F.broadcast(q))
 
@@ -250,7 +243,7 @@ def dedup_embedding_neardup(spark, sf_dir):
     candidates. Never an all-pairs product; plan-pinned in
     tests/test_plans.py. The oracle mirrors the same buckets, so the
     probabilistic recall is identical on both sides."""
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     cand = lsh_blocked_pairs(e, "vec_id", "embedding", LSH_TABLES, LSH_PLANES)
     doomed = (
         cand.filter(pair_cosine() > 0.45)
@@ -291,7 +284,7 @@ def similarity_ivf_topk(spark, sf_dir):
     anchors are a broadcast list; assignment is one scan."""
     from pyspark.sql import Window as W
 
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     anchors = e.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("aid"), F.col("embedding").alias("av")
     )
@@ -358,7 +351,7 @@ def multimodal_decode_stats(spark, sf_dir):
         media_table_from_documents,
     )
 
-    media = media_table_from_documents(_docs(spark, sf_dir))
+    media = media_table_from_documents(load_table(spark, sf_dir, "documents"))
     return (
         decode_images(media, fake=True)
         .groupBy("channels")
@@ -391,7 +384,7 @@ def multimodal_frame_sample(spark, sf_dir):
         sample_frames,
     )
 
-    media = media_table_from_documents(_docs(spark, sf_dir))
+    media = media_table_from_documents(load_table(spark, sf_dir, "documents"))
     return (
         sample_frames(media, frame_bytes=256, stride=2)
         .groupBy("media_id")
@@ -415,7 +408,7 @@ def similarity_pairs_threshold(spark, sf_dir):
     (not a low-cardinality attribute like label) keeps the within-block
     pair count bounded by bucket size at any corpus scale; the oracle
     mirrors the same buckets, so recall is identical on both sides."""
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     cand = lsh_blocked_pairs(e, "vec_id", "embedding", LSH_TABLES, LSH_PLANES)
     return (
         cand.filter(pair_cosine() > 0.20)

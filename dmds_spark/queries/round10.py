@@ -23,10 +23,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from dmds_spark.queries import register
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from dmds_spark.sources.registry import load_table
 
 
 # ---------------------------------------------------------------------------
@@ -132,7 +129,7 @@ def web_url_canonicalize(spark, sf_dir):
     hash aggregate keyed on the canonical URL — high cardinality, no
     skew pole. At 100 TB this is exactly the CCNet/RefinedWeb URL
     pass: a scan-projection plus one exchange."""
-    u = _docs(spark, sf_dir).select(
+    u = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.expr(_URL_SPARK).alias("url")
     )
     c = u.select("doc_id", "url", F.expr(_canon_sql("spark")).alias("canon_url"))
@@ -172,7 +169,7 @@ def web_domain_stats(spark, sf_dir):
     canonical heavy-hitter key, so at 100 TB this aggregate is where
     AQE skew handling (or a two-level pre-agg) earns its keep — the
     partial aggregate absorbs the hot domains map-side."""
-    u = _docs(spark, sf_dir).select(
+    u = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars", F.expr(_URL_SPARK).alias("url")
     )
     d = u.select("doc_id", "lang", "n_chars", F.expr(_DOMAIN_SQL).alias("domain"))
@@ -222,7 +219,7 @@ def web_blocklist_filter(spark, sf_dir):
     domain (suffix match = prefix range on the reversal) — both stay
     driver-light and scan-shaped, which is the property that matters
     at 100 TB."""
-    u = _docs(spark, sf_dir).select(
+    u = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", F.expr(_URL_SPARK).alias("url")
     )
     d = u.select("doc_id", "source", F.expr(_DOMAIN_SQL).alias("domain"))
@@ -281,7 +278,7 @@ def _lines(spark, sf_dir):
     into aligned 10-word windows, with the boilerplate headers
     injected. Pure array ops (split/sequence/slice/array_join) — one
     codegen projection, token-stream sized."""
-    aug = _docs(spark, sf_dir).select(
+    aug = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", F.split(F.expr(_AUG_SQL), " ").alias("toks")
     )
     lines = aug.select(

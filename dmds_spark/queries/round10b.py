@@ -17,10 +17,7 @@ from pyspark.sql import functions as F
 
 from dmds_spark.functions.keys import sortable_int64
 from dmds_spark.queries import register
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from dmds_spark.sources.registry import load_events, load_table
 
 
 # ---------------------------------------------------------------------------
@@ -86,7 +83,7 @@ def agg_kmv_distinct_calibration(spark, sf_dir):
     with fewer than K distinct bigrams emits NO row (below capacity
     the sketch IS the exact set — there is no estimate to calibrate);
     both engines drop it identically."""
-    tok = _docs(spark, sf_dir).select(
+    tok = load_table(spark, sf_dir, "documents").select(
         "source", F.split("text", " ").alias("t")
     )
     bg = (
@@ -184,7 +181,7 @@ def sample_dsir_importance(spark, sf_dir):
     {_DSIR_BUCKETS} rows regardless of corpus size."""
     from dmds_spark.operators.sampling import hash_bucket
 
-    tok = _docs(spark, sf_dir).select(
+    tok = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
         F.explode(F.split("text", " ")).alias("w"),
@@ -249,8 +246,6 @@ def events_ohlc_downsample(spark, sf_dir):
     five measures as map-side partials (min_by/max_by combine like
     min/max). The bar grid is bounded (types x hours), no window, no
     join, no sort."""
-    from dmds_spark.sources.registry import load_events
-
     e = load_events(spark, sf_dir).filter(F.col("value").isNotNull())
     ok = F.concat(
         sortable_int64(F.unix_micros("ts")),
@@ -330,7 +325,7 @@ def pipeline_attrition_report(spark, sf_dir):
     single pass; the exact-dup rule reuses the md5 keep-first window
     (hash-partitioned by digest — corpus-wide but key-parallel);
     the report aggregate is 5 rows."""
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.expr(_ATTR_TEXT).alias("text")
     )
     g = d.select(

@@ -18,10 +18,7 @@ from pyspark.sql import functions as F
 
 from dmds_spark.queries import register
 from dmds_spark.core.engine import materialize
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from dmds_spark.sources.registry import load_table
 
 
 # ---------------------------------------------------------------------------
@@ -353,7 +350,7 @@ def tokens_bpe_train_merges(spark, sf_dir):
     pure-Python BPE reference on the same word-frequency table, and
     the loop itself is documented in :func:`bpe_train_merges` (this is
     the training side of text_bpe_token_count's apply side)."""
-    return bpe_train_merges(_docs(spark, sf_dir))
+    return bpe_train_merges(load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -420,4 +417,4 @@ def text_compression_ratio(spark, sf_dir):
     repetitive<natural ordering). The word-soup corpus makes the
     signal visible end-to-end: heavily repeated vocabulary compresses
     well below English prose entropy."""
-    return compression_ratio(_docs(spark, sf_dir))
+    return compression_ratio(load_table(spark, sf_dir, "documents"))

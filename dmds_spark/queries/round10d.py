@@ -15,10 +15,7 @@ from pyspark.sql import functions as F
 
 from dmds_spark.queries import register
 from dmds_spark.queries.round10b import _DSIR_SQL
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from dmds_spark.sources.registry import load_table
 
 
 # ---------------------------------------------------------------------------
@@ -236,7 +233,7 @@ def profile_k_anonymity(spark, sf_dir):
     grain — the second is tiny). The QID aggregate is the only
     corpus-sized exchange; band width is the coarsening knob that
     trades utility against the at-risk tail."""
-    qid = _docs(spark, sf_dir).select(
+    qid = load_table(spark, sf_dir, "documents").select(
         "lang", "source", F.expr("n_chars DIV 50").alias("len_band")
     )
     g = qid.groupBy("lang", "source", "len_band").agg(

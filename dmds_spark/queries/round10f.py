@@ -14,10 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from dmds_spark.queries import register
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from dmds_spark.sources.registry import load_table
 
 
 # ---------------------------------------------------------------------------
@@ -72,8 +69,10 @@ def profile_snapshot_diff(spark, sf_dir):
     payload at 32 bytes/row regardless of document size; the status
     rollup is 4 rows. Snapshot B is a derived view here; production
     points the same plan at two real snapshot paths."""
-    a = _docs(spark, sf_dir).select("doc_id", F.md5("text").alias("h"))
-    d = _docs(spark, sf_dir)
+    a = load_table(spark, sf_dir, "documents").select(
+        "doc_id", F.md5("text").alias("h")
+    )
+    d = load_table(spark, sf_dir, "documents")
     b = (
         d.filter((F.col("doc_id") % 17 != 0) & (F.col("doc_id") % 13 != 0))
         .select("doc_id", "text")

@@ -17,10 +17,7 @@ from pyspark.sql import functions as F
 
 from dmds_spark.queries import register
 from dmds_spark.queries.round10 import _URL_DUCK, _URL_SPARK, _canon_sql
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from dmds_spark.sources.registry import load_table
 
 
 @register(
@@ -62,7 +59,7 @@ def web_dedup_method_agreement(spark, sf_dir):
     codegen), one (canon_url) aggregate, one 3-row rollup. The same
     two-exchange shape as web_url_canonicalize with the digest
     carried alongside."""
-    u = _docs(spark, sf_dir).select(
+    u = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.md5("text").alias("h"), F.expr(_URL_SPARK).alias("url")
     )
     c = u.select("doc_id", "h", F.expr(_canon_sql("spark")).alias("canon_url"))
@@ -141,7 +138,7 @@ def tokens_bpe_apply_learned(spark, sf_dir):
     pure-Python apply of the same merges."""
     from dmds_spark.queries.round10c import bpe_train_merges
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     merges = [
         (r["a"], r["b"])
         for r in bpe_train_merges(docs).collect()

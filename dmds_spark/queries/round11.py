@@ -35,14 +35,7 @@ from dmds_spark.queries.round10 import (
     _URL_DUCK,
     _URL_SPARK,
 )
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+from dmds_spark.sources.registry import load_events, load_table
 
 
 # ---------------------------------------------------------------------------
@@ -154,7 +147,7 @@ def web_html_extract(spark, sf_dir):
     Shape at scale: ONE whole-stage-codegen projection (seven regexes,
     five replaces) — no UDF, no shuffle, runs at parquet scan speed on
     any executor count."""
-    h = _docs(spark, sf_dir).select(
+    h = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", F.expr(_HTML_SPARK).alias("html")
     )
     e = h.select("doc_id", "html", F.expr(_extract_sql("spark")).alias("text"))
@@ -221,7 +214,7 @@ def pipeline_web_ingest(spark, sf_dir):
     projection; then two hash aggregates (canon_url — high-cardinality
     dedup; domain — heavy-hitter profile where AQE absorbs skew). No
     join anywhere: the keeper's text length rides along via min_by."""
-    h = _docs(spark, sf_dir).select(
+    h = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source",
         F.expr(_HTML_SPARK).alias("html"),
         F.expr(_URL_SPARK).alias("url"),
@@ -302,7 +295,7 @@ def rollup_incremental_ivf(spark, sf_dir):
 
     root = scratch_dir("inc_ivf", sf_dir)
     src = f"{root}/src"
-    e = _emb(spark, sf_dir).select("vec_id", "embedding")
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     idx = IncrementalIVFIndex(
         spark, src, f"{root}/store", "vec_id", "embedding"
     )
@@ -371,7 +364,6 @@ def dmds_snapshot_timetravel(spark, sf_dir):
     directory columns (pruned at file listing)."""
     from dmds_spark.core.dims import DimSpec, WorldSpec
     from dmds_spark.core.scratch import scratch_dir
-    from dmds_spark.sources.registry import load_events
     from dmds_spark.world import World
 
     spec = WorldSpec(
@@ -438,7 +430,7 @@ def web_html_links(spark, sf_dir):
     Shape at scale: scan-fused extraction + explode (bounded by links
     per page) + ONE hash aggregate keyed on the target URL —
     high-cardinality, no skew pole beyond what AQE absorbs."""
-    h = _docs(spark, sf_dir).select(
+    h = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", F.expr(_HTML_SPARK).alias("html")
     )
     links = h.select(
@@ -500,7 +492,6 @@ def dmds_snapshot_diff(spark, sf_dir):
     the join shuffles at most once) + a 4-row aggregate."""
     from dmds_spark.core.dims import DimSpec, WorldSpec
     from dmds_spark.core.scratch import scratch_dir
-    from dmds_spark.sources.registry import load_events
     from dmds_spark.world import World
 
     spec = WorldSpec(
@@ -618,7 +609,7 @@ def similarity_ivf_probe_sweep(spark, sf_dir):
     {_IVF_NQ}x{_IVF_TOPK}-row table."""
     from pyspark.sql import Window as W
 
-    e = _emb(spark, sf_dir).select("vec_id", "embedding")
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     anchors = e.filter(F.col("vec_id") < _IVF_K).select(
         F.col("vec_id").alias("aid"), F.col("embedding").alias("av")
     )
@@ -737,7 +728,7 @@ def text_quality_linear_score(spark, sf_dir):
     expression — no join, no UDF, no driver round trip; at real vocab
     sizes the weight vector becomes a broadcast array literal indexed
     by the bucket, still codegen."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id", "source", F.explode(F.split("text", " ")).alias("w")
     )
@@ -833,7 +824,7 @@ def pipeline_web_curation_full(spark, sf_dir):
     explode + ONE doc-keyed hash aggregate; the dup window is
     hash-partitioned by content digest (key-parallel corpus-wide); the
     census is a 5-row aggregate. No joins anywhere."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     # chained selects, not textual substitution of the synthesis into
     # the extractor expression: Catalyst's projection collapse fuses
     # them into the one scan projection anyway (pinned for the same

@@ -31,14 +31,7 @@ from dmds_spark.queries.llm_dedup import (
     NUM_HASHES,
     _CLUSTER_SQL,
 )
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+from dmds_spark.sources.registry import load_table
 
 
 def _scratch(sf_dir: str, kind: str) -> str:
@@ -78,7 +71,7 @@ def rollup_incremental_clusters(spark, sf_dir):
 
     root = _scratch(sf_dir, "inc_clusters")
     src = f"{root}/src"
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     docs.filter(F.col("doc_id") % 2 == 0).write.parquet(src)
     store = IncrementalMinHashDedup(
         spark, src, f"{root}/store", "text", "doc_id",
@@ -91,7 +84,7 @@ def rollup_incremental_clusters(spark, sf_dir):
         F.col("id").alias("doc_id"), F.col("cluster_id").alias("cid")
     )
     return (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select("doc_id")
         .join(cmap, "doc_id", "left")
         .select(
@@ -154,7 +147,7 @@ def rollup_ivf_retrain(spark, sf_dir):
 
     root = _scratch(sf_dir, "ivf_retrain")
     src = f"{root}/src"
-    e = _emb(spark, sf_dir).select("vec_id", "embedding")
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     idx = IncrementalIVFIndex(
         spark, src, f"{root}/store", "vec_id", "embedding"
     )
@@ -270,7 +263,7 @@ def similarity_ivf_search_batch(spark, sf_dir):
     from dmds_spark.operators.incremental_ivf import IncrementalIVFIndex
 
     root = _scratch(sf_dir, "ivf_serve")
-    e = _emb(spark, sf_dir).select("vec_id", "embedding")
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     anchors = e.filter(F.col("vec_id") < _RT_K).orderBy("vec_id").collect()
     idx = IncrementalIVFIndex(
         spark, None, f"{root}/store", "vec_id", "embedding"
@@ -353,7 +346,7 @@ def similarity_ivf_drift_report(spark, sf_dir):
     from dmds_spark.operators.incremental_ivf import IncrementalIVFIndex
 
     root = _scratch(sf_dir, "ivf_drift")
-    e = _emb(spark, sf_dir).select("vec_id", "embedding")
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     anchors = e.filter(F.col("vec_id") < _RT_K).orderBy("vec_id").collect()
     idx = IncrementalIVFIndex(
         spark, None, f"{root}/store", "vec_id", "embedding"
@@ -408,7 +401,7 @@ def multimodal_real_decode_stats(spark, sf_dir):
     )
 
     media = ppm_media_table_from_documents(
-        _docs(spark, sf_dir).select("doc_id", "n_chars")
+        load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     )
     return (
         decode_images(media, fake=False)

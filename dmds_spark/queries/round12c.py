@@ -34,16 +34,13 @@ from pyspark.sql import functions as F
 
 from dmds_spark.core.engine import maybe_broadcast
 from dmds_spark.queries import register
+from dmds_spark.sources.registry import load_table
 
 _TRAIN_MOD = 5  # doc_id % 5 != 0 trains, == 0 is scored
 _MIN_C2 = 5  # model rows emitted for inspection
 _BACKOFF_PPM = 400_000  # 0.4 in ppm, the stupid-backoff alpha
 _KEEP_PPM = 33_000  # keep gate for the score query
 _AND_TERMS = ("hash", "join", "scan")  # conjunctive retrieval probe
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def _bigrams(docs):
@@ -110,7 +107,7 @@ def text_lm_train_bigram(spark, sf_dir):
     over the scan-fused bigram stream + one vocabulary-sized join
     (broadcast-gated). The model table is the reusable artifact the
     scoring query consumes."""
-    c2, c1 = _train_tables(_docs(spark, sf_dir))
+    c2, c1 = _train_tables(load_table(spark, sf_dir, "documents"))
     return (
         c2.filter(F.col("c2") >= _MIN_C2)
         .join(maybe_broadcast(c1), "w1")
@@ -170,7 +167,7 @@ def text_lm_score_docs(spark, sf_dir):
     bigram model is vocab^2-bounded — the gate broadcasts it while it
     fits, shuffle-joins beyond) plus a one-row total via cross join;
     then one hash aggregate per doc. The scoring stream never sorts."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     c2, c1 = _train_tables(docs)
     n1 = c1.agg(F.sum("c1").alias("total"))
     held = _bigrams(docs.filter(F.col("doc_id") % _TRAIN_MOD == 0))
@@ -269,7 +266,7 @@ def text_inverted_postings(spark, sf_dir):
     same comma-joined string). Two hash aggregates; the per-term
     collect is bounded by df, the long-format posting table (the real
     stored artifact) never collects."""
-    tf = _tf(_docs(spark, sf_dir))
+    tf = _tf(load_table(spark, sf_dir, "documents"))
     return tf.groupBy("term").agg(
         F.count(F.lit(1)).alias("df"),
         F.sum("tf").cast("long").alias("cf"),
@@ -306,7 +303,9 @@ def text_boolean_retrieval(spark, sf_dir):
     corpus), group by doc, keep docs matching all three. Output carries
     per-term tf for downstream ranking. The retrieval cost is
     O(sum of the three posting lists), the index's whole point."""
-    tf = _tf(_docs(spark, sf_dir)).filter(F.col("term").isin(*_AND_TERMS))
+    tf = _tf(load_table(spark, sf_dir, "documents")).filter(
+        F.col("term").isin(*_AND_TERMS)
+    )
     agg = tf.groupBy("doc_id").agg(
         *[
             F.max(F.when(F.col("term") == t, F.col("tf")))
@@ -356,7 +355,7 @@ def text_phrase_retrieval(spark, sf_dir):
     position). Cost is O(postings of the phrase terms), the positional
     index's whole point; a scan-side LIKE would read every document.
     Output: per-doc occurrence count and first/last match position."""
-    tok = _positional(_docs(spark, sf_dir))
+    tok = _positional(load_table(spark, sf_dir, "documents"))
     a = tok.filter(F.col("term") == _PHRASE[0]).select("doc_id", "pos")
     b = tok.filter(F.col("term") == _PHRASE[1]).select(
         "doc_id", (F.col("pos") - 1).alias("pos")

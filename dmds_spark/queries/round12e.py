@@ -25,10 +25,7 @@ from dmds_spark.operators.quality import (
     uniqueness,
 )
 from dmds_spark.queries import register
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from dmds_spark.sources.registry import load_table
 
 
 _PRICE_HI = 400_000  # deliberately too tight: the range check FAILS
@@ -87,7 +84,7 @@ def quality_constraint_report(spark, sf_dir):
     (pinned: a single scan of orders feeds every metric). Two fail by
     design — uniqueness(o_custkey) (repeat buyers) and the too-tight
     price range — with exact ppm metrics, not just verdicts."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     checks = [
         completeness("o_custkey"),
         uniqueness("o_orderkey"),
@@ -138,10 +135,10 @@ def quality_referential_report(spark, sf_dir):
     one column; pk side a distinct key list — at 100 TB this is the
     cheapest possible orphan census, and AQE broadcast-gates the key
     list when it fits)."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    part = load_table(spark, sf_dir, "part")
     reps = [
         referential_report(
             li, orders, "l_orderkey", "o_orderkey",

@@ -28,18 +28,13 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from dmds_spark.queries import register
+from dmds_spark.sources.registry import load_events
 
 CUTOFF = "2024-01-16 00:00:00"
 K = 5
 # floor(1e6 / log2(pos+1)) for pos 1..K — the NDCG discount table as
 # integer literals (log2 evaluated ONCE here, never inside an engine)
 NDCG_W = {p: int(1_000_000 // math.log2(p + 1)) for p in range(1, K + 1)}
-
-
-def _events(spark, sf_dir):
-    from dmds_spark.sources.registry import load_events
-
-    return load_events(spark, sf_dir)
 
 
 def _w_case_sql(col: str) -> str:
@@ -83,7 +78,7 @@ def _split(spark, sf_dir):
     """(topk, test): the per-user train ranking and held-out relevance
     DataFrames every metric below consumes. Both are single map-side-
     combined aggregates; the rank window partitions by user."""
-    ev = _events(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     train = (
         ev.filter(F.col("ts") < F.lit(CUTOFF).cast("timestamp"))
         .groupBy("user_id", "event_type")

@@ -19,21 +19,9 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from dmds_spark.operators.relational import CENTS_SQL, cents
 from dmds_spark.queries import register
-
-_CENTS_SQL = "CAST(CAST({c} AS DECIMAL(12,2)) * 100 AS BIGINT)"
-
-
-def _cents(col):
-    return (F.col(col).cast("decimal(12,2)") * 100).cast("bigint")
-
-
-def _orders(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/orders.parquet")
-
-
-def _customer(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/customer.parquet")
+from dmds_spark.sources.registry import load_table
 
 
 @register(
@@ -42,8 +30,8 @@ def _customer(spark, sf_dir):
     WITH feat AS (
       SELECT o_orderkey, o_custkey, o_orderdate,
              COUNT(*) OVER w - 1 AS prior_orders,
-             COALESCE(SUM({_CENTS_SQL.format(c='o_totalprice')}) OVER w
-                      - {_CENTS_SQL.format(c='o_totalprice')}, 0)
+             COALESCE(SUM({CENTS_SQL.format(c='o_totalprice')}) OVER w
+                      - {CENTS_SQL.format(c='o_totalprice')}, 0)
                AS prior_revenue_c
       FROM orders
       WINDOW w AS (PARTITION BY o_custkey
@@ -75,20 +63,20 @@ def feature_point_in_time(spark, sf_dir):
     scoring-slice filter cannot push below the window (it needs full
     history), which is the honest cost of point-in-time features;
     partition-prune the ENTITIES instead when scoring a cohort."""
-    o = _orders(spark, sf_dir)
+    o = load_table(spark, sf_dir, "orders")
     w = (
         W.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    cents = _cents("o_totalprice")
+    c = cents("o_totalprice")
     feat = o.select(
         "o_orderkey",
         "o_custkey",
         "o_orderdate",
         (F.count(F.lit(1)).over(w) - 1).cast("bigint")
         .alias("prior_orders"),
-        F.coalesce(F.sum(cents).over(w) - cents, F.lit(0))
+        F.coalesce(F.sum(c).over(w) - c, F.lit(0))
         .cast("bigint").alias("prior_revenue_c"),
     )
     return feat.filter(
@@ -129,7 +117,7 @@ def feature_hash_bucket_stats(spark, sf_dir):
     64-group rollup)."""
     from dmds_spark.operators.sampling import hash_bucket
 
-    c = _customer(spark, sf_dir)
+    c = load_table(spark, sf_dir, "customer")
     cat = c.select(
         F.concat_ws(
             "#", F.col("c_mktsegment"), F.col("c_nationkey").cast("string")
@@ -158,7 +146,7 @@ _N_FOLDS = 5
     WITH base AS (
       SELECT o_orderpriority AS category,
              o_custkey % {_N_FOLDS} AS fold,
-             {_CENTS_SQL.format(c='o_totalprice')} AS target_c
+             {CENTS_SQL.format(c='o_totalprice')} AS target_c
       FROM orders
     ), per_fold AS (
       SELECT category, fold, COUNT(*) AS n_f,
@@ -190,11 +178,11 @@ def feature_target_encoding_oof(spark, sf_dir):
     category), both tiny outputs; the corpus is scanned once. Sums in
     DECIMAL(38,0)/HUGEINT — cents totals pass 2^63 around petabyte
     scale."""
-    o = _orders(spark, sf_dir)
+    o = load_table(spark, sf_dir, "orders")
     base = o.select(
         F.col("o_orderpriority").alias("category"),
         (F.col("o_custkey") % _N_FOLDS).alias("fold"),
-        _cents("o_totalprice").alias("target_c"),
+        cents("o_totalprice").alias("target_c"),
     )
     per_fold = base.groupBy("category", "fold").agg(
         F.count(F.lit(1)).alias("n_f"),

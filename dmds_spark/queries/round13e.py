@@ -22,10 +22,7 @@ from dmds_spark.operators.pq import (
     quantized,
 )
 from dmds_spark.queries import register
-
-
-def _emb(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+from dmds_spark.sources.registry import load_table
 
 
 _KEY = (
@@ -112,7 +109,7 @@ def embedding_pq_codebook_census(spark, sf_dir):
     Shape at scale: seed draw is TakeOrdered top-K; both assignment
     passes join the corpus against BROADCAST codebooks (M*K rows);
     the M-step and the census are bounded-key hash aggregates."""
-    q = quantized(_emb(spark, sf_dir))
+    q = quantized(load_table(spark, sf_dir, "embeddings"))
     cb = pq_codebooks(q)
     codes = pq_encode(q, cb)
     census = codes.groupBy("sub", "code").agg(
@@ -167,7 +164,7 @@ def similarity_pq_adc_topk(spark, sf_dir):
     broadcast codebook; candidates reduce with ONE hash aggregate over
     their M code rows; top-k is TakeOrdered. Codes are the only
     corpus-sized input — 4 small ints per vector, the point of PQ."""
-    q = quantized(_emb(spark, sf_dir))
+    q = quantized(load_table(spark, sf_dir, "embeddings"))
     cb = pq_codebooks(q)
     codes = pq_encode(q, cb)
     return pq_adc_topk(q, cb, codes, _ADC_QUERY_ID, _ADC_TOPK)
@@ -234,7 +231,7 @@ def similarity_ivfadc_topk(spark, sf_dir):
     does exactly that); the ADC table is M*K broadcast rows and
     candidates cost M adds each. No corpus shuffle beyond the argmin
     aggregates."""
-    q = quantized(_emb(spark, sf_dir))
+    q = quantized(load_table(spark, sf_dir, "embeddings"))
     anchors = q.filter(F.col("vec_id") < _IVF_K).select(
         F.col("vec_id").alias("aid"), F.col("qv").alias("av")
     )
@@ -327,7 +324,7 @@ def embedding_truncation_recall(spark, sf_dir):
     task ever holds more than k rows of window state. The production
     serving path for either dimension is the ANN stack (IVF/PQ), not
     this."""
-    q = quantized(_emb(spark, sf_dir))
+    q = quantized(load_table(spark, sf_dir, "embeddings"))
     qs = q.filter(F.col("vec_id") < _TRUNC_Q).select(
         F.col("vec_id").alias("qid"), F.col("qv").alias("qqv")
     )

@@ -9,13 +9,8 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from dmds_spark.operators.relational import CENTS_SQL, cents
 from dmds_spark.queries import register
-
-_CENTS_SQL = "CAST(CAST({c} AS DECIMAL(12,2)) * 100 AS BIGINT)"
-
-
-def _cents(col):
-    return (F.col(col).cast("decimal(12,2)") * 100).cast("bigint")
 
 
 @register(
@@ -23,12 +18,12 @@ def _cents(col):
     f"""
     WITH li AS (
       SELECT l_orderkey,
-             SUM(CAST({_CENTS_SQL.format(c='l_extendedprice')}
+             SUM(CAST({CENTS_SQL.format(c='l_extendedprice')}
                  AS HUGEINT)) AS line_c
       FROM lineitem GROUP BY l_orderkey
     ), j AS (
       SELECT o.o_orderstatus AS status,
-             {_CENTS_SQL.format(c='o_totalprice')} AS hdr_c,
+             {CENTS_SQL.format(c='o_totalprice')} AS hdr_c,
              li.line_c
       FROM orders o LEFT JOIN li ON li.l_orderkey = o.o_orderkey
     )
@@ -61,14 +56,14 @@ def quality_reconciliation_report(spark, sf_dir):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
     per_order = li.groupBy("l_orderkey").agg(
-        F.sum(_cents("l_extendedprice").cast("decimal(38,0)"))
+        F.sum(cents("l_extendedprice").cast("decimal(38,0)"))
         .alias("line_c")
     )
     j = o.join(
         per_order, o["o_orderkey"] == per_order["l_orderkey"], "left"
     ).select(
         F.col("o_orderstatus").alias("status"),
-        _cents("o_totalprice").cast("decimal(38,0)").alias("hdr_c"),
+        cents("o_totalprice").cast("decimal(38,0)").alias("hdr_c"),
         "line_c",
     )
     return (

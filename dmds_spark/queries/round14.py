@@ -15,15 +15,12 @@ from pyspark.sql import functions as F
 from dmds_spark.operators.parallel import overlap_jobs
 from dmds_spark.queries import register
 from dmds_spark.queries.round13e import _PQ_CTE, PQ_SUB
+from dmds_spark.sources.registry import load_table
 
 _IVFADC_Q = 3        # query batch: vec_id < 3
 _IVFADC_NPROBE = 2
 _IVFADC_TOPK = 10
 _IVFADC_CELLS = 8    # coarse cells = the vec_id < 8 anchor vectors
-
-
-def _emb(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 @register(
@@ -108,7 +105,7 @@ def rollup_incremental_ivfadc(spark, sf_dir):
 
     root = scratch_dir("inc_ivfadc", sf_dir)
     src = f"{root}/src"
-    e = _emb(spark, sf_dir).select("vec_id", "embedding")
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     idx = IncrementalIVFIndex(
         spark, src, f"{root}/store", "vec_id", "embedding"
     )
@@ -254,7 +251,7 @@ def embedding_pq_drift_report(spark, sf_dir):
     from dmds_spark.operators.incremental_ivf import IncrementalIVFIndex
 
     root = scratch_dir("pq_drift", sf_dir)
-    e = _emb(spark, sf_dir).select("vec_id", "embedding")
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     idx = IncrementalIVFIndex(
         spark, None, f"{root}/store", "vec_id", "embedding"
     )

@@ -26,16 +26,7 @@ from pyspark.sql import functions as F
 
 from dmds_spark.queries import register
 from dmds_spark.queries.round13 import CUTOFF
-
-
-def _events(spark, sf_dir):
-    from dmds_spark.sources.registry import load_events
-
-    return load_events(spark, sf_dir)
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from dmds_spark.sources.registry import load_events, load_table
 
 
 # ---------------------------------------------------------------------------
@@ -118,7 +109,7 @@ def survivorship_golden_record(spark, sf_dir):
     store-design rule), so the shuffle is |users| rows twice (main agg
     + modal pre-agg), never a window over the event stream. Integer
     exact: cents grid, epoch micros, padded digit keys."""
-    e = _events(spark, sf_dir).select(
+    e = load_events(spark, sf_dir).select(
         "user_id",
         "event_id",
         "event_type",
@@ -224,7 +215,7 @@ def eval_conformal_coverage(spark, sf_dir):
     and q_hat reads off the cumulative grid; coverage is one hash
     aggregate over the test slice with the scalar q_hat attached by
     broadcast (the scalar-attach BroadcastNestedLoopJoin shape)."""
-    ev = _events(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     cents = F.floor(F.col("value") * 100).cast("bigint")
     cal = ev.filter(F.col("ts") < F.lit(CUTOFF).cast("timestamp")).select(
         "event_type", cents.alias("cents")
@@ -365,20 +356,14 @@ def dedup_bcubed_quality(spark, sf_dir):
     from dmds_spark.operators.dedup import (
         jaccard_verify_pairs,
         minhash_lsh_candidates,
-        minhash_shingle_rows,
-        minhash_signatures_from_shingles,
+        shared_shingles,
     )
-    from dmds_spark.operators.parallel import ensure_parallelism
     from dmds_spark.queries.llm_dedup import BANDS, K_SHINGLE, NUM_HASHES
 
-    # shingle ONCE (guide §2.4): the persisted distinct rows feed the
-    # signature stage and the verify's three consumers (signatures over
-    # distinct shingles are bit-identical — min is idempotent)
-    docs = ensure_parallelism(_docs(spark, sf_dir))
-    srows = minhash_shingle_rows(
-        docs, "text", "doc_id", K_SHINGLE
-    ).persist()
-    sigs = minhash_signatures_from_shingles(srows, "doc_id", NUM_HASHES)
+    docs = load_table(spark, sf_dir, "documents")
+    srows, sigs = shared_shingles(
+        docs, "text", "doc_id", K_SHINGLE, NUM_HASHES
+    )
     # ONE candidate generation feeds BOTH pairings (the estimate filter
     # and the exact-Jaccard verify) — candidate-sized, so the barrier
     # is cheap and the expensive banded self-join runs once, not twice
@@ -497,19 +482,15 @@ def dedup_method_kappa(spark, sf_dir):
     from dmds_spark.operators.dedup import (
         jaccard_verify_pairs,
         minhash_lsh_candidates,
-        minhash_shingle_rows,
-        minhash_signatures_from_shingles,
+        shared_shingles,
     )
-    from dmds_spark.operators.parallel import ensure_parallelism
     from dmds_spark.operators.relational import exact_floordiv
     from dmds_spark.queries.llm_dedup import BANDS, K_SHINGLE, NUM_HASHES
 
-    # shared shingle pass, same discipline as dedup_bcubed_quality
-    docs = ensure_parallelism(_docs(spark, sf_dir))
-    srows = minhash_shingle_rows(
-        docs, "text", "doc_id", K_SHINGLE
-    ).persist()
-    sigs = minhash_signatures_from_shingles(srows, "doc_id", NUM_HASHES)
+    docs = load_table(spark, sf_dir, "documents")
+    srows, sigs = shared_shingles(
+        docs, "text", "doc_id", K_SHINGLE, NUM_HASHES
+    )
     cand = minhash_lsh_candidates(
         sigs, "doc_id", NUM_HASHES, BANDS
     ).transform(materialize)

@@ -11,10 +11,7 @@ from pyspark.sql import functions as F
 
 from dmds_spark.queries import register
 from dmds_spark.queries.round9b import BM25_TOPK, _bm25_sql
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from dmds_spark.sources.registry import load_table
 
 
 def _built_store(spark, sf_dir):
@@ -27,7 +24,7 @@ def _built_store(spark, sf_dir):
 
     root = scratch_dir("inc_postings", sf_dir)
     src = f"{root}/src"
-    d = _docs(spark, sf_dir).select("doc_id", "text")
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     idx = IncrementalPostingsIndex(
         spark, src, f"{root}/store", "doc_id", "text"
     )
@@ -135,7 +132,7 @@ def retrieval_phrase_incremental(spark, sf_dir):
 
     root = scratch_dir("inc_phrase", sf_dir)
     src = f"{root}/src"
-    d = _docs(spark, sf_dir).select("doc_id", "text")
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     idx = IncrementalPostingsIndex(
         spark, src, f"{root}/store", "doc_id", "text", positions=True
     )

@@ -15,14 +15,9 @@ from pyspark.sql import functions as F
 from dmds_spark.queries import register
 from dmds_spark.queries.round13 import CUTOFF
 from dmds_spark.queries.round13d import _GRID_CTE, _SNAIVE_LAG
+from dmds_spark.sources.registry import load_events
 
 _PINBALL_TAUS = (1, 5, 9)  # tau = q/10: the 10/50/90 quantile grid
-
-
-def _events(spark, sf_dir):
-    from dmds_spark.sources.registry import load_events
-
-    return load_events(spark, sf_dir)
 
 
 @register(
@@ -60,7 +55,7 @@ def forecast_eval_pinball(spark, sf_dir):
     Shape at scale: the same types x days grid and ONE type-keyed lag
     window as the MASE query; the 3-value tau grid cross-joins as a
     constant; the rollup is |types| x 3 rows."""
-    e = _events(spark, sf_dir)
+    e = load_events(spark, sf_dir)
     bounds = e.agg(
         F.min(F.col("ts").cast("date")).alias("d0"),
         F.max(F.col("ts").cast("date")).alias("d1"),
@@ -154,7 +149,7 @@ def events_mannwhitney_u(spark, sf_dir):
     Shape at scale: one corpus aggregate to the distinct-cents
     histogram (bounded by the value range), one cumulative window over
     that bounded grid, a 1-row rollup."""
-    ev = _events(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     s = ev.select(
         F.floor(F.col("value") * 100).cast("bigint").alias("v"),
         F.when(F.col("ts") < F.lit(CUTOFF).cast("timestamp"), 1)

@@ -9,19 +9,16 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from dmds_spark.queries import register
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from dmds_spark.sources.registry import load_events, load_table
 
 
 def _survivorship_obs(spark, sf_dir):
     """The survivorship_golden_record observation projection — shared
     with the incremental store so the maintained path folds EXACTLY
     the batch query's inputs."""
-    from dmds_spark.queries.round14b import _events, _prec_col
+    from dmds_spark.queries.round14b import _prec_col
 
-    return _events(spark, sf_dir).select(
+    return load_events(spark, sf_dir).select(
         "user_id",
         "event_id",
         "event_type",
@@ -101,7 +98,7 @@ def rollup_postings_retokenize(spark, sf_dir):
 
     root = scratch_dir("postings_retok", sf_dir)
     src = f"{root}/src"
-    d = _docs(spark, sf_dir).select("doc_id", "text")
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     idx = IncrementalPostingsIndex(
         spark, src, f"{root}/store", "doc_id", "text"
     )

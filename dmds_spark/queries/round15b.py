@@ -16,16 +16,7 @@ from pyspark.sql import functions as F
 
 from dmds_spark.queries import register
 from dmds_spark.queries.round13 import CUTOFF
-
-
-def _events(spark, sf_dir):
-    from dmds_spark.sources.registry import load_events
-
-    return load_events(spark, sf_dir)
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from dmds_spark.sources.registry import load_events, load_table
 
 
 # ---------------------------------------------------------------------------
@@ -206,7 +197,7 @@ def events_kruskal_wallis(spark, sf_dir):
     from dmds_spark.core.engine import materialize
     from dmds_spark.operators.relational import exact_floordiv
 
-    s = _events(spark, sf_dir).select(
+    s = load_events(spark, sf_dir).select(
         F.col("event_type").alias("g"),
         F.floor(F.col("value") * 100).cast("bigint").alias("v"),
     )
@@ -304,7 +295,7 @@ def eval_cohens_d2(spark, sf_dir):
     grid; the bound is stated, not assumed)."""
     from dmds_spark.operators.relational import exact_floordiv
 
-    s = _events(spark, sf_dir).select(
+    s = load_events(spark, sf_dir).select(
         F.when(F.col("ts") < F.lit(CUTOFF).cast("timestamp"), 1)
         .otherwise(0).alias("grp"),
         F.floor(F.col("value") * 100).cast("bigint").alias("v"),
@@ -395,7 +386,7 @@ def events_runs_test(spark, sf_dir):
     from dmds_spark.core.engine import materialize
 
     g = (
-        _events(spark, sf_dir)
+        load_events(spark, sf_dir)
         .groupBy(F.col("ts").cast("date").alias("d"))
         .agg(
             F.sum(F.floor(F.col("value") * 100).cast("bigint"))
@@ -498,7 +489,7 @@ def events_acf_daily(spark, sf_dir):
     from dmds_spark.operators.relational import exact_floordiv
 
     g = (
-        _events(spark, sf_dir)
+        load_events(spark, sf_dir)
         .groupBy(F.col("ts").cast("date").alias("d"))
         .agg(
             F.expr(
@@ -640,7 +631,7 @@ def retrieval_rrf_fusion(spark, sf_dir):
     from dmds_spark.operators.similarity import cosine
     from dmds_spark.queries.round9b import BM25_TERMS
 
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
     dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     tf = (

@@ -13,14 +13,9 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from dmds_spark.queries import register
+from dmds_spark.sources.registry import load_events
 
 _WSR_PERIOD = 28  # days: the period-over-period pairing offset
-
-
-def _events(spark, sf_dir):
-    from dmds_spark.sources.registry import load_events
-
-    return load_events(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -83,7 +78,7 @@ def events_wilcoxon_signed_rank(spark, sf_dir):
     from dmds_spark.core.engine import materialize
 
     g = (
-        _events(spark, sf_dir)
+        load_events(spark, sf_dir)
         .groupBy(F.col("ts").cast("date").alias("d"))
         .agg(
             F.sum(F.floor(F.col("value") * 100).cast("bigint"))
@@ -180,7 +175,7 @@ def events_pettitt_changepoint(spark, sf_dir):
     from dmds_spark.core.engine import materialize
 
     g = (
-        _events(spark, sf_dir)
+        load_events(spark, sf_dir)
         .groupBy(F.col("ts").cast("date").alias("d"))
         .agg(
             F.sum(F.floor(F.col("value") * 100).cast("bigint"))

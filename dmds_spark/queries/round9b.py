@@ -16,10 +16,7 @@ from pyspark.sql import functions as F
 
 from dmds_spark.queries import register
 from dmds_spark.queries.llm_extra import _BUCKET_SQL  # hash_bucket's SQL twin
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from dmds_spark.sources.registry import load_table
 
 
 # ---------------------------------------------------------------------------
@@ -98,7 +95,7 @@ def text_bm25_topk(spark, sf_dir):
     # search_bm25, so the store-served twin cannot silently diverge
     from dmds_spark.operators.bm25 import rational_bm25_topk
 
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
     dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     tf = (
@@ -129,7 +126,7 @@ _CONV_SQL = """
 
 
 def _conv(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     return d.select(
         # DIV is exact integer division (a double quotient would lose
         # ids past 2^53)
@@ -390,7 +387,7 @@ def sample_split_leakage_safe(spark, sf_dir):
     near-dup safety at web scale), then a pure projection — the split
     itself adds no shuffle. The same groupBy+join shape replaces the
     window verbatim if text groups ever became unbounded."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     rep = d.select(
         "doc_id",
         F.min("doc_id").over(W.partitionBy("text")).alias("rep_id"),

@@ -19,15 +19,12 @@ from pyspark.sql import functions as F
 
 from dmds_spark.queries import register
 from dmds_spark.queries.round9b import _CONV_SQL, _conv
+from dmds_spark.sources.registry import load_table
 
 N_EPOCHS = 3
 BUDGET_MULT = 4  # token budget = 4x the corpus
 MAX_EPOCHS = 16  # repetition cap per source
 N_STAGES = 4  # curriculum quartiles
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 # integer type-token ratio in parts-per-thousand: the deterministic
@@ -244,7 +241,7 @@ def sft_decontaminate_convs(spark, sf_dir):
     one groupBy on conv_id."""
     from dmds_spark.operators.dedup import word_kgram_rows
 
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     sh = (
         word_kgram_rows(d, "text", "doc_id", 3, col="sh")
         .select("doc_id", "sh")
@@ -311,7 +308,7 @@ def tokens_epoch_plan(spark, sf_dir):
     Shape at scale: one map-side-combined groupBy(source) over the
     token counts; the totals (1 row) re-aggregate the source-sized
     frame and broadcast back. Nothing data-sized shuffles twice."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     s = d.groupBy("source").agg(
         F.sum(F.size(F.split("text", " ")))
         .cast("decimal(38,0)")
@@ -393,7 +390,7 @@ def tokens_epoch_shuffle_order(spark, sf_dir):
     subtracting epoch * N (every epoch has exactly N docs)."""
     from dmds_spark.operators.relational import global_row_number
 
-    d = _docs(spark, sf_dir).select("doc_id")
+    d = load_table(spark, sf_dir, "documents").select("doc_id")
     n_docs = d.count()  # one metadata-cheap scalar for the epoch offset
     x = d.select(
         F.explode(
@@ -470,7 +467,9 @@ def sample_ntile_curriculum(spark, sf_dir):
         sharded_exclusive_cumsum,
     )
 
-    d = _docs(spark, sf_dir).select("doc_id", "source", _ttr_col())
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", _ttr_col()
+    )
     one = d.withColumn("__one", F.lit(1).cast("long"))
     r = sharded_exclusive_cumsum(
         one, "source", ["score", "doc_id"], "__one", out="__r"

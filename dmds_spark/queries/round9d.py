@@ -16,6 +16,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from dmds_spark.queries import register
+from dmds_spark.sources.registry import load_events
 
 _DEC = "decimal(38,0)"
 
@@ -69,9 +70,7 @@ def events_regression_trend(spark, sf_dir):
     the moment sums are a second tiny aggregate over (type, day) rows
     (bounded by types x calendar, never events). No window, no
     join."""
-    from dmds_spark.queries.streaming_batch import _events
-
-    ev = _events(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     day_us = 86_400_000_000
     daily = ev.groupBy(
         "event_type",
@@ -168,9 +167,7 @@ def timeseries_interp_linear(spark, sf_dir):
     (event_type, hw) ordering so they plan onto ONE exchange with
     bounded per-type state (calendar-sized, streaming-friendly). The
     interpolation itself is a projection."""
-    from dmds_spark.queries.streaming_batch import _events
-
-    ev = _events(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     hour_us = 3_600_000_000
     hourly = ev.groupBy(
         # decimal, not float /: a double quotient rounds past 2^53

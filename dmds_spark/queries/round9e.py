@@ -13,10 +13,7 @@ from pyspark.sql import functions as F
 from dmds_spark.queries import register
 from dmds_spark.queries.round9b import _CONV_SQL, SFT_TOKEN_BUDGET, _conv
 from dmds_spark.queries.round9c import EVAL_MOD
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from dmds_spark.sources.registry import load_table
 
 
 K_DECON = 8  # contamination gram width (Lee et al. use 50-token
@@ -132,7 +129,7 @@ def pipeline_sft_corpus(spark, sf_dir):
         .filter(F.col("nv") > MAX_VIOL)
         .select("conv_id")
     )
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     sh = (
         word_kgram_rows(d, "text", "doc_id", K_DECON, col="sh")
         .select("doc_id", "sh")

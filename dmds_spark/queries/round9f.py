@@ -11,12 +11,9 @@ from pyspark.sql import functions as F
 
 from dmds_spark.queries import register
 from dmds_spark.queries.round9e import _pipeline_sql
+from dmds_spark.sources.registry import load_events, load_table
 
 SEQ_LEN = 256  # SFT sequence budget (conversations are <= 96 tok each)
-
-
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -63,7 +60,7 @@ def profile_schema_drift(spark, sf_dir):
     never a driver collect); the long format comes from a stack() over
     the two result rows. One scan total — a union of per-column
     aggregates would read the corpus once per profiled column."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     from dmds_spark.operators.sampling import hash_bucket
 
     half = F.when(hash_bucket(F.col("doc_id")) < 5000, "a").otherwise("b")
@@ -177,7 +174,7 @@ def tokens_bin_pack_ffd(spark, sf_dir):
     asserted in the test suite."""
     from dmds_spark.operators.packing import bin_pack_ffd
 
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.size(F.split("text", " ")).cast("long").alias("n_tokens")
     )
     return bin_pack_ffd(
@@ -218,9 +215,7 @@ def sample_split_temporal(spark, sf_dir):
     Shape at scale: one min/max aggregate (1 row, broadcast back) and
     a pure projection — the split itself adds no shuffle; at 100 TB
     the bounds come from parquet footer stats via the same scan."""
-    from dmds_spark.queries.streaming_batch import _events
-
-    ev = _events(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     bounds = ev.agg(
         F.min(F.unix_micros("ts")).alias("mn"),
         F.max(F.unix_micros("ts")).alias("mx"),

@@ -13,12 +13,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from dmds_spark.queries import register
-
-
-def _events(spark, sf_dir):
-    from dmds_spark.sources.registry import load_events
-
-    return load_events(spark, sf_dir)
+from dmds_spark.sources.registry import load_events
 
 
 @register(
@@ -33,7 +28,7 @@ def _events(spark, sf_dir):
 def window_tumbling_1h(spark, sf_dir):
     """Tumbling 1-hour event-time window (streaming analogue:
     groupBy(window(ts, '1 hour')) with a watermark)."""
-    ev = _events(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     return ev.groupBy(
         F.unix_micros(F.window("ts", "1 hour").start).alias("ws_us"), "event_type"
     ).agg(
@@ -60,7 +55,7 @@ def window_sliding_1h_30m(spark, sf_dir):
     """Sliding window: 1 hour wide, 30-minute slide — each event lands
     in exactly two windows (Spark's window() expands them; the oracle
     expands explicitly with UNNEST)."""
-    ev = _events(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     return (
         ev.groupBy(F.unix_micros(F.window("ts", "1 hour", "30 minutes").start).alias("ws_us"))
         .agg(
@@ -100,7 +95,7 @@ def sessionize_10m(spark, sf_dir):
     single window pass."""
     from pyspark.sql import Window as W
 
-    ev = _events(spark, sf_dir)
+    ev = load_events(spark, sf_dir)
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     # exact microsecond gap arithmetic on both engines (unix_micros /
     # epoch_us) — second-truncation or double rounding would disagree

@@ -1,8 +1,10 @@
 #!/usr/bin/env python
 """Evidence freshness report: join the query registry against every
-CORRECTNESS_r*.json and print each query's most recent driver result —
-making the rotation protocol (queries/__init__.py ordering) auditable
-at a glance.
+CORRECTNESS_r*.json and print each query's latest evidence round and
+its result, read through the same ``latest_evidence`` rule that orders
+``queries()`` (dmds_spark/queries/__init__.py), so the rotation is
+auditable at a glance. A round whose entry is a harness error is not
+evidence, as in the rotation.
 
 Usage: python scripts/evidence_report.py [--stale-first]
 No Spark session needed (registry import only loads query builders).
@@ -10,26 +12,17 @@ No Spark session needed (registry import only loads query builders).
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from dmds_spark.queries import all_queries, all_oracle_sql  # noqa: E402
-
-
-def load_rounds(repo_root: str) -> dict[int, dict]:
-    rounds = {}
-    for path in glob.glob(os.path.join(repo_root, "CORRECTNESS_r*.json")):
-        m = re.search(r"r(\d+)\.json$", path)
-        if not m:
-            continue
-        with open(path) as fh:
-            rounds[int(m.group(1))] = json.load(fh)
-    return rounds
+from dmds_spark.queries import (  # noqa: E402
+    all_oracle_sql,
+    all_queries,
+    correctness_rounds,
+    latest_evidence,
+)
 
 
 def status_of(entry: dict) -> str:
@@ -37,29 +30,24 @@ def status_of(entry: dict) -> str:
         return "green"
     if entry.get("err") == "no_oracle":
         return "rows-only"
-    if entry.get("err"):
-        return f"error:{entry['err'][:40]}"
     return "mismatch"
 
 
 def main() -> int:
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    rounds = load_rounds(repo_root)
-    names = list(all_queries())
+    rounds = correctness_rounds()
+    last = latest_evidence(rounds)
     has_oracle = set(all_oracle_sql())
 
     report = []
-    for name in names:
-        last_round, last_status = None, None
-        for rnd in sorted(rounds):
-            if name in rounds[rnd]:
-                last_round, last_status = rnd, status_of(rounds[rnd][name])
+    for name in all_queries():
+        rnd = last.get(name)
+        status = status_of(rounds[rnd][name]) if rnd else "never-checked"
         report.append(
             {
                 "query": name,
                 "oracle": name in has_oracle,
-                "last_round": last_round,
-                "status": last_status or "never-checked",
+                "last_round": rnd,
+                "status": status,
             }
         )
 

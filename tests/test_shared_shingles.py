@@ -13,6 +13,7 @@ from dmds_spark.operators.dedup import (
     minhash_shingle_rows,
     minhash_signatures,
     minhash_signatures_from_shingles,
+    shared_shingles,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -53,4 +54,19 @@ def test_verify_pairs_same_with_external_shingles(spark):
         ra = sorted(map(tuple, internal.collect()))
         rb = sorted(map(tuple, external.collect()))
         assert ra == rb
+    srows.unpersist()
+
+
+def test_shared_shingles_persists_rows_and_matches_raw_signatures(spark):
+    docs = _docs(spark)
+    srows, sigs = shared_shingles(docs, "text", "doc_id", 3, 16)
+    assert srows.storageLevel.useMemory
+    raw = minhash_signatures(docs, "text", "doc_id", 16, 3)
+    a = sorted((r.doc_id, tuple(r.signature)) for r in raw.collect())
+    b = sorted((r.doc_id, tuple(r.signature)) for r in sigs.collect())
+    assert a == b
+    want = minhash_shingle_rows(docs, "text", "doc_id", 3)
+    assert sorted(map(tuple, srows.collect())) == sorted(
+        map(tuple, want.collect())
+    )
     srows.unpersist()
